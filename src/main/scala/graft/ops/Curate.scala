@@ -334,7 +334,7 @@ object Curate {
    * per micro-batch, [[streamingGate]] (every stateless row gate,
    * including decontamination) → exact dedup (intra-batch min-id via
    * [[Dedup.exact]] PLUS cross-batch novelty vs everything already
-   * admitted) → near dedup ([[Dedup.minhashPairsIncremental]] against
+   * admitted) → near dedup ([[Dedup.minhashPairsIncrementalIndexed]] against
    * the admitted corpus — new x corpus and new x new candidates only,
    * never corpus x corpus) → append the admitted docs to `outDir`.
    *
@@ -355,7 +355,7 @@ object Curate {
    * WITH `vecCol`, a SEMANTIC dedup step runs after the text near
    * dedup (Curate.standard's stage order): the batch's embeddings
    * pair EXACTLY against the durable `semvecs` frame plus themselves
-   * ([[SimSearch.cosinePairsIncremental]] — SRP-bucketed candidates,
+   * ([[SimSearch.cosinePairsIncrementalFromState]] — SRP-bucketed candidates,
    * exact-cosine verify; the admitted corpus is never re-bucketed or
    * re-read) and drop first-arrival. The frame follows every percsigs
    * recipe below (per-batch partitions before keys, rebuild from
@@ -385,7 +385,7 @@ object Curate {
    * the text dedups (Curate.standard's stage order): the batch's
    * image/audio payloads are signatured once, paired EXACTLY against
    * the durable `percsigs` frame plus themselves
-   * ([[Multimodal.perceptualPairsIncremental]] — never the
+   * ([[Multimodal.perceptualPairsIncrementalFromSigs]] — never the
    * over-dropping Bloom prefilter, and the admitted corpus' blobs are
    * never re-decoded), and dropped first-arrival: near-dups of an
    * admitted blob die, intra-batch clusters keep their min id.
@@ -467,19 +467,6 @@ object Curate {
    * at production scale the divergence is the usual greedy-vs-closure
    * epsilon, not a correctness bug.
    *
-   * `corpusOverride` remains the full-bypass escape hatch: a caller-
-   * managed corpus frame (id + text) replaces the durable state READ
-   * for this batch — exact keys, postings, and shingles are derived
-   * from it live (the pre-state behavior). The state frames are still
-   * WRITTEN for the admitted rows, and the pre-state BOOTSTRAP runs
-   * even under an override (the override replaces one batch's read,
-   * not the durable state's coverage — otherwise the keys written for
-   * the override batch would set the commit marker over a state that
-   * silently orphans every batch an older build admitted), so later
-   * batches can drop the override safely. An override frame must
-   * itself exclude the in-flight batch's rows (it bypasses the
-   * retry-exclusion logic below).
-   *
    * Ids must be globally unique across the stream (one id space —
    * the pair normalization depends on it).
    */
@@ -494,7 +481,6 @@ object Curate {
                     benchGrams: Option[Decontaminate.BenchGrams] = None,
                     shingleSize: Int = 3, numHashes: Int = 12,
                     bands: Int = 4, threshold: Double = 0.7,
-                    corpusOverride: Option[DataFrame] = None,
                     stateDir: Option[String] = None,
                     compactEvery: Option[Int] = None,
                     compactBuckets: Int = 8,
@@ -570,20 +556,14 @@ object Curate {
     // 1. stateless row gates — identical code path to the pure gate
     val gated = streamingGate(batch, textCol, minQuality, maxDup2gramFrac,
       historicalCorpus, bandIndex, unigramRef, benchGrams)
-    // 2. resolve the dedup state: the durable incremental frames
-    //    (default), rebuilt once from outDir when absent (migration),
-    //    or derived live from the caller's override corpus
+    // 2. resolve the dedup state: the durable incremental frames,
+    //    rebuilt once from outDir when absent (migration)
     val outHasBatches = hasParts(outDir)
     // "state committed" now has two witnesses: batch partitions under
     // keys (the pre-compaction shape) OR a compaction manifest (all
     // partitions may have been folded into the bucketed base)
     def stateCommitted: Boolean =
       loadCompaction(spark, sd).isDefined || hasParts(s"$sd/keys")
-    // the bootstrap runs REGARDLESS of corpusOverride: the override
-    // only replaces this batch's state READ, while step 6 writes keys
-    // for the batch either way — skipping the rebuild here would set
-    // the commit marker over a state that covers only the override
-    // batch, silently orphaning every batch the older build admitted
     if (outHasBatches && !stateCommitted) {
       // BOOTSTRAP: outDir holds admitted batches but no key state —
       // rebuild all three frames from the corpus, keeping each row in
@@ -718,24 +698,16 @@ object Curate {
           compactAll = true, excludeBatchIds = Set(batchId))
     }
     val comp = loadCompaction(spark, sd)
-    val (novelOf, pairsOf, oldIds) = corpusOverride match {
-      case Some(c) =>
-        // escape hatch: derive everything live from the caller's frame
-        ((df: DataFrame) => Novelty.exactNovel(df, c, textCol),
-          (ex: DataFrame) => Dedup.minhashPairsIncremental(ex, c, idCol,
-            textCol, shingleSize, numHashes, bands, threshold),
-          c.select(col(idCol).as("__old_id")).distinct())
-      case None if comp.isEmpty && !hasParts(s"$sd/keys") =>
+    val (novelOf, pairsOf, oldIds) =
+      if (comp.isEmpty && !hasParts(s"$sd/keys")) {
         // fresh stream: no admitted corpus yet, nothing to dedup
-        // against cross-batch
+        // against cross-batch: the batch pair pass (the incremental
+        // core with no corpus index)
         ((df: DataFrame) => df,
-          (ex: DataFrame) => Dedup.minhashPairsIncrementalIndexed(ex,
-            Dedup.postingsOf(Dedup.shinglesOf(batch.limit(0), idCol,
-              textCol, shingleSize), numHashes, bands),
-            Dedup.shinglesOf(batch.limit(0), idCol, textCol, shingleSize),
-            idCol, textCol, shingleSize, numHashes, bands, threshold),
+          (ex: DataFrame) => Dedup.minhashPairs(ex, idCol, textCol,
+            shingleSize, numHashes, bands, threshold),
           batch.limit(0).select(col(idCol).as("__old_id")))
-      case None =>
+      } else {
         // the durable-state default: narrow precomputed frames only —
         // the admitted corpus TEXT is never read here. Each frame is
         // the compacted bucketed BASE (when a manifest exists) plus
@@ -804,7 +776,7 @@ object Curate {
           (keysBases :+ keysTail)
             .map(_.select(col("__id").as("__old_id")))
             .reduce(_.unionByName(_)))
-    }
+      }
     // FIRST-ARRIVAL drop, shared by the perceptual and text near-dedup
     // steps: rows paired with the admitted corpus drop (the corpus
     // already carries that cluster's representative), then intra-batch
@@ -887,20 +859,10 @@ object Curate {
     val pGated = blobCol match {
       case None => gated
       case Some(bc) => labeled("perceptual") {
-        val oldSigs = corpusOverride match {
-          case Some(c) =>
-            require(c.columns.contains(bc),
-              s"streamingTail: corpusOverride has no blob column $bc — " +
-                "the override frame must carry the blobs to signature")
-            // the escape hatch decodes the override corpus live (its
-            // point is to bypass the durable state)
-            Multimodal.perceptualSignature(c, idCol, bc)
-              .where(col("sig").isNotNull)
-          case None =>
-            if (!hasParts(percsigsDir))
-              Multimodal.perceptualSignature(batch.limit(0), idCol, bc)
-            else readParts(percsigsDir).withColumnRenamed("__id", idCol)
-        }
+        val oldSigs =
+          if (!hasParts(percsigsDir))
+            Multimodal.perceptualSignature(batch.limit(0), idCol, bc)
+          else readParts(percsigsDir).withColumnRenamed("__id", idCol)
         // the batch's payloads are SIGNATURED ONCE: the persisted
         // frame feeds the pairing here and the state write after the
         // batch lands (decode is the stage's dominant per-row cost)
@@ -952,25 +914,17 @@ object Curate {
       //     cross-batch step, after near dedup (Curate.standard's
       //     stage order): the batch's vectors pair EXACTLY against
       //     the durable SRP state plus themselves
-      //     (SimSearch.cosinePairsIncremental — the corpus is never
+      //     (SimSearch.cosinePairsIncrementalFromState — the corpus is never
       //     re-bucketed or re-read), then the same first-arrival
       //     cross-drop + intra-batch min-id closure. Rows with null
       //     vectors are never dropped here (no vector, no evidence).
       val admitted = vecCol match {
         case None => nearAdmitted
         case Some(vc) => labeled("semantic") {
-          val oldState = corpusOverride match {
-            case Some(c) =>
-              require(c.columns.contains(vc),
-                s"streamingTail: corpusOverride has no vector column " +
-                  s"$vc — the override frame must carry the embeddings")
-              SimSearch.srpStateOf(c, idCol, vc, semanticBits)
-            case None =>
-              if (!hasParts(semvecsDir))
-                SimSearch.srpStateOf(batch.limit(0), idCol, vc,
-                  semanticBits)
-              else readParts(semvecsDir).withColumnRenamed("__id", idCol)
-          }
+          val oldState =
+            if (!hasParts(semvecsDir))
+              SimSearch.srpStateOf(batch.limit(0), idCol, vc, semanticBits)
+            else readParts(semvecsDir).withColumnRenamed("__id", idCol)
           // the batch is SRP-BUCKETED ONCE (the batchSigs recipe, r18):
           // the checkpointed state frame feeds the pair pass here and
           // the semvecs state write after the batch lands — the old
@@ -978,7 +932,7 @@ object Curate {
           val bState = SimSearch.srpStateOf(nearAdmitted, idCol, vc,
             semanticBits).localCheckpoint(true)
           batchSem = Some(bState)
-          // cosinePairsIncremental localCheckpoints its output, so
+          // cosinePairsIncrementalFromState localCheckpoints its output, so
           // the three passes below reread the checkpoint, not the plan
           val sPairs = SimSearch.cosinePairsIncrementalFromState(bState,
             oldState, idCol, semanticThreshold, semanticBits)

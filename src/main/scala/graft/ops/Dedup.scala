@@ -330,16 +330,22 @@ object Dedup {
    * Defaults (12 hashes, 4 bands x 3 rows) catch pairs with
    * J >= ~0.7 with high probability; tune bands/rows for the target
    * threshold (P[candidate] = 1-(1-J^r)^b).
+   *
+   * The batch run IS [[minhashPairsIncrementalIndexed]]'s core with
+   * no corpus index: every pair is new x new.
    */
   def minhashPairs(df: DataFrame, idCol: String, textCol: String,
                    shingleSize: Int = 3, numHashes: Int = 12,
-                   bands: Int = 4, threshold: Double = 0.7): DataFrame = {
-    if (threshold > 1.0) return emptyPairs(df, idCol)
-    val (sh, verified) = minhashPairsPlan(df, idCol, textCol, shingleSize,
-      numHashes, bands, threshold)
-    // Eagerly materialize the (LSH-small) verified pair set so the
-    // persisted shingle frame can be released immediately — otherwise
-    // every call leaks one cached dataset for the session's lifetime.
+                   bands: Int = 4, threshold: Double = 0.7): DataFrame =
+    if (threshold > 1.0) emptyPairs(df, idCol)
+    else checkpointed(minhashPairsPlan(df, idCol, textCol, shingleSize,
+      numHashes, bands, threshold))
+
+  /** Eagerly materialize a (LSH-small) verified pair plan so its
+    * persisted shingle frame can be released immediately — otherwise
+    * every call leaks one cached dataset for the session's lifetime. */
+  private def checkpointed(plan: (DataFrame, DataFrame)): DataFrame = {
+    val (sh, verified) = plan
     val out = verified.localCheckpoint(true)
     sh.unpersist()
     out
@@ -384,6 +390,58 @@ object Dedup {
         posexplode(bandHashes(col("__sig"), bands, rowsPerBand))
           .as(Seq("__band", "__bh")))
 
+  /**
+   * THE candidate rule of every near-dup family (MinHash, SimHash and
+   * perceptual hashes, SRP cosine): `probe` rows (the new batch, as
+   * `keys` + `id_a` + carried `*_a` columns) equi-join the new batch's
+   * own `newIndex` rows unioned with the admitted corpus' `oldIndex`
+   * rows (`keys` + `id_b` + carried `*_b` columns) — never old x old.
+   * New x new pairs appear from both directions, so they keep
+   * `id_a < id_b`; new x old pairs appear once (old ids never sit on
+   * the probe side), so they keep `id_a != id_b` and are normalized
+   * with least/greatest. The result is the distinct
+   * `(id_a, id_b, carry...)` candidate set; `carry` columns must be
+   * symmetric under the id swap (Hamming over sig_a/sig_b, a literal).
+   *
+   * A batch (self-join) run is this rule with NO old side (`None`):
+   * it reduces to the `id_a < id_b` self-join. The reduction is spelled
+   * out rather than left to the optimizer: an empty `limit(0)` old
+   * side still costs a constant flag column, the normalization, and
+   * (under a posexplode) a zero-row union branch — ~50 ms more
+   * planning time per batch MinHash call at sf0.1 on a 4-core host.
+   */
+  private[ops] def incrementalCandidates(probe: DataFrame,
+                                         newIndex: DataFrame,
+                                         oldIndex: Option[DataFrame],
+                                         keys: Seq[String],
+                                         carry: Seq[Column] = Nil)
+      : DataFrame = {
+    val (pairs, a, b) = oldIndex match {
+      case None => (probe.join(newIndex, keys)
+        .where(col("id_a") < col("id_b")), col("id_a"), col("id_b"))
+      case Some(old) =>
+        val index = newIndex.withColumn("__old", lit(false))
+          .unionByName(old.withColumn("__old", lit(true)))
+        (probe.join(index, keys)
+          .where((col("__old") && col("id_a") =!= col("id_b")) ||
+            (!col("__old") && col("id_a") < col("id_b"))),
+          least(col("id_a"), col("id_b")), greatest(col("id_a"), col("id_b")))
+    }
+    pairs.select(Seq(a.as("id_a"), b.as("id_b")) ++ carry: _*)
+      .dropDuplicates("id_a", "id_b")
+  }
+
+  /** The banded-MinHash candidate step: the new batch's postings probe
+    * its own postings plus the corpus' ([[incrementalCandidates]]). */
+  private def bandCandidates(newPostings: DataFrame,
+                             oldPostings: Option[DataFrame]): DataFrame = {
+    def side(p: DataFrame, id: String) =
+      p.select(col("__band"), col("__bh"), col("__id").as(id))
+    incrementalCandidates(side(newPostings, "id_a"),
+      side(newPostings, "id_b"), oldPostings.map(side(_, "id_b")),
+      Seq("__band", "__bh"))
+  }
+
   /** Exact-Jaccard verification of a narrow candidate pair set:
     * shingle arrays join back only for the (small) candidates. */
   private def verifyPairs(candidates: DataFrame, sh: DataFrame,
@@ -400,19 +458,9 @@ object Dedup {
     * caller to release). */
   private[ops] def minhashPairsPlan(df: DataFrame, idCol: String, textCol: String,
                                     shingleSize: Int, numHashes: Int,
-                                    bands: Int, threshold: Double): (DataFrame, DataFrame) = {
-    require(numHashes % bands == 0, "numHashes must divide into bands")
-    val r = numHashes / bands
-    val sh = shingleFrame(df, idCol, textCol, shingleSize)
-    val banded = bandedPostings(sh, numHashes, bands, r)
-    val a = banded.select(col("__band"), col("__bh"), col("__id").as("id_a"))
-    val b = banded.select(col("__band"), col("__bh"), col("__id").as("id_b"))
-    val candidates = a.join(b, Seq("__band", "__bh"))
-      .where(col("id_a") < col("id_b"))
-      .select("id_a", "id_b")
-      .dropDuplicates("id_a", "id_b")
-    (sh, verifyPairs(candidates, sh, threshold))
-  }
+                                    bands: Int, threshold: Double): (DataFrame, DataFrame) =
+    minhashPairsIncrementalPlan(df, None, idCol, textCol, shingleSize,
+      numHashes, bands, threshold)
 
   /**
    * MinHash calibration report: over the LSH candidate set, how well
@@ -447,13 +495,7 @@ object Dedup {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val banded = sig.select(col("__id"),
       posexplode(bandHashes(col("__sig"), bands, r)).as(Seq("__band", "__bh")))
-    val a = banded.select(col("__band"), col("__bh"), col("__id").as("id_a"))
-    val b = banded.select(col("__band"), col("__bh"), col("__id").as("id_b"))
-    val candidates = a.join(b, Seq("__band", "__bh"))
-      .where(col("id_a") < col("id_b"))
-      .select("id_a", "id_b")
-      .dropDuplicates("id_a", "id_b")
-    val pairs = candidates
+    val pairs = bandCandidates(banded, None)
       .join(sig.select(col("__id").as("id_a"), col("__sh").as("sh_a"),
         col("__sig").as("sig_a")), "id_a")
       .join(sig.select(col("__id").as("id_b"), col("__sh").as("sh_b"),
@@ -551,6 +593,10 @@ object Dedup {
                                         driverMaxPairs: Long =
                                           DriverComponentsMaxPairs)
       : (DataFrame, Boolean) = {
+    // `edges` and every `labels` frame below are localCheckpoints:
+    // Dataset.unpersist frees nothing there, so their blocks are
+    // released by GC + ContextCleaner once the frames are dropped (the
+    // Curate.streamingTail step-3 note)
     val edges = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
       .union(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
       .localCheckpoint(true)
@@ -561,11 +607,8 @@ object Dedup {
     // the (possibly expensive) pair lineage; it also feeds the
     // driver-fast-path size guard below.
     val nEdges = edges.count()
-    if (nEdges == 0) {
-      val empty = edges.select(col("src").as("node"), col("dst").as("comp"))
-      edges.unpersist()
-      return (empty, true)
-    }
+    if (nEdges == 0)
+      return (edges.select(col("src").as("node"), col("dst").as("comp")), true)
     // GUARDED DRIVER FAST PATH (integral ids only): below the pair cap
     // the closure is a single collect of the checkpointed 16-byte edge
     // rows plus a driver union-find — identical (node, comp = min id
@@ -590,7 +633,6 @@ object Dedup {
       require(collected.forall(r => !r.isNullAt(0) && !r.isNullAt(1)),
         "componentsOf: null id in the verified pair frame — pair " +
           "sources must emit non-null ids")
-      edges.unpersist()
       val labels = driverUnionFind(
         collected.map(r => (r.getLong(0), r.getLong(1))))
       val spark = pairs.sparkSession
@@ -643,13 +685,11 @@ object Dedup {
         .groupBy(col("node")).agg(min(col("comp")).as("comp"))
         .localCheckpoint(true)
       val nextSum = labelSum(next)
-      labels.unpersist()
       labels = next
       converged = nextSum.compareTo(prevSum) == 0
       prevSum = nextSum
       iter += 1
     }
-    edges.unpersist()
     (labels, converged)
   }
 
@@ -694,10 +734,9 @@ object Dedup {
                               shingleSize: Int = 3, numHashes: Int = 12,
                               bands: Int = 4,
                               threshold: Double = 0.7): DataFrame = {
-    require(numHashes % bands == 0, "numHashes must divide into bands")
     val shOld = shingleFrame(oldDf, idCol, textCol, shingleSize)
     val out = minhashPairsIncrementalIndexed(newDf,
-      bandedPostings(shOld, numHashes, bands, numHashes / bands), shOld,
+      postingsOf(shOld, numHashes, bands), shOld,
       idCol, textCol, shingleSize, numHashes, bands, threshold)
     shOld.unpersist()
     out
@@ -750,31 +789,29 @@ object Dedup {
       "oldPostings must be a postingsOf frame (__band, __bh, __id)")
     require(Set("__id", "__sh").subsetOf(oldShingles.columns.toSet),
       "oldShingles must be a shinglesOf frame (__id, __sh)")
-    if (threshold > 1.0) return emptyPairs(newDf, idCol)
-    val r = numHashes / bands
+    if (threshold > 1.0) emptyPairs(newDf, idCol)
+    else checkpointed(minhashPairsIncrementalPlan(newDf,
+      Some((oldPostings, oldShingles)), idCol, textCol, shingleSize,
+      numHashes, bands, threshold))
+  }
+
+  /** The lazy plan behind [[minhashPairsIncrementalIndexed]] (`old` =
+    * the corpus' (postings, shingles) frames) and [[minhashPairs]]
+    * (no corpus); returns the new batch's persisted shingle frame for
+    * the caller to release. */
+  private[ops] def minhashPairsIncrementalPlan(newDf: DataFrame,
+                                               old: Option[(DataFrame, DataFrame)],
+                                               idCol: String, textCol: String,
+                                               shingleSize: Int, numHashes: Int,
+                                               bands: Int, threshold: Double)
+      : (DataFrame, DataFrame) = {
+    require(numHashes % bands == 0, "numHashes must divide into bands")
     val shNew = shingleFrame(newDf, idCol, textCol, shingleSize)
-    val newPostings = bandedPostings(shNew, numHashes, bands, r)
-    val probe = newPostings
-      .select(col("__band"), col("__bh"), col("__id").as("id_a"))
-    val index = newPostings
-      .select(col("__band"), col("__bh"), col("__id").as("id_b"),
-        lit(false).as("__old"))
-      .union(oldPostings
-        .select(col("__band"), col("__bh"), col("__id").as("id_b"),
-          lit(true).as("__old")))
-    // new x new pairs appear from both directions -> keep id_a < id_b;
-    // new x old pairs appear once (old ids are never on the probe side)
-    val candidates = probe.join(index, Seq("__band", "__bh"))
-      .where((col("__old") && col("id_a") =!= col("id_b")) ||
-        (!col("__old") && col("id_a") < col("id_b")))
-      .select(least(col("id_a"), col("id_b")).as("id_a"),
-        greatest(col("id_a"), col("id_b")).as("id_b"))
-      .dropDuplicates("id_a", "id_b")
-    val verified = verifyPairs(candidates,
-      shNew.union(oldShingles.select(col("__id"), col("__sh"))), threshold)
-    val out = verified.localCheckpoint(true)
-    shNew.unpersist()
-    out
+    val candidates = bandCandidates(
+      bandedPostings(shNew, numHashes, bands, numHashes / bands),
+      old.map(_._1))
+    (shNew, verifyPairs(candidates, old.fold(shNew)(o =>
+      shNew.union(o._2.select(col("__id"), col("__sh")))), threshold))
   }
 
   /** Near-dedup with FULL transitive closure: connected components over

@@ -662,9 +662,9 @@ object Multimodal {
     // is part of the equi-join key — but the old one-branch-per-
     // modality union paid every join/dedup stage twice, once of them
     // always empty on a single-modality corpus. Identical pair set.
-    SimHash.nearDupPairsFromSigsIncrementalGrouped(
+    SimHash.nearDupPairsFromSigsGrouped(
       newSigs.where(col("modality").isNotNull && col("sig").isNotNull),
-      oldSigs.where(col("modality").isNotNull && col("sig").isNotNull),
+      Some(oldSigs.where(col("modality").isNotNull && col("sig").isNotNull)),
       idCol, "sig", Seq("modality"), maxHamming)
   }
 
@@ -699,14 +699,12 @@ object Multimodal {
     import org.apache.spark.sql.expressions.Window
     require(!df.columns.contains("__pd_comp") && !df.columns.contains("__pd_rn"),
       "input columns collide with dropPerceptualDuplicates' reserved names")
-    val sigs = perceptualSignature(df, idCol, dataCol)
-      .where(col("sig").isNotNull)
-    // one modality-keyed candidate join (r18) — see
-    // perceptualPairsIncrementalFromSigs; identical pair set, half
-    // the join/dedup stages of the per-modality union
+    // the batch run of perceptualPairsIncrementalFromSigs' modality-keyed
+    // candidate join: no admitted side
     val pairs = SimHash.nearDupPairsFromSigsGrouped(
-      sigs.where(col("modality").isNotNull), idCol, "sig",
-      Seq("modality"), maxHamming)
+      perceptualSignature(df, idCol, dataCol)
+        .where(col("modality").isNotNull && col("sig").isNotNull),
+      None, idCol, "sig", Seq("modality"), maxHamming)
     val comps = Dedup.componentsOf(pairs)
       .select(col("node").as(idCol), col("comp").as("__pd_comp"))
     // componentsOf returns a localCheckpointed frame: one cheap count

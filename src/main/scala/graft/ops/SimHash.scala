@@ -97,142 +97,78 @@ object SimHash {
     * pair within a (chunk, key) bucket (never all-pairs — pigeonhole
     * gives EXACT recall for maxHamming <= 3: <= 3 differing bits
     * leave at least one of four chunks identical), then the exact
-    * Hamming verify. */
+    * Hamming verify. The batch run of [[nearDupPairsFromSigsGrouped]]
+    * (no admitted side). */
   def nearDupPairsFromSigs(sigFrame: DataFrame, idCol: String,
                            sigCol: String,
                            maxHamming: Int = 3): DataFrame =
-    nearDupPairsFromSigsGrouped(sigFrame, idCol, sigCol, Nil, maxHamming)
+    nearDupPairsFromSigsGrouped(sigFrame, None, idCol, sigCol, Nil,
+      maxHamming)
 
-  /** [[nearDupPairsFromSigs]] with extra GROUP key columns riding the
-    * candidate join (rows only pair within equal group values) — one
-    * join instead of one-per-group for callers that previously
-    * filtered + unioned per group (the multimodal modality split:
-    * half the stages, identical pairs — r18). maxHamming == 0
-    * additionally skips the 4-chunk explosion outright: Hamming 0 IS
-    * signature equality, so the candidate join keys on the full
-    * signature and every candidate is already verified — 4x fewer
-    * join-input rows at any scale, no dedup pass (a pair can match
-    * only once).
+  /** The banded Hamming pair join of a NEW signature batch against
+    * itself PLUS the (much larger) already-admitted corpus' signatures
+    * `oldSigs`, without ever re-pairing the corpus against itself —
+    * [[graft.ops.Dedup.minhashPairsIncrementalIndexed]]'s shape for
+    * this family, through the shared candidate rule
+    * ([[graft.ops.Dedup.incrementalCandidates]]: new×new pairs keep
+    * id_a < id_b, new×old pairs are id-normalized). A batch run passes
+    * no `oldSigs`. Output ids must share one id space (the dedup
+    * family's contract); recall is exact for maxHamming <= 3 by
+    * pigeonhole.
+    *
+    * Extra GROUP key columns ride the candidate join (rows only pair
+    * within equal group values) — one join instead of one-per-group
+    * for callers that previously filtered + unioned per group (the
+    * multimodal modality split: half the stages, identical pairs —
+    * r18). maxHamming == 0 additionally skips the 4-chunk explosion
+    * outright: Hamming 0 IS signature equality, so the candidate join
+    * keys on the full signature and every candidate is already
+    * verified — 4x fewer join-input rows at any scale.
     *
     * PRECONDITION when `groupCols` is non-empty: an id appears under
     * at most ONE group value (the multimodal caller's shape — modality
-    * is a function of id). The pair dedup below keys on (id_a, id_b)
+    * is a function of id). The pair dedup keys on (id_a, id_b)
     * EXCLUDING the group columns, so an id carrying rows in two groups
     * would keep an arbitrary group's sig pair into the Hamming verify
     * — a pair that verifies under one group's sigs could be
     * nondeterministically dropped by the other's. All current callers
     * satisfy the precondition by construction. */
-  private[ops] def nearDupPairsFromSigsGrouped(sigFrame: DataFrame,
-                                               idCol: String, sigCol: String,
-                                               groupCols: Seq[String],
-                                               maxHamming: Int): DataFrame = {
-    val gc = groupCols.map(col)
-    // the narrow (group, id, sig) frame is MATERIALIZED once before
-    // the self-join (r18): both join sides otherwise re-evaluate the
-    // signature lineage — for perceptual callers that is the payload
-    // DECODE, the stage's dominant per-row cost, paid twice per row.
-    // ~17 bytes/row of checkpoint storage buys decode-once at any
-    // scale; the banded join below is unchanged and stays visible to
-    // the plan-shape pins.
-    val sigs = sigFrame.select(
-      gc :+ col(idCol).as("__id") :+ col(sigCol).as("__sig"): _*)
-      .localCheckpoint(true)
-    if (maxHamming == 0) {
-      val a = sigs.select(gc :+ col("__sig") :+ col("__id").as("id_a"): _*)
-      val b = sigs.select(gc :+ col("__sig") :+ col("__id").as("id_b"): _*)
-      return a.join(b, groupCols :+ "__sig")
-        .where(col("id_a") < col("id_b"))
-        .select(col("id_a"), col("id_b"), lit(0).as("hamming"))
-        .dropDuplicates("id_a", "id_b") // duplicate-id input parity
-    }
-    val chunked = sigs.select(gc ++ Seq(col("__id"), col("__sig"),
-      posexplode(chunkKeys(col("__sig"))).as(Seq("__chunk", "__key"))): _*)
-    val a = chunked.select(gc ++ Seq(col("__chunk"), col("__key"),
-      col("__id").as("id_a"), col("__sig").as("sig_a")): _*)
-    val b = chunked.select(gc ++ Seq(col("__chunk"), col("__key"),
-      col("__id").as("id_b"), col("__sig").as("sig_b")): _*)
-    a.join(b, groupCols ++ Seq("__chunk", "__key"))
-      .where(col("id_a") < col("id_b"))
-      .select("id_a", "id_b", "sig_a", "sig_b")
-      .dropDuplicates("id_a", "id_b")
-      .withColumn("hamming", hamming(col("sig_a"), col("sig_b")))
-      .where(col("hamming") <= maxHamming)
-      .select(col("id_a"), col("id_b"), col("hamming").cast("int").as("hamming"))
-  }
-
-  /** [[nearDupPairsFromSigs]] against a PRECOMPUTED corpus signature
-    * frame — [[graft.ops.Dedup.minhashPairsIncrementalIndexed]]'s
-    * shape for the banded Hamming family: pairs between a NEW batch's
-    * signatures and itself PLUS the (much larger) already-admitted
-    * corpus' signatures, without ever re-pairing the corpus against
-    * itself. The new batch probes the union index; new×new pairs keep
-    * one direction (id_a < id_b), new×old pairs appear once (old ids
-    * never sit on the probe side) and are id-normalized. Output ids
-    * must share one id space (the dedup family's contract); recall is
-    * the self-join's (exact for maxHamming <= 3 by pigeonhole). */
-  def nearDupPairsFromSigsIncremental(newSigs: DataFrame,
-                                      oldSigs: DataFrame,
-                                      idCol: String, sigCol: String,
-                                      maxHamming: Int = 3): DataFrame =
-    nearDupPairsFromSigsIncrementalGrouped(newSigs, oldSigs, idCol, sigCol,
-      Nil, maxHamming)
-
-  /** [[nearDupPairsFromSigsIncremental]] with extra GROUP key columns
-    * on the candidate join, plus the Hamming-0 signature-equality
-    * fast path — see [[nearDupPairsFromSigsGrouped]]. */
-  private[ops] def nearDupPairsFromSigsIncrementalGrouped(
-      newSigs: DataFrame, oldSigs: DataFrame,
+  private[ops] def nearDupPairsFromSigsGrouped(
+      newSigs: DataFrame, oldSigs: Option[DataFrame],
       idCol: String, sigCol: String,
       groupCols: Seq[String], maxHamming: Int): DataFrame = {
     val gc = groupCols.map(col)
     def narrowed(df: DataFrame) = df.select(
       gc :+ col(idCol).as("__id") :+ col(sigCol).as("__sig"): _*)
     // the new side sits on BOTH sides of the candidate join (probe +
-    // index): materialize the narrow signature rows once so a live
-    // decode lineage isn't evaluated twice (no-op-cheap when the
-    // caller already persisted its signature frame, e.g. the
-    // streaming tail's batchSigs)
-    lazy val newNarrowed = narrowed(newSigs).localCheckpoint(true)
+    // index): materialize the narrow signature rows once (r18) so a
+    // live decode lineage — for perceptual callers the payload DECODE,
+    // the stage's dominant per-row cost — isn't evaluated twice
+    // (no-op-cheap when the caller already persisted its signature
+    // frame, e.g. the streaming tail's batchSigs)
+    val newNarrowed = narrowed(newSigs).localCheckpoint(true)
     if (maxHamming == 0) {
       // Hamming 0 is signature EQUALITY: key the join on the whole
-      // signature — no chunk explosion, no verify, no dedup pass (a
-      // probe row meets each index row at most once on a single key)
-      val nNew = newNarrowed
-      val probe = nNew.select(gc :+ col("__sig") :+ col("__id").as("id_a"): _*)
-      val index = nNew.select(gc ++ Seq(col("__sig"),
-        col("__id").as("id_b"), lit(false).as("__old")): _*)
-        .union(narrowed(oldSigs).select(gc ++ Seq(col("__sig"),
-          col("__id").as("id_b"), lit(true).as("__old")): _*))
-      return probe.join(index, groupCols :+ "__sig")
-        .where((col("__old") && col("id_a") =!= col("id_b")) ||
-          (!col("__old") && col("id_a") < col("id_b")))
-        .select(least(col("id_a"), col("id_b")).as("id_a"),
-          greatest(col("id_a"), col("id_b")).as("id_b"),
-          lit(0).as("hamming"))
-        .dropDuplicates("id_a", "id_b") // duplicate-id input parity
+      // signature — no chunk explosion, no verify (the dedup pass only
+      // restores duplicate-id input parity)
+      def side(df: DataFrame, id: String) =
+        df.select(gc :+ col("__sig") :+ col("__id").as(id): _*)
+      return Dedup.incrementalCandidates(side(newNarrowed, "id_a"),
+        side(newNarrowed, "id_b"), oldSigs.map(o => side(narrowed(o), "id_b")),
+        groupCols :+ "__sig", Seq(lit(0).as("hamming")))
     }
-    def chunk(df: DataFrame) = df
+    def chunked(df: DataFrame) = df
       .select(gc ++ Seq(col("__id"), col("__sig"),
         posexplode(chunkKeys(col("__sig"))).as(Seq("__chunk", "__key"))): _*)
-    def chunked(df: DataFrame) = chunk(narrowed(df))
-    val cNew = chunk(newNarrowed)
-    val probe = cNew.select(gc ++ Seq(col("__chunk"), col("__key"),
-      col("__id").as("id_a"), col("__sig").as("sig_a")): _*)
-    val index = cNew.select(gc ++ Seq(col("__chunk"), col("__key"),
-      col("__id").as("id_b"), col("__sig").as("sig_b"),
-      lit(false).as("__old")): _*)
-      .union(chunked(oldSigs).select(gc ++ Seq(col("__chunk"), col("__key"),
-        col("__id").as("id_b"), col("__sig").as("sig_b"),
-        lit(true).as("__old")): _*))
-    probe.join(index, groupCols ++ Seq("__chunk", "__key"))
-      .where((col("__old") && col("id_a") =!= col("id_b")) ||
-        (!col("__old") && col("id_a") < col("id_b")))
-      // normalize new×old pairs whose old id is smaller; Hamming is
-      // symmetric, so the sig columns need no matching swap
-      .select(least(col("id_a"), col("id_b")).as("id_a"),
-        greatest(col("id_a"), col("id_b")).as("id_b"),
-        col("sig_a"), col("sig_b"))
-      .dropDuplicates("id_a", "id_b")
+    def side(df: DataFrame, s: String) = chunked(df).select(gc ++ Seq(
+      col("__chunk"), col("__key"), col("__id").as(s"id_$s"),
+      col("__sig").as(s"sig_$s")): _*)
+    // Hamming is symmetric, so the sig columns need no swap when the
+    // rule normalizes a new×old pair whose old id is smaller
+    Dedup.incrementalCandidates(side(newNarrowed, "a"), side(newNarrowed, "b"),
+      oldSigs.map(o => side(narrowed(o), "b")),
+      groupCols ++ Seq("__chunk", "__key"),
+      Seq(col("sig_a"), col("sig_b")))
       .withColumn("hamming", hamming(col("sig_a"), col("sig_b")))
       .where(col("hamming") <= maxHamming)
       .select(col("id_a"), col("id_b"),

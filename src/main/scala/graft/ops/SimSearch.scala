@@ -954,70 +954,39 @@ object SimSearch {
    * for recall), verify with exact cosine. Narrow candidate shuffle on
    * the bucket key only — never an all-pairs product. Recall is
    * tunable via `bits` (fewer bits = bigger buckets = higher recall,
-   * more verification work).
+   * more verification work). The batch run of
+   * [[cosinePairsIncrementalFromState]]'s core: the corpus'
+   * [[srpStateOf]] frame paired with no admitted state.
    */
   def cosineNearDupPairs(df: DataFrame, idCol: String, vecCol: String,
                          threshold: Double, bits: Int = 8,
                          seed: Long = 42L): DataFrame = {
-    val (bucketed, verified) =
+    val (state, verified) =
       cosineNearDupPlan(df, idCol, vecCol, threshold, bits, seed)
     val out = verified.localCheckpoint(true)
-    bucketed.unpersist()
+    state.unpersist()
     out
   }
 
-  /** Un-checkpointed plan behind [[cosineNearDupPairs]] (testable). */
+  /** Un-checkpointed plan behind [[cosineNearDupPairs]] (testable);
+    * returns the persisted state frame for the caller to release. */
   private[ops] def cosineNearDupPlan(df: DataFrame, idCol: String, vecCol: String,
                                      threshold: Double, bits: Int,
                                      seed: Long): (DataFrame, DataFrame) = {
-    val dim = dimOf(df, vecCol)
-    val bucketOf = srpBucketUdf(bits, dim, seed)
-    val bucketed = df.select(col(idCol).as("__id"),
-      asDouble(col(vecCol)).as("__v"),
-      bucketOf(col(vecCol)).as("__b"))
-      .withColumn("__n", norm(col("__v"))) // hoisted: once per row, not per pair
+    val state = srpStateOf(df, idCol, vecCol, bits, seed)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // each vector also probes its single-bit-flip buckets so pairs
-    // split across one differing hyperplane sign are still candidates.
-    // The probe explosion and pair-dedup carry ONLY (bucket, id) — at
-    // 768-dim embeddings the vectors are ~3 KB/row and shuffling them
-    // x(1+bits) probes is the dominant cost at scale; instead the
-    // (small) deduped candidate set joins the vectors back from the
-    // persisted bucketed frame for the exact-cosine verify, exactly as
-    // Dedup.minhashPairsPlan keeps shingle arrays out of its candidate
-    // shuffle.
-    val probed = bucketed.select(col("__id"),
-      explode(multiProbe(col("__b"), bits)).as("__bucket"))
-    val a = probed.select(col("__bucket"), col("__id").as("id_a"))
-    val b = bucketed.select(col("__b").as("__bucket"), col("__id").as("id_b"))
-    val candidates = a.join(b, Seq("__bucket"))
-      .where(col("id_a") < col("id_b"))
-      .select("id_a", "id_b")
-      .dropDuplicates("id_a", "id_b")
-      // explicit scale-adaptive parallelism for the exact-cosine
-      // verify (r18): the candidate frame is a few narrow bytes, so
-      // AQE's byte-based coalescing collapses it to 1-2 partitions —
-      // but the verify's cost is per-PAIR dot products, profiled at
-      // two busy tasks and 30 idle cores. Explicit N (>= cores, >= the
-      // session's reduce width) is exempt from AQE coalescing. The
-      // floor is derived from session settings only (r19): reading
-      // bucketed.rdd.getNumPartitions forced a SECOND physical
-      // planning of the frame just for a partition count.
-      .repartition(verifyParallelism(df.sparkSession), col("id_a"))
-    val verified = candidates
-      .join(bucketed.select(col("__id").as("id_a"), col("__v").as("v_a"),
-        col("__n").as("n_a")), "id_a")
-      .join(bucketed.select(col("__id").as("id_b"), col("__v").as("v_b"),
-        col("__n").as("n_b")), "id_b")
-      .withColumn("cosine",
-        dot(col("v_a"), col("v_b")) / (col("n_a") * col("n_b")))
-      .where(col("cosine") >= threshold)
-      .select(col("id_a"), col("id_b"), round(col("cosine"), 4).as("cosine"))
-    (bucketed, verified)
+    // explicit scale-adaptive parallelism for the exact-cosine verify
+    // (r18): the candidate frame is a few narrow bytes, so AQE's
+    // byte-based coalescing collapses it to 1-2 partitions — but the
+    // verify's cost is per-PAIR dot products, profiled at two busy
+    // tasks and 30 idle cores. Batch only: on the streaming path the
+    // extra exchange would be paid on every micro-batch.
+    (state, cosinePairsPlan(state, None, idCol, threshold, bits,
+      Some(verifyParallelism(df.sparkSession))))
   }
 
   /** The precomputed SRP dedup-state frame behind
-    * [[cosinePairsIncremental]] — the embedding analogue of
+    * [[cosinePairsIncrementalFromState]] — the embedding analogue of
     * [[graft.ops.Dedup.postingsOf]]: one narrow row per non-null
     * vector carrying its SRP bucket, the double-cast vector, and its
     * hoisted norm (`(idCol, __b, __v, __n)`). Persist it when a batch
@@ -1031,48 +1000,22 @@ object SimSearch {
       .select(col(idCol),
         srpBucketUdf(bits, dim, seed)(col(vecCol)).as("__b"),
         asDouble(col(vecCol)).as("__v"))
-      .withColumn("__n", norm(col("__v")))
+      .withColumn("__n", norm(col("__v"))) // hoisted: once per row, not per pair
   }
 
   /** INCREMENTAL embedding-cosine near-dup pairs — the
     * [[graft.ops.Dedup.minhashPairsIncrementalIndexed]] shape for the
     * SRP family (the daily-ingest path at 100 TB): pairs between a
-    * NEW batch and itself plus the PRECOMPUTED [[srpStateOf]] frame
-    * of the already-admitted corpus, without re-bucketing or
-    * re-pairing the corpus against itself. The new side probes its
-    * single-bit-flip buckets ([[cosineNearDupPairs]]' multi-probe
-    * policy — a pair split across one differing hyperplane sign is
-    * still a candidate whichever side is new); the corpus side
-    * contributes exact-bucket narrow rows only. Candidates carry ids
-    * only; the exact-cosine verify joins the vectors back from the
-    * two state frames, so at 768-dim embeddings the wide rows never
-    * ride the candidate shuffle. New×old pairs are id-normalized;
-    * old×old pairs were found when those batches landed. Ids must be
+    * NEW batch's [[srpStateOf]] frame and itself plus the PRECOMPUTED
+    * [[srpStateOf]] frame of the already-admitted corpus, without
+    * re-bucketing or re-pairing the corpus against itself. The
+    * streaming tail buckets its batch ONCE (checkpointed) and shares
+    * the frame between this pair pass and the durable-state write
+    * (r18). `newState` must be computed under the SAME bits/seed as
+    * `oldState` (the caller owns that contract — the tail persists
+    * the bit width in its `_state_params` marker). Ids must be
     * disjoint across the two frames (one id space — the dedup
     * family's contract). */
-  def cosinePairsIncremental(newDf: DataFrame, oldState: DataFrame,
-                             idCol: String, vecCol: String,
-                             threshold: Double, bits: Int = 8,
-                             seed: Long = 42L): DataFrame = {
-    // eagerly localCheckpointed (r18): the probe, index, and BOTH
-    // verify join-backs reference this frame — with a plain persist,
-    // each of the pair query's stages re-analyzed the whole upstream
-    // batch lineage (gates, anti-joins, window) per materialization;
-    // a checkpointed leaf keeps the pair pass's plans O(pair pass)
-    cosinePairsIncrementalFromState(
-      srpStateOf(newDf, idCol, vecCol, bits, seed).localCheckpoint(true),
-      oldState, idCol, threshold, bits)
-  }
-
-  /** [[cosinePairsIncremental]] over an ALREADY-BUCKETED new batch —
-    * the [[graft.ops.Multimodal.perceptualPairsIncrementalFromSigs]]
-    * entry shape for the SRP family (r18): the streaming tail buckets
-    * its batch ONCE ([[srpStateOf]], checkpointed) and shares the
-    * frame between this pair pass and the durable-state write, instead
-    * of paying the hyperplane pass twice per micro-batch. `newState`
-    * must be an [[srpStateOf]] frame computed under the SAME bits/seed
-    * as `oldState` (the caller owns that contract — the tail persists
-    * the bit width in its `_state_params` marker). */
   def cosinePairsIncrementalFromState(newState: DataFrame,
                                       oldState: DataFrame,
                                       idCol: String,
@@ -1096,43 +1039,54 @@ object SimSearch {
     val newDim = dimOfState(newState)
     val oldDim = dimOfState(oldState)
     require(newDim == 0 || oldDim == 0 || newDim == oldDim,
-      s"cosinePairsIncremental: batch embedding dim $newDim != stored " +
-        s"state dim $oldDim — the corpus was re-embedded under a " +
+      s"cosinePairsIncrementalFromState: batch embedding dim $newDim != " +
+        s"stored state dim $oldDim — the corpus was re-embedded under a " +
         "different model/config; refit the state (delete and let the " +
         "tail rebuild it) instead of pairing across spaces")
-    locally {
-      val probes = newState.select(col(idCol).as("id_a"),
-        explode(multiProbe(col("__b"), bits)).as("__bucket"))
-      val index = newState.select(col("__b").as("__bucket"),
-        col(idCol).as("id_b"), lit(false).as("__old"))
-        .unionByName(oldState.select(col("__b").as("__bucket"),
-          col(idCol).as("id_b"), lit(true).as("__old")))
-      // new×new pairs appear from both directions -> keep id_a < id_b;
-      // new×old pairs appear once (old ids are never on the probe side)
-      val candidates = probes.join(index, Seq("__bucket"))
-        .where((col("__old") && col("id_a") =!= col("id_b")) ||
-          (!col("__old") && col("id_a") < col("id_b")))
-        .select(least(col("id_a"), col("id_b")).as("id_a"),
-          greatest(col("id_a"), col("id_b")).as("id_b"))
-        .dropDuplicates("id_a", "id_b")
-      val vecs = newState.select(col(idCol), col("__v"), col("__n"))
-        .unionByName(oldState.select(col(idCol), col("__v"), col("__n")))
-      val verified = candidates
-        .join(vecs.select(col(idCol).as("id_a"), col("__v").as("v_a"),
-          col("__n").as("n_a")), "id_a")
-        .join(vecs.select(col(idCol).as("id_b"), col("__v").as("v_b"),
-          col("__n").as("n_b")), "id_b")
-        .withColumn("cosine",
-          dot(col("v_a"), col("v_b")) / (col("n_a") * col("n_b")))
-        .where(col("cosine") >= threshold)
-        .select(col("id_a"), col("id_b"),
-          round(col("cosine"), 4).as("cosine"))
-      // checkpoint blocks are released by GC + ContextCleaner when the
-      // caller drops the frame (Dataset.unpersist would be a no-op on
-      // a localCheckpoint — see Curate.streamingTail's step-3 note,
-      // which also documents the executor-loss tradeoff)
-      verified.localCheckpoint(true)
-    }
+    // checkpoint blocks are released by GC + ContextCleaner when the
+    // caller drops the frame (Dataset.unpersist would be a no-op on
+    // a localCheckpoint — see Curate.streamingTail's step-3 note,
+    // which also documents the executor-loss tradeoff)
+    cosinePairsPlan(newState, Some(oldState), idCol, threshold, bits, None)
+      .localCheckpoint(true)
+  }
+
+  /** The lazy SRP pair plan shared by the batch and incremental
+    * entries: the new side probes its single-bit-flip buckets (a pair
+    * split across one differing hyperplane sign is still a candidate
+    * whichever side is new), the corpus side contributes exact-bucket
+    * narrow rows only ([[graft.ops.Dedup.incrementalCandidates]]).
+    * Candidates carry ids only — at 768-dim embeddings the vectors are
+    * ~3 KB/row and shuffling them x(1+bits) probes would dominate —
+    * and the exact-cosine verify joins the vectors back from the two
+    * state frames, exactly as Dedup.minhashPairsPlan keeps shingle
+    * arrays out of its candidate shuffle. `verifyPartitions` repartitions
+    * the candidates on `id_a` before the verify (explicit N is exempt
+    * from AQE coalescing). */
+  private[ops] def cosinePairsPlan(newState: DataFrame,
+                                   oldState: Option[DataFrame],
+                                   idCol: String, threshold: Double,
+                                   bits: Int,
+                                   verifyPartitions: Option[Int]): DataFrame = {
+    def index(st: DataFrame) =
+      st.select(col("__b").as("__bucket"), col(idCol).as("id_b"))
+    val candidates = Dedup.incrementalCandidates(
+      newState.select(col(idCol).as("id_a"),
+        explode(multiProbe(col("__b"), bits)).as("__bucket")),
+      index(newState), oldState.map(index), Seq("__bucket"))
+    def vecsOf(st: DataFrame) = st.select(col(idCol), col("__v"), col("__n"))
+    val vecs = oldState.fold(vecsOf(newState))(o =>
+      vecsOf(newState).unionByName(vecsOf(o)))
+    verifyPartitions.fold(candidates)(n =>
+        candidates.repartition(n, col("id_a")))
+      .join(vecs.select(col(idCol).as("id_a"), col("__v").as("v_a"),
+        col("__n").as("n_a")), "id_a")
+      .join(vecs.select(col(idCol).as("id_b"), col("__v").as("v_b"),
+        col("__n").as("n_b")), "id_b")
+      .withColumn("cosine",
+        dot(col("v_a"), col("v_b")) / (col("n_a") * col("n_b")))
+      .where(col("cosine") >= threshold)
+      .select(col("id_a"), col("id_b"), round(col("cosine"), 4).as("cosine"))
   }
 
   /**
@@ -1291,7 +1245,12 @@ object SimSearch {
     * never below the cluster's core count or the session's configured
     * reduce width. Session-derived only — no `.rdd.getNumPartitions`
     * peek, which would force an extra physical planning of the input
-    * lineage just to read a number. */
+    * lineage just to read a number. That is also its CEILING: a corpus
+    * read from more input splits than
+    * `max(defaultParallelism, spark.sql.shuffle.partitions)` (a
+    * 1000-split parquet corpus on a 32-core session at the default 200
+    * shuffle partitions) gets fewer verify tasks than it has splits —
+    * raise `spark.sql.shuffle.partitions` for such corpora. */
   private def verifyParallelism(spark: org.apache.spark.sql.SparkSession): Int =
     math.max(spark.sparkContext.defaultParallelism,
       spark.sessionState.conf.numShufflePartitions)

@@ -488,11 +488,16 @@ class MultimodalSpec extends AnyFunSuite with SparkTestSession {
     assert(!inc.exists(p => p._1 == 14L || p._2 == 14L)) // opaque
     // and it equals the FULL self-join filtered to batch-touching
     // pairs (the exactness contract q199's oracle brute-forces)
-    val fullTouching = Multimodal.imageNearDupPairs(rows, maxHamming = 0)
+    val full = Multimodal.imageNearDupPairs(rows, maxHamming = 0)
       .unionByName(Multimodal.audioNearDupPairs(rows, maxHamming = 0))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      .filter(p => p._1 >= 10L || p._2 >= 10L)
-    assert(inc === fullTouching)
+    assert(inc === full.filter(p => p._1 >= 10L || p._2 >= 10L))
+    // a batch run IS the incremental run against an empty admitted
+    // side: pairing every row against nothing ≡ the full self-join
+    val againstNothing = Multimodal.perceptualPairsIncremental(rows,
+      Multimodal.perceptualSignature(rows.limit(0)), maxHamming = 0)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(againstNothing === full)
     // the old side must be a signature frame, not raw blobs
     intercept[IllegalArgumentException] {
       Multimodal.perceptualPairsIncremental(newBatch,

@@ -41,14 +41,26 @@ class OpsSpec extends AnyFunSuite with SparkTestSession {
   }
 
   test("minhash plan contains no cartesian product") {
-    // assert on the un-checkpointed plan (the public API checkpoints
-    // eagerly, which would sever the lineage under inspection)
-    val (sh, verified) = Dedup.minhashPairsPlan(docs, "doc_id", "text", 3, 12, 4, 0.7)
-    try {
-      val plan = planOf(verified)
-      assert(!plan.contains("CartesianProduct"), plan.take(2000))
-      assert(!plan.contains("BroadcastNestedLoopJoin"), plan.take(2000))
-    } finally sh.unpersist()
+    // assert on the un-checkpointed plans (the public API checkpoints
+    // eagerly, which would sever the lineage under inspection) — the
+    // batch form and the incremental form against a non-empty corpus
+    // index
+    val oldSh = Dedup.shinglesOf(docs.filter(col("doc_id").isin(1L, 2L)),
+      "doc_id", "text")
+    val forms = Seq(
+      () => Dedup.minhashPairsPlan(docs, "doc_id", "text", 3, 12, 4, 0.7),
+      () => Dedup.minhashPairsIncrementalPlan(
+        docs.filter(col("doc_id").isin(3L, 4L, 5L)),
+        Some((Dedup.postingsOf(oldSh, 12, 4), oldSh)), "doc_id", "text", 3,
+        12, 4, 0.7))
+    for (form <- forms) {
+      val (sh, verified) = form()
+      try {
+        val plan = planOf(verified)
+        assert(!plan.contains("CartesianProduct"), plan.take(2000))
+        assert(!plan.contains("BroadcastNestedLoopJoin"), plan.take(2000))
+      } finally sh.unpersist()
+    }
   }
 
   test("incremental minhash finds new-new and new-old pairs, never old-old") {
@@ -73,6 +85,12 @@ class OpsSpec extends AnyFunSuite with SparkTestSession {
       shingleSize = 2, numHashes = 12, bands = 6, threshold = 0.5)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(keys === full - ((1L, 2L)))
+    // a batch run IS the incremental run against an empty corpus
+    val againstNothing = Dedup.minhashPairsIncremental(docs, docs.limit(0),
+      "doc_id", "text", shingleSize = 2, numHashes = 12, bands = 6,
+      threshold = 0.5)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(againstNothing === full)
   }
 
   test("indexed incremental minhash equals the live form on precomputed state frames") {
@@ -158,8 +176,15 @@ class OpsSpec extends AnyFunSuite with SparkTestSession {
 
   test("simhash near-dup pairs: dups found, plan cartesian-free") {
     val q = SimHash.nearDupPairs(docs, "doc_id", "text", maxHamming = 3)
-    val plan = planOf(q)
-    assert(!plan.contains("CartesianProduct"), plan.take(2000))
+    val sigs = docs.select(col("doc_id"),
+      SimHash.simhashCol(col("text")).as("sig"))
+    val inc = SimHash.nearDupPairsFromSigsGrouped(
+      sigs.where(col("doc_id") >= 3L), Some(sigs.where(col("doc_id") < 3L)),
+      "doc_id", "sig", Nil, maxHamming = 3)
+    for (form <- Seq(q, inc)) {
+      val plan = planOf(form)
+      assert(!plan.contains("CartesianProduct"), plan.take(2000))
+    }
     val keys = q.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(keys.contains((1L, 2L)))
     assert(keys.contains((1L, 5L)))
@@ -779,7 +804,7 @@ class OpsSpec extends AnyFunSuite with SparkTestSession {
     }
   }
 
-  test("cosinePairsIncremental: batch-touching pairs only, equals the filtered self-join") {
+  test("cosinePairsIncrementalFromState: batch-touching pairs equal the filtered join") {
     import org.apache.spark.sql.functions.{col => c}
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
       .select("vec_id", "embedding")
@@ -791,8 +816,9 @@ class OpsSpec extends AnyFunSuite with SparkTestSession {
     val newBatch = all.where(c("vec_id") % 5 === 0)
     val oldRows = all.where(c("vec_id") % 5 =!= 0)
     val oldState = SimSearch.srpStateOf(oldRows, "vec_id", "embedding")
-    val inc = SimSearch.cosinePairsIncremental(newBatch, oldState,
-      "vec_id", "embedding", threshold = 0.95)
+    val inc = SimSearch.cosinePairsIncrementalFromState(
+      SimSearch.srpStateOf(newBatch, "vec_id", "embedding"), oldState,
+      "vec_id", threshold = 0.95)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
       .toSet
     assert(inc.nonEmpty, "fixture planted no incremental pairs")
@@ -803,15 +829,24 @@ class OpsSpec extends AnyFunSuite with SparkTestSession {
     // equals the FULL self-join filtered to batch-touching pairs (the
     // q199 discipline for the embedding modality). Same bits/seed, so
     // the SRP candidate sets agree bucket for bucket.
-    val full = SimSearch.cosineNearDupPairs(all, "vec_id", "embedding",
+    val batchRun = SimSearch.cosineNearDupPairs(all, "vec_id", "embedding",
       threshold = 0.95)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-      .filter(p => batchIds(p._1) || batchIds(p._2)).toSet
+      .toSet
+    val full = batchRun.filter(p => batchIds(p._1) || batchIds(p._2))
     assert(inc === full)
+    // a batch run IS the incremental run against an empty state
+    val allState = SimSearch.srpStateOf(all, "vec_id", "embedding")
+    val againstNothing = SimSearch.cosinePairsIncrementalFromState(allState,
+      allState.limit(0), "vec_id", threshold = 0.95)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+      .toSet
+    assert(againstNothing === batchRun)
     // the state-frame guard refuses a non-srpStateOf frame
     intercept[IllegalArgumentException] {
-      SimSearch.cosinePairsIncremental(newBatch, oldRows, "vec_id",
-        "embedding", threshold = 0.95)
+      SimSearch.cosinePairsIncrementalFromState(
+        SimSearch.srpStateOf(newBatch, "vec_id", "embedding"), oldRows,
+        "vec_id", threshold = 0.95)
     }
   }
 
@@ -1120,8 +1155,14 @@ class OpsSpec extends AnyFunSuite with SparkTestSession {
       .toDF("vec_id", "embedding")
     val (bucketed, lazyPairs) = SimSearch.cosineNearDupPlan(
       vecs, "vec_id", "embedding", 0.999, 4, 42L)
-    try assert(!planOf(lazyPairs).contains("CartesianProduct"),
-      planOf(lazyPairs).take(1500))
+    val lazyInc = SimSearch.cosinePairsPlan(
+      SimSearch.srpStateOf(vecs.where($"vec_id" % 2 === 0), "vec_id",
+        "embedding", 4),
+      Some(SimSearch.srpStateOf(vecs.where($"vec_id" % 2 =!= 0), "vec_id",
+        "embedding", 4)), "vec_id", 0.999, 4, None)
+    try for (form <- Seq(lazyPairs, lazyInc))
+      assert(!planOf(form).contains("CartesianProduct"),
+        planOf(form).take(1500))
     finally bucketed.unpersist()
     val pairs = SimSearch.cosineNearDupPairs(vecs, "vec_id", "embedding",
       threshold = 0.999, bits = 4)
@@ -1150,16 +1191,23 @@ class OpsSpec extends AnyFunSuite with SparkTestSession {
     try {
       val (bucketed, lazyPairs) = SimSearch.cosineNearDupPlan(
         vecs, "vec_id", "embedding", 0.999, 4, 42L)
-      try {
+      // the streaming semantic stage's form: a batch state probing an
+      // admitted state
+      val lazyInc = SimSearch.cosinePairsPlan(
+        SimSearch.srpStateOf(vecs.where($"vec_id" % 2 === 0), "vec_id",
+          "embedding", 4),
+        Some(SimSearch.srpStateOf(vecs.where($"vec_id" % 2 =!= 0), "vec_id",
+          "embedding", 4)), "vec_id", 0.999, 4, None)
+      try for (form <- Seq(lazyPairs, lazyInc)) {
         import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
         import org.apache.spark.sql.types.ArrayType
-        val exchanges = lazyPairs.queryExecution.executedPlan.collect {
+        val exchanges = form.queryExecution.executedPlan.collect {
           case e: ShuffleExchangeExec => e
         }
         val bucketKeyed = exchanges.filter(
           _.outputPartitioning.toString.contains("__bucket"))
         assert(bucketKeyed.nonEmpty,
-          lazyPairs.queryExecution.executedPlan.toString.take(2000))
+          form.queryExecution.executedPlan.toString.take(2000))
         for (e <- bucketKeyed)
           assert(!e.output.exists(_.dataType.isInstanceOf[ArrayType]),
             s"vector-typed column in candidate exchange: $e")

@@ -133,46 +133,6 @@ class CurateGateSpec extends AnyFunSuite with SparkTestSession {
     assert(admitted(dS) === streamed)
   }
 
-  test("streaming tail corpusOverride replaces the state read") {
-    import spark.implicits._
-    // three mutually-DISSIMILAR texts (shared prefixes would make
-    // them near-dups of each other at threshold 0.7 and the intra-
-    // batch closure would eat the fixture)
-    val proseA = "the quick brown fox jumps over the lazy dog and then " +
-      "discusses the merits of deterministic testing with a friend"
-    val proseB = "seventeen sailors navigate uncharted waters while " +
-      "charting constellations nobody has catalogued before tonight"
-    val proseC = "a completely different essay concerning the economics " +
-      "of medieval grain markets and their seasonal price cycles"
-    val b0 = Seq((1L, "s", proseA), (2L, "s", proseB))
-      .toDF("doc_id", "source", "text")
-    // doc 11 is an exact dup of doc 1's text (different id)
-    val b1 = Seq((11L, "s", proseA), (12L, "s", proseC))
-      .toDF("doc_id", "source", "text")
-    def run(dir: String, override1: Option[org.apache.spark.sql.DataFrame])
-        : Set[Long] = {
-      val base = Curate.streamingTail(spark, dir,
-        minQuality = 0.0, maxDup2gramFrac = 1.0)
-      base(b0, 0L)
-      Curate.streamingTail(spark, dir,
-        minQuality = 0.0, maxDup2gramFrac = 1.0,
-        corpusOverride = override1)(b1, 1L)
-      spark.read.parquet(dir).select("doc_id")
-        .collect().map(_.getLong(0)).toSet
-    }
-    val plainDir = java.nio.file.Files
-      .createTempDirectory("graft-ovr-a").toString
-    val plain = run(plainDir, None)
-    assert(plain === Set(1L, 2L, 12L), s"cross-batch dedup broken: $plain")
-    // an EMPTY override corpus disables cross-batch dedup for batch 1:
-    // the dup doc 11 is admitted — proof the override frame, not the
-    // outDir read, is the dedup state
-    val ovrDir = java.nio.file.Files
-      .createTempDirectory("graft-ovr-b").toString
-    val ovr = run(ovrDir, Some(b0.limit(0)))
-    assert(ovr === Set(1L, 2L, 11L, 12L), s"override ignored: $ovr")
-  }
-
   test("streaming tail durable state: cross-batch dedup never re-reads the admitted corpus") {
     import spark.implicits._
     val proseA = "the quick brown fox jumps over the lazy dog and then " +
@@ -286,48 +246,6 @@ class CurateGateSpec extends AnyFunSuite with SparkTestSession {
       === Set(1L, 2L, 12L))
     assert(keys.select("__batch_id").distinct()
       .collect().map(_.getInt(0)).toSet === Set(0, 1))
-  }
-
-  test("streaming tail: corpusOverride on a pre-state corpus still bootstraps the older batches") {
-    import spark.implicits._
-    val proseA = "the quick brown fox jumps over the lazy dog and then " +
-      "discusses the merits of deterministic testing with a friend"
-    val proseB = "seventeen sailors navigate uncharted waters while " +
-      "charting constellations nobody has catalogued before tonight"
-    val proseC = "a completely different essay concerning the economics " +
-      "of medieval grain markets and their seasonal price cycles"
-    val b0 = Seq((1L, "s", proseA), (2L, "s", proseB))
-      .toDF("doc_id", "source", "text")
-    val b1 = Seq((11L, "s", proseA)).toDF("doc_id", "source", "text")
-    val b2 = Seq((21L, "s", proseB), (22L, "s", proseC))
-      .toDF("doc_id", "source", "text")
-    val dir = java.nio.file.Files.createTempDirectory("graft-ovr-boot")
-      .toString
-    val sd = dir + "__state"
-    def tail(ovr: Option[org.apache.spark.sql.DataFrame]) =
-      Curate.streamingTail(spark, dir, minQuality = 0.0,
-        maxDup2gramFrac = 1.0, corpusOverride = ovr)
-    tail(None)(b0, 0L)
-    // simulate a pre-state corpus (older build): wipe the state dir
-    java.nio.file.Files.walk(java.nio.file.Paths.get(sd))
-      .sorted(java.util.Comparator.reverseOrder())
-      .forEach(p => java.nio.file.Files.delete(p))
-    // batch 1 runs WITH an (empty) override: the override governs THIS
-    // batch's dedup read (so the proseA dup is admitted), but the
-    // bootstrap must still rebuild batch 0's state — otherwise the
-    // keys written for batch 1 would set the commit marker over a
-    // state that orphans batch 0
-    tail(Some(b0.limit(0)))(b1, 1L)
-    assert(spark.read.parquet(s"$sd/keys").select("__id")
-      .collect().map(_.getLong(0)).toSet === Set(1L, 2L, 11L),
-      "bootstrap did not cover the pre-state batch under an override")
-    // batch 2 drops the override: the proseB dup of BATCH 0's doc must
-    // be dropped through the rebuilt state
-    tail(None)(b2, 2L)
-    val admitted = spark.read.parquet(dir).select("doc_id")
-      .collect().map(_.getLong(0)).toSet
-    assert(admitted === Set(1L, 2L, 11L, 22L),
-      s"batch-0 state orphaned after an override batch: $admitted")
   }
 
   test("streaming tail: a destroyed state frame fails loudly instead of silently disabling near dedup") {
