@@ -259,11 +259,14 @@ object IndexCli {
       // persist it WITH the index (ivfSave just invalidated any stale
       // one), so `drift` runs load it instead of re-scanning. Fitted
       // from the in-session frame + centers (the IVF+PQ path's
-      // ivfBaselineOf — same argmin kernel, same per-row distances as
-      // re-deriving from the stored assignment): the old
-      // ivfBaseline(dir) re-READ the corpus just written and
-      // re-collected the centers from disk, a whole extra round-trip
-      // per fit (r19)
+      // ivfBaselineOf, same argmin kernel). It matches re-deriving from
+      // the stored assignment only up to two caveats: the fit assigned
+      // rows with KMeans' fastSquaredDistance, whose tie-break and
+      // precision can differ from the argmin kernel on near-equidistant
+      // rows, and `df` must re-read the same rows the index stored
+      // (a deterministic source). The old ivfBaseline(dir) re-READ the
+      // corpus just written and re-collected the centers from disk, a
+      // whole extra round-trip per fit (r19)
       val baseline = SimSearch.ivfBaselineOf(spark, idx.centers, df,
         config.vecCol)
       SimSearch.ivfBaselineSave(spark, baseline, config.index)

@@ -32,10 +32,17 @@ import graft.text.Stemmer
  * the library's own classpath resources — each executor materializes it
  * once locally, with zero driver->executor serialization (strictly
  * cheaper than the reference's broadcast-a-WordList-instance at 1000
- * executors). The fuzzy scan is length-bucketed (|len(w)-len(d)| <= 3
- * candidates only) with a banded early-exit Levenshtein, and results
- * are memoized per JVM because token frequency follows Zipf's law — the
- * same OOV tokens recur millions of times at 100 TB.
+ * executors). The fuzzy scan visits only the length buckets within 3 of
+ * the query, stopping at the first longer bucket whose length gap
+ * exceeds the best distance so far. In each bucket it skips every entry
+ * whose character-class lower bound ([[Distance.maskLowerBound]], one
+ * precomputed 64-bit mask per entry) already exceeds the best distance
+ * so far: such an entry could neither lower it nor tie it, so the result
+ * is bit-identical to scanning all of them while most entries never
+ * reach the DP. The survivors run the banded early-exit Levenshtein
+ * bounded by the best distance so far. Results are memoized per JVM
+ * because token frequency follows Zipf's law — the same OOV tokens recur
+ * millions of times at 100 TB.
  */
 object WordList {
 
@@ -62,16 +69,25 @@ object WordList {
       .map { case (stem, vs) => stem -> vs.map(_._2).sum / vs.length }
   }
 
+  /** One length bucket of the fuzzy-scan dictionary, struct-of-arrays:
+    * entry i is `keys(i)` with score `scores(i)` and character-class set
+    * `masks(i)` ([[Distance.charMask]]). */
+  private final class Bucket(val keys: Array[String], val scores: Array[Double],
+                             val masks: Array[Long])
+
   /** Length-bucketed dictionary for the fuzzy scan: bucket i holds the
     * entries with key length i. Candidates for a d<=3 lookup are only
     * the buckets within +-3 of the query length. */
-  private lazy val byLength: Array[Array[(String, Double)]] = {
+  private lazy val byLength: Array[Bucket] = {
     val maxLen = scores.keysIterator.map(_.length).max
     val buckets = Array.fill(maxLen + 1)(List.empty[(String, Double)])
     scores.foreach { case kv @ (k, _) =>
       buckets(k.length) = kv :: buckets(k.length)
     }
-    buckets.map(_.toArray)
+    buckets.map { b =>
+      new Bucket(b.map(_._1).toArray, b.map(_._2).toArray,
+        b.map(kv => Distance.charMask(kv._1)).toArray)
+    }
   }
 
   private val MaxFuzzyDistance = 3
@@ -91,17 +107,26 @@ object WordList {
     var sum = 0.0
     var n = 0
     val len = word.length
+    val mask = Distance.charMask(word)
     val lo = math.max(0, len - MaxFuzzyDistance)
     val hi = math.min(byLength.length - 1, len + MaxFuzzyDistance)
     var l = lo
-    while (l <= hi) {
+    // buckets longer than the query by more than bestDist can neither
+    // lower nor tie it (bestDist starts above 3, so the shorter ones all run)
+    while (l <= hi && l - len <= bestDist) {
       val bucket = byLength(l)
+      val keys = bucket.keys
+      val masks = bucket.masks
       var i = 0
-      while (i < bucket.length) {
-        val (k, v) = bucket(i)
-        val d = Distance.bounded(k, word, bestDist)
-        if (d < bestDist) { bestDist = d; sum = v; n = 1 }
-        else if (d == bestDist && d <= MaxFuzzyDistance) { sum += v; n += 1 }
+      while (i < keys.length) {
+        // entries skipped here are farther than bestDist: they would
+        // neither lower it nor tie it
+        if (Distance.maskLowerBound(masks(i), mask) <= bestDist) {
+          val d = Distance.bounded(keys(i), word, bestDist)
+          val v = bucket.scores(i)
+          if (d < bestDist) { bestDist = d; sum = v; n = 1 }
+          else if (d == bestDist && d <= MaxFuzzyDistance) { sum += v; n += 1 }
+        }
         i += 1
       }
       l += 1

@@ -93,6 +93,19 @@ object KernelProps extends Properties("kernels") {
       else Prop(got > max)
     }
 
+  // chars that share a mask bit ('a'/'!' and 'b'/'"' are 64 apart),
+  // plus non-ASCII: the bound must hold through class collisions
+  private val maskWord: Gen[String] =
+    Gen.listOf(Gen.oneOf('a', 'b', 'c', 'd', 'e', '!', '"', '#', '\u00e9', '\ud83d'))
+      .map(_.mkString)
+
+  property("maskLowerBound: the char-class bound never exceeds levenshtein") =
+    forAll(maskWord, maskWord) { (a, b) =>
+      import graft.wordscore.Distance.{charMask, levenshtein, maskLowerBound}
+      val lb = maskLowerBound(charMask(a), charMask(b))
+      Prop(lb <= levenshtein(a, b)) :| s"lb $lb > lev('$a', '$b')"
+    }
+
   // space-free lowercase strings: normalization is the identity, so
   // these pin the pure winnowing selection, not the normalizer
   private val flatText: Gen[String] =

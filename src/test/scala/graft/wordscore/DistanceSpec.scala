@@ -80,6 +80,63 @@ class DistanceSpec extends AnyFunSuite {
     }
   }
 
+  /** Full-matrix Levenshtein, independent of `Distance`'s two-row DP. */
+  private def naive(a: String, b: String): Int = {
+    val m = Array.tabulate(a.length + 1, b.length + 1)((i, j) => if (i == 0) j else if (j == 0) i else 0)
+    for (i <- 1 to a.length; j <- 1 to b.length)
+      m(i)(j) = Seq(m(i - 1)(j) + 1, m(i)(j - 1) + 1,
+        m(i - 1)(j - 1) + (if (a(i - 1) == b(j - 1)) 0 else 1)).min
+    m(a.length)(b.length)
+  }
+
+  /** Seeded pairs over a small alphabet with non-ASCII chars (accented,
+    * surrogate halves), lengths up to 90 — past the initial row buffer —
+    * with the second string often a few edits from the first. */
+  private def mixedPairs(n: Int, seed: Int): Seq[(String, String)] = {
+    val rnd = new scala.util.Random(seed)
+    val alphabet = "abc!\u00e9\u00fc\ud83d\ude00"
+    def word(len: Int) = (0 until len).map(_ => alphabet(rnd.nextInt(alphabet.length))).mkString
+    (0 until n).map { _ =>
+      val a = word(rnd.nextInt(if (rnd.nextInt(4) == 0) 90 else 12))
+      val b =
+        if (rnd.nextBoolean()) word(math.max(0, a.length + rnd.nextInt(7) - 3))
+        else (0 until rnd.nextInt(5)).foldLeft(a) { (w, _) =>
+          val i = rnd.nextInt(w.length + 1)
+          w.patch(i, word(rnd.nextInt(2)), math.min(rnd.nextInt(2), w.length - i))
+        }
+      (a, b)
+    }
+  }
+
+  test("property: bounded == naive within every bound 0..4, incl. long and non-ASCII (seeded)") {
+    for ((a, b) <- mixedPairs(1500, 11); max <- 0 to 4) {
+      val d = naive(a, b)
+      val got = Distance.bounded(a, b, max)
+      if (d <= max) assert(got === d, s"bounded($a,$b,$max)")
+      else assert(got > max, s"bounded($a,$b,$max) should exceed $max")
+      assert(levenshtein(a, b) === d, s"levenshtein($a,$b)")
+    }
+  }
+
+  test("bounded: per-thread row buffers, concurrent callers agree with naive") {
+    val pairs = mixedPairs(400, 12)
+    val want = pairs.map { case (a, b) => naive(a, b) }
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    try {
+      val futures = (0 until 8).map { t =>
+        pool.submit(new java.util.concurrent.Callable[Boolean] {
+          // each thread walks the pairs in its own order, so long and
+          // short strings interleave differently on every thread
+          def call(): Boolean = {
+            val order = new scala.util.Random(t).shuffle(pairs.indices.toVector)
+            order.forall(i => levenshtein(pairs(i)._1, pairs(i)._2) == want(i))
+          }
+        })
+      }
+      assert(futures.forall(_.get()))
+    } finally pool.shutdown()
+  }
+
   test("property: distance bounded by max length (500 seeded cases)") {
     for ((a, b) <- randomPairs(500))
       assert(levenshtein(a, b) <= math.max(a.length, b.length))
