@@ -37,18 +37,7 @@ object Bench {
       math.min(32, Runtime.getRuntime.availableProcessors).toString)
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt.max(1)
     val spark = GraftSession.local(cpus)
-    // Untimed warmup so the first timed query doesn't absorb JVM/
-    // codegen/scan initialization: touch codegen, shuffle machinery,
-    // and each input table's footer once.
-    try {
-      import org.apache.spark.sql.functions._
-      spark.range(2000000).groupBy((col("id") % 10).as("k"))
-        .agg(sum("id")).collect()
-      Seq("lineitem", "orders", "customer", "supplier", "part", "nation",
-        "region", "events", "documents", "embeddings").foreach { n =>
-        spark.read.parquet(s"$sfDir/$n.parquet").limit(1).collect()
-      }
-    } catch { case _: Throwable => () }
+    warmUp(spark, sfDir)
     // One timed sample of a query: elapsed seconds or an error message.
     // Times a noop-sink write, NOT count(), so Bench and TimeQueries
     // share one evaluation contract: count() lets the optimizer prune
@@ -268,4 +257,18 @@ object Bench {
     val vsbPart = vsb.map(r => s""""vsb":${fmt(r)},""").getOrElse("")
     s"""{"metric":"total","value":${fmt(total)},"unit":"sec","nerr":$nerr,$vsbPart"queries":$qs,"errors":$errs,"sf":"$sfName"}"""
   }
+
+  /** Untimed warmup so the first timed query doesn't absorb JVM/
+    * codegen/scan initialization: touch codegen, shuffle machinery,
+    * and each input table's footer once. Shared by every timing main. */
+  private[graft] def warmUp(spark: SparkSession, sfDir: String): Unit =
+    try {
+      import org.apache.spark.sql.functions._
+      spark.range(2000000).groupBy((col("id") % 10).as("k"))
+        .agg(sum("id")).collect()
+      Seq("lineitem", "orders", "customer", "supplier", "part", "nation",
+        "region", "events", "documents", "embeddings").foreach { n =>
+        spark.read.parquet(s"$sfDir/$n.parquet").limit(1).collect()
+      }
+    } catch { case _: Throwable => () }
 }

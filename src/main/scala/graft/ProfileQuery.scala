@@ -26,16 +26,7 @@ object ProfileQuery {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
       math.min(32, Runtime.getRuntime.availableProcessors).toString)
     val spark = GraftSession.local(cpus)
-    // same untimed warmup contract as Bench
-    try {
-      import org.apache.spark.sql.functions._
-      spark.range(2000000).groupBy((col("id") % 10).as("k"))
-        .agg(sum("id")).collect()
-      Seq("lineitem", "orders", "customer", "supplier", "part", "nation",
-        "region", "events", "documents", "embeddings").foreach { n =>
-        spark.read.parquet(s"$sfDir/$n.parquet").limit(1).collect()
-      }
-    } catch { case _: Throwable => () }
+    Bench.warmUp(spark, sfDir)
 
     final case class JobSpan(id: Int, start: Long, var end: Long,
                              site: String, ntasks: Int)

@@ -19,16 +19,7 @@ object TimeQueries {
       math.min(32, Runtime.getRuntime.availableProcessors).toString)
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "2").toInt.max(1)
     val spark = GraftSession.local(cpus)
-    // same untimed warmup contract as Bench: codegen + table footers
-    try {
-      import org.apache.spark.sql.functions._
-      spark.range(2000000).groupBy((col("id") % 10).as("k"))
-        .agg(sum("id")).collect()
-      Seq("lineitem", "orders", "customer", "supplier", "part", "nation",
-        "region", "events", "documents", "embeddings").foreach { n =>
-        spark.read.parquet(s"$sfDir/$n.parquet").limit(1).collect()
-      }
-    } catch { case _: Throwable => () }
+    Bench.warmUp(spark, sfDir)
     names.foreach { n =>
       val fn = SparkEntry.queries(n)
       // time a noop-sink write, NOT count(): count() lets the optimizer

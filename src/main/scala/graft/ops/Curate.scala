@@ -339,9 +339,8 @@ object Curate {
    * never corpus x corpus) → append the admitted docs to `outDir`.
    *
    * THE DEDUP STATE IS INCREMENTAL AND DURABLE: beside `outDir` the
-   * tail maintains narrow state frames under `stateDir`
-   * (default: `<outDir>__state`), each written per batch from the
-   * rows just admitted —
+   * tail maintains narrow state frames under `<outDir>__state`, each
+   * written per batch from the rows just admitted —
    *
    *   keys/      (__id, __nk)         md5 exact-novelty keys
    *                                   ([[Novelty.exactKeyCol]])
@@ -351,6 +350,13 @@ object Curate {
    *                                   (only with `blobCol`)
    *   semvecs/   (__id, __b, __v, __n) [[SimSearch.srpStateOf]]
    *                                   (only with `vecCol`)
+   *
+   * ONE FRAME RECIPE serves all five: a frame is its directory plus
+   * its rows as a function of the admitted rows it covers, so the
+   * per-batch write (from the rows just landed) and the rebuild from
+   * `outDir` (from the whole admitted corpus) are the same
+   * derivation, written in the same order — derived frames first,
+   * keys LAST as the state's commit marker.
    *
    * WITH `vecCol`, a SEMANTIC dedup step runs after the text near
    * dedup (Curate.standard's stage order): the batch's embeddings
@@ -428,11 +434,13 @@ object Curate {
    * stream is stopped. The OUTPUT corpus accumulates one partition
    * per batch the same way — [[compactOutput]] (or
    * `compactOutputEvery`) folds committed output partitions into one
-   * coalesced base partition with the same replay-safety contract.
-   * A `_state_params` marker (written with the
-   * first state write) pins the (shingleSize, numHashes, bands) the
-   * frames were computed with; a tail invoked with different banding
-   * fails loudly instead of silently probing stale postings.
+   * coalesced base partition with the same replay-safety contract;
+   * both auto-folds use those functions' default widths.
+   * A `_state_params` marker (written with the first state write)
+   * records the state's fixed identity — Dedup's spec-pinned
+   * 3-shingle, 12-hash, 4-band MinHash banding and the 8-bit SRP
+   * width; a state computed under other values (another build) fails
+   * loudly instead of silently probing stale postings.
    *
    * Replay safety: the admitted batch lands in a `__batch_id=<id>`
    * partition of `outDir` via DYNAMIC partition overwrite — a
@@ -443,15 +451,16 @@ object Curate {
    * the in-flight batch's partition, so a retry is a clean
    * from-scratch recompute of exactly this batch everywhere.
    *
-   * BOOTSTRAP / MIGRATION: when `outDir` already holds admitted
-   * batches but the key state is absent (a corpus landed by an older
-   * build, or a wiped state dir), the state frames are REBUILT from
-   * `outDir` in one pass before the batch proceeds — the only
-   * situation where this tail ever reads the full admitted corpus,
-   * paid once, not per batch. The keys frame is written LAST as the
-   * bootstrap's commit marker: a crash mid-rebuild leaves keys
-   * absent, so the next batch redoes the rebuild instead of trusting
-   * partial state.
+   * BOOTSTRAP / MIGRATION: every frame that lacks coverage — all the
+   * text frames when `outDir` holds admitted batches but the key
+   * state is absent (a corpus landed by an older build, a wiped state
+   * dir), a modality frame the marker does not track or whose
+   * directory is gone — is REBUILT from `outDir` in one pass before
+   * the batch proceeds: the only situation where this tail ever reads
+   * the full admitted corpus, paid once, not per batch. Keys land
+   * LAST and the marker's tracking flags flip only after the rebuild,
+   * so a crash mid-rebuild redoes it instead of trusting partial
+   * state.
    *
    * Cross-batch semantics are FIRST-ARRIVAL (the only semantics a
    * stream can have): a doc near-duplicate to an already-admitted doc
@@ -476,45 +485,49 @@ object Curate {
                     minQuality: Double = 0.3,
                     maxDup2gramFrac: Double = 0.3,
                     historicalCorpus: Option[DataFrame] = None,
-                    bandIndex: Option[Novelty.BandIndex] = None,
                     unigramRef: Option[(TextStats.UnigramRef, Double)] = None,
                     benchGrams: Option[Decontaminate.BenchGrams] = None,
-                    shingleSize: Int = 3, numHashes: Int = 12,
-                    bands: Int = 4, threshold: Double = 0.7,
-                    stateDir: Option[String] = None,
+                    threshold: Double = 0.7,
                     compactEvery: Option[Int] = None,
-                    compactBuckets: Int = 8,
                     compactMaxBases: Int = 4,
                     compactOutputEvery: Option[Int] = None,
-                    compactOutputFiles: Int = 8,
                     blobCol: Option[String] = None,
                     blobMaxHamming: Int = 2,
                     vecCol: Option[String] = None,
-                    semanticThreshold: Double = 0.95,
-                    semanticBits: Int = 8)
+                    semanticThreshold: Double = 0.95)
       : (DataFrame, Long) => Unit = { (batch: DataFrame, batchId: Long) =>
     require(!batch.columns.contains("__batch_id"),
       "input column __batch_id collides with streamingTail's partition column")
     compactEvery.foreach(n => require(n >= 1, "compactEvery must be >= 1"))
     compactOutputEvery.foreach(n =>
       require(n >= 1, "compactOutputEvery must be >= 1"))
-    require(semanticBits >= 1 && semanticBits <= 30,
-      "semanticBits must be in [1, 30]")
-    val sd = stateDir.getOrElse(outDir.stripSuffix("/") + "__state")
-    val percsigsDir = s"$sd/percsigs"
-    val semvecsDir = s"$sd/semvecs"
+    val sd = outDir.stripSuffix("/") + "__state"
     val hadoopConf = spark.sparkContext.hadoopConfiguration
+    // the modality frames in effect: (frame, the option that fills it,
+    // its column)
+    val modal = blobCol.map(("percsigs", "blobCol", _)).toSeq ++
+      vecCol.map(("semvecs", "vecCol", _))
+    val tracks = modal.map(_._1)
+    // every frame in effect, in write order: derived frames first,
+    // keys LAST (the state's commit marker)
+    val frames = Seq("shingles", "postings") ++ tracks :+ "keys"
     // the state frames are only meaningful under the banding
     // parameters they were computed with — a mismatched rerun would
     // silently probe stale postings under the old banding. The marker
     // is written with the first state write; a pre-marker state dir
     // (older build) adopts the current invocation's parameters, which
     // is exactly the trust the caller extended before the marker
-    // existed. The marker also pins whether the state TRACKS
-    // PERCEPTUAL SIGNATURES (see checkStateParams).
-    val (storedPercsigs, storedSemvecs) = checkStateParams(spark, sd,
-      shingleSize, numHashes, bands, blobCol.isDefined, vecCol.isDefined,
-      semanticBits)
+    // existed. The marker also pins which modality frames the state
+    // TRACKS (see checkStateParams).
+    val stored = checkStateParams(spark, sd, tracks)
+    def exists(dir: String): Boolean = {
+      val p = new org.apache.hadoop.fs.Path(dir)
+      p.getFileSystem(hadoopConf).exists(p)
+    }
+    def mkdirs(dir: String): Unit = {
+      val p = new org.apache.hadoop.fs.Path(dir)
+      p.getFileSystem(hadoopConf).mkdirs(p)
+    }
     // a `__batch_id`-partitioned frame under `dir`, EXCLUDING the
     // current batch's partition: on a foreachBatch retry after a
     // partial write, including it would dedup the batch against its
@@ -525,134 +538,121 @@ object Curate {
     // catch: a swallow-all AnalysisException catch would also
     // "recover" from schema drift or foreign files by silently
     // disabling cross-batch dedup — those must throw.
-    def hasParts(dir: String): Boolean = {
-      val p = new org.apache.hadoop.fs.Path(dir)
-      val fs = p.getFileSystem(hadoopConf)
-      fs.exists(p) && fs.listStatus(p).exists(
-        _.getPath.getName.startsWith("__batch_id="))
-    }
+    def hasParts(dir: String): Boolean =
+      statePartIds(hadoopConf, dir).nonEmpty
     def readParts(dir: String): DataFrame =
       spark.read.parquet(dir)
         .where(col("__batch_id") =!= lit(batchId))
         .drop("__batch_id")
-    def writeParts(df: DataFrame, dir: String): Unit =
-      df.withColumn("__batch_id", lit(batchId))
-        .write.partitionBy("__batch_id")
+    def overwriteParts(df: DataFrame, dir: String): Unit =
+      df.write.partitionBy("__batch_id")
         .option("partitionOverwriteMode", "dynamic")
         .mode("overwrite").parquet(dir)
-    // Before the keys write (the commit marker), the shingles/postings
-    // DIRECTORIES must exist even when the batch/corpus put no rows in
-    // them (a zero-row partitioned write may create nothing): the read
-    // side treats "keys exist but a sibling dir is missing" as
-    // destroyed state and throws, so the write side must make the
-    // invariant unconditional.
-    def ensureStateDirs(): Unit =
-      (Seq("shingles", "postings") ++
-        blobCol.map(_ => "percsigs").toSeq ++
-        vecCol.map(_ => "semvecs").toSeq).foreach { s =>
-        val p = new org.apache.hadoop.fs.Path(s"$sd/$s")
-        p.getFileSystem(hadoopConf).mkdirs(p)
-      }
+    def writeParts(df: DataFrame, dir: String): Unit =
+      overwriteParts(df.withColumn("__batch_id", lit(batchId)), dir)
+    // the batch's perceptual signatures and SRP state (blobCol/vecCol
+    // set), computed ONCE by the modality steps and reused by the
+    // state write
+    var batchSigs: Option[DataFrame] = None
+    var batchSem: Option[DataFrame] = None
+    // THE FRAME RECIPE: writes each of `which` (in `frames` order)
+    // derived from `rows`, the admitted rows it covers. The shingle
+    // frame is persisted so shingling runs once for its two consumers;
+    // a modality frame reuses the batch's one decode/bucketing pass
+    // when this batch ran it, semi-joined to `rows` (the payload bytes
+    // are identical, so the frame is still a pure function of the
+    // durable output), and derives afresh otherwise (the rebuild).
+    // Before the keys write (the commit marker), every sibling
+    // DIRECTORY must exist even when the rows put nothing in it (a
+    // zero-row partitioned write may create nothing): the read side
+    // treats "keys exist but a sibling dir is missing" as destroyed
+    // state and throws, so the write side makes the invariant
+    // unconditional.
+    def writeFrames(rows: DataFrame, which: Seq[String])
+                   (write: (String, DataFrame) => Unit): Unit = {
+      val sh = Dedup.shinglesOf(rows, idCol, textCol, ShingleSize)
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      def reuse(pre: Option[DataFrame])(fresh: => DataFrame): DataFrame =
+        pre.fold(fresh)(_.join(rows.select(col(idCol)), Seq(idCol),
+          "left_semi")).withColumnRenamed(idCol, "__id")
+      try which.foreach { frame =>
+        if (frame == "keys") {
+          frames.init.foreach(f => mkdirs(s"$sd/$f"))
+          writeStateParamsIfAbsent(spark, sd, tracks)
+        }
+        write(frame, frame match {
+          case "shingles" => sh
+          case "postings" => Dedup.postingsOf(sh, NumHashes, Bands)
+          case "percsigs" => reuse(batchSigs)(Multimodal
+            .perceptualSignature(rows, idCol, blobCol.get)
+            .where(col("sig").isNotNull))
+          case "semvecs" => reuse(batchSem)(SimSearch.srpStateOf(rows,
+            idCol, vecCol.get, SemanticBits))
+          case "keys" => rows.select(col(idCol).as("__id"),
+            Novelty.exactKeyCol(textCol).as("__nk"))
+        })
+      } finally sh.unpersist()
+    }
     // 1. stateless row gates — identical code path to the pure gate
     val gated = streamingGate(batch, textCol, minQuality, maxDup2gramFrac,
-      historicalCorpus, bandIndex, unigramRef, benchGrams)
+      historicalCorpus, unigramRef = unigramRef, benchGrams = benchGrams)
     // 2. resolve the dedup state: the durable incremental frames,
-    //    rebuilt once from outDir when absent (migration)
+    //    rebuilt once from outDir where coverage is missing
     val outHasBatches = hasParts(outDir)
-    // "state committed" now has two witnesses: batch partitions under
+    // "state committed" has two witnesses: batch partitions under
     // keys (the pre-compaction shape) OR a compaction manifest (all
     // partitions may have been folded into the bucketed base)
     def stateCommitted: Boolean =
       loadCompaction(spark, sd).isDefined || hasParts(s"$sd/keys")
-    if (outHasBatches && !stateCommitted) {
-      // BOOTSTRAP: outDir holds admitted batches but no key state —
-      // rebuild all three frames from the corpus, keeping each row in
-      // its original __batch_id partition (replay exclusion keeps
-      // working); keys go LAST as the commit marker (see scaladoc)
+    // REBUILD — every frame is a PURE FUNCTION of the admitted corpus,
+    // so any coverage gap rebuilds it from outDir in one pass, each
+    // row in its original __batch_id partition (replay exclusion keeps
+    // working): the text frames when outDir holds batches but no key
+    // state (BOOTSTRAP), a modality frame when the marker does not
+    // track it (a state that predates tracking, batches admitted
+    // without the column) or its dir is gone. Coverage is judged
+    // BEFORE anything is written, keys go LAST, and the marker's
+    // tracking flags flip only after the rebuild (below), so a crash
+    // anywhere in here redoes the rebuild instead of trusting partial
+    // coverage.
+    val committed = stateCommitted
+    val gaps =
+      if (!committed && !outHasBatches) Seq.empty
+      else modal.filterNot { case (f, _, _) =>
+        stored(f) && exists(s"$sd/$f") }
+    val rebuild = gaps.map(_._1) ++
+      (if (outHasBatches && !committed) StateFrames else Seq.empty)
+    if (rebuild.nonEmpty) {
+      if (gaps.nonEmpty && !outHasBatches) {
+        val what = gaps.head._2
+        throw new IllegalStateException(
+          s"streamingTail: $what is set but the committed state at " +
+            s"$sd has no $what coverage and $outDir holds no batches " +
+            "to rebuild it from — the admitted corpus is gone. Restore " +
+            "outDir, or delete the WHOLE state dir to start fresh.")
+      }
       val corpus = spark.read.parquet(outDir)
         .where(col("__batch_id") =!= lit(batchId))
-      val parts = col("__batch_id")
-      def bootWrite(df: DataFrame, dir: String): Unit =
-        df.write.partitionBy("__batch_id")
-          .option("partitionOverwriteMode", "dynamic")
-          .mode("overwrite").parquet(dir)
-      // shinglesOf/postingsOf drop non-selected columns, so re-join
-      // the partition id through the corpus' (id -> batch) map; the
-      // shingle frame is persisted because it feeds both state writes
-      val idToBatch = corpus.select(col(idCol).as("__id"), parts)
-      val sh = Dedup.shinglesOf(corpus.drop("__batch_id"), idCol, textCol,
-        shingleSize).persist(StorageLevel.MEMORY_AND_DISK)
-      try {
-        bootWrite(sh.join(idToBatch, "__id"), s"$sd/shingles")
-        bootWrite(Dedup.postingsOf(sh, numHashes, bands)
-          .join(idToBatch, "__id"), s"$sd/postings")
-        ensureStateDirs() // integrity invariant, see readState
-        writeStateParamsIfAbsent(spark, sd, shingleSize, numHashes, bands,
-          percsigs = false, semvecs = false,
-          sembits = semanticBits) // the migration block below flips the
-                                  // flags after a successful rebuild
-        bootWrite(corpus.select(col(idCol).as("__id"),
-          Novelty.exactKeyCol(textCol).as("__nk"), parts), s"$sd/keys")
-      } finally sh.unpersist()
-    }
-    // DERIVED-STATE MIGRATION/REBUILD — the perceptual-signature and
-    // semantic-vector frames are PURE FUNCTIONS of the admitted
-    // corpus' blob/vector columns, so any coverage gap (a committed
-    // state that predates tracking, a flag=false marker from batches
-    // admitted without the column, a destroyed frame dir, or the text
-    // bootstrap that just ran above) rebuilds the frame from outDir in
-    // one pass — paid once, not per batch. The keys frame stays the
-    // state's commit marker; the params marker flips to tracking only
-    // after the rebuild lands (below, once both frames are settled),
-    // so a crash anywhere in here redoes the rebuild instead of
-    // trusting partial coverage.
-    def rebuildDerived(colName: String, dir: String, what: String,
-                       build: DataFrame => DataFrame): Unit = {
-      val pp = new org.apache.hadoop.fs.Path(dir)
-      val fs = pp.getFileSystem(hadoopConf)
-      if (!outHasBatches) throw new IllegalStateException(
-        s"streamingTail: $what is set but the committed state at " +
-          s"$sd has no $what coverage and $outDir holds no batches " +
-          "to rebuild it from — the admitted corpus is gone. Restore " +
-          "outDir, or delete the WHOLE state dir to start fresh.")
-      val corpus = spark.read.parquet(outDir)
-        .where(col("__batch_id") =!= lit(batchId))
-      require(corpus.columns.contains(colName),
-        s"streamingTail: $what=$colName but the admitted corpus under " +
-          s"$outDir has no such column — the state cannot be rebuilt " +
-          "for batches admitted without it")
-      build(corpus.drop("__batch_id"))
-        .withColumnRenamed(idCol, "__id")
-        .join(corpus.select(col(idCol).as("__id"), col("__batch_id")),
-          "__id")
-        .write.partitionBy("__batch_id")
-        .option("partitionOverwriteMode", "dynamic")
-        .mode("overwrite").parquet(dir)
-      fs.mkdirs(pp) // a zero-row rebuild still marks coverage
-    }
-    def dirExists(dir: String): Boolean = {
-      val p = new org.apache.hadoop.fs.Path(dir)
-      p.getFileSystem(hadoopConf).exists(p)
-    }
-    blobCol.foreach { bc =>
-      if (!(storedPercsigs && dirExists(percsigsDir)) && stateCommitted)
-        rebuildDerived(bc, percsigsDir, "blobCol", c =>
-          Multimodal.perceptualSignature(c, idCol, bc)
-            .where(col("sig").isNotNull))
-    }
-    vecCol.foreach { vc =>
-      if (!(storedSemvecs && dirExists(semvecsDir)) && stateCommitted)
-        rebuildDerived(vc, semvecsDir, "vecCol", c =>
-          SimSearch.srpStateOf(c, idCol, vc, semanticBits))
+      gaps.foreach { case (_, what, c) =>
+        require(corpus.columns.contains(c),
+          s"streamingTail: $what=$c but the admitted corpus under " +
+            s"$outDir has no such column — the state cannot be rebuilt " +
+            "for batches admitted without it")
+      }
+      // the frames drop non-selected columns, so re-join the partition
+      // id through the corpus' (id -> batch) map
+      val idToBatch = corpus.select(col(idCol).as("__id"), col("__batch_id"))
+      writeFrames(corpus.drop("__batch_id"), frames.filter(rebuild.contains)) {
+        (f, df) =>
+          overwriteParts(df.join(idToBatch, "__id"), s"$sd/$f")
+          mkdirs(s"$sd/$f") // a zero-row rebuild still marks coverage
+      }
     }
     // the marker now reflects exactly what this invocation tracks
     // (checkStateParams already threw on any illegal transition, and
-    // the rebuilds above closed any coverage gap)
+    // the rebuild above closed any coverage gap)
     if (stateCommitted)
-      writeControlFile(spark, sd, ParamsFile,
-        stateParamsContent(shingleSize, numHashes, bands,
-          percsigs = blobCol.isDefined, semvecs = vecCol.isDefined,
-          sembits = semanticBits))
+      writeControlFile(spark, sd, ParamsFile, stateParamsContent(tracks))
     // auto-compaction: once `compactEvery` uncompacted batch
     // partitions have accumulated, fold them into the bucketed base.
     // Running HERE — inside foreachBatch, before this batch's state
@@ -666,23 +666,22 @@ object Curate {
       val pending = statePartIds(hadoopConf, s"$sd/keys")
         .count(id => id > folded && id != batchId)
       if (pending >= n)
-        compactState(spark, sd, compactBuckets, compactAll = true,
+        compactState(spark, sd, compactAll = true,
           excludeBatchIds = Set(batchId), maxBases = compactMaxBases)
-      // the percsigs frame self-folds through the OUTPUT-fold recipe
+      // the modality frames self-fold through the OUTPUT-fold recipe
       // (negative-id base partition, marker-healed) instead of the
-      // tiered manifest: its rows are 3-column 64-bit signatures — the
+      // tiered manifest: their rows are narrow signatures/vectors — the
       // per-batch small-file problem is real, a bucketed tier is not
       // (the banded candidate join keys on derived chunk values, so no
       // bucket layout can make it Exchange-free; the probe side
       // broadcasts instead)
-      (blobCol.map(_ => percsigsDir).toSeq ++
-        vecCol.map(_ => semvecsDir).toSeq).foreach { dir =>
+      tracks.map(f => s"$sd/$f").foreach { dir =>
         healOutputFold(spark, dir)
         val pendingP = statePartIds(hadoopConf, dir)
           .count(id => id >= 0 && id != batchId)
         if (pendingP >= n)
-          compactOutput(spark, dir, compactBuckets,
-            compactAll = true, excludeBatchIds = Set(batchId))
+          compactOutput(spark, dir, compactAll = true,
+            excludeBatchIds = Set(batchId))
       }
     }
     // output folding rides the same safety argument (every partition
@@ -694,8 +693,8 @@ object Curate {
       val pendingOut = statePartIds(hadoopConf, outDir)
         .count(id => id >= 0 && id != batchId)
       if (pendingOut >= n)
-        compactOutput(spark, outDir, compactOutputFiles,
-          compactAll = true, excludeBatchIds = Set(batchId))
+        compactOutput(spark, outDir, compactAll = true,
+          excludeBatchIds = Set(batchId))
     }
     val comp = loadCompaction(spark, sd)
     val (novelOf, pairsOf, oldIds) =
@@ -705,7 +704,7 @@ object Curate {
         // core with no corpus index)
         ((df: DataFrame) => df,
           (ex: DataFrame) => Dedup.minhashPairs(ex, idCol, textCol,
-            shingleSize, numHashes, bands, threshold),
+            ShingleSize, NumHashes, Bands, threshold),
           batch.limit(0).select(col(idCol).as("__old_id")))
       } else {
         // the durable-state default: narrow precomputed frames only —
@@ -728,17 +727,14 @@ object Curate {
         val folded = comp.map(_.upTo).getOrElse(Long.MinValue)
         def tailState(sub: String, empty: => DataFrame): DataFrame = {
           val dir = s"$sd/$sub"
-          val p = new org.apache.hadoop.fs.Path(dir)
-          val fs = p.getFileSystem(hadoopConf)
-          if (!fs.exists(p))
+          if (!exists(dir))
             throw new IllegalStateException(
               s"streamingTail state is corrupt: $dir is missing while " +
                 "the state is committed — the near-dedup state was " +
                 "destroyed out-of-band. Delete the WHOLE state dir to " +
                 "trigger a bootstrap rebuild from outDir, or restore " +
                 "the frame.")
-          else if (!fs.listStatus(p).exists(
-              _.getPath.getName.startsWith("__batch_id="))) empty
+          else if (!hasParts(dir)) empty
           else spark.read.parquet(dir)
             .where(col("__batch_id") =!= lit(batchId) &&
               col("__batch_id") > lit(folded))
@@ -754,11 +750,11 @@ object Curate {
         val postings = (baseState("postings") :+
           tailState("postings",
             Dedup.postingsOf(Dedup.shinglesOf(batch.limit(0), idCol,
-              textCol, shingleSize), numHashes, bands)))
+              textCol, ShingleSize), NumHashes, Bands)))
           .reduce(_.unionByName(_))
         val shinglesSt = (baseState("shingles") :+
           tailState("shingles",
-            Dedup.shinglesOf(batch.limit(0), idCol, textCol, shingleSize)))
+            Dedup.shinglesOf(batch.limit(0), idCol, textCol, ShingleSize)))
           .reduce(_.unionByName(_))
         // the tier and tail anti-joins run SEPARATELY, chained
         // (anti-joins compose) so every bucketed tier scan stays
@@ -771,8 +767,8 @@ object Curate {
         ((df: DataFrame) =>
             Novelty.exactNovelVsKeys(novelVsBases(df), keysTail, textCol),
           (ex: DataFrame) => Dedup.minhashPairsIncrementalIndexed(ex,
-            postings, shinglesSt, idCol, textCol, shingleSize, numHashes,
-            bands, threshold),
+            postings, shinglesSt, idCol, textCol, ShingleSize, NumHashes,
+            Bands, threshold),
           (keysBases :+ keysTail)
             .map(_.select(col("__id").as("__old_id")))
             .reduce(_.unionByName(_)))
@@ -826,6 +822,19 @@ object Curate {
       batchDf.join(crossDropped.unionByName(losers), Seq(idCol),
         "left_anti")
     }
+    // ONE MODALITY STEP (perceptual, semantic): the frame's durable
+    // state for the admitted corpus (or none yet: the batch state's
+    // empty shape), paired with the batch state by `pair`, then the
+    // first-arrival drop against the state's ids
+    def modalityStep(frame: String, rows: DataFrame, batchState: DataFrame)
+                    (pair: DataFrame => DataFrame): DataFrame = {
+      val dir = s"$sd/$frame"
+      val old =
+        if (!hasParts(dir)) batchState.limit(0)
+        else readParts(dir).withColumnRenamed("__id", idCol)
+      firstArrival(rows, pair(old),
+        old.select(col(idCol).as("__old_id")).distinct())
+    }
     // UI/profiler attribution (optimization-guide §1.5): every job a
     // phase triggers carries the phase name; restored afterwards so a
     // caller's own description survives this tail.
@@ -847,10 +856,6 @@ object Curate {
     //     (id, modality, sig) state — the admitted corpus' BLOBS are
     //     never re-decoded.
     var percPairs: Option[DataFrame] = None
-    var batchSigs: Option[DataFrame] = None
-    // the batch's SRP state frame (vecCol set), bucketed once and
-    // shared by the semantic pair pass and the semvecs state write
-    var batchSem: Option[DataFrame] = None
     // the try opens BEFORE the perceptual stage: its persisted frames
     // are eagerly materialized (the pair checkpoint and the closure
     // jobs run inside firstArrival), so a failure anywhere past this
@@ -859,10 +864,6 @@ object Curate {
     val pGated = blobCol match {
       case None => gated
       case Some(bc) => labeled("perceptual") {
-        val oldSigs =
-          if (!hasParts(percsigsDir))
-            Multimodal.perceptualSignature(batch.limit(0), idCol, bc)
-          else readParts(percsigsDir).withColumnRenamed("__id", idCol)
         // the batch's payloads are SIGNATURED ONCE: the persisted
         // frame feeds the pairing here and the state write after the
         // batch lands (decode is the stage's dominant per-row cost)
@@ -870,12 +871,13 @@ object Curate {
           .where(col("sig").isNotNull)
           .persist(StorageLevel.MEMORY_AND_DISK)
         batchSigs = Some(sigs)
-        val pairs = Multimodal.perceptualPairsIncrementalFromSigs(sigs,
-          oldSigs, idCol, blobMaxHamming)
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        percPairs = Some(pairs)
-        firstArrival(gated, pairs,
-          oldSigs.select(col(idCol).as("__old_id")).distinct())
+        modalityStep("percsigs", gated, sigs) { old =>
+          val pairs = Multimodal.perceptualPairsIncrementalFromSigs(sigs,
+            old, idCol, blobMaxHamming)
+            .persist(StorageLevel.MEMORY_AND_DISK)
+          percPairs = Some(pairs)
+          pairs
+        }
       }
     }
     // 3. exact: cross-batch novelty (key anti-join), then intra-batch
@@ -921,23 +923,19 @@ object Curate {
       val admitted = vecCol match {
         case None => nearAdmitted
         case Some(vc) => labeled("semantic") {
-          val oldState =
-            if (!hasParts(semvecsDir))
-              SimSearch.srpStateOf(batch.limit(0), idCol, vc, semanticBits)
-            else readParts(semvecsDir).withColumnRenamed("__id", idCol)
           // the batch is SRP-BUCKETED ONCE (the batchSigs recipe, r18):
           // the checkpointed state frame feeds the pair pass here and
           // the semvecs state write after the batch lands — the old
           // srpStateOf(landed) re-ran the hyperplane pass per batch
           val bState = SimSearch.srpStateOf(nearAdmitted, idCol, vc,
-            semanticBits).localCheckpoint(true)
+            SemanticBits).localCheckpoint(true)
           batchSem = Some(bState)
           // cosinePairsIncrementalFromState localCheckpoints its output, so
-          // the three passes below reread the checkpoint, not the plan
-          val sPairs = SimSearch.cosinePairsIncrementalFromState(bState,
-            oldState, idCol, semanticThreshold, semanticBits)
-          firstArrival(nearAdmitted, sPairs,
-            oldState.select(col(idCol).as("__old_id")).distinct())
+          // the three passes in firstArrival reread the checkpoint, not
+          // the plan
+          modalityStep("semvecs", nearAdmitted, bState)(old =>
+            SimSearch.cosinePairsIncrementalFromState(bState, old, idCol,
+              semanticThreshold, SemanticBits))
         }
       }
       // 5. land the batch in its own partition; a foreachBatch retry
@@ -945,56 +943,19 @@ object Curate {
       labeled("land-output") { writeParts(admitted, outDir) }
       // 6. maintain the durable state from the rows JUST LANDED (read
       //    back the one pruned partition — cheap, and it makes the
-      //    state a pure function of the durable output). The batch's
-      //    shingle frame is persisted so shingling runs once for its
-      //    two consumers; keys go last (the state's commit marker).
-      //    A batch that admitted NOTHING writes no partition (a
-      //    zero-row dynamic overwrite creates no directory, and a
-      //    parquet read of a missing/file-less path throws) — and an
-      //    empty batch contributes no state, so skip outright. A
-      //    retry can't need the skip to "clear" stale rows: the
-      //    recompute is deterministic against the same excluded-batch
-      //    state, so a batch that once admitted rows admits the same
-      //    rows again.
-      val landedPath = new org.apache.hadoop.fs.Path(
-        s"$outDir/__batch_id=$batchId")
-      if (landedPath.getFileSystem(hadoopConf).exists(landedPath)) labeled("state-write") {
+      //    state a pure function of the durable output), every frame
+      //    through the recipe. A batch that admitted NOTHING writes no
+      //    partition (a zero-row dynamic overwrite creates no
+      //    directory, and a parquet read of a missing/file-less path
+      //    throws) — and an empty batch contributes no state, so skip
+      //    outright. A retry can't need the skip to "clear" stale
+      //    rows: the recompute is deterministic against the same
+      //    excluded-batch state, so a batch that once admitted rows
+      //    admits the same rows again.
+      if (exists(s"$outDir/__batch_id=$batchId")) labeled("state-write") {
         val landed = spark.read.parquet(outDir)
           .where(col("__batch_id") === lit(batchId)).drop("__batch_id")
-        val shLanded = Dedup.shinglesOf(landed, idCol, textCol, shingleSize)
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        try {
-          writeParts(shLanded, s"$sd/shingles")
-          writeParts(Dedup.postingsOf(shLanded, numHashes, bands),
-            s"$sd/postings")
-          // the perceptual-signature and semantic-vector frames ride
-          // the same recipe: the landed rows' derived state in this
-          // batch's own partition, BEFORE keys (the commit marker).
-          // The signatures come from the batch's ONE persisted decode
-          // pass, semi-joined to the landed ids — payload bytes are
-          // identical, so this is still a pure function of the
-          // durable output
-          blobCol.foreach { _ =>
-            writeParts(batchSigs.get
-              .join(landed.select(col(idCol)), Seq(idCol), "left_semi")
-              .withColumnRenamed(idCol, "__id"), percsigsDir)
-          }
-          vecCol.foreach { _ =>
-            // the batch's ONE bucketing pass, semi-joined to the
-            // landed ids — the vectors are byte-identical to the
-            // landed rows', so this is still a pure function of the
-            // durable output (the batchSigs argument above)
-            writeParts(batchSem.get
-              .join(landed.select(col(idCol)), Seq(idCol), "left_semi")
-              .withColumnRenamed(idCol, "__id"), semvecsDir)
-          }
-          ensureStateDirs() // integrity invariant, see readState
-          writeStateParamsIfAbsent(spark, sd, shingleSize, numHashes,
-            bands, percsigs = blobCol.isDefined,
-            semvecs = vecCol.isDefined, sembits = semanticBits)
-          writeParts(landed.select(col(idCol).as("__id"),
-            Novelty.exactKeyCol(textCol).as("__nk")), s"$sd/keys")
-        } finally shLanded.unpersist()
+        writeFrames(landed, frames)((f, df) => writeParts(df, s"$sd/$f"))
       }
       } finally pairs.unpersist() // a failed write must not leak the cache
     } // `exact` is a localCheckpoint: released by the ContextCleaner
@@ -1029,7 +990,29 @@ object Curate {
 
   private val CompactionFile = "_compaction.meta"
   private val ParamsFile = "_state_params"
+  // the text frames: folded into bucketed tiers by compactState, and
+  // rebuilt together when the key state is absent
   private val StateFrames = Seq("keys", "shingles", "postings")
+  // the state's fixed identity, recorded in the `_state_params`
+  // marker: Dedup's spec-pinned 3-shingle, 12-hash, 4-band MinHash
+  // banding (the banding planner's own answer, OpsSpec) and
+  // srpStateOf's 8 SRP bits
+  private val ShingleSize = 3
+  private val NumHashes = 12
+  private val Bands = 4
+  private val SemanticBits = 8
+  /** The modality frames the marker can track: (frame, the tail option
+    * that fills it, what it holds, whose checks read it, the column a
+    * remedy names). */
+  private val TrackedFrames = Seq(
+    ("percsigs", "blobCol", "perceptual signatures", "perceptual",
+      "blob column"),
+    ("semvecs", "vecCol", "semantic vectors", "semantic", "vector column"))
+
+  /** The `key=value` lines of a control file. */
+  private def keyValues(text: String): Map[String, String] =
+    text.linesIterator.filter(_.contains("="))
+      .map { l => val Array(k, v) = l.split("=", 2); (k, v) }.toMap
 
   private def stateBucketKeys(frame: String): Seq[String] = frame match {
     case "keys"     => Seq("__nk")
@@ -1088,8 +1071,7 @@ object Curate {
   private[ops] def loadCompaction(spark: org.apache.spark.sql.SparkSession,
                                   stateDir: String): Option[StateCompaction] =
     readControlFile(spark, stateDir, CompactionFile).map { text =>
-      val kv = text.linesIterator.filter(_.contains("="))
-        .map { l => val Array(k, v) = l.split("=", 2); (k, v) }.toMap
+      val kv = keyValues(text)
       def frameAt(prefix: String): Map[String, StateFrameMeta] =
         StateFrames.flatMap { f =>
           kv.get(s"$prefix$f.table").map { t =>
@@ -1122,94 +1104,79 @@ object Curate {
     writeControlFile(spark, stateDir, CompactionFile, lines.mkString("\n"))
   }
 
-  private def stateParamsContent(shingleSize: Int, numHashes: Int,
-                                 bands: Int, percsigs: Boolean,
-                                 semvecs: Boolean, sembits: Int): String =
-    s"shingleSize=$shingleSize\nnumHashes=$numHashes\nbands=$bands\n" +
-      s"percsigs=$percsigs\nsemvecs=$semvecs\nsembits=$sembits"
+  private def stateParamsContent(tracks: Seq[String]): String =
+    (Seq(s"shingleSize=$ShingleSize", s"numHashes=$NumHashes",
+      s"bands=$Bands") ++
+      TrackedFrames.map { case (f, _, _, _, _) => s"$f=${tracks.contains(f)}" } :+
+      s"sembits=$SemanticBits").mkString("\n")
 
-  /** Enforce the banding-params marker: the shingle/posting frames are
+  /** Enforce the state-params marker: the shingle/posting frames are
     * only meaningful under the (shingleSize, numHashes, bands) they
-    * were computed with, so a tail invoked with different values must
-    * fail loudly instead of silently probing stale postings. A
-    * committed state WITHOUT a marker (written by an older build)
-    * adopts the current invocation's parameters — the same trust the
-    * caller extended before the marker existed, recorded from then on.
+    * were computed with, so a state written under other values (by
+    * another build) must fail loudly instead of silently probing stale
+    * postings. A committed state WITHOUT a marker (written by an older
+    * build) adopts this build's parameters — the same trust the caller
+    * extended before the marker existed, recorded from then on.
     *
-    * The marker also records whether the state TRACKS PERCEPTUAL
-    * SIGNATURES (`percsigs=`) and SEMANTIC VECTORS (`semvecs=`, with
-    * their SRP `sembits=`): a state built with `blobCol`/`vecCol`
-    * must not silently stop updating its frames (batches admitted
-    * without them would be invisible to every later check), so a
-    * tracking state throws on an invocation that drops the column;
-    * the converse (untracked + column now set) is a legal UPGRADE —
-    * the tail rebuilds the frame from outDir and flips the marker.
-    * A tracked semvecs state also pins its SRP bit width (stale
-    * buckets under different hyperplanes would yield wrong candidate
-    * sets — the banding rule). Returns the stored
-    * (percsigs, semvecs) flags (false when no marker or a pre-flag
-    * marker). */
+    * The marker also records which [[TrackedFrames]] the state TRACKS
+    * (`percsigs=`, `semvecs=`, with the SRP `sembits=`): a state built
+    * with `blobCol`/`vecCol` must not silently stop updating its
+    * frames (batches admitted without them would be invisible to
+    * every later check), so a tracking state throws on an invocation
+    * that drops the column; the converse (untracked + column now set)
+    * is a legal UPGRADE — the tail rebuilds the frame from outDir and
+    * flips the marker. A tracked semvecs state also pins its SRP bit
+    * width (stale buckets under different hyperplanes would yield
+    * wrong candidate sets — the banding rule). Returns the stored
+    * tracked frames (none when no marker or a pre-flag marker). */
   private def checkStateParams(spark: org.apache.spark.sql.SparkSession,
-                               stateDir: String, shingleSize: Int,
-                               numHashes: Int, bands: Int,
-                               tracksBlobs: Boolean,
-                               tracksVecs: Boolean,
-                               sembits: Int): (Boolean, Boolean) = {
-    def parse(text: String): Map[String, String] =
-      text.linesIterator.filter(_.contains("="))
-        .map { l => val Array(k, v) = l.split("=", 2); (k, v) }.toMap
-    readControlFile(spark, stateDir, ParamsFile) match {
-      case Some(stored) =>
-        val kv = parse(stored)
-        val bandingOk = Seq("shingleSize" -> shingleSize,
-          "numHashes" -> numHashes, "bands" -> bands).forall {
+                               stateDir: String,
+                               tracks: Seq[String]): Set[String] =
+    readControlFile(spark, stateDir, ParamsFile).fold(Set.empty[String]) {
+      stored =>
+        val kv = keyValues(stored)
+        val bandingOk = Seq("shingleSize" -> ShingleSize,
+          "numHashes" -> NumHashes, "bands" -> Bands).forall {
           case (k, v) => kv.get(k).contains(v.toString) }
         if (!bandingOk) throw new IllegalStateException(
           s"streamingTail state at $stateDir was computed under " +
             s"{${stored.trim.replace("\n", ", ")}} but this tail was " +
-            s"invoked with {shingleSize=$shingleSize, " +
-            s"numHashes=$numHashes, bands=$bands} — probing the " +
+            s"invoked with {shingleSize=$ShingleSize, " +
+            s"numHashes=$NumHashes, bands=$Bands} — probing the " +
             "stored postings under different banding would yield wrong " +
             "candidate sets. Match the parameters, or delete the WHOLE " +
             "state dir to rebuild it from outDir under the new ones.")
-        val storedPercsigs = kv.get("percsigs").exists(_.toBoolean)
-        if (storedPercsigs && !tracksBlobs) throw new IllegalStateException(
-          s"streamingTail state at $stateDir tracks perceptual " +
-            "signatures (it was built with blobCol), but this tail was " +
-            "invoked without blobCol — batches admitted now would be " +
-            "invisible to every later perceptual check, silently " +
-            "under-deduplicating the stream. Pass the blob column, or " +
-            "delete the WHOLE state dir to rebuild without it.")
-        val storedSemvecs = kv.get("semvecs").exists(_.toBoolean)
-        if (storedSemvecs && !tracksVecs) throw new IllegalStateException(
-          s"streamingTail state at $stateDir tracks semantic vectors " +
-            "(it was built with vecCol), but this tail was invoked " +
-            "without vecCol — batches admitted now would be invisible " +
-            "to every later semantic check, silently under-" +
-            "deduplicating the stream. Pass the vector column, or " +
-            "delete the WHOLE state dir to rebuild without it.")
-        if (storedSemvecs && tracksVecs &&
-            !kv.get("sembits").contains(sembits.toString))
+        val storedTracks = TrackedFrames.map(_._1)
+          .filter(f => kv.get(f).exists(_.toBoolean)).toSet
+        TrackedFrames.foreach { case (f, opt, holds, check, column) =>
+          if (storedTracks(f) && !tracks.contains(f))
+            throw new IllegalStateException(
+              s"streamingTail state at $stateDir tracks $holds (it was " +
+                s"built with $opt), but this tail was invoked without " +
+                s"$opt — batches admitted now would be invisible to " +
+                s"every later $check check, silently under-" +
+                "deduplicating the stream. Pass the " +
+                s"$column, or delete the WHOLE state dir to rebuild " +
+                "without it.")
+        }
+        if (storedTracks("semvecs") && tracks.contains("semvecs") &&
+            !kv.get("sembits").contains(SemanticBits.toString))
           throw new IllegalStateException(
             s"streamingTail semantic state at $stateDir was bucketed " +
               s"under sembits=${kv.getOrElse("sembits", "?")} but this " +
-              s"tail was invoked with semanticBits=$sembits — probing " +
-              "stored buckets under different hyperplanes would yield " +
-              "wrong candidate sets. Match the parameter, or delete " +
-              "the WHOLE state dir to rebuild it from outDir.")
-        (storedPercsigs, storedSemvecs)
-      case None => (false, false)
+              s"tail was invoked with semanticBits=$SemanticBits — " +
+              "probing stored buckets under different hyperplanes " +
+              "would yield wrong candidate sets. Match the parameter, " +
+              "or delete the WHOLE state dir to rebuild it from outDir.")
+        storedTracks
     }
-  }
 
   private def writeStateParamsIfAbsent(
       spark: org.apache.spark.sql.SparkSession, stateDir: String,
-      shingleSize: Int, numHashes: Int, bands: Int,
-      percsigs: Boolean, semvecs: Boolean, sembits: Int): Unit =
+      tracks: Seq[String]): Unit =
     if (readControlFile(spark, stateDir, ParamsFile).isEmpty)
       writeControlFile(spark, stateDir, ParamsFile,
-        stateParamsContent(shingleSize, numHashes, bands, percsigs,
-          semvecs, sembits))
+        stateParamsContent(tracks))
 
   /** Open a compacted base as its bucketed catalog table, re-creating
     * the table definition when this JVM has never seen it (fresh
@@ -1426,8 +1393,7 @@ object Curate {
     val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(conf)
     fs.delete(new org.apache.hadoop.fs.Path(dir, ".outfold_tmp"), true)
     readControlFile(spark, dir, OutFoldFile).foreach { text =>
-      val kv = text.linesIterator.filter(_.contains("="))
-        .map { l => val Array(k, v) = l.split("=", 2); (k, v) }.toMap
+      val kv = keyValues(text)
       val baseId = kv("base").toLong
       val sources = kv("sources").split(",").filter(_.nonEmpty).map(_.toLong)
       if (fs.exists(new org.apache.hadoop.fs.Path(
@@ -1513,22 +1479,5 @@ object Curate {
       new org.apache.hadoop.fs.Path(s"$dir/__batch_id=$id"), true))
     fs.delete(new org.apache.hadoop.fs.Path(dir, OutFoldFile), false)
     Some(baseId)
-  }
-
-  /** File-source stream wired through [[streamingGate]] — the test /
-    * quick-start entry (schema from a batch peek, then readStream). */
-  def streamGate(spark: org.apache.spark.sql.SparkSession, dir: String,
-                 textCol: String = "text",
-                 minQuality: Double = 0.3,
-                 maxDup2gramFrac: Double = 0.3,
-                 historicalCorpus: Option[DataFrame] = None,
-                 bandIndex: Option[Novelty.BandIndex] = None,
-                 unigramRef: Option[(TextStats.UnigramRef, Double)] = None,
-                 benchGrams: Option[Decontaminate.BenchGrams] = None)
-      : DataFrame = {
-    val schema = spark.read.parquet(dir).schema
-    streamingGate(spark.readStream.schema(schema).parquet(dir), textCol,
-      minQuality, maxDup2gramFrac, historicalCorpus, bandIndex,
-      unigramRef, benchGrams)
   }
 }

@@ -419,10 +419,13 @@ class CurateGateSpec extends AnyFunSuite with SparkTestSession {
         "spark.sql.legacy.bucketedTableScan.outputOrdering")
     } finally
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThresh)
-    // PARAMS MARKER: different banding on the same state fails loudly
+    // PARAMS MARKER: a state computed under different banding (a
+    // marker written with numHashes=24) fails loudly
+    plantStateParams(dir, "shingleSize=3\nnumHashes=24\nbands=4\n" +
+      "percsigs=false\nsemvecs=false\nsembits=8")
     val e = intercept[IllegalStateException] {
       Curate.streamingTail(spark, dir, minQuality = 0.0,
-        maxDup2gramFrac = 1.0, numHashes = 24)(
+        maxDup2gramFrac = 1.0)(
         Seq((41L, "s", proseB)).toDF("doc_id", "source", "text"), 4L)
     }
     assert(e.getMessage.contains("was computed under"), e.getMessage)
@@ -430,6 +433,16 @@ class CurateGateSpec extends AnyFunSuite with SparkTestSession {
 
   private def paths(parts: String*) =
     java.nio.file.Paths.get(parts.head, parts.tail: _*)
+
+  /** Overwrites the `_state_params` marker of the state beside
+    * `outDir` — a state written by a build with other parameters.
+    * Written through the Hadoop FS so its checksum stays consistent. */
+  private def plantStateParams(outDir: String, content: String): Unit = {
+    val p = new org.apache.hadoop.fs.Path(s"${outDir}__state/_state_params")
+    val out = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .create(p, true)
+    try out.write(content.getBytes("UTF-8")) finally out.close()
+  }
 
   test("output folding: committed corpus partitions fold into one base; " +
       "replay-safe; crash window heals") {
@@ -628,8 +641,7 @@ class CurateGateSpec extends AnyFunSuite with SparkTestSession {
     val dir = java.nio.file.Files.createTempDirectory("graft-outfold-auto")
       .toString
     val t = Curate.streamingTail(spark, dir, minQuality = 0.0,
-      maxDup2gramFrac = 1.0, compactOutputEvery = Some(2),
-      compactOutputFiles = 1)
+      maxDup2gramFrac = 1.0, compactOutputEvery = Some(2))
     t(Seq((1L, "s", proseA)).toDF("doc_id", "source", "text"), 0L)
     t(Seq((11L, "s", proseB)).toDF("doc_id", "source", "text"), 1L)
     // batch 2 start: two committed output partitions -> auto-fold
@@ -882,10 +894,12 @@ class CurateGateSpec extends AnyFunSuite with SparkTestSession {
         maxDup2gramFrac = 1.0, threshold = 1.01)(extra, 4L)
     }
     assert(e.getMessage.contains("semantic"), e.getMessage)
+    plantStateParams(d3, "shingleSize=3\nnumHashes=12\nbands=4\n" +
+      "percsigs=false\nsemvecs=true\nsembits=12")
     val e2 = intercept[IllegalStateException] {
       Curate.streamingTail(spark, d3, minQuality = 0.0,
         maxDup2gramFrac = 1.0, threshold = 1.01,
-        vecCol = Some("vec"), semanticBits = 12)(extra, 4L)
+        vecCol = Some("vec"))(extra, 4L)
     }
     assert(e2.getMessage.contains("sembits"), e2.getMessage)
     // UPGRADE path: a corpus admitted without vecCol rebuilds the
@@ -900,6 +914,63 @@ class CurateGateSpec extends AnyFunSuite with SparkTestSession {
       .collect().map(_.getLong(0)).toSet
     assert(!upAdmitted.contains(maxId + 1) && upAdmitted.contains(maxId + 2),
       s"semvecs migration rebuild failed: $upAdmitted")
+  }
+
+  test("streaming tail crash boundary: keys lost, derived frames and marker " +
+      "kept — the next batch restores the uninterrupted state") {
+    // a state committed up to batch 1, then its keys frame (the commit
+    // marker) lost while shingles/postings/semvecs and _state_params
+    // stay: batch 2 must rebuild the missing frames and land exactly
+    // what an uninterrupted run lands, leaving every frame identical
+    // Gaussian vectors (distinct directions) except every 7th doc,
+    // which repeats its predecessor's — semantic dups across batches
+    val gen = udf { (id: Long) =>
+      val r = new scala.util.Random(if (id % 7 == 0) id - 1 else id)
+      Array.fill(16)(r.nextGaussian().toFloat)
+    }
+    // texts repeat with period 350, so batch 2's first ten docs are
+    // exact dups of batch 0's
+    val input = spark.range(0, 360).select(col("id").as("doc_id"),
+      lit("s").as("source"),
+      format_string("the quick brown fox %d jumps over the lazy dog and " +
+        "rests in garden %d", col("id") % 50, col("id") % 7).as("text"))
+      .withColumn("vec", gen(col("doc_id")))
+    val maxId = 359L
+    val batches = Seq(
+      input.where(col("doc_id") <= maxId / 3),
+      input.where(col("doc_id") > maxId / 3 && col("doc_id") <= 2 * maxId / 3),
+      input.where(col("doc_id") > 2 * maxId / 3))
+    def tail(outDir: String) = Curate.streamingTail(spark, outDir,
+      minQuality = 0.0, maxDup2gramFrac = 1.0, vecCol = Some("vec"))
+    def admitted(outDir: String): Set[Long] =
+      spark.read.parquet(outDir).select("doc_id")
+        .collect().map(_.getLong(0)).toSet
+
+    val ref = java.nio.file.Files.createTempDirectory("graft-crash-ref").toString
+    val fnRef = tail(ref)
+    batches.zipWithIndex.foreach { case (b, i) => fnRef(b, i.toLong) }
+    val cut = java.nio.file.Files.createTempDirectory("graft-crash-cut").toString
+    val fnCut = tail(cut)
+    fnCut(batches(0), 0L)
+    fnCut(batches(1), 1L)
+    rmTree(paths(cut + "__state", "keys"))
+    fnCut(batches(2), 2L)
+
+    val expected = admitted(ref)
+    assert(expected.size < input.count(), "fixture drops nothing")
+    assert(admitted(cut) === expected)
+    // every frame, partition column included, row for row
+    def digest(outDir: String, frame: String): (Long, BigDecimal) = {
+      val f = spark.read.parquet(s"${outDir}__state/$frame")
+      val r = f.agg(count(lit(1)),
+        sum(graft.ops.Profile.rowDigest(f.columns.toSeq.map(col)))).head()
+      (r.getLong(0), BigDecimal(r.getDecimal(1)))
+    }
+    Seq("keys", "shingles", "postings", "semvecs").foreach { frame =>
+      assert(digest(cut, frame) === digest(ref, frame), frame)
+    }
+    assert(java.nio.file.Files.readString(paths(cut + "__state", "_state_params")) ===
+      java.nio.file.Files.readString(paths(ref + "__state", "_state_params")))
   }
 
   test("streaming tail blobCol + vecCol COMPOSE: both durable states, streamed ≡ standard") {
