@@ -191,13 +191,10 @@ object IndexCli {
   }
 
   /** Which layout lives under the index dir: ivfPqSave writes a
-    * `_kind` marker, plain ivfSave does not — absent marker = ivf. */
-  private def indexKind(spark: SparkSession, dir: String): String = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/_kind")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) spark.read.parquet(p.toString).collect()(0).getString(0)
-    else "ivf"
-  }
+    * `_kind` marker, plain ivfSave does not — absent marker = ivf.
+    * Read on the driver, no Spark job. */
+  private def indexKind(spark: SparkSession, dir: String): String =
+    SimSearch.kindOf(spark, dir).getOrElse("ivf")
 
   def main(args: Array[String]): Unit = {
     parse(args.toSeq) match {
@@ -294,12 +291,9 @@ object IndexCli {
           "query vector (codes store no raw vectors)")
       val idx = SimSearch.ivfPqLoad(spark, config.index, config.idCol)
       val vectors = load(config, spark)
-      val q = vectors
-        .where(org.apache.spark.sql.functions.col(config.idCol)
-          === config.queryId)
-        .select(org.apache.spark.sql.functions.col(config.vecCol)
-          .cast("array<double>"))
-        .head().getSeq[Double](0).toArray
+      val q = SimSearch.queryVector(vectors, config.idCol, config.vecCol,
+        config.queryId,
+        s"--input ${config.input} (the vectors of index ${config.index})")
       val res = config.rerank match {
         case Some(w) =>
           SimSearch.ivfPqSearchRerank(idx, vectors, config.vecCol, q,

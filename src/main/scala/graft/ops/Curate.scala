@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
+import graft.sources.ParquetMeta
+
 /**
  * End-to-end corpus curation — the standard LLM training-data pipeline
  * composed from this library's operators in the order production
@@ -541,7 +543,7 @@ object Curate {
     def hasParts(dir: String): Boolean =
       statePartIds(hadoopConf, dir).nonEmpty
     def readParts(dir: String): DataFrame =
-      spark.read.parquet(dir)
+      ParquetMeta.readParquet(spark, dir)
         .where(col("__batch_id") =!= lit(batchId))
         .drop("__batch_id")
     def overwriteParts(df: DataFrame, dir: String): Unit =
@@ -735,7 +737,7 @@ object Curate {
                 "trigger a bootstrap rebuild from outDir, or restore " +
                 "the frame.")
           else if (!hasParts(dir)) empty
-          else spark.read.parquet(dir)
+          else ParquetMeta.readParquet(spark, dir)
             .where(col("__batch_id") =!= lit(batchId) &&
               col("__batch_id") > lit(folded))
             .drop("__batch_id")
@@ -953,7 +955,7 @@ object Curate {
       //    excluded-batch state, so a batch that once admitted rows
       //    admits the same rows again.
       if (exists(s"$outDir/__batch_id=$batchId")) labeled("state-write") {
-        val landed = spark.read.parquet(outDir)
+        val landed = ParquetMeta.readParquet(spark, outDir)
           .where(col("__batch_id") === lit(batchId)).drop("__batch_id")
         writeFrames(landed, frames)((f, df) => writeParts(df, s"$sd/$f"))
       }
@@ -1316,7 +1318,7 @@ object Curate {
         .exists(id => id > oldUpTo && id <= upTo)
       val tail =
         if (!hasTail) None
-        else Some(spark.read.parquet(s"$sd/$f")
+        else Some(ParquetMeta.readParquet(spark, s"$sd/$f")
           .where(col("__batch_id") > lit(oldUpTo) &&
             col("__batch_id") <= lit(upTo))
           .drop("__batch_id"))
@@ -1464,7 +1466,7 @@ object Curate {
     // stage OUTSIDE the read path (a dynamic overwrite into the dir
     // being read would be rejected as a read-write conflict), then
     // commit by an atomic directory rename into the partition slot
-    spark.read.parquet(dir)
+    ParquetMeta.readParquet(spark, dir)
       .where(col("__batch_id").isin(sources: _*))
       .drop("__batch_id")
       .repartition(numFiles)

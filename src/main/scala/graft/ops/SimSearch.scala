@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions._
 
+import graft.sources.ParquetMeta
+
 /**
  * Similarity search over an embedding column (`Array[Float]`) —
  * extension surface for LLM-data pipelines.
@@ -539,19 +541,29 @@ object SimSearch {
     clearVersionState(spark, dir)
   }
 
-  /** Load an [[IvfIndex]] persisted by [[ivfSave]]. */
+  /** Load an [[IvfIndex]] persisted by [[ivfSave]] — with NO Spark
+    * job: the centers are read on the driver ([[loadCenters]]) and
+    * `assigned` stays a lazy scan whose schema comes from one footer
+    * read on the driver ([[graft.sources.ParquetMeta.readParquet]]),
+    * not from Spark's schema-inference job. */
   def ivfLoad(spark: org.apache.spark.sql.SparkSession, dir: String,
               idCol: String, vecCol: String): IvfIndex = {
     val centers = loadCenters(spark, dir)
-    IvfIndex(centers, spark.read.parquet(s"$dir/assigned"), idCol, vecCol)
+    IvfIndex(centers, ParquetMeta.readParquet(spark, s"$dir/assigned"),
+      idCol, vecCol)
   }
 
+  /** The persisted centers (the (cell, pos, w) side table), read on
+    * the driver ([[graft.sources.ParquetMeta.driverRows]]): about
+    * nlist x dim rows, for which a Spark read would cost a schema job
+    * plus a collect job on every load and every append. */
   private def loadCenters(spark: org.apache.spark.sql.SparkSession,
                           dir: String): Array[Array[Double]] =
-    spark.read.parquet(s"$dir/centers")
-      .collect().map(r => (r.getInt(0), r.getInt(1), r.getDouble(2)))
+    ParquetMeta.driverRows(spark, s"$dir/centers")
+      .map(g => (g.getInteger("cell", 0), g.getInteger("pos", 0),
+        g.getDouble("w", 0)))
       .groupBy(_._1).toSeq.sortBy(_._1)
-      .map { case (_, rows) => rows.sortBy(_._2).map(_._3) }
+      .map { case (_, rows) => rows.sortBy(_._2).map(_._3).toArray }
       .toArray
 
   /** APPEND an ingest batch to a persisted IVF index WITHOUT refit —
@@ -736,7 +748,7 @@ object SimSearch {
         java.lang.Double.valueOf(s)
       }
     }
-    val rows = spark.read.parquet(s"$dir/assigned")
+    val rows = ParquetMeta.readParquet(spark, s"$dir/assigned")
       .select(col("__cell"),
         distToOwn(asDouble(col(vecCol)), col("__cell")).as("__d"))
       .groupBy(col("__cell"))
@@ -771,13 +783,15 @@ object SimSearch {
 
   /** Load an [[IvfBaseline]] persisted by [[ivfBaselineSave]],
     * verifying the meta row against the cell table (torn-save guard —
-    * see the save's scaladoc). */
+    * see the save's scaladoc). Both tables are read on the driver
+    * ([[graft.sources.ParquetMeta.driverRows]]), no Spark job. */
   def ivfBaselineLoad(spark: org.apache.spark.sql.SparkSession,
                       dir: String): IvfBaseline = {
-    val m = spark.read.parquet(s"$dir/baseline_meta").head()
-    val cells = spark.read.parquet(s"$dir/baseline_cells")
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    val b = IvfBaseline(m.getInt(0), m.getLong(1), cells, m.getDouble(2))
+    val m = ParquetMeta.driverRows(spark, s"$dir/baseline_meta").head
+    val cells = ParquetMeta.driverRows(spark, s"$dir/baseline_cells")
+      .map(g => g.getInteger("cell", 0) -> g.getLong("n", 0)).toMap
+    val b = IvfBaseline(m.getInteger("nlist", 0), m.getLong("n", 0), cells,
+      m.getDouble("mean_dist", 0))
     require(cells.values.sum == b.n,
       s"ivfBaselineLoad: cell counts sum to ${cells.values.sum} but meta " +
         s"records n=${b.n} — torn/mixed-version baseline under $dir; " +
@@ -863,15 +877,19 @@ object SimSearch {
     * nearest cells driver-side (centers are tiny), scan only those
     * cells, rerank exactly. Each query touches ~nprobe/nlist of the
     * corpus — with a cell-bucketed layout the scan prunes at the file
-    * level. */
+    * level. Finding the query's vector is ONE job ([[queryVector]]);
+    * the returned frame is lazy, so a served search over an
+    * [[ivfLoad]]ed index is two jobs: that lookup and the caller's
+    * write. An id with no row in the index throws an
+    * IllegalArgumentException naming it. */
   def ivfSearch(index: IvfIndex, queryId: Long, k: Int,
                 nprobe: Int = 4): DataFrame = {
     val idCol = index.idCol
     val vecCol = index.vecCol
-    val qVec = index.assigned.where(col(idCol) === queryId)
-      .select(asDouble(col(vecCol))).head().getSeq[Double](0).toArray
+    val qVec = queryVector(index.assigned, idCol, vecCol, queryId,
+      s"the index (${sourceOf(index.assigned)})")
     val probeCells = nearestCells(index.centers, qVec, nprobe)
-    // the query vector is already on the driver (the head() above):
+    // the query vector is already on the driver (the lookup above):
     // inline it as a LITERAL column instead of broadcast-cross-joining
     // a one-row frame — the old qRow frame cost a SECOND full scan of
     // the assigned corpus per search (r19); same values, same cosine
@@ -883,6 +901,34 @@ object SimSearch {
         round(cosine(asDouble(col(vecCol)), qLit), 4).as("cosine"))
       .orderBy(desc("cosine"), col(idCol))
       .limit(k)
+  }
+
+  /** The vector of row `queryId` in `rows`, as doubles, in ONE job:
+    * a `collect` of the filtered scan. `head()` would plan a
+    * CollectLimit, which scans one partition first and then scales
+    * up in a second job whenever the row is elsewhere; `collect`
+    * keeps partition order, so the first match is the same row.
+    * No match throws an IllegalArgumentException naming the id and
+    * `where` (by name: only built on the failure path). */
+  private[graft] def queryVector(rows: DataFrame, idCol: String,
+                                 vecCol: String, queryId: Long,
+                                 where: => String): Array[Double] =
+    rows.where(col(idCol) === queryId).select(asDouble(col(vecCol)))
+      .collect().headOption.map(_.getSeq[Double](0).toArray)
+      .getOrElse(throw new IllegalArgumentException(
+        s"query id $queryId not found: no row with $idCol = $queryId " +
+          s"in $where"))
+
+  /** Where a frame's rows are read from, for error messages: the
+    * deepest directory holding all of its input files (an index's
+    * `<dir>/assigned`), or "an in-memory frame". */
+  private def sourceOf(df: DataFrame): String = {
+    val dirs = df.inputFiles.toSeq.map(f =>
+      new org.apache.hadoop.fs.Path(f).getParent.toString.split('/').toSeq)
+    if (dirs.isEmpty) "an in-memory frame"
+    else dirs.reduce((a, b) =>
+      a.zip(b).takeWhile { case (x, y) => x == y }.map(_._1))
+      .mkString("/")
   }
 
   /** One-shot IVF ANN (fit + search). Demo/test convenience — at scale
@@ -1587,18 +1633,19 @@ object SimSearch {
     * marker and that every (j, c, p) codebook cell is present (the
     * torn-save guard — meta is written last, so meta present + cells
     * short means a corrupted tree, and a short codebook must never
-    * encode silently wrong). */
+    * encode silently wrong). All three tables are read on the driver
+    * ([[graft.sources.ParquetMeta.driverRows]]), no Spark job. */
   def pqLoad(spark: org.apache.spark.sql.SparkSession, dir: String): PqModel = {
-    val kind = spark.read.parquet(s"$dir/_kind").collect()(0).getString(0)
+    val kind = kindOf(spark, dir).getOrElse("none")
     require(kind == "pq",
       s"model at $dir is '$kind', not 'pq' — refusing a cross-family " +
         "load (it would encode silently wrong)")
-    val meta = spark.read.parquet(s"$dir/meta").head()
-    val (m, k, dsub) = (meta.getAs[Int]("m"), meta.getAs[Int]("k"),
-      meta.getAs[Int]("dsub"))
-    val cells = spark.read.parquet(s"$dir/codebooks")
-      .collect().map(r => ((r.getInt(0), r.getInt(1), r.getInt(2)),
-        r.getDouble(3))).toMap
+    val meta = ParquetMeta.driverRows(spark, s"$dir/meta").head
+    val (m, k, dsub) = (meta.getInteger("m", 0), meta.getInteger("k", 0),
+      meta.getInteger("dsub", 0))
+    val cells = ParquetMeta.driverRows(spark, s"$dir/codebooks")
+      .map(g => ((g.getInteger("j", 0), g.getInteger("c", 0),
+        g.getInteger("p", 0)), g.getDouble("w", 0))).toMap
     require(cells.size == m * k * dsub,
       s"pqLoad: ${cells.size} codebook cells under $dir, expected " +
         s"${m * k * dsub} (m=$m k=$k dsub=$dsub) — torn save; re-fit " +
@@ -2023,12 +2070,14 @@ object SimSearch {
 
   /** Load an [[IvfPqIndex]] persisted by [[ivfPqSave]] (`_kind`
     * guard; the codes frame stays a lazy partition-pruned scan).
+    * No Spark job: the side tables are read on the driver and the
+    * codes scan's schema comes from one driver-side footer read.
     * The persisted kind restores the residual flag, so a loaded
     * index serves through the same table construction it was
     * encoded under. */
   def ivfPqLoad(spark: org.apache.spark.sql.SparkSession, dir: String,
                 idCol: String): IvfPqIndex = {
-    val kind = spark.read.parquet(s"$dir/_kind").collect()(0).getString(0)
+    val kind = kindOf(spark, dir).getOrElse("none")
     require(Set("ivfpq", "ivfpq_res", "ivfpq_opq", "ivfpq_opq_res")(kind),
       s"index at $dir is '$kind', not an ivfpq family — refusing a " +
         "cross-family load")
@@ -2036,7 +2085,7 @@ object SimSearch {
       if (kind.startsWith("ivfpq_opq")) Some(loadRotation(spark, dir))
       else None
     IvfPqIndex(loadCenters(spark, dir), pqLoad(spark, s"$dir/pq"),
-      spark.read.parquet(s"$dir/codes"), idCol,
+      ParquetMeta.readParquet(spark, s"$dir/codes"), idCol,
       residual = kind.endsWith("_res"), rotation = rotation)
   }
 
@@ -2056,22 +2105,30 @@ object SimSearch {
     * dir, which has no `_kind` at all). The torn-rotation load guard
     * applies. */
   def ivfPqRotationOf(spark: org.apache.spark.sql.SparkSession,
-                      dir: String): Option[Array[Array[Double]]] = {
+                      dir: String): Option[Array[Array[Double]]] =
+    if (kindOf(spark, dir).exists(_.startsWith("ivfpq_opq")))
+      Some(loadRotation(spark, dir))
+    else None
+
+  /** The `_kind` marker of a persisted index or model dir, read on
+    * the driver; None when the dir has none (a plain [[ivfSave]]
+    * layout). */
+  private[graft] def kindOf(spark: org.apache.spark.sql.SparkSession,
+                            dir: String): Option[String] = {
     val p = new org.apache.hadoop.fs.Path(s"$dir/_kind")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) None
-    else if (spark.read.parquet(p.toString).collect()(0).getString(0)
-        .startsWith("ivfpq_opq")) Some(loadRotation(spark, dir))
-    else None
+    else Some(ParquetMeta.driverRows(spark, p.toString).head
+      .getString("kind", 0))
   }
 
   /** Load the persisted OPQ rotation, verifying every (i, j) cell is
     * present (a torn rotation would rotate queries silently wrong). */
   private def loadRotation(spark: org.apache.spark.sql.SparkSession,
                            dir: String): Array[Array[Double]] = {
-    val cells = spark.read.parquet(s"$dir/rotation")
-      .collect().map(r => ((r.getInt(0), r.getInt(1)), r.getDouble(2)))
-      .toMap
+    val cells = ParquetMeta.driverRows(spark, s"$dir/rotation")
+      .map(g => ((g.getInteger("i", 0), g.getInteger("j", 0)),
+        g.getDouble("w", 0))).toMap
     val d = math.sqrt(cells.size.toDouble).toInt
     require(d * d == cells.size && cells.keySet ==
         (for (i <- 0 until d; j <- 0 until d) yield (i, j)).toSet,
@@ -2123,8 +2180,7 @@ object SimSearch {
       // must encode v - center(cell), and an OPQ index must rotate
       // first (its centers/codebooks live in the rotated space) —
       // exactly as fit time did
-      val kind = spark.read.parquet(s"$dir/_kind")
-        .collect()(0).getString(0)
+      val kind = kindOf(spark, dir).getOrElse("none")
       val isResidual = kind.endsWith("_res")
       val vec =
         if (kind.startsWith("ivfpq_opq"))

@@ -1,6 +1,9 @@
 package graft.sources
 
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.example.data.Group
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /**
  * Parquet FOOTER census — row-group statistics read from file
@@ -20,6 +23,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
  * replay of the DATA — a census that disagrees with its own data
  * pages is a red oracle row. String/binary stats are BOUNDS (writers
  * may truncate long values); the skipping rule stays sound on bounds.
+ *
+ * The same footers also serve reads that should cost no Spark job:
+ * [[readParquet]] takes a table's schema from one footer on the
+ * driver instead of Spark's inference job, and [[driverRows]] reads a
+ * small side table on the driver.
  */
 object ParquetMeta {
 
@@ -209,5 +217,127 @@ object ParquetMeta {
     stats.withColumn("skippable",
       col("col_min_str").isNotNull && col("col_max_str").isNotNull &&
         (col("col_min_str") > hi || col("col_max_str") < lo))
+  }
+
+  /** `spark.read.parquet(dir)` without its schema-inference job.
+    * Without a schema Spark runs a one-task job to read ONE footer;
+    * this reads the same footer on the driver and hands its schema
+    * to `spark.read.schema` — partition columns are still discovered
+    * from the paths, so the frame, its schema (nullability, field
+    * metadata, partition columns) and its plan equal the inferred
+    * read's. Spark's pick is mirrored exactly: under its hidden-file
+    * rule ([[hidden]]), a `_common_metadata` summary, else
+    * `_metadata`, else the first data file by path; decoded from the
+    * `org.apache.spark.sql.parquet.row.metadata` key, else converted
+    * under the session's parquet settings
+    * (`ParquetFileFormat.readSchemaFromFooter`). A path with no data
+    * file, or a session with schema merging on, takes the plain read
+    * and its errors. */
+  def readParquet(spark: SparkSession, dir: String): DataFrame =
+    footerSchema(spark, dir) match {
+      case Some(schema) => spark.read.schema(schema).parquet(dir)
+      case None => spark.read.parquet(dir)
+    }
+
+  private def footerSchema(spark: SparkSession,
+                           dir: String): Option[StructType] = {
+    import org.apache.spark.sql.execution.datasources.parquet.{
+      ParquetFileFormat, ParquetToSparkSchemaConverter}
+    val conf = spark.sessionState.conf
+    val hc = spark.sessionState.newHadoopConf()
+    val root = new Path(dir)
+    val fs = root.getFileSystem(hc)
+    if (conf.isParquetSchemaMergingEnabled || !fs.exists(root)) None
+    else {
+      val files = leafFiles(fs, fs.getFileStatus(root))
+      def named(n: String) = files.find(_.getPath.getName == n)
+      named("_common_metadata").orElse(named("_metadata"))
+        .orElse(files.find(f => !isSummary(f))).map { f =>
+          // the converter SchemaMergeUtils' footer job builds
+          val converter = new ParquetToSparkSchemaConverter(
+            assumeBinaryIsString = conf.isParquetBinaryAsString,
+            assumeInt96IsTimestamp = conf.isParquetINT96AsTimestamp,
+            inferTimestampNTZ = conf.parquetInferTimestampNTZEnabled,
+            nanosAsLong = conf.legacyParquetNanosAsLong,
+            respectUnknownTypeAnnotation =
+              conf.parquetReaderRespectUnknownTypeAnnotation)
+          val reader = open(f, hc)
+          try ParquetFileFormat.readSchemaFromFooter(
+            new org.apache.parquet.hadoop.Footer(f.getPath, reader.getFooter),
+            converter)
+          finally reader.close()
+        }
+    }
+  }
+
+  /** Every record of a small UNPARTITIONED parquet table under `dir`,
+    * read on the driver as parquet-hadoop example `Group`s (files in
+    * path order, records in file order) — no Spark job. For side
+    * tables of a few thousand rows (index centers, `_kind` markers,
+    * drift baselines), whose Spark read would cost a schema job plus
+    * a collect job. A missing table throws; a partitioned one is
+    * refused (the records would lack their partition values). */
+  def driverRows(spark: SparkSession, dir: String): Seq[Group] = {
+    val hc = spark.sessionState.newHadoopConf()
+    val root = new Path(dir)
+    val fs = root.getFileSystem(hc)
+    if (!fs.exists(root))
+      throw new java.io.FileNotFoundException(s"no parquet table at $dir")
+    val rootStatus = fs.getFileStatus(root)
+    val files = leafFiles(fs, rootStatus).filterNot(isSummary)
+    require(rootStatus.isFile ||
+        files.forall(_.getPath.getParent == rootStatus.getPath),
+      s"driverRows: $dir is partitioned; read it with Spark")
+    files.flatMap { f =>
+      val reader = open(f, hc)
+      try {
+        val schema = reader.getFooter.getFileMetaData.getSchema
+        val io = new org.apache.parquet.io.ColumnIOFactory().getColumnIO(schema)
+        val rows = Vector.newBuilder[Group]
+        var pages = reader.readNextRowGroup()
+        while (pages != null) {
+          val records = io.getRecordReader(pages, new org.apache.parquet
+            .example.data.simple.convert.GroupRecordConverter(schema))
+          var i = 0L
+          while (i < pages.getRowCount) { rows += records.read(); i += 1 }
+          pages = reader.readNextRowGroup()
+        }
+        rows.result()
+      } finally reader.close()
+    }
+  }
+
+  /** A parquet reader over `f` whose read options come from `hc`.
+    * The options must be built from a LOADED configuration: parquet's
+    * no-conf default builds a fresh Hadoop `Configuration` and parses
+    * its XML resources, about 14 ms per open on a 4-core host. */
+  private def open(f: FileStatus, hc: org.apache.hadoop.conf.Configuration)
+      : org.apache.parquet.hadoop.ParquetFileReader =
+    org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f, hc),
+      org.apache.parquet.HadoopReadOptions.builder(hc, f.getPath).build())
+
+  /** The files under `s` that Spark's file index lists, sorted by
+    * path string (the order its schema inference picks from). */
+  private def leafFiles(fs: FileSystem, s: FileStatus): Seq[FileStatus] = {
+    def walk(s: FileStatus): Seq[FileStatus] =
+      if (s.isFile) Seq(s)
+      else fs.listStatus(s.getPath).toSeq
+        .filterNot(c => hidden(c.getPath.getName)).flatMap(walk)
+    walk(s).sortBy(_.getPath.toString)
+  }
+
+  /** Spark's hidden-file rule (`HadoopFSUtils.shouldFilterOutPathName`):
+    * names starting with `_` (except partition dirs, which hold `=`)
+    * or `.`, and in-flight `._COPYING_` copies — but never the
+    * `_common_metadata`/`_metadata` summaries. */
+  private def hidden(name: String): Boolean =
+    ((name.startsWith("_") && !name.contains("=")) ||
+      name.startsWith(".") || name.endsWith("._COPYING_")) &&
+      !name.startsWith("_common_metadata") && !name.startsWith("_metadata")
+
+  private def isSummary(f: FileStatus): Boolean = {
+    val n = f.getPath.getName
+    n == "_common_metadata" || n == "_metadata"
   }
 }

@@ -16,4 +16,25 @@ trait SparkTestSession {
 
   def resourcePath(name: String): String =
     getClass.getResource(name).getPath
+
+  /** The number of Spark jobs started while `body` runs: a listener
+    * counting job starts, registered after the bus has drained (so no
+    * earlier job is counted) and removed in a `finally`. */
+  def jobsDuring(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    org.apache.spark.ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    try {
+      body
+      org.apache.spark.ListenerBusDrain(sc)
+      jobs.get
+    } finally sc.removeSparkListener(listener)
+  }
 }

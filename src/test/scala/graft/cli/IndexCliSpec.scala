@@ -126,6 +126,42 @@ class IndexCliSpec extends AnyFunSuite with SparkTestSession {
     } finally rm(t)
   }
 
+  test("search: two jobs on the ivf layout; a missing query id names itself and the index (both layouts)") {
+    val t = tmpDir()
+    try {
+      val corpus = t.resolve("corpus.parquet").toString
+      (0 until 200).map { i =>
+        (i.toLong, Array.tabulate(16)(j =>
+          ((i % 4) * 3.0 + math.sin(i * 0.37 + j * 1.3)).toFloat))
+      }.toDF("vec_id", "embedding").write.parquet(corpus)
+      val out = t.resolve("res").toString
+      val missing = "987654321"
+      Seq(Seq.empty[String], Seq("--pq-m", "16", "--pq-k", "8"))
+          .zipWithIndex.foreach { case (pq, i) =>
+        val ix = t.resolve(s"ix$i").toString
+        IndexCli.run(IndexCli.parse(Seq("fit", "--index", ix,
+          "--input", corpus, "--nlist", "4") ++ pq).get, spark)
+        val search = Seq("search", "--index", ix, "--output", out,
+          "--input", corpus, "--k", "5")
+        if (pq.isEmpty) {
+          // _kind probe, load and lookup stay on the driver or in the
+          // one lookup job; the second job is the result write
+          assert(jobsDuring {
+            IndexCli.run(IndexCli.parse(search ++
+              Seq("--query-id", "3")).get, spark)
+          } === 2)
+          assert(spark.read.parquet(out).count() === 5L)
+        }
+        val e = intercept[IllegalArgumentException] {
+          IndexCli.run(IndexCli.parse(search ++
+            Seq("--query-id", missing)).get, spark)
+        }
+        assert(e.getMessage.contains(missing) && e.getMessage.contains(ix),
+          e.getMessage)
+      }
+    } finally rm(t)
+  }
+
   test("lifecycle: fit -> append -> search -> drift, CLI equals library") {
     val t = tmpDir()
     try {

@@ -994,6 +994,161 @@ class OpsSpec extends AnyFunSuite with SparkTestSession {
     } finally rmr(new java.io.File(dir2))
   }
 
+  /** 200 vectors of dim 16 in four loose clusters: an index corpus
+    * for the driver-side read and job-budget pins. */
+  private def clusteredEmb = (0 until 200).map { i =>
+    (i.toLong, Array.tabulate(16)(j =>
+      ((i % 4) * 3.0 + math.sin(i * 0.37 + j * 1.3)).toFloat))
+  }.toDF("vec_id", "embedding")
+
+  test("driver-side index reads equal Spark's: footer schemas, side tables bit for bit") {
+    import org.apache.spark.sql.functions.{col => c}
+    import graft.sources.ParquetMeta
+    val emb = clusteredEmb
+    val base = emb.where(c("vec_id") % 5 =!= 0)
+    def rmr(f: java.io.File): Unit = {
+      Option(f.listFiles).foreach(_.foreach(rmr)); f.delete(); ()
+    }
+    def bits(xs: Seq[Double]) = xs.map(java.lang.Double.doubleToRawLongBits)
+    // readParquet's frame equals the inferred read: schema (nullability,
+    // metadata, partition columns, in order) and rows
+    def sameRead(dir: String): Unit = {
+      val ours = ParquetMeta.readParquet(spark, dir)
+      val spark0 = spark.read.parquet(dir)
+      assert(ours.schema === spark0.schema, dir)
+      assert(ours.collect().map(_.toString).sorted ===
+        spark0.collect().map(_.toString).sorted, dir)
+    }
+    // the centers as the Spark read assembled them before
+    def sparkCenters(dir: String) = spark.read.parquet(s"$dir/centers")
+      .collect().map(r => (r.getInt(0), r.getInt(1), r.getDouble(2)))
+      .groupBy(_._1).toSeq.sortBy(_._1)
+      .map { case (_, rows) => rows.sortBy(_._2).map(_._3).toSeq }
+    def sparkKind(dir: String) =
+      spark.read.parquet(s"$dir/_kind").head().getString(0)
+    val dir = java.nio.file.Files.createTempDirectory("graft-driver-ivf")
+      .toString
+    try {
+      // fit only
+      SimSearch.ivfSave(SimSearch.ivfFit(base, "vec_id", "embedding",
+        nlist = 4, seed = 42L), dir)
+      sameRead(s"$dir/assigned")
+      val loaded = SimSearch.ivfLoad(spark, dir, "vec_id", "embedding")
+      assert(loaded.centers.map(v => bits(v.toSeq)).toSeq ===
+        sparkCenters(dir).map(bits))
+      assert(SimSearch.kindOf(spark, dir) === None)
+      // fit + batch-id appends
+      Seq(0L, 1L).foreach { b =>
+        SimSearch.ivfAppend(spark, dir,
+          emb.where(c("vec_id") % 5 === 0 && c("vec_id") % 2 === b),
+          "vec_id", "embedding", batchId = Some(b))
+      }
+      sameRead(s"$dir/assigned")
+      // the drift baseline, field for field and bit for bit
+      SimSearch.ivfBaselineSave(spark,
+        SimSearch.ivfBaseline(spark, dir, "embedding"), dir)
+      val bl = SimSearch.ivfBaselineLoad(spark, dir)
+      val meta = spark.read.parquet(s"$dir/baseline_meta").head()
+      assert(bl.nlist === meta.getInt(0) && bl.n === meta.getLong(1))
+      assert(java.lang.Double.doubleToRawLongBits(bl.meanDist) ===
+        java.lang.Double.doubleToRawLongBits(meta.getDouble(2)))
+      assert(bl.cellCounts === spark.read.parquet(s"$dir/baseline_cells")
+        .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap)
+    } finally rmr(new java.io.File(dir))
+    val legacy = java.nio.file.Files.createTempDirectory("graft-driver-legacy")
+      .toString
+    try {
+      // a legacy __cell-only layout, before and after its migration
+      SimSearch.ivfSave(SimSearch.ivfFit(base, "vec_id", "embedding",
+        nlist = 4, seed = 42L), legacy)
+      val root = java.nio.file.Paths.get(s"$legacy/assigned")
+      java.nio.file.Files.list(root).forEach { cell =>
+        val bd = cell.resolve("__batch_id=-1")
+        if (java.nio.file.Files.isDirectory(bd)) {
+          java.nio.file.Files.list(bd).forEach(f =>
+            java.nio.file.Files.move(f, cell.resolve(f.getFileName)))
+          java.nio.file.Files.delete(bd)
+        }
+      }
+      sameRead(s"$legacy/assigned")
+      SimSearch.ivfAppend(spark, legacy, emb.where(c("vec_id") % 5 === 0),
+        "vec_id", "embedding", batchId = Some(3L))
+      sameRead(s"$legacy/assigned")
+    } finally rmr(new java.io.File(legacy))
+    val pq = java.nio.file.Files.createTempDirectory("graft-driver-ivfpq")
+      .toString
+    try {
+      // an OPQ ivfpq index: codes dir, _kind, codebooks, rotation
+      val (idx, _) = SimSearch.ivfPqFitOpq(base, "vec_id", "embedding",
+        nlist = 4, m = 16, k = 8, opqSampleN = 64)
+      SimSearch.ivfPqSave(idx, pq)
+      SimSearch.ivfPqAppend(spark, pq, emb.where(c("vec_id") % 5 === 0),
+        "vec_id", "embedding", batchId = Some(0L))
+      sameRead(s"$pq/codes")
+      assert(SimSearch.kindOf(spark, pq) === Some(sparkKind(pq)))
+      assert(SimSearch.kindOf(spark, s"$pq/pq") === Some(sparkKind(s"$pq/pq")))
+      val loaded = SimSearch.ivfPqLoad(spark, pq, "vec_id")
+      assert(loaded.centers.map(v => bits(v.toSeq)).toSeq ===
+        sparkCenters(pq).map(bits))
+      val cb = spark.read.parquet(s"$pq/pq/codebooks").collect()
+      assert(cb.length === 16 * 8 * loaded.model.dsub)
+      cb.foreach { r =>
+        assert(java.lang.Double.doubleToRawLongBits(
+          loaded.model.codebooks(r.getInt(0))(r.getInt(1))(r.getInt(2))) ===
+          java.lang.Double.doubleToRawLongBits(r.getDouble(3)))
+      }
+      val rot = SimSearch.ivfPqRotationOf(spark, pq).get
+      spark.read.parquet(s"$pq/rotation").collect().foreach { r =>
+        assert(java.lang.Double.doubleToRawLongBits(
+          rot(r.getInt(0))(r.getInt(1))) ===
+          java.lang.Double.doubleToRawLongBits(r.getDouble(2)))
+      }
+    } finally rmr(new java.io.File(pq))
+  }
+
+  test("a served IVF search is two Spark jobs; index loads run none") {
+    import org.apache.spark.sql.functions.{col => c}
+    val emb = clusteredEmb
+    val dir = java.nio.file.Files.createTempDirectory("graft-ivf-jobs")
+      .toString
+    val out = s"$dir/out"
+    try {
+      SimSearch.ivfSave(SimSearch.ivfFit(emb.where(c("vec_id") % 5 =!= 0),
+        "vec_id", "embedding", nlist = 4, seed = 42L), dir)
+      SimSearch.ivfAppend(spark, dir, emb.where(c("vec_id") % 5 === 0),
+        "vec_id", "embedding", batchId = Some(0L))
+      SimSearch.ivfBaselineSave(spark,
+        SimSearch.ivfBaseline(spark, dir, "embedding"), dir)
+      var idx: SimSearch.IvfIndex = null
+      assert(jobsDuring {
+        idx = SimSearch.ivfLoad(spark, dir, "vec_id", "embedding")
+      } === 0)
+      assert(jobsDuring { SimSearch.ivfBaselineLoad(spark, dir); () } === 0)
+      assert(jobsDuring { SimSearch.kindOf(spark, dir); () } === 0)
+      // a query from the appended batch and one from the fit corpus:
+      // lookup + write, whichever partition holds the row
+      Seq(5L, 7L).foreach { q =>
+        assert(jobsDuring {
+          SimSearch.ivfSearch(SimSearch.ivfLoad(spark, dir, "vec_id",
+            "embedding"), q, 5, nprobe = 2)
+            .write.mode("overwrite").parquet(out)
+        } === 2, s"query $q")
+        assert(spark.read.parquet(out).count() === 5L)
+      }
+      // a missing id fails loudly, naming the id and the index
+      val e = intercept[IllegalArgumentException] {
+        SimSearch.ivfSearch(idx, 987654321L, 5)
+      }
+      assert(e.getMessage.contains("987654321") &&
+        e.getMessage.contains(s"$dir/assigned"), e.getMessage)
+    } finally {
+      def rmr(f: java.io.File): Unit = {
+        Option(f.listFiles).foreach(_.foreach(rmr)); f.delete(); ()
+      }
+      rmr(new java.io.File(dir))
+    }
+  }
+
   test("ivfAppend with a batch id: exactly-once on the plain IVF layout") {
     import org.apache.spark.sql.functions.{col => c}
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")

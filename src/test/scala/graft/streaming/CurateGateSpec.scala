@@ -1025,6 +1025,52 @@ class CurateGateSpec extends AnyFunSuite with SparkTestSession {
       .collect().map(_.getLong(0)).toSet === streamed)
   }
 
+  test("driver-side schemas: the output and every state frame, over a " +
+      "folded base, read as Spark infers them") {
+    import spark.implicits._
+    val genBlob = udf((id: Long) => CurateBlobFixtures.ppm(id.toInt))
+    val genVec = udf((id: Long) =>
+      Array.tabulate(16)(i => if (i == id) 1.0f else 0.0f))
+    def batch(ids: Long*) = ids
+      .map(i => (i, "s", (0 until 12).map(j => s"w${i}t$j").mkString(" ")))
+      .toDF("doc_id", "source", "text")
+      .withColumn("blob", genBlob(col("doc_id")))
+      .withColumn("vec", genVec(col("doc_id")))
+    val d = java.nio.file.Files.createTempDirectory("graft-footer").toString
+    val sd = d + "__state"
+    val t = Curate.streamingTail(spark, d, minQuality = 0.0,
+      maxDup2gramFrac = 1.0, blobCol = Some("blob"), vecCol = Some("vec"),
+      compactOutputEvery = Some(2))
+    try {
+      t(batch(1L, 2L, 3L), 0L)
+      t(batch(4L, 5L), 1L)
+      t(batch(6L, 7L), 2L) // folds outputs 0..1 into base -2
+      // a state lost beside a folded corpus: batch 3 rebuilds every
+      // frame from the output, base partition -2 included
+      rmTree(java.nio.file.Paths.get(sd))
+      t(batch(8L, 9L), 3L)
+      val frames = Seq("keys", "shingles", "postings", "percsigs", "semvecs")
+      frames.foreach(f => assert(spark.read.parquet(s"$sd/$f")
+        .where(col("__batch_id") < 0).count() > 0, f))
+      // rows by value (blob bytes compared by content)
+      def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
+        .map(_.toSeq.map {
+          case b: Array[Byte] => b.toSeq
+          case x => x
+        }.toString).sorted.toSeq
+      (d +: frames.map(f => s"$sd/$f")).foreach { dir =>
+        val ours = graft.sources.ParquetMeta.readParquet(spark, dir)
+        val inferred = spark.read.parquet(dir)
+        assert(ours.schema === inferred.schema, dir)
+        assert(rows(ours) === rows(inferred), dir)
+      }
+    } finally {
+      rmTree(java.nio.file.Paths.get(d))
+      if (java.nio.file.Files.exists(java.nio.file.Paths.get(sd)))
+        rmTree(java.nio.file.Paths.get(sd))
+    }
+  }
+
   test("misra-gries aggregate streams: Complete-mode candidates equal the batch pass") {
     // the UDAF is a TypedImperativeAggregate, so it runs as a normal
     // streaming aggregation — the heavy-hitter candidate sketch over
