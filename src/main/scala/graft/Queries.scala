@@ -3284,8 +3284,8 @@ object Queries {
         }
         rm(pathObj.toFile)
       }
-      val idx = graft.ops.SimSearch.ivfFit(
-        t(spark, d, "embeddings"), "vec_id", "embedding",
+      val emb = t(spark, d, "embeddings")
+      val idx = graft.ops.SimSearch.ivfFit(emb, "vec_id", "embedding",
         nlist = 16, seed = 42L)
       graft.ops.SimSearch.ivfSave(idx, path)
       // the baseline is part of the corpus VERSION: fit + persist it
@@ -3293,7 +3293,8 @@ object Queries {
       // every q174 run LOADS it instead of re-scanning the assigned
       // corpus — the serving shape ivfBaselineSave exists for
       graft.ops.SimSearch.ivfBaselineSave(spark,
-        graft.ops.SimSearch.ivfBaseline(spark, path, "embedding"), path)
+        graft.ops.SimSearch.ivfBaselineOf(spark, idx.centers, emb,
+          "embedding"), path)
       path
     })
 

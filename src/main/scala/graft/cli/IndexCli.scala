@@ -218,57 +218,47 @@ object IndexCli {
         s"could not load ${config.input}: unknown filetype"))
 
   def run(config: Config, spark: SparkSession): Unit = config.verb match {
-    case "fit" if config.pqM.isDefined =>
-      // composed IVF+PQ: cell-partitioned CODES (no raw vectors), so
-      // the drift baseline is fitted from the input frame against the
-      // just-fitted centers (ivfBaselineOf) and persisted alongside.
-      // An OPQ fit stores ROTATED centers, so its baseline feeds the
-      // ROTATED frame (distances are then the raw-space distances —
-      // rotation preserves L2; the drift verb rotates its batch the
-      // same way)
-      val df = load(config, spark)
-      val idx =
-        if (config.pqOpq)
-          SimSearch.ivfPqFitOpq(df, config.idCol, config.vecCol,
-            config.nlist, config.pqM.get, config.pqK.get, config.seed,
-            config.sampleFraction, residual = config.pqResidual)._1
-        else SimSearch.ivfPqFit(df, config.idCol, config.vecCol,
-          config.nlist, config.pqM.get, config.pqK.get, config.seed,
-          config.sampleFraction, residual = config.pqResidual)
-      SimSearch.ivfPqSave(idx, config.index)
-      val baseDf = idx.rotation
-        .map(r => SimSearch.rotateEmbeddings(df, config.vecCol, r))
-        .getOrElse(df)
-      val baseline = SimSearch.ivfBaselineOf(spark, idx.centers, baseDf,
-        config.vecCol)
-      SimSearch.ivfBaselineSave(spark, baseline, config.index)
-      println(s"fit: ${baseline.n} vectors in ${baseline.nlist} cells, " +
-        s"pq m=${config.pqM.get} k=${config.pqK.get}" +
-        (if (config.pqResidual) " (residual)" else "") +
-        (if (config.pqOpq) " (opq)" else "") +
-        s" -> ${config.index}")
     case "fit" =>
       val df = load(config, spark)
-      val idx = SimSearch.ivfFit(df, config.idCol,
-        config.vecCol, config.nlist, config.seed, config.sampleFraction)
-      SimSearch.ivfSave(idx, config.index)
       // the drift baseline is part of the corpus version — fit and
-      // persist it WITH the index (ivfSave just invalidated any stale
-      // one), so `drift` runs load it instead of re-scanning. Fitted
-      // from the in-session frame + centers (the IVF+PQ path's
-      // ivfBaselineOf, same argmin kernel). It matches re-deriving from
-      // the stored assignment only up to two caveats: the fit assigned
-      // rows with KMeans' fastSquaredDistance, whose tie-break and
-      // precision can differ from the argmin kernel on near-equidistant
-      // rows, and `df` must re-read the same rows the index stored
-      // (a deterministic source). The old ivfBaseline(dir) re-READ the
-      // corpus just written and re-collected the centers from disk, a
-      // whole extra round-trip per fit (r19)
-      val baseline = SimSearch.ivfBaselineOf(spark, idx.centers, df,
+      // persist it WITH the index (the save just invalidated any stale
+      // one), so `drift` runs load it instead of re-scanning: fitted
+      // from the in-session frame against the just-fitted centers
+      // (ivfBaselineOf; `df` must re-read the rows the index stored —
+      // a deterministic source). The composed IVF+PQ layout stores
+      // CODES, no raw vectors; an OPQ fit stores ROTATED centers, so
+      // its baseline feeds the ROTATED frame (distances are then the
+      // raw-space distances — rotation preserves L2; the drift verb
+      // rotates its batch the same way)
+      val (centers, baseDf, detail) = (config.pqM, config.pqK) match {
+        case (Some(m), Some(k)) =>
+          val idx =
+            if (config.pqOpq)
+              SimSearch.ivfPqFitOpq(df, config.idCol, config.vecCol,
+                config.nlist, m, k, config.seed,
+                config.sampleFraction, residual = config.pqResidual)._1
+            else SimSearch.ivfPqFit(df, config.idCol, config.vecCol,
+              config.nlist, m, k, config.seed,
+              config.sampleFraction, residual = config.pqResidual)
+          SimSearch.ivfPqSave(idx, config.index)
+          (idx.centers,
+            idx.rotation
+              .map(r => SimSearch.rotateEmbeddings(df, config.vecCol, r))
+              .getOrElse(df),
+            s", pq m=$m k=$k" +
+              (if (config.pqResidual) " (residual)" else "") +
+              (if (config.pqOpq) " (opq)" else ""))
+        case _ =>
+          val idx = SimSearch.ivfFit(df, config.idCol,
+            config.vecCol, config.nlist, config.seed, config.sampleFraction)
+          SimSearch.ivfSave(idx, config.index)
+          (idx.centers, df, "")
+      }
+      val baseline = SimSearch.ivfBaselineOf(spark, centers, baseDf,
         config.vecCol)
       SimSearch.ivfBaselineSave(spark, baseline, config.index)
-      println(s"fit: ${baseline.n} vectors in ${baseline.nlist} cells " +
-        s"-> ${config.index}")
+      println(s"fit: ${baseline.n} vectors in ${baseline.nlist} cells" +
+        s"$detail -> ${config.index}")
     case "append" =>
       val applied =
         if (indexKind(spark, config.index).startsWith("ivfpq"))

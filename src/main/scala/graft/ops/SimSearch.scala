@@ -526,18 +526,26 @@ object SimSearch {
     * table. This is the missing half of "fit once per corpus
     * version": the index outlives the session and every serving job
     * loads it instead of re-running KMeans. */
-  def ivfSave(index: IvfIndex, dir: String): Unit = {
-    val spark = index.assigned.sparkSession
+  def ivfSave(index: IvfIndex, dir: String): Unit =
+    saveCells(index.assigned, index.centers, dir, "assigned")
+
+  /** THE save core of both cell-partitioned layouts ([[ivfSave]]'s
+    * `assigned`, [[ivfPqSave]]'s `codes`): the fitted rows under the
+    * reserved fit partition of `dir/table`, the centers' (cell, pos,
+    * w) side table, and — a save being a new corpus version — the
+    * stale drift baseline and applied-batch ledger dropped
+    * ([[clearVersionState]]). */
+  private def saveCells(rows: DataFrame, centers: Array[Array[Double]],
+                        dir: String, table: String): Unit = {
+    val spark = rows.sparkSession
     import spark.implicits._
-    index.assigned.withColumn("__batch_id", lit(FitBatchId))
+    rows.withColumn("__batch_id", lit(FitBatchId))
       .write.mode("overwrite")
-      .partitionBy("__cell", "__batch_id").parquet(s"$dir/assigned")
-    index.centers.zipWithIndex.flatMap { case (c, i) =>
+      .partitionBy("__cell", "__batch_id").parquet(s"$dir/$table")
+    centers.zipWithIndex.flatMap { case (c, i) =>
       c.zipWithIndex.map { case (w, p) => (i, p, w) }
     }.toSeq.toDF("cell", "pos", "w")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/centers")
-    // a REFIT is a new corpus version — drop the stale drift baseline
-    // and the applied-batch ledger (see clearVersionState)
     clearVersionState(spark, dir)
   }
 
@@ -567,15 +575,29 @@ object SimSearch {
       .toArray
 
   /** APPEND an ingest batch to a persisted IVF index WITHOUT refit —
-    * the incremental half of "fit once per corpus version": load the
-    * (tiny) centers, assign each new vector to its nearest center in
-    * one map-only pass (exact argmin of squared distance, first cell
-    * wins ties — KMeans.transform's own convention, so appended
-    * assignments match what a refit-with-identical-centers would
-    * store; OpsSpec pins that), and land the rows in their `__cell`
-    * partitions alongside the existing corpus. Probes prune to nprobe
+    * the incremental half of "fit once per corpus version": each new
+    * vector goes to its nearest center ([[assignCells]]: exact argmin,
+    * first cell wins ties — KMeans.transform's own convention, so
+    * appended assignments match what a refit-with-identical-centers
+    * would store; OpsSpec pins that) and lands, raw, in its `__cell`
+    * partition alongside the existing corpus. Probes prune to nprobe
     * partition directories exactly as before; new vectors are
-    * servable the moment the write commits.
+    * servable the moment the write commits. Exactly-once with
+    * `batchId`, plain append without it, and the single-writer and
+    * version rules: [[appendCells]]. */
+  def ivfAppend(spark: org.apache.spark.sql.SparkSession, dir: String,
+                newDf: DataFrame, idCol: String, vecCol: String,
+                batchId: Option[Long] = None): Boolean =
+    appendCells(spark, dir, "assigned", newDf, batchId) { centers =>
+      assignCells(spark, centers, newDf, vecCol)
+    }
+
+  /** THE append core of both cell-partitioned layouts ([[ivfAppend]]'s
+    * raw vectors under `assigned`, [[ivfPqAppend]]'s codes under
+    * `codes`): how a batch lands in a cell-partitioned index, exactly
+    * once. `rows` maps the index's (tiny, driver-read) centers to the
+    * batch's rows with their `__cell` — the per-layout projection,
+    * built only when the batch is actually applied.
     *
     * EXACTLY-ONCE contract: pass `batchId` (>= 0; the id your ingest
     * framework assigns the batch — foreachBatch's batchId) and the
@@ -584,19 +606,21 @@ object SimSearch {
     * checked first); an id whose previous attempt crashed mid-write
     * lands via DYNAMIC partition overwrite of its own
     * (`__cell`, `__batch_id`) partitions — partial files from the
-    * failed attempt are overwritten, never doubled — and the ledger
-    * row commits LAST. Without `batchId` the write is a plain append
+    * failed attempt are overwritten, never doubled (duplicate ids
+    * would silently corrupt rankings at scale) — and the ledger row
+    * commits LAST. Without `batchId` the write is a plain append
     * into the fit partition (legacy behavior — the caller owns replay
     * safety). Returns whether the batch was applied (false = replay
     * no-op).
     *
-    * Remaining contract notes: centers drift as the corpus grows;
-    * recall degrades gracefully (cells get wider, not wrong) — refit
-    * per corpus VERSION (which resets the ledger), append per ingest
-    * BATCH. Ids must not repeat across appends (one id space, the ANN
-    * family's contract); a replayed batch id must carry the SAME rows
-    * it did the first time (the foreachBatch model — a different
-    * payload under a reused id overwrites, last writer wins).
+    * Remaining contract notes: centers (and PQ codebooks) drift as
+    * the corpus grows; recall degrades gracefully (cells get wider,
+    * not wrong) — refit per corpus VERSION (which resets the ledger),
+    * append per ingest BATCH; [[ivfDriftReport]] is the trigger. Ids
+    * must not repeat across appends (one id space, the ANN family's
+    * contract); a replayed batch id must carry the SAME rows it did
+    * the first time (the foreachBatch model — a different payload
+    * under a reused id overwrites, last writer wins).
     *
     * SINGLE WRITER per index dir (the foreachBatch model this ledger
     * is built for): the applied check and the ledger write are not
@@ -606,9 +630,10 @@ object SimSearch {
     * retry's partition overwrite can observe a partially-rewritten
     * (`__cell`, `__batch_id`) partition. Serialize appends per index
     * dir; readers are safe between appends, not during one. */
-  def ivfAppend(spark: org.apache.spark.sql.SparkSession, dir: String,
-                newDf: DataFrame, idCol: String, vecCol: String,
-                batchId: Option[Long] = None): Boolean = {
+  private def appendCells(spark: org.apache.spark.sql.SparkSession,
+                          dir: String, table: String, newDf: DataFrame,
+                          batchId: Option[Long])(
+      rows: Array[Array[Double]] => DataFrame): Boolean = {
     require(!newDf.columns.contains("__cell"),
       "input column __cell collides with the index's cell column")
     require(!newDf.columns.contains("__batch_id"),
@@ -621,39 +646,41 @@ object SimSearch {
       // a pre-ledger index (partitioned by __cell only) must migrate
       // BEFORE this append writes a deeper partition beside it — see
       // migrateLegacyCellLayout
-      migrateLegacyCellLayout(spark, s"$dir/assigned")
+      migrateLegacyCellLayout(spark, s"$dir/$table")
       val centers = loadCenters(spark, dir)
       require(centers.nonEmpty, s"no centers found under $dir/centers")
-      val assigned = newDf
-        .withColumn("__cell",
-          nearestCell(spark, centers)(asDouble(col(vecCol))))
-        .where(col("__cell") >= 0) // null vectors carry no position — skip
+      val write = rows(centers)
         .withColumn("__batch_id", lit(batchId.getOrElse(FitBatchId)))
         .write.partitionBy("__cell", "__batch_id")
       batchId match {
         case Some(id) =>
-          assigned.option("partitionOverwriteMode", "dynamic")
-            .mode("overwrite").parquet(s"$dir/assigned")
+          write.option("partitionOverwriteMode", "dynamic")
+            .mode("overwrite").parquet(s"$dir/$table")
           recordApplied(spark, dir, id)
         case None =>
-          assigned.mode("append").parquet(s"$dir/assigned")
+          write.mode("append").parquet(s"$dir/$table")
       }
       true
     }
   }
 
-  /** Nearest-center assignment kernel shared by [[ivfAppend]] and
-    * [[ivfDriftReport]]: exact argmin of squared distance, first cell
-    * wins ties (KMeans.transform's convention). Null vectors map to
-    * -1 (no position); a dimension-mismatched vector fails LOUDLY —
-    * dim drift between index and batch must never become a silently
-    * truncated, plausible-but-wrong assignment. */
+  /** THE nearest-center kernel every IVF path shares (appends, the
+    * baseline, the drift report): exact argmin of squared distance,
+    * first cell wins ties (KMeans.transform's convention), as a 0-or-1
+    * element array of (cell, squared distance). A null vector yields
+    * the empty array, so read through a generator it yields no row
+    * (no position) — and a generator keeps the UDF in the optimized
+    * plan ONCE, where a `withColumn(udf).where(...)` shape has filter
+    * pushdown run the nlist x dim sweep twice per row. A
+    * dimension-mismatched vector fails LOUDLY — dim drift between
+    * index and batch must never become a silently truncated,
+    * plausible-but-wrong assignment. */
   private def nearestCell(spark: org.apache.spark.sql.SparkSession,
                           centers: Array[Array[Double]])
-      : org.apache.spark.sql.expressions.UserDefinedFunction = {
+      : UserDefinedFunction = {
     val bc = spark.sparkContext.broadcast(centers)
     udf { (v: Seq[Double]) =>
-      if (v == null) -1
+      if (v == null) Seq.empty[(Int, Double)]
       else {
         val cs = bc.value
         require(v.length == cs(0).length,
@@ -672,44 +699,37 @@ object SimSearch {
           if (s < bestD) { bestD = s; best = i } // strict < : first wins ties
           i += 1
         }
-        best
+        Seq((best, bestD))
       }
     }
   }
 
-  /** (nearest cell, its squared distance) in ONE argmin sweep — the
-    * drift monitor needs both per row, and two separate UDFs would run
-    * the dominant nlist x dim sweep twice. Same guards as
-    * [[nearestCell]]: null vectors map to a null struct, dim
-    * mismatches fail loudly. */
-  private def nearestCellDist(spark: org.apache.spark.sql.SparkSession,
-                              centers: Array[Array[Double]])
-      : org.apache.spark.sql.expressions.UserDefinedFunction = {
-    val bc = spark.sparkContext.broadcast(centers)
-    udf { (v: Seq[Double]) =>
-      if (v == null) null.asInstanceOf[(Int, Double)]
-      else {
-        val cs = bc.value
-        require(v.length == cs(0).length,
-          s"nearest-cell assignment: vector dim ${v.length} != index " +
-            s"dim ${cs(0).length} — the batch was embedded with a " +
-            "different model/config than the index was fitted on")
-        var best = 0
-        var bestD = Double.MaxValue
-        var i = 0
-        while (i < cs.length) {
-          val c = cs(i)
-          var s = 0.0
-          var j = 0
-          val n = c.length
-          while (j < n) { val d = c(j) - v(j); s += d * d; j += 1 }
-          if (s < bestD) { bestD = s; best = i } // strict < : first wins
-          i += 1
-        }
-        (best, bestD)
-      }
-    }
-  }
+  /** `df`'s rows with their nearest cell as `__cell` ([[nearestCell]];
+    * rows with a null vector are skipped). */
+  private[ops] def assignCells(spark: org.apache.spark.sql.SparkSession,
+                               centers: Array[Array[Double]], df: DataFrame,
+                               vecCol: String): DataFrame =
+    df.select(col("*"), explode(
+      nearestCell(spark, centers)(asDouble(col(vecCol)))("_1")).as("__cell"))
+
+  /** (`__cell`, `__d`) — nearest cell and its squared distance — per
+    * non-null vector of `df` ([[nearestCell]]). */
+  private[ops] def cellDistances(spark: org.apache.spark.sql.SparkSession,
+                                 centers: Array[Array[Double]],
+                                 df: DataFrame, vecCol: String): DataFrame =
+    df.select(inline(nearestCell(spark, centers)(asDouble(col(vecCol))))
+      .as(Seq("__cell", "__d")))
+
+  /** (cell, vectors, Σ squared distance) per non-empty cell over
+    * `df`'s non-null vectors: the one <= nlist-row aggregate
+    * [[ivfBaselineOf]] and [[ivfDriftReport]] share. */
+  private def cellStats(spark: org.apache.spark.sql.SparkSession,
+                        centers: Array[Array[Double]], df: DataFrame,
+                        vecCol: String): Array[(Int, Long, Double)] =
+    cellDistances(spark, centers, df, vecCol)
+      .groupBy(col("__cell"))
+      .agg(count(lit(1)).as("__n"), sum(col("__d")).as("__sd"))
+      .collect().map(r => (r.getInt(0), r.getLong(1), r.getDouble(2)))
 
   /** The per-corpus-VERSION reference statistics an IVF drift monitor
     * compares ingest batches against: the indexed corpus' cell-share
@@ -720,46 +740,6 @@ object SimSearch {
   final case class IvfBaseline(nlist: Int, n: Long,
                                cellCounts: Map[Int, Long],
                                meanDist: Double)
-
-  /** Fit the [[IvfBaseline]] of a persisted index ([[ivfSave]] /
-    * [[ivfAppend]] layout under `dir`). ONE pass over the assigned
-    * corpus: cell counts come from the partition column and the
-    * distance mean re-derives each row's distance to its stored cell's
-    * center (the assignment is stored; no argmin re-search). */
-  def ivfBaseline(spark: org.apache.spark.sql.SparkSession, dir: String,
-                  vecCol: String): IvfBaseline = {
-    val centers = loadCenters(spark, dir)
-    require(centers.nonEmpty, s"no centers found under $dir/centers")
-    val bc = spark.sparkContext.broadcast(centers)
-    val distToOwn = udf { (v: Seq[Double], cell: Int) =>
-      if (v == null) null.asInstanceOf[java.lang.Double]
-      else {
-        val c = bc.value(cell)
-        // same loud dim guard as the assignment kernel: a truncated
-        // distance would make the baseline silently too small and
-        // every later drift report falsely alarmed
-        require(v.length == c.length,
-          s"ivfBaseline: stored vector dim ${v.length} != index dim " +
-            s"${c.length} — the assigned corpus mixes embedding configs")
-        var s = 0.0
-        var j = 0
-        val n = c.length
-        while (j < n) { val d = c(j) - v(j); s += d * d; j += 1 }
-        java.lang.Double.valueOf(s)
-      }
-    }
-    val rows = ParquetMeta.readParquet(spark, s"$dir/assigned")
-      .select(col("__cell"),
-        distToOwn(asDouble(col(vecCol)), col("__cell")).as("__d"))
-      .groupBy(col("__cell"))
-      .agg(count(lit(1)).as("__n"), sum(col("__d")).as("__sd"))
-      .collect().map(r => (r.getInt(0), r.getLong(1), r.getDouble(2)))
-    val n = rows.map(_._2).sum
-    require(n > 0, s"empty index under $dir/assigned")
-    IvfBaseline(centers.length, n,
-      rows.map(r => r._1 -> r._2).toMap,
-      rows.map(_._3).sum / n)
-  }
 
   /** Persist an [[IvfBaseline]] beside its index (under `dir`, the
     * [[ivfSave]] layout): a one-row meta parquet plus the <= nlist-row
@@ -838,15 +818,7 @@ object SimSearch {
     require(centers.length == baseline.nlist,
       s"baseline nlist ${baseline.nlist} != index nlist ${centers.length}" +
         " — the baseline belongs to a different index version")
-    val assigned = newDf
-      .select(nearestCellDist(spark, centers)(asDouble(col(vecCol)))
-        .as("__cd"))
-      .where(col("__cd").isNotNull)
-      .select(col("__cd._1").as("__cell"), col("__cd._2").as("__d"))
-    val stats = assigned
-      .groupBy(col("__cell"))
-      .agg(count(lit(1)).as("__n"), sum(col("__d")).as("__sd"))
-      .collect().map(r => (r.getInt(0), r.getLong(1), r.getDouble(2)))
+    val stats = cellStats(spark, centers, newDf, vecCol)
     val spark2 = spark
     import spark2.implicits._
     val nBatch = stats.map(_._2).sum
@@ -2039,13 +2011,7 @@ object SimSearch {
   def ivfPqSave(index: IvfPqIndex, dir: String): Unit = {
     val spark = index.codes.sparkSession
     import spark.implicits._
-    index.codes.withColumn("__batch_id", lit(FitBatchId))
-      .write.mode("overwrite")
-      .partitionBy("__cell", "__batch_id").parquet(s"$dir/codes")
-    index.centers.zipWithIndex.flatMap { case (c, i) =>
-      c.zipWithIndex.map { case (w, p) => (i, p, w) }
-    }.toSeq.toDF("cell", "pos", "w")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/centers")
+    saveCells(index.codes, index.centers, dir, "codes")
     pqSave(spark, index.model, s"$dir/pq")
     // the OPQ rotation (tiny — d*d doubles) persists beside the model
     index.rotation.foreach { r =>
@@ -2054,7 +2020,6 @@ object SimSearch {
       }.toSeq.toDF("i", "j", "w")
         .coalesce(1).write.mode("overwrite").parquet(s"$dir/rotation")
     }
-    clearVersionState(spark, dir)
     // residual/OPQ indexes carry DISTINCT kinds: their codes are
     // meaningless under another mode's serving (and vice versa), so
     // a cross-mode load must fail loudly, not rank silently wrong
@@ -2138,96 +2103,51 @@ object SimSearch {
   }
 
   /** APPEND an ingest batch to a persisted IVF+PQ index WITHOUT
-    * refit — [[ivfAppend]]'s contract for the composed layout: load
-    * the (tiny) centers and codebooks, assign each new vector to its
-    * nearest center AND encode it in one map-only pass, land the
-    * codes in their `__cell` partitions. Encoding is deterministic
-    * given the codebooks, so appended codes equal what a fit-time
-    * encode of the same vectors would store (q190 pins that).
-    * EXACTLY-ONCE per [[ivfAppend]]: pass `batchId` (>= 0) and a
-    * replayed id is a ledger-checked no-op (returns false) while a
-    * crashed attempt's retry dynamic-overwrites its own partitions —
-    * a retried ingest can never double codes (duplicate ids with
-    * identical codes would silently corrupt ADC rankings at scale);
-    * without `batchId` the legacy plain append applies. Same version
-    * caveats as [[ivfAppend]]: one id space; centers/codebooks drift
-    * as the corpus grows — refit per corpus version (which resets
-    * the ledger); [[ivfDriftReport]] is the trigger and works
-    * unchanged on this layout (centers live at the same path); and
-    * the SAME single-writer rule — the ledger check and write are not
-    * atomic, so appends to one index dir must be serialized (the
-    * foreachBatch model guarantees it; see [[ivfAppend]]). */
+    * refit — [[ivfAppend]] for the composed layout: the codebooks
+    * load with the centers, each new vector is assigned its nearest
+    * center AND encoded in one map-only pass, and the codes land in
+    * their `__cell` partitions. Encoding is deterministic given the
+    * codebooks, so appended codes equal what a fit-time encode of the
+    * same vectors would store (q190 pins that). Exactly-once with
+    * `batchId`, plain append without it, and the single-writer and
+    * version rules: [[appendCells]]. */
   def ivfPqAppend(spark: org.apache.spark.sql.SparkSession, dir: String,
                   newDf: DataFrame, idCol: String, vecCol: String,
-                  batchId: Option[Long] = None): Boolean = {
-    require(!newDf.columns.contains("__cell"),
-      "input column __cell collides with the index's cell column")
-    require(!newDf.columns.contains("__batch_id"),
-      "input column __batch_id collides with the index's ledger column")
-    batchId.foreach(id => require(id >= 0,
-      s"batchId must be >= 0 (got $id; negative ids are reserved for " +
-        "the fit-time partition)"))
-    if (batchId.exists(batchApplied(spark, dir, _))) false
-    else {
-      // a pre-ledger index (partitioned by __cell only) must migrate
-      // BEFORE this append writes a deeper partition beside it — see
-      // migrateLegacyCellLayout
-      migrateLegacyCellLayout(spark, s"$dir/codes")
-      val centers = loadCenters(spark, dir)
-      require(centers.nonEmpty, s"no centers found under $dir/centers")
+                  batchId: Option[Long] = None): Boolean =
+    appendCells(spark, dir, "codes", newDf, batchId) { centers =>
       val model = pqLoad(spark, s"$dir/pq")
       // the persisted kind decides the encode input: a residual index
       // must encode v - center(cell), and an OPQ index must rotate
       // first (its centers/codebooks live in the rotated space) —
       // exactly as fit time did
       val kind = kindOf(spark, dir).getOrElse("none")
-      val isResidual = kind.endsWith("_res")
-      val vec =
+      val input =
         if (kind.startsWith("ivfpq_opq"))
-          rotateUdf(spark, loadRotation(spark, dir))(asDouble(col(vecCol)))
-        else asDouble(col(vecCol))
-      val assigned = newDf
-        .withColumn("__cell", nearestCell(spark, centers)(vec))
-        .where(col("__cell") >= 0) // null vectors carry no position — skip
+          rotateEmbeddings(newDf, vecCol, loadRotation(spark, dir))
+        else newDf
+      val vec = asDouble(col(vecCol))
       val encodeInput =
-        if (isResidual) residualUdf(spark, centers)(vec, col("__cell"))
+        if (kind.endsWith("_res")) residualUdf(spark, centers)(vec, col("__cell"))
         else vec
-      val codes = assigned
-        .select(col(idCol), col("__cell"),
-          pqEncoder(model)(encodeInput).as("codes"),
-          lit(batchId.getOrElse(FitBatchId)).as("__batch_id"))
-        .write.partitionBy("__cell", "__batch_id")
-      batchId match {
-        case Some(id) =>
-          codes.option("partitionOverwriteMode", "dynamic")
-            .mode("overwrite").parquet(s"$dir/codes")
-          recordApplied(spark, dir, id)
-        case None =>
-          codes.mode("append").parquet(s"$dir/codes")
-      }
-      true
+      assignCells(spark, centers, input, vecCol)
+        .select(col(idCol), col("__cell"), pqEncoder(model)(encodeInput).as("codes"))
     }
-  }
 
   /** [[IvfBaseline]] computed from a VECTOR FRAME against given
-    * centers — the fit-time baseline for layouts that do NOT store
-    * raw vectors (the IVF+PQ codes layout, where [[ivfBaseline]]'s
-    * assigned-corpus scan has nothing to read): one map pass (the
-    * shared argmin kernel) + a <= nlist-row aggregate. Persist it
-    * with [[ivfBaselineSave]]; [[ivfDriftReport]] consumes it
-    * unchanged. */
+    * centers — THE baseline recipe of both layouts (the IVF+PQ codes
+    * layout stores no raw vectors to re-read): one map pass (the
+    * shared argmin kernel) + a <= nlist-row aggregate ([[cellStats]],
+    * the drift report's own). Fit it from the corpus frame and the
+    * just-fitted centers, persist it with [[ivfBaselineSave]];
+    * [[ivfDriftReport]] consumes it unchanged. Cell counts can differ
+    * from the fit's stored `__cell` on near-equidistant rows: KMeans
+    * assigns with its own fastSquaredDistance, whose tie-break and
+    * precision are not the kernel's. */
   def ivfBaselineOf(spark: org.apache.spark.sql.SparkSession,
                     centers: Array[Array[Double]], df: DataFrame,
                     vecCol: String): IvfBaseline = {
     require(centers.nonEmpty, "ivfBaselineOf: empty centers")
-    val rows = df
-      .select(nearestCellDist(spark, centers)(asDouble(col(vecCol)))
-        .as("__cd"))
-      .where(col("__cd").isNotNull)
-      .select(col("__cd._1").as("__cell"), col("__cd._2").as("__d"))
-      .groupBy(col("__cell"))
-      .agg(count(lit(1)).as("__n"), sum(col("__d")).as("__sd"))
-      .collect().map(r => (r.getInt(0), r.getLong(1), r.getDouble(2)))
+    val rows = cellStats(spark, centers, df, vecCol)
     val n = rows.map(_._2).sum
     require(n > 0, "ivfBaselineOf: no non-null vectors in the corpus")
     IvfBaseline(centers.length, n,

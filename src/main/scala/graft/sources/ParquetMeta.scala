@@ -53,7 +53,7 @@ object ParquetMeta {
                     column: String): DataFrame = {
     import spark.implicits._
     val conf = spark.sparkContext.hadoopConfiguration
-    val root = new org.apache.hadoop.fs.Path(path)
+    val root = new Path(path)
     val fs = root.getFileSystem(conf)
     val files = {
       val it = fs.listFiles(root, true)
@@ -81,9 +81,9 @@ object ParquetMeta {
       .mapPartitions { it =>
         val taskConf = bcConf.value.value
         it.flatMap { file =>
-          val in = org.apache.parquet.hadoop.util.HadoopInputFile
-            .fromPath(new org.apache.hadoop.fs.Path(file), taskConf)
-          val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+          val p = new Path(file)
+          val reader = open(p.getFileSystem(taskConf).getFileStatus(p),
+            taskConf)
           try {
             val footer = reader.getFooter
             val blocks = footer.getBlocks

@@ -768,6 +768,7 @@ class OpsSpec extends AnyFunSuite with SparkTestSession {
       }
       assert(SimSearch.ivfPqAppend(spark, dir, batch, "vec_id", "embedding",
         batchId = Some(7L)))
+      assertBatchLayout(dir, "codes", 7L)
       val idx = SimSearch.ivfPqLoad(spark, dir, "vec_id")
       val n1 = idx.codes.count()
       assert(n1 === emb.count())
@@ -1046,7 +1047,7 @@ class OpsSpec extends AnyFunSuite with SparkTestSession {
       sameRead(s"$dir/assigned")
       // the drift baseline, field for field and bit for bit
       SimSearch.ivfBaselineSave(spark,
-        SimSearch.ivfBaseline(spark, dir, "embedding"), dir)
+        SimSearch.ivfBaselineOf(spark, loaded.centers, emb, "embedding"), dir)
       val bl = SimSearch.ivfBaselineLoad(spark, dir)
       val meta = spark.read.parquet(s"$dir/baseline_meta").head()
       assert(bl.nlist === meta.getInt(0) && bl.n === meta.getLong(1))
@@ -1118,7 +1119,9 @@ class OpsSpec extends AnyFunSuite with SparkTestSession {
       SimSearch.ivfAppend(spark, dir, emb.where(c("vec_id") % 5 === 0),
         "vec_id", "embedding", batchId = Some(0L))
       SimSearch.ivfBaselineSave(spark,
-        SimSearch.ivfBaseline(spark, dir, "embedding"), dir)
+        SimSearch.ivfBaselineOf(spark,
+          SimSearch.ivfLoad(spark, dir, "vec_id", "embedding").centers, emb,
+          "embedding"), dir)
       var idx: SimSearch.IvfIndex = null
       assert(jobsDuring {
         idx = SimSearch.ivfLoad(spark, dir, "vec_id", "embedding")
@@ -1149,6 +1152,25 @@ class OpsSpec extends AnyFunSuite with SparkTestSession {
     }
   }
 
+  /** The on-disk layout of an exactly-once append of `batchId`: its
+    * ledger row at `applied/__batch_id=N` and its rows in
+    * (`__cell`, `__batch_id=N`) directories, every data file at that
+    * depth (none directly under a cell). */
+  private def assertBatchLayout(dir: String, table: String,
+                                batchId: Long): Unit = {
+    assert(new java.io.File(s"$dir/applied/__batch_id=$batchId").isDirectory)
+    val cells = new java.io.File(s"$dir/$table").listFiles
+      .filter(_.getName.startsWith("__cell="))
+    assert(cells.exists(c =>
+      new java.io.File(c, s"__batch_id=$batchId").isDirectory))
+    cells.foreach { c =>
+      c.listFiles.filterNot(_.getName.startsWith(".")).foreach { f =>
+        assert(f.isDirectory && f.getName.startsWith("__batch_id="),
+          s"$f is not a (__cell, __batch_id) partition")
+      }
+    }
+  }
+
   test("ivfAppend with a batch id: exactly-once on the plain IVF layout") {
     import org.apache.spark.sql.functions.{col => c}
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
@@ -1160,6 +1182,7 @@ class OpsSpec extends AnyFunSuite with SparkTestSession {
         nlist = 4, seed = 42L), dir)
       assert(SimSearch.ivfAppend(spark, dir, batch, "vec_id", "embedding",
         batchId = Some(3L)))
+      assertBatchLayout(dir, "assigned", 3L)
       val n1 = spark.read.parquet(s"$dir/assigned").count()
       assert(n1 === emb.count())
       assert(!SimSearch.ivfAppend(spark, dir, batch, "vec_id", "embedding",
@@ -1182,6 +1205,90 @@ class OpsSpec extends AnyFunSuite with SparkTestSession {
       }
       rmr(new java.io.File(dir))
     }
+  }
+
+  test("IVF nearest-cell kernel: ties go to the lower cell on every path, one UDF per row") {
+    import org.apache.spark.sql.catalyst.expressions.ScalaUDF
+    import org.apache.spark.sql.functions.{col => c, udf}
+    // c0 and c1 sit 2 apart on axis 0: (1,0,0,0) is EXACTLY equidistant
+    // from both (squared distance 1.0 in float and double alike)
+    val centers = Array(Array(0.0, 0.0, 0.0, 0.0), Array(2.0, 0.0, 0.0, 0.0),
+      Array(0.0, 10.0, 0.0, 0.0))
+    def brute(v: Seq[Double]): (Int, Double) = centers.indices.map { i =>
+      (i, centers(i).zip(v).map { case (a, b) => (a - b) * (a - b) }.sum)
+    }.minBy { case (i, d) => (d, i) }
+    val corpus = (0 until 30).map { i =>
+      (i.toLong, centers(i % 3).map(x => (x + 0.25 * (i / 3 % 2)).toFloat))
+    }.toDF("vec_id", "embedding")
+    val batch = Seq[(Long, Array[Float])](
+      (100L, Array(1f, 0f, 0f, 0f)), // the tie
+      (101L, Array(2.5f, 0f, 0f, 0f)), (102L, Array(0f, 9f, 0f, 0f)),
+      (103L, Array(0f, 0.5f, 0f, 0f)), (104L, null)
+    ).toDF("vec_id", "embedding")
+    val vecs = batch.collect().collect { case r if !r.isNullAt(1) =>
+      r.getLong(0) -> r.getSeq[Float](1).map(_.toDouble) }.toMap
+    val expected = vecs.map { case (id, v) => id -> brute(v)._1 }
+    assert(expected(100L) === 0)
+    def cellsOf(table: String) = spark.read.parquet(table)
+      .where(c("__batch_id") === 0L).select("vec_id", "__cell").collect()
+      .map(r => r.getLong(0) -> r.getInt(1)).toMap
+    def rmr(f: java.io.File): Unit = {
+      Option(f.listFiles).foreach(_.foreach(rmr)); f.delete(); ()
+    }
+    val dir = java.nio.file.Files.createTempDirectory("graft-ivf-tie").toString
+    try {
+      // the stored __cell of both layouts' appends (null vector skipped)
+      val fit = SimSearch.assignCells(spark, centers, corpus, "embedding")
+      SimSearch.ivfSave(SimSearch.IvfIndex(centers, fit, "vec_id",
+        "embedding"), s"$dir/ivf")
+      assert(SimSearch.ivfAppend(spark, s"$dir/ivf", batch, "vec_id",
+        "embedding", batchId = Some(0L)))
+      assert(cellsOf(s"$dir/ivf/assigned") === expected)
+      SimSearch.ivfPqSave(SimSearch.ivfPqFit(corpus, "vec_id", "embedding",
+        nlist = 3, m = 2, k = 2).copy(centers = centers), s"$dir/pq")
+      assert(SimSearch.ivfPqAppend(spark, s"$dir/pq", batch, "vec_id",
+        "embedding", batchId = Some(0L)))
+      assert(cellsOf(s"$dir/pq/codes") === expected)
+      // the baseline's counts and mean distance
+      val counts = expected.values.groupBy(identity).map { case (k, v) =>
+        k -> v.size.toLong }
+      val bl = SimSearch.ivfBaselineOf(spark, centers, batch, "embedding")
+      assert(bl.n === 4L && bl.cellCounts === counts)
+      assert(bl.meanDist === vecs.values.map(brute(_)._2).sum / 4)
+      // the drift report's cell shares, through its PSI against a
+      // skewed baseline (the tie landing in cell 1 would read
+      // differently)
+      val skewed = SimSearch.IvfBaseline(3, 7L, Map(0 -> 5L, 1 -> 1L,
+        2 -> 1L), 1.0)
+      def psi(cs: Map[Int, Long]) = BigDecimal((0 until 3).map { i =>
+        val p = (cs.getOrElse(i, 0L) + 1.0) / (4 + 3)
+        val q = (skewed.cellCounts(i) + 1.0) / (skewed.n + 3)
+        (p - q) * math.log(p / q)
+      }.sum).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+      val tieInOne = (expected + (100L -> 1)).values.groupBy(identity)
+        .map { case (k, v) => k -> v.size.toLong }
+      assert(psi(counts) !== psi(tieInOne))
+      val rep = SimSearch.ivfDriftReport(spark, s"$dir/ivf", skewed, batch,
+        "embedding").head()
+      assert(rep.getLong(0) === 4L && rep.getDouble(1) === psi(counts))
+      // the argmin UDF sits ONCE in each assigned frame's optimized
+      // plan over a scan; the withColumn(udf).where(...) shape holds it
+      // twice (the filter is pushed below the projection with the UDF
+      // inlined). A scan, not the local `batch`: the optimizer folds
+      // projections and filters of a local relation away.
+      val scan = spark.read.parquet(s"$dir/ivf/assigned")
+        .select("vec_id", "embedding")
+      def udfs(df: org.apache.spark.sql.DataFrame) =
+        df.queryExecution.optimizedPlan.collect { case n =>
+          n.expressions.map(_.collect { case u: ScalaUDF => u }.size).sum
+        }.sum
+      assert(udfs(SimSearch.assignCells(spark, centers, scan, "embedding")) === 1)
+      assert(udfs(SimSearch.cellDistances(spark, centers, scan,
+        "embedding")) === 1)
+      val cellUdf = udf((v: Seq[Double]) => if (v == null) -1 else 0)
+      assert(udfs(scan.withColumn("__cell",
+        cellUdf(c("embedding").cast("array<double>"))).where(c("__cell") >= 0)) === 2)
+    } finally rmr(new java.io.File(dir))
   }
 
   test("ivfSearchBatch: one job serves a query set, parity with per-query ivfSearch") {
@@ -2204,9 +2311,9 @@ class OpsSpec extends AnyFunSuite with SparkTestSession {
     val df = rows.toDF("vec_id", "embedding")
     val dir = java.nio.file.Files.createTempDirectory("graft-ivfdrift")
       .toString
-    SimSearch.ivfSave(
-      SimSearch.ivfFit(df, "vec_id", "embedding", nlist = 3, seed = 42L), dir)
-    val fitted = SimSearch.ivfBaseline(spark, dir, "embedding")
+    val idx = SimSearch.ivfFit(df, "vec_id", "embedding", nlist = 3, seed = 42L)
+    SimSearch.ivfSave(idx, dir)
+    val fitted = SimSearch.ivfBaselineOf(spark, idx.centers, df, "embedding")
     assert(fitted.n === 60L && fitted.nlist === 3)
     assert(fitted.cellCounts.values.toSeq.sorted === Seq(20L, 20L, 20L))
     assert(fitted.meanDist > 0.0)
@@ -2261,11 +2368,12 @@ class OpsSpec extends AnyFunSuite with SparkTestSession {
     // a REFIT (same nlist!) invalidates the persisted baseline: the
     // stale one must not load cleanly against the new corpus version
     // (with equal nlist the version require alone cannot catch it)
-    SimSearch.ivfSave(
-      SimSearch.ivfFit(df, "vec_id", "embedding", nlist = 3, seed = 7L), dir)
+    val refit = SimSearch.ivfFit(df, "vec_id", "embedding", nlist = 3,
+      seed = 7L)
+    SimSearch.ivfSave(refit, dir)
     intercept[Exception] { SimSearch.ivfBaselineLoad(spark, dir) }
     SimSearch.ivfBaselineSave(spark,
-      SimSearch.ivfBaseline(spark, dir, "embedding"), dir)
+      SimSearch.ivfBaselineOf(spark, refit.centers, df, "embedding"), dir)
     assert(SimSearch.ivfBaselineLoad(spark, dir).n === 60L) // restored
   }
 
