@@ -909,9 +909,11 @@ object Curate {
     locally {
       // 4. near: one incremental pair pass (new x corpus + new x new,
       //    exact-Jaccard verified), split by which side each end is on
-      val pairs = labeled("near-pairs") {
-        pairsOf(exact).persist(StorageLevel.MEMORY_AND_DISK) }
-      try {
+      //    (every pairsOf result is already materialised — a
+      //    localCheckpoint or an RDD-backed empty frame — so it is read
+      //    as is: a cache on top would put two table-cache stages under
+      //    the closure's edge union, racing to materialise one frame)
+      val pairs = labeled("near-pairs") { pairsOf(exact) }
       val nearAdmitted = labeled("near-closure") {
         firstArrival(exact, pairs, oldIds) }
       // 4b. SEMANTIC dedup (vecCol set) — the embedding modality's
@@ -959,9 +961,9 @@ object Curate {
           .where(col("__batch_id") === lit(batchId)).drop("__batch_id")
         writeFrames(landed, frames)((f, df) => writeParts(df, s"$sd/$f"))
       }
-      } finally pairs.unpersist() // a failed write must not leak the cache
-    } // `exact` is a localCheckpoint: released by the ContextCleaner
-      // (see the step-3 comment), not by a (no-op) unpersist
+    } // `exact` (and a non-empty `pairs`) is a localCheckpoint: released
+      // by the ContextCleaner (see the step-3 comment), not by a
+      // (no-op) unpersist
     } finally {
       percPairs.foreach(_.unpersist())
       batchSigs.foreach(_.unpersist())

@@ -338,8 +338,8 @@ object Dedup {
                    shingleSize: Int = 3, numHashes: Int = 12,
                    bands: Int = 4, threshold: Double = 0.7): DataFrame =
     if (threshold > 1.0) emptyPairs(df, idCol)
-    else checkpointed(minhashPairsPlan(df, idCol, textCol, shingleSize,
-      numHashes, bands, threshold))
+    else checkpointed(minhashPairsIncrementalPlan(df, None, idCol, textCol,
+      shingleSize, numHashes, bands, threshold))
 
   /** Eagerly materialize a (LSH-small) verified pair plan so its
     * persisted shingle frame can be released immediately — otherwise
@@ -452,15 +452,6 @@ object Dedup {
       .withColumn("jaccard", jaccard(col("sh_a"), col("sh_b")))
       .where(col("jaccard") >= threshold)
       .select(col("id_a"), col("id_b"), round(col("jaccard"), 4).as("jaccard"))
-
-  /** The lazy plan behind [[minhashPairs]] (un-checkpointed so tests
-    * can assert its shape; returns the persisted shingle frame for the
-    * caller to release). */
-  private[ops] def minhashPairsPlan(df: DataFrame, idCol: String, textCol: String,
-                                    shingleSize: Int, numHashes: Int,
-                                    bands: Int, threshold: Double): (DataFrame, DataFrame) =
-    minhashPairsIncrementalPlan(df, None, idCol, textCol, shingleSize,
-      numHashes, bands, threshold)
 
   /**
    * MinHash calibration report: over the LSH candidate set, how well
@@ -830,9 +821,10 @@ object Dedup {
   }
 
   /** Broadcast-hint `df` only when a driver-side size estimate says
-    * the relation fits `broadcastMaxBytes` — the `ivfPqSearchBatch`
-    * guard recipe shared by the dedup tag-back/anti-joins: an
-    * UNCONDITIONAL hint on the component/loser frames dies exactly
+    * the relation fits `broadcastMaxBytes` — the guard both IVF batch
+    * searches' probe joins (`SimSearch.ivfSearchBatch`,
+    * `SimSearch.ivfPqSearchBatch`) and the dedup tag-back/anti-joins
+    * call: an UNCONDITIONAL hint on the component/loser frames dies exactly
     * where dedup matters most (a crawl at 30-50%% near-dup rate puts
     * a corpus-scale frame in the broadcast and OOMs the driver).
     * Above the cap the hint is simply dropped — the join runs as a

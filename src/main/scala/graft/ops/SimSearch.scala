@@ -1,7 +1,9 @@
 package graft.ops
 
+import scala.reflect.runtime.universe.TypeTag
+
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.UserDefinedFunction
+import org.apache.spark.sql.expressions.{UserDefinedFunction, Window}
 import org.apache.spark.sql.functions._
 
 import graft.sources.ParquetMeta
@@ -51,21 +53,62 @@ object SimSearch {
       case i => bucket.bitwiseXOR(lit(1 << (i - 1)))
     }: _*)
 
+  // ---------------------------------------------------------------
+  // The ranked-serving core every top-k search shares: prune to the
+  // candidate rows, score them with one Score, rank ONCE — rankTop
+  // for a single query, rankPerQuery for a query set.
+  // ---------------------------------------------------------------
+
+  /** A search's score column: its name, rounding and rank direction.
+    * Scores are rounded BEFORE ranking, so the id-ascending tie-break
+    * sees the same values the SQL oracles compute. */
+  private final case class Score(name: String, digits: Int,
+                                 descending: Boolean) {
+    def of(raw: Column): Column = round(raw, digits).as(name)
+    def order: Column = if (descending) desc(name) else asc(name)
+  }
+
+  /** Cosine similarity: 4 decimals, highest first. */
+  private val CosineScore = Score("cosine", 4, descending = true)
+
+  /** ADC approximate squared L2: 6 decimals, smallest first. */
+  private val AdcScore = Score("adc_dist", 6, descending = false)
+
+  /** [[CosineScore]] of each row's `vecCol` against the query `q`. */
+  private def cosineTo(vecCol: String, q: Column): Column =
+    CosineScore.of(cosine(asDouble(col(vecCol)), q))
+
+  /** The single-query rank step: the `k` best-scored rows of
+    * `scored`, ties by id ascending. ORDER BY + LIMIT compiles to
+    * TakeOrderedAndProject, so only k rows per partition move. */
+  private def rankTop(scored: DataFrame, idCol: String, score: Score,
+                      k: Int): DataFrame =
+    scored.orderBy(score.order, col(idCol)).limit(k)
+
+  /** The per-query rank step: per `__qid`, the `k` best-scored rows
+    * of `scored`, ties by id ascending (a row_number window over the
+    * narrow scored rows), as (query_id, idCol, score). */
+  private def rankPerQuery(scored: DataFrame, idCol: String, score: Score,
+                           k: Int): DataFrame = {
+    val w = Window.partitionBy(col("__qid")).orderBy(score.order, col(idCol))
+    scored.withColumn("__rn", row_number().over(w))
+      .where(col("__rn") <= k)
+      .select(col("__qid").as("query_id"), col(idCol), col(score.name))
+  }
+
   /**
-   * Exact cosine top-k neighbors of the row with `queryId`. The query
-   * vector travels as a one-row broadcast (no shuffle of the corpus);
-   * ORDER BY + LIMIT compiles to TakeOrderedAndProject.
+   * Exact cosine top-k neighbors of the row with `queryId`
+   * ([[rankTop]] of [[CosineScore]]). The query vector travels as a
+   * one-row broadcast (no shuffle of the corpus).
    */
   def cosineTopK(df: DataFrame, idCol: String, vecCol: String,
                  queryId: Long, k: Int): DataFrame = {
     val q = df.where(col(idCol) === queryId)
       .select(asDouble(col(vecCol)).as("__q"))
-    df.where(col(idCol) =!= queryId)
+    rankTop(df.where(col(idCol) =!= queryId)
       .crossJoin(broadcast(q))
-      .select(col(idCol),
-        round(cosine(asDouble(col(vecCol)), col("__q")), 4).as("cosine"))
-      .orderBy(desc("cosine"), col(idCol))
-      .limit(k)
+      .select(col(idCol), cosineTo(vecCol, col("__q"))),
+      idCol, CosineScore, k)
   }
 
   /** Deterministic random hyperplanes: `bits` x `dim`, seeded. */
@@ -113,12 +156,10 @@ object SimSearch {
       .select(asDouble(col(vecCol)).as("__q"), col("__bucket").as("__qb"))
     val probes = qRow.select(col("__q"),
       explode(multiProbe(col("__qb"), bits)).as("__bucket"))
-    bucketed.where(col(idCol) =!= queryId)
+    rankTop(bucketed.where(col(idCol) =!= queryId)
       .join(broadcast(probes), Seq("__bucket"))
-      .select(col(idCol),
-        round(cosine(asDouble(col(vecCol)), col("__q")), 4).as("cosine"))
-      .orderBy(desc("cosine"), col(idCol))
-      .limit(k)
+      .select(col(idCol), cosineTo(vecCol, col("__q"))),
+      idCol, CosineScore, k)
   }
 
   /** SRP bucket index of a corpus: the fit-once artifact behind
@@ -143,42 +184,49 @@ object SimSearch {
    * with a bucketed layout only the query side moves); the query set —
    * small relative to the corpus by definition — is exploded into
    * `1+bits` multi-probe rows and broadcast, so the bucket join never
-   * shuffles the corpus; the per-query rerank shuffles only narrow
-   * (qid, id, cosine) rows for the row_number window. Query and corpus
-   * ids must be disjoint (one id namespace).
+   * shuffles the corpus ([[srpProbeJoin]]); the per-query rerank
+   * shuffles only narrow (qid, id, cosine) rows for [[rankPerQuery]].
+   * Query and corpus ids must be disjoint (one id namespace).
    */
   def annLshTopKBatch(corpus: DataFrame, queries: DataFrame,
                       idCol: String, vecCol: String, k: Int,
-                      bits: Int = 8, seed: Long = 42L): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
+                      bits: Int = 8, seed: Long = 42L): DataFrame =
+    rankPerQuery(srpProbeJoin(corpus, queries, idCol, vecCol, bits, seed,
+      "annLshTopKBatch's")
+      .select(col("__qid"), col(idCol), cosineTo(vecCol, col("__q"))),
+      idCol, CosineScore, k)
+
+  /** The SRP probe side of the batch searches: the corpus bucketed
+    * into `__bucket`, joined with the query set exploded into
+    * (`__qid`, `__q`, each `carry` column under its alias,
+    * `__bucket`) [[multiProbe]] rows and broadcast. ONE hyperplane
+    * matrix buckets both sides, derived from the corpus width:
+    * sniffing dim per side would bucket the two frames with DIFFERENT
+    * plane matrices if their widths disagree, and the join would
+    * silently return near-empty garbage instead of failing. Width 0
+    * is an empty side (a legitimate empty ingest/query tick -> empty
+    * result); only a genuine width disagreement is an error. `op`
+    * names the caller in the reserved-name error. */
+  private def srpProbeJoin(corpus: DataFrame, queries: DataFrame,
+                           idCol: String, vecCol: String, bits: Int,
+                           seed: Long, op: String,
+                           carry: Seq[(String, String)] = Nil): DataFrame = {
     require(!corpus.columns.contains("__bucket") &&
       !queries.columns.contains("__bucket"),
-      "input column __bucket collides with annLshTopKBatch's reserved name")
-    // ONE hyperplane matrix for both sides, derived from the corpus
-    // width: sniffing dim per side would bucket the two frames with
-    // DIFFERENT plane matrices if their widths disagree, and the join
-    // would silently return near-empty garbage instead of failing
+      s"input column __bucket collides with $op reserved name")
     val dim = dimOf(corpus, vecCol)
     val qDim = dimOf(queries, vecCol)
-    // dim 0 = an empty side (legitimate empty ingest/query tick -> empty
-    // result); only a genuine width disagreement is an error
     require(qDim == 0 || dim == 0 || qDim == dim,
       s"query embedding width $qDim != corpus width $dim")
     val bucketOf = srpBucketUdf(bits, dim, seed)
-    val indexed = corpus.withColumn("__bucket", bucketOf(col(vecCol)))
-    val qIndexed = queries.withColumn("__bucket", bucketOf(col(vecCol)))
-      .select(col(idCol).as("__qid"), asDouble(col(vecCol)).as("__q"),
-        col("__bucket").as("__qb"))
-    val probes = qIndexed.select(col("__qid"), col("__q"),
-      explode(multiProbe(col("__qb"), bits)).as("__bucket"))
-    val w = Window.partitionBy(col("__qid"))
-      .orderBy(desc("cosine"), col(idCol))
-    indexed.join(broadcast(probes), Seq("__bucket"))
-      .select(col("__qid"), col(idCol),
-        round(cosine(asDouble(col(vecCol)), col("__q")), 4).as("cosine"))
-      .withColumn("__rn", row_number().over(w))
-      .where(col("__rn") <= k)
-      .select(col("__qid").as("query_id"), col(idCol), col("cosine"))
+    val probes = queries.withColumn("__bucket", bucketOf(col(vecCol)))
+      .select((Seq(col(idCol).as("__qid"), asDouble(col(vecCol)).as("__q")) ++
+        carry.map { case (c, a) => col(c).as(a) } :+
+        col("__bucket").as("__qb")): _*)
+      .select((Seq(col("__qid"), col("__q")) ++ carry.map(c => col(c._2)) :+
+        explode(multiProbe(col("__qb"), bits)).as("__bucket")): _*)
+    corpus.withColumn("__bucket", bucketOf(col(vecCol)))
+      .join(broadcast(probes), Seq("__bucket"))
   }
 
   /**
@@ -188,50 +236,31 @@ object SimSearch {
    * easy). Similarity is capped above by `maxSim` (an item nearly
    * identical to the query is likelier a mislabeled POSITIVE than a
    * useful negative — the standard false-negative guard) and floored
-   * by `minSim`; both bounds compare on the 4-decimal-rounded cosine
+   * by `minSim`; both bounds compare on the rounded [[CosineScore]]
    * the ranking uses, so the gate is cross-engine exact.
    *
-   * Same scale shape as [[annLshTopKBatch]] (one SRP bucket equi-join,
-   * query side broadcast with multi-probe, per-query rank over narrow
-   * rows); the label rides each side's row, so the mismatch filter
-   * applies at candidate time — filtering AFTER a label-blind top-k
-   * would starve queries whose neighborhoods are same-label.
+   * Same scale shape as [[annLshTopKBatch]] ([[srpProbeJoin]], then
+   * [[rankPerQuery]] over narrow rows); the label rides each side's
+   * row, so the mismatch filter applies at candidate time — filtering
+   * AFTER a label-blind top-k would starve queries whose
+   * neighborhoods are same-label.
    */
   def hardNegatives(corpus: DataFrame, queries: DataFrame, idCol: String,
                     vecCol: String, labelCol: String, m: Int,
                     bits: Int = 8, seed: Long = 42L,
                     minSim: Double = 0.0,
                     maxSim: Double = 0.999): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     require(m > 0, "m must be positive")
     require(minSim < maxSim, "need minSim < maxSim")
-    require(!corpus.columns.contains("__bucket") &&
-      !queries.columns.contains("__bucket"),
-      "input column __bucket collides with hardNegatives' reserved name")
-    val dim = dimOf(corpus, vecCol)
-    val qDim = dimOf(queries, vecCol)
-    require(qDim == 0 || dim == 0 || qDim == dim,
-      s"query embedding width $qDim != corpus width $dim")
-    val bucketOf = srpBucketUdf(bits, dim, seed)
-    val indexed = corpus.withColumn("__bucket", bucketOf(col(vecCol)))
-    val probes = queries.withColumn("__bucket", bucketOf(col(vecCol)))
-      .select(col(idCol).as("__qid"), asDouble(col(vecCol)).as("__q"),
-        col(labelCol).as("__ql"), col("__bucket").as("__qb"))
-      .select(col("__qid"), col("__q"), col("__ql"),
-        explode(multiProbe(col("__qb"), bits)).as("__bucket"))
-    val w = Window.partitionBy(col("__qid"))
-      .orderBy(desc("cosine"), col(idCol))
-    indexed.join(broadcast(probes), Seq("__bucket"))
+    val scored = srpProbeJoin(corpus, queries, idCol, vecCol, bits, seed,
+      "hardNegatives'", Seq(labelCol -> "__ql"))
       // null-safe inequality: an unlabeled item is NOT a certified
       // negative for anything — both nulls and label matches drop
       .where(!(col(labelCol) <=> col("__ql")) &&
         col(labelCol).isNotNull && col("__ql").isNotNull)
-      .select(col("__qid"), col(idCol),
-        round(cosine(asDouble(col(vecCol)), col("__q")), 4).as("cosine"))
+      .select(col("__qid"), col(idCol), cosineTo(vecCol, col("__q")))
       .where(col("cosine") >= minSim && col("cosine") <= maxSim)
-      .withColumn("__rn", row_number().over(w))
-      .where(col("__rn") <= m)
-      .select(col("__qid").as("query_id"), col(idCol), col("cosine"))
+    rankPerQuery(scored, idCol, CosineScore, m)
   }
 
   /** DuckDB oracle for [[hardNegatives]]: [[annLshBatchOracleSql]]'s
@@ -672,9 +701,7 @@ object SimSearch {
     * (no position) — and a generator keeps the UDF in the optimized
     * plan ONCE, where a `withColumn(udf).where(...)` shape has filter
     * pushdown run the nlist x dim sweep twice per row. A
-    * dimension-mismatched vector fails LOUDLY — dim drift between
-    * index and batch must never become a silently truncated,
-    * plausible-but-wrong assignment. */
+    * dimension-mismatched vector fails LOUDLY ([[requireIndexDim]]). */
   private def nearestCell(spark: org.apache.spark.sql.SparkSession,
                           centers: Array[Array[Double]])
       : UserDefinedFunction = {
@@ -683,10 +710,7 @@ object SimSearch {
       if (v == null) Seq.empty[(Int, Double)]
       else {
         val cs = bc.value
-        require(v.length == cs(0).length,
-          s"nearest-cell assignment: vector dim ${v.length} != index " +
-            s"dim ${cs(0).length} — the batch was embedded with a " +
-            "different model/config than the index was fitted on")
+        requireIndexDim(v.length, cs(0).length)
         var best = 0
         var bestD = Double.MaxValue
         var i = 0
@@ -703,6 +727,15 @@ object SimSearch {
       }
     }
   }
+
+  /** The width check every IVF kernel and serving path shares: dim
+    * drift between index and batch must never become a silently
+    * truncated, plausible-but-wrong assignment or score. */
+  private def requireIndexDim(vecDim: Int, indexDim: Int): Unit =
+    require(vecDim == indexDim,
+      s"nearest-cell assignment: vector dim $vecDim != index " +
+        s"dim $indexDim — the batch was embedded with a " +
+        "different model/config than the index was fitted on")
 
   /** `df`'s rows with their nearest cell as `__cell` ([[nearestCell]];
     * rows with a null vector are skipped). */
@@ -847,18 +880,17 @@ object SimSearch {
 
   /** Serve one query from a prebuilt [[IvfIndex]]: pick the `nprobe`
     * nearest cells driver-side (centers are tiny), scan only those
-    * cells, rerank exactly. Each query touches ~nprobe/nlist of the
-    * corpus — with a cell-bucketed layout the scan prunes at the file
-    * level. Finding the query's vector is ONE job ([[queryVector]]);
-    * the returned frame is lazy, so a served search over an
-    * [[ivfLoad]]ed index is two jobs: that lookup and the caller's
-    * write. An id with no row in the index throws an
-    * IllegalArgumentException naming it. */
+    * cells, rerank exactly ([[rankTop]] of [[CosineScore]]). Each
+    * query touches ~nprobe/nlist of the corpus — with a cell-bucketed
+    * layout the scan prunes at the file level. Finding the query's
+    * vector is ONE job ([[queryVector]]); the returned frame is lazy,
+    * so a served search over an [[ivfLoad]]ed index is two jobs: that
+    * lookup and the caller's write. An id with no row in the index
+    * throws an IllegalArgumentException naming it. */
   def ivfSearch(index: IvfIndex, queryId: Long, k: Int,
                 nprobe: Int = 4): DataFrame = {
     val idCol = index.idCol
-    val vecCol = index.vecCol
-    val qVec = queryVector(index.assigned, idCol, vecCol, queryId,
+    val qVec = queryVector(index.assigned, idCol, index.vecCol, queryId,
       s"the index (${sourceOf(index.assigned)})")
     val probeCells = nearestCells(index.centers, qVec, nprobe)
     // the query vector is already on the driver (the lookup above):
@@ -866,13 +898,10 @@ object SimSearch {
     // a one-row frame — the old qRow frame cost a SECOND full scan of
     // the assigned corpus per search (r19); same values, same cosine
     // expression tree, so results are bit-identical
-    val qLit = typedLit(qVec.toSeq)
-    index.assigned
+    rankTop(index.assigned
       .where(col("__cell").isin(probeCells.toSeq: _*) && col(idCol) =!= queryId)
-      .select(col(idCol),
-        round(cosine(asDouble(col(vecCol)), qLit), 4).as("cosine"))
-      .orderBy(desc("cosine"), col(idCol))
-      .limit(k)
+      .select(col(idCol), cosineTo(index.vecCol, typedLit(qVec.toSeq))),
+      idCol, CosineScore, k)
   }
 
   /** The vector of row `queryId` in `rows`, as doubles, in ONE job:
@@ -916,53 +945,96 @@ object SimSearch {
    * vector) gets its exact-cosine top-k over its nprobe probed cells
    * in ONE job. Plan: a narrow exploded (qid, cell) probe frame joins
    * the assigned corpus on the cell key and the (qid, query-vector)
-   * frame joins back on the query id — broadcasts under
-   * `broadcastMaxBytes` (estimated driver-side from the embedding
-   * width), plain shuffle equi-joins above it (a corpus-sized query
-   * set — results identical, see [[ivfPqSearchBatch]]'s guard note).
-   * Per query this ranks IDENTICALLY to [[ivfSearch]] — same probe
-   * pick, same rounding, same tie-break, same self-exclusion (a
-   * corpus row whose id equals the query id is skipped), OpsSpec pins
-   * the parity at both plan shapes. Output: (query_id, idCol,
-   * cosine).
+   * frame joins back on the query id ([[probeJoin]], the per-query
+   * charge estimated from the embedding width), then
+   * [[rankPerQuery]]. Per query this ranks IDENTICALLY to
+   * [[ivfSearch]] — same probe pick, same score, same self-exclusion
+   * (a corpus row whose id equals the query id is skipped), OpsSpec
+   * pins the parity at both plan shapes. A query set embedded at a
+   * width other than the index's throws an IllegalArgumentException
+   * ([[queryCount]]). Output: (query_id, idCol, cosine).
    */
   def ivfSearchBatch(index: IvfIndex, queries: DataFrame, qIdCol: String,
                      vecCol: String, topK: Int, nprobe: Int = 4,
                      broadcastMaxBytes: Long = 64L << 20): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val spark = index.assigned.sparkSession
-    val bcCenters = spark.sparkContext.broadcast(index.centers)
-    val np = nprobe
-    val cellsOf = udf((v: Seq[Double]) =>
-      if (v == null) null
-      else nearestCells(bcCenters.value, v.toArray, np))
+    val cellsOf = probeUdf(index.assigned.sparkSession, index.centers,
+      nprobe, None)((_, cells, _) => cells)
     val base = queries
       .select(col(qIdCol).as("__qid"), asDouble(col(vecCol)).as("__qv"))
       .where(col("__qv").isNotNull)
     val probes = base.select(col("__qid"),
       explode(cellsOf(col("__qv"))).as("__cell"))
     val qvecs = base.select(col("__qid"), col("__qv"))
-    val w = Window.partitionBy(col("__qid"))
-      .orderBy(desc("cosine"), asc(index.idCol))
-    val nQueries = queries.where(col(vecCol).isNotNull).count()
     val dim = index.centers.headOption.map(_.length).getOrElse(0)
-    val perQueryBytes = dim.toLong * 8L + np.toLong * 16L
-    val joined =
-      if (nQueries * perQueryBytes <= broadcastMaxBytes)
-        index.assigned.join(broadcast(probes), Seq("__cell"))
-          .join(broadcast(qvecs), Seq("__qid"))
-      else
-        index.assigned.join(probes, Seq("__cell"))
-          .join(qvecs, Seq("__qid"))
-    joined
+    val nQueries = queryCount(queries, vecCol, dim)
+    val joined = probeJoin(index.assigned, probes, Some(qvecs), nQueries,
+      dim.toLong * 8L + nprobe.toLong * 16L, broadcastMaxBytes)
+    rankPerQuery(joined
       .where(col(index.idCol) =!= col("__qid")) // ivfSearch's self-exclusion
-      .select(col("__qid"),
-        col(index.idCol),
-        round(cosine(asDouble(col(index.vecCol)), col("__qv")), 4)
-          .as("cosine"))
-      .withColumn("__rn", row_number().over(w))
-      .where(col("__rn") <= topK)
-      .select(col("__qid").as("query_id"), col(index.idCol), col("cosine"))
+      .select(col("__qid"), col(index.idCol),
+        cosineTo(index.vecCol, col("__qv"))),
+      index.idCol, CosineScore, topK)
+  }
+
+  /** The batch searches' one driver-side pass over the query set: the
+    * number of non-null query vectors (the [[probeJoin]] estimate's
+    * row count), aggregated together with their min and max width so
+    * a query set embedded at a width other than the index's `dim`
+    * fails LOUDLY ([[requireIndexDim]]) — an unchecked mismatch would
+    * score every candidate null and return k null-score rows per
+    * query. */
+  private def queryCount(queries: DataFrame, vecCol: String,
+                         dim: Int): Long = {
+    val width = size(col(vecCol))
+    val r = queries.where(col(vecCol).isNotNull)
+      .agg(count(lit(1)), min(width), max(width)).collect()(0)
+    if (r.getLong(0) > 0) {
+      requireIndexDim(r.getInt(1), dim)
+      requireIndexDim(r.getInt(2), dim)
+    }
+    r.getLong(0)
+  }
+
+  /** The batch searches' probe join: `corpus` joins the exploded
+    * (`__qid`, `__cell`, ...) `probes` on the cell key, then the
+    * optional per-query frame on `__qid`. Both probe-side frames are
+    * broadcast only while `nQueries * perQueryBytes` fits
+    * `broadcastMaxBytes` ([[Dedup.hintIfSmall]]): the corpus never
+    * shuffles and only probed cells' partitions are read under a
+    * cell-partitioned layout. Above the cap (a corpus-sized query set
+    * — effectively a semantic self-join) the same plan runs as plain
+    * shuffle equi-joins instead of building a multi-GB broadcast at
+    * the driver; results are identical either way, and at that scale
+    * the probes hit every cell so partition pruning has nothing left
+    * to prune. */
+  private def probeJoin(corpus: DataFrame, probes: DataFrame,
+                        perQuery: Option[DataFrame], nQueries: Long,
+                        perQueryBytes: Long,
+                        broadcastMaxBytes: Long): DataFrame = {
+    def side(df: DataFrame) =
+      Dedup.hintIfSmall(df, nQueries, broadcastMaxBytes, perQueryBytes)
+    perQuery.foldLeft(corpus.join(side(probes), Seq("__cell")))(
+      (acc, q) => acc.join(side(q), Seq("__qid")))
+  }
+
+  /** The batch searches' probe-pick UDF: a query vector — rotated into
+    * the index space when `rotation` is set — maps to `f(vector, its
+    * nprobe nearest cells, centers)` ([[nearestCells]]); a null vector
+    * maps to null. Centers and rotation ride broadcasts. */
+  private def probeUdf[T: TypeTag](spark: org.apache.spark.sql.SparkSession,
+                                   centers: Array[Array[Double]], nprobe: Int,
+                                   rotation: Option[Array[Array[Double]]])(
+      f: (Array[Double], Array[Int], Array[Array[Double]]) => T)
+      : UserDefinedFunction = {
+    val bcCenters = spark.sparkContext.broadcast(centers)
+    val bcRot = rotation.map(spark.sparkContext.broadcast(_))
+    udf { (v: Seq[Double]) =>
+      if (v == null) null.asInstanceOf[T]
+      else {
+        val y = bcRot.fold(v.toArray)(r => rotateVec(r.value, v.toArray))
+        f(y, nearestCells(bcCenters.value, y, nprobe), bcCenters.value)
+      }
+    }
   }
 
   /**
@@ -1077,7 +1149,7 @@ object SimSearch {
     * Candidates carry ids only — at 768-dim embeddings the vectors are
     * ~3 KB/row and shuffling them x(1+bits) probes would dominate —
     * and the exact-cosine verify joins the vectors back from the two
-    * state frames, exactly as Dedup.minhashPairsPlan keeps shingle
+    * state frames, exactly as Dedup.minhashPairsIncrementalPlan keeps shingle
     * arrays out of its candidate shuffle. `verifyPartitions` repartitions
     * the candidates on `id_a` before the verify (explicit N is exempt
     * from AQE coalescing). */
@@ -1626,11 +1698,23 @@ object SimSearch {
     PqModel(m, k, dsub, codebooks)
   }
 
-  /** ADC top-k: approximate squared-L2 of every encoded row to the
-    * query via `m` table lookups, smallest first (ties by id). The
-    * corpus side reads CODES ONLY — at 100 TB this is the point: the
-    * scan is m bytes per row, the float vectors stay cold. One map
-    * stage + TakeOrdered. */
+  /** The ADC kernel every PQ search scores with: the sum of the `m`
+    * table lookups `lookup(j, codes(j))`, the approximate squared L2
+    * of one encoded row to the query. A null code row scores
+    * Double.MaxValue, so it ranks last. */
+  private def adcDistance(codes: Seq[Int],
+                          lookup: (Int, Int) => Double): Double =
+    if (codes == null) Double.MaxValue
+    else {
+      var s = 0.0; var j = 0
+      while (j < codes.length) { s += lookup(j, codes(j)); j += 1 }
+      s
+    }
+
+  /** ADC top-k: [[adcDistance]] of every encoded row to the query,
+    * ranked by [[rankTop]] of [[AdcScore]]. The corpus side reads
+    * CODES ONLY — at 100 TB this is the point: the scan is m bytes per
+    * row, the float vectors stay cold. One map stage + TakeOrdered. */
   def pqSearch(codes: DataFrame, idCol: String, model: PqModel,
                query: Array[Double], topK: Int): DataFrame = {
     val spark = codes.sparkSession
@@ -1638,16 +1722,12 @@ object SimSearch {
     // not destroyed here; it is m*k doubles (~4 KB at the defaults) —
     // ContextCleaner reclaims it after the frame is garbage
     val table = spark.sparkContext.broadcast(model.adcTable(query))
-    val dist = udf((cs: Seq[Int]) =>
-      if (cs == null) Double.MaxValue
-      else {
-        var s = 0.0; var j = 0
-        while (j < cs.length) { s += table.value(j)(cs(j)); j += 1 }
-        s
-      })
-    codes.select(col(idCol), round(dist(col("codes")), 6).as("adc_dist"))
-      .orderBy(asc("adc_dist"), asc(idCol))
-      .limit(topK)
+    val dist = udf { (cs: Seq[Int]) =>
+      val t = table.value
+      adcDistance(cs, (j, c) => t(j)(c))
+    }
+    rankTop(codes.select(col(idCol), AdcScore.of(dist(col("codes")))),
+      idCol, AdcScore, topK)
   }
 
   // ---------------------------------------------------------------
@@ -1703,18 +1783,21 @@ object SimSearch {
     }
   }
 
-  /** The driver-side probe pick shared by [[ivfSearch]] and
-    * [[ivfPqSearch]]: the `nprobe` cells whose centers are nearest
-    * the query (squared L2; ties by cell id via stable sort). */
+  /** The probe pick every IVF search shares (driver-side in
+    * [[ivfSearch]]/[[ivfPqSearch]], per query in [[probeUdf]]): the
+    * `nprobe` cells whose centers are nearest the query (squared L2;
+    * ties by cell id via stable sort). A query of another width than
+    * the index fails LOUDLY ([[requireIndexDim]]). */
   private def nearestCells(centers: Array[Array[Double]],
-                           qVec: Array[Double], nprobe: Int): Array[Int] =
+                           qVec: Array[Double], nprobe: Int): Array[Int] = {
+    centers.headOption.foreach(c => requireIndexDim(qVec.length, c.length))
     centers.zipWithIndex.map { case (c, i) =>
       var s = 0.0
       var j = 0
-      val n = math.min(c.length, qVec.length)
-      while (j < n) { val d = c(j) - qVec(j); s += d * d; j += 1 }
+      while (j < c.length) { val d = c(j) - qVec(j); s += d * d; j += 1 }
       (i, s)
     }.sortBy(_._2).take(nprobe).map(_._1)
+  }
 
   /** The per-row residual kernel: `v - center(cell)` with the centers
     * riding a broadcast — the map-only pass residual fit/encode/append
@@ -2159,7 +2242,8 @@ object SimSearch {
     * cells are picked DRIVER-SIDE from the tiny centers, the codes
     * scan is pruned to exactly those cells (partition directories in
     * the [[ivfPqSave]] layout), and each surviving row costs `m`
-    * ADC table lookups. At nprobe=nlist this equals flat
+    * ADC table lookups ([[adcDistance]], ranked by [[rankTop]] of
+    * [[AdcScore]]). At nprobe=nlist this equals flat
     * [[pqSearch]] exactly (shared raw-vector codebooks); at the
     * production nprobe << nlist each query reads ~nprobe/nlist of
     * the code bytes — the last O(corpus)-per-query path closed. */
@@ -2186,20 +2270,15 @@ object SimSearch {
         val one = index.model.adcTable(query)
         probeCells.map(c => c -> one).toMap
       })
-    val dist = udf((cell: Int, cs: Seq[Int]) =>
-      if (cs == null) Double.MaxValue
-      else {
-        val table = tables.value(cell)
-        var s = 0.0; var j = 0
-        while (j < cs.length) { s += table(j)(cs(j)); j += 1 }
-        s
-      })
-    index.codes
+    val dist = udf { (cell: Int, cs: Seq[Int]) =>
+      val t = tables.value(cell)
+      adcDistance(cs, (j, c) => t(j)(c))
+    }
+    rankTop(index.codes
       .where(col("__cell").isin(probeCells.toSeq: _*))
       .select(col(index.idCol),
-        round(dist(col("__cell"), col("codes")), 6).as("adc_dist"))
-      .orderBy(asc("adc_dist"), asc(index.idCol))
-      .limit(topK)
+        AdcScore.of(dist(col("__cell"), col("codes")))),
+      index.idCol, AdcScore, topK)
   }
 
   /**
@@ -2223,7 +2302,7 @@ object SimSearch {
    * under a plain broadcast semi-join — point it at an id-bucketed
    * (or the cell-partitioned assigned) layout so the join prunes, or
    * amortize over query batches. Output: (idCol, cosine), exact
-   * values, [[cosineTopK]]'s rounding and tie-break.
+   * values, ranked by [[rankTop]] of [[CosineScore]].
    */
   def ivfPqSearchRerank(index: IvfPqIndex, vectors: DataFrame,
                         vecCol: String, query: Array[Double], topK: Int,
@@ -2235,12 +2314,10 @@ object SimSearch {
     val cand = ivfPqSearch(index, query, window, nprobe)
       .select(col(index.idCol))
     val qRow = Seq(Tuple1(query.toSeq)).toDF("__q")
-    vectors.join(broadcast(cand), Seq(index.idCol))
+    rankTop(vectors.join(broadcast(cand), Seq(index.idCol))
       .crossJoin(broadcast(qRow))
-      .select(col(index.idCol),
-        round(cosine(asDouble(col(vecCol)), col("__q")), 4).as("cosine"))
-      .orderBy(desc("cosine"), asc(index.idCol))
-      .limit(topK)
+      .select(col(index.idCol), cosineTo(vecCol, col("__q"))),
+      index.idCol, CosineScore, topK)
   }
 
   /**
@@ -2250,121 +2327,76 @@ object SimSearch {
    * over the whole query set instead of launching a job per query.
    *
    * Plan shape: each query maps to its nprobe probe cells + its m×k
-   * ADC table in one map pass (centers/codebooks ride a broadcast).
-   * The probe side is TWO frames so the table is never duplicated
-   * per probe cell: a narrow exploded (qid, cell) frame joins the
-   * codes on the cell key, and a (qid, table) frame — ONE m×k table
-   * per query — joins back on the query id. When the estimated probe
-   * payload fits `broadcastMaxBytes` both joins are broadcasts: the
-   * codes never shuffle and only probed cells' partitions are read
-   * under the [[ivfPqSave]] layout. ABOVE the cap (a corpus-sized
-   * query set — effectively a semantic self-join) the same plan runs
-   * as plain shuffle equi-joins instead of building a multi-GB
-   * broadcast at the driver; results are identical either way, and
-   * at that scale the probes hit every cell so partition pruning has
-   * nothing left to prune. Each surviving row costs m table lookups,
-   * and only narrow (qid, id, dist) rows reach the per-query rank
-   * window. Per query this ranks IDENTICALLY to [[ivfPqSearch]]
-   * (same table, same rounding, same tie-break — q191 pins the
-   * parity, OpsSpec pins it at BOTH plan shapes). Query ids must not
-   * collide with corpus ids only if the caller plans to join the two
-   * — the search itself keeps them in separate columns.
+   * ADC table in one map pass ([[probeUdf]]; centers/codebooks ride a
+   * broadcast). The probe side is TWO frames so the table is never
+   * duplicated per probe cell: a narrow exploded (qid, cell) frame
+   * joins the codes on the cell key, and a (qid, table) frame — ONE
+   * m×k table per query — joins back on the query id
+   * ([[probeJoin]], broadcast under `broadcastMaxBytes`, plain
+   * shuffle joins above it). Each surviving row costs m table lookups
+   * ([[adcDistance]]), and only narrow (qid, id, dist) rows reach
+   * [[rankPerQuery]]. Per query this ranks IDENTICALLY to
+   * [[ivfPqSearch]] (same table, same score — q191 pins the parity,
+   * OpsSpec pins it at BOTH plan shapes). A query set embedded at a
+   * width other than the index's throws an IllegalArgumentException
+   * ([[queryCount]]). Query ids must not collide with corpus ids only
+   * if the caller plans to join the two — the search itself keeps
+   * them in separate columns.
    */
   def ivfPqSearchBatch(index: IvfPqIndex, queries: DataFrame,
                        qIdCol: String, vecCol: String, topK: Int,
                        nprobe: Int = 4,
                        broadcastMaxBytes: Long = 64L << 20): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val spark = index.codes.sparkSession
-    val bcCenters = spark.sparkContext.broadcast(index.centers)
     val bcModel = spark.sparkContext.broadcast(index.model)
-    // OPQ: rotate each query inside the same map pass that builds its
-    // probes/table — downstream is the unrotated plan unchanged
-    val bcRot = spark.sparkContext.broadcast(index.rotation)
-    // a val lambda, not a local def: a def would compile to a module
-    // method and the udf closures below would drag the whole
-    // (non-serializable) module into the task closure
-    val oriented: Seq[Double] => Array[Double] = v =>
-      bcRot.value match {
-        case Some(r) => rotateVec(r, v.toArray)
-        case None => v.toArray
-      }
-    val np = nprobe
-    val dist = udf((tbl: Seq[Seq[Double]], cs: Seq[Int]) =>
-      if (cs == null) Double.MaxValue
-      else {
-        var s = 0.0; var j = 0
-        while (j < cs.length) { s += tbl(j)(cs(j)); j += 1 }
-        s
-      })
-    val w = Window.partitionBy(col("__qid"))
-      .orderBy(asc("adc_dist"), asc(index.idCol))
-    // broadcast guard: the probe payload per query is one m·k·8 table
-    // + nprobe·16 probe rows (shared codebooks) or nprobe whole
-    // tables (residual — the per-cell tables are inherent to that
-    // encoding), estimable DRIVER-side from the model geometry and
-    // one count of the query frame — cheap next to the serve job, and
-    // the only honest way to know whether the caller handed us a
-    // sampled query set or the whole corpus
-    val nQueries = queries.where(col(vecCol).isNotNull).count()
+    // the probe payload per query is one m·k·8 table + nprobe·16 probe
+    // rows (shared codebooks) or nprobe whole tables (residual — the
+    // per-cell tables are inherent to that encoding), estimable
+    // DRIVER-side from the model geometry and one pass over the query
+    // frame — cheap next to the serve job, and the only honest way to
+    // know whether the caller handed us a sampled query set or the
+    // whole corpus
+    val nQueries = queryCount(queries, vecCol, index.centers.head.length)
     val tableBytes = index.model.m.toLong * index.model.k * 8L
     val perQueryBytes =
-      (if (index.residual) np.toLong * tableBytes else tableBytes) +
-        np.toLong * 16L
-    val fits = nQueries * perQueryBytes <= broadcastMaxBytes
-    val joined = if (!index.residual) {
-      val prep = udf((v: Seq[Double]) =>
-        if (v == null) null
-        else {
-          val y = oriented(v)
-          (nearestCells(bcCenters.value, y, np),
-            bcModel.value.adcTable(y))
-        })
-      val base = queries
-        .select(col(qIdCol).as("__qid"),
+      (if (index.residual) nprobe.toLong * tableBytes else tableBytes) +
+        nprobe.toLong * 16L
+    // OPQ: each query is rotated inside the same map pass that builds
+    // its probes/table — downstream is the unrotated plan unchanged
+    def prepared[T: TypeTag](
+        f: (Array[Double], Array[Int], Array[Array[Double]]) => T) = {
+      val prep = probeUdf(spark, index.centers, nprobe, index.rotation)(f)
+      queries.select(col(qIdCol).as("__qid"),
           prep(asDouble(col(vecCol))).as("__p"))
         .where(col("__p").isNotNull)
+    }
+    val joined = if (!index.residual) {
+      val base = prepared((y, cells, _) =>
+        (cells, bcModel.value.adcTable(y)))
       // ONE (qid, cell) row per probe, ONE m×k table per QUERY — the
       // r15 shape carried the full table in every probe-cell row, an
       // nprobe-fold duplication that was pure broadcast waste
       val probes = base.select(col("__qid"),
         explode(col("__p._1")).as("__cell"))
       val tables = base.select(col("__qid"), col("__p._2").as("__tbl"))
-      if (fits)
-        index.codes.join(broadcast(probes), Seq("__cell"))
-          .join(broadcast(tables), Seq("__qid"))
-      else
-        index.codes.join(probes, Seq("__cell"))
-          .join(tables, Seq("__qid"))
+      probeJoin(index.codes, probes, Some(tables), nQueries, perQueryBytes,
+        broadcastMaxBytes)
     } else {
       // residual: the table is PER (query, probed cell) — built from
       // q - center(cell), so it rides each probe row (no sharing to
       // exploit; the guard estimate above charges for it honestly)
-      val prep = udf((v: Seq[Double]) =>
-        if (v == null) null
-        else {
-          val y = oriented(v)
-          nearestCells(bcCenters.value, y, np).map { c =>
-            (c, bcModel.value.adcTable(
-              queryResidual(y, bcCenters.value(c))))
-          }
-        })
-      val probes = queries
-        .select(col(qIdCol).as("__qid"),
-          prep(asDouble(col(vecCol))).as("__p"))
-        .where(col("__p").isNotNull)
+      val probes = prepared((y, cells, centers) => cells.map(c =>
+          (c, bcModel.value.adcTable(queryResidual(y, centers(c))))))
         .select(col("__qid"), explode(col("__p")).as("__pc"))
         .select(col("__qid"), col("__pc._1").as("__cell"),
           col("__pc._2").as("__tbl"))
-      if (fits) index.codes.join(broadcast(probes), Seq("__cell"))
-      else index.codes.join(probes, Seq("__cell"))
+      probeJoin(index.codes, probes, None, nQueries, perQueryBytes,
+        broadcastMaxBytes)
     }
-    joined
-      .select(col("__qid"), col(index.idCol),
-        round(dist(col("__tbl"), col("codes")), 6).as("adc_dist"))
-      .withColumn("__rn", row_number().over(w))
-      .where(col("__rn") <= topK)
-      .select(col("__qid").as("query_id"), col(index.idCol),
-        col("adc_dist"))
+    val dist = udf((tbl: Seq[Seq[Double]], cs: Seq[Int]) =>
+      adcDistance(cs, (j, c) => tbl(j)(c)))
+    rankPerQuery(joined.select(col("__qid"), col(index.idCol),
+      AdcScore.of(dist(col("__tbl"), col("codes")))),
+      index.idCol, AdcScore, topK)
   }
 }

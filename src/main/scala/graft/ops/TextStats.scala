@@ -270,8 +270,8 @@ object TextStats {
    * every occurrence of a Zipf-head word like "the" — percent of the
    * corpus — through one task at 100 TB). The tf frame is persisted
    * across its two consumers (model aggregate + scoring join, the
-   * [[Dedup.minhashPairsPlan]] pattern), the corpus counts are another
-   * partial+final aggregate, and the scoring join on the word key
+   * [[Dedup.minhashPairsIncrementalPlan]] pattern), the corpus counts
+   * are another partial+final aggregate, and the scoring join on the word key
    * carries one row per DISTINCT (doc, word) — bounded by docs, not
    * instances, even for stopwords. The global total rides in as a
    * single-row broadcast like [[Layout.keySkewReport]]'s mean. Uses
@@ -595,7 +595,8 @@ object TextStats {
   /** [[oovRate]] WITHOUT the eager checkpoint, returning the persisted
     * tf frame too — for plan assertions (the checkpoint severs the
     * lineage under inspection; same pattern as
-    * [[Dedup.minhashPairsPlan]]). Caller must unpersist the tf frame. */
+    * [[Dedup.minhashPairsIncrementalPlan]]). Caller must unpersist the
+    * tf frame. */
   private[graft] def oovRatePlan(df: DataFrame, idCol: String,
                                  textCol: String, vocabSize: Int)
       : (DataFrame, DataFrame) = {

@@ -48,7 +48,8 @@ class OpsSpec extends AnyFunSuite with SparkTestSession {
     val oldSh = Dedup.shinglesOf(docs.filter(col("doc_id").isin(1L, 2L)),
       "doc_id", "text")
     val forms = Seq(
-      () => Dedup.minhashPairsPlan(docs, "doc_id", "text", 3, 12, 4, 0.7),
+      () => Dedup.minhashPairsIncrementalPlan(docs, None, "doc_id", "text", 3,
+        12, 4, 0.7),
       () => Dedup.minhashPairsIncrementalPlan(
         docs.filter(col("doc_id").isin(3L, 4L, 5L)),
         Some((Dedup.postingsOf(oldSh, 12, 4), oldSh)), "doc_id", "text", 3,
@@ -2829,6 +2830,21 @@ class OpsSpec extends AnyFunSuite with SparkTestSession {
       .toDF("vec_id", "embedding")
     intercept[IllegalArgumentException] {
       SimSearch.annLshTopKBatch(corpus, queries, "vec_id", "embedding", k = 3)
+    }
+    // the IVF searches reject the same width drift on the driver: an
+    // unchecked probe pick would serve every query k null-score rows
+    val ivf = SimSearch.ivfFit(corpus, "vec_id", "embedding", nlist = 2)
+    val e = intercept[IllegalArgumentException] {
+      SimSearch.ivfSearchBatch(ivf, queries, "vec_id", "embedding", topK = 3)
+    }
+    assert(e.getMessage.contains("vector dim 4 != index dim 8"), e.getMessage)
+    val pq = SimSearch.ivfPqFit(corpus, "vec_id", "embedding", nlist = 2,
+      m = 2, k = 2)
+    intercept[IllegalArgumentException] {
+      SimSearch.ivfPqSearchBatch(pq, queries, "vec_id", "embedding", topK = 3)
+    }
+    intercept[IllegalArgumentException] {
+      SimSearch.ivfPqSearch(pq, Array.tabulate(4)(j => math.cos(j)), topK = 3)
     }
   }
 
