@@ -2200,18 +2200,16 @@ object Queries {
         "tab_header" -> stage("e.csv", "doc_id\tlang\ttoks" +:
           head.map { case (id, l) => s"$id\t$l\t${id % 97}" }))
       val rows = cases.map { case (dialect, path) =>
-        val delim = graft.sources.FormatIO.findDelimiter(path, spark)
-        val quoteOpt = graft.sources.FormatIO.detectEscape(path, delim, spark)
-        val quote = quoteOpt.orNull
-        val hdr = graft.sources.FormatIO.hasHeader(path, delim, spark)
+        val d = graft.sources.FormatIO.sniffCsv(path, spark)
         // parse with the ALREADY-sniffed dialect (loadCsvWithDialect)
-        // so each file pays the two-line probes once, not twice
+        // so each file pays the two-line probe once, not twice
         val df = graft.sources.FormatIO.loadCsvWithDialect(
-          path, spark, delim, hdr, quoteOpt)
+          path, spark, d.delimiter, d.header, d.quote)
         val idCol = df.columns.head
         val agg = df.agg(count(lit(1)).cast("long").as("n"),
           sum(col(idCol).cast("long")).as("s")).head()
-        (dialect, delim, quote, hdr, agg.getLong(0), agg.getLong(1))
+        (dialect, d.delimiter, d.quote.orNull, d.header, agg.getLong(0),
+          agg.getLong(1))
       }
       rows.toDF("dialect", "delimiter", "quote_char", "has_header",
         "n_rows", "id_sum")

@@ -89,10 +89,11 @@ object Dedup {
   }
 
   /** Single-pass word n-gram shingle set (distinct, first-occurrence
-    * order). Same semantics as the pure-expression form
-    * ([[shinglesExpr]], kept for parity testing) but ~6x faster: the
-    * higher-order transform/slice/concat_ws chain evaluates
-    * interpreted per element, which dominated the near-dup profile. */
+    * order): the kernel behind [[shingles]] ([[Kernels.shinglesUtf8]]).
+    * Same semantics as the pure-expression form (a parity oracle in
+    * the tests' `KernelOracles`) but ~6x faster: the higher-order
+    * transform/slice/concat_ws chain evaluates interpreted per
+    * element, which dominated the near-dup profile. */
   private[ops] def shingleSet(text: String, n: Int): Array[String] = {
     if (text == null) return Array.empty
     val tokens = text.toLowerCase.trim.split("\\s+")
@@ -126,21 +127,6 @@ object Dedup {
       lit(Array.empty[String]))
   }
 
-  /** The Scala-UDF form (parity oracle for the codegen [[shingles]]
-    * path — GraftExtensionsSpec pins them identical). */
-  private[graft] def shinglesUdf(text: Column, n: Int): Column =
-    udf((s: String) => shingleSet(s, n)).apply(text)
-
-  /** The original pure-expression formulation (parity oracle for
-    * [[shingles]]). */
-  private[ops] def shinglesExpr(text: Column, n: Int): Column = {
-    val tokens = split(normalized(text), " ")
-    val grams = transform(
-      sequence(lit(0), greatest(size(tokens) - n, lit(0))),
-      i => concat_ws(" ", slice(tokens, i + lit(1), lit(n))))
-    array_distinct(filter(grams, g => g =!= ""))
-  }
-
   /** Golden-ratio odd constant (0x9E3779B97F4A7C15): seeds the per-hash
     * multiplier family. Unsigned value 11400714819323198485. */
   private val SeedA = 0x9E3779B97F4A7C15L
@@ -148,26 +134,14 @@ object Dedup {
     * offsets. Unsigned value 2685821657736338717. */
   private val SeedB = 0x2545F4914F6CDD1DL
 
-  /** 60-bit md5-prefix base hash of one shingle — the same
-    * `('0x' || substr(md5(g), 1, 15))` parse every other cross-engine
-    * contract in this library uses (corpus digest, split buckets), so
-    * any engine can replay it. First 15 hex chars = bytes 0..6 plus the
-    * high nibble of byte 7. */
-  private[ops] def md5Base60(md: java.security.MessageDigest,
-                             s: String): Long =
-    md5Base60Bytes(md,
-      s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-
-  /** Byte-level form of [[md5Base60]] — the codegen kernel
-    * ([[Kernels.minhashUtf8]]) hashes UTF8String bytes without a
-    * String round-trip; same digest, same 60-bit prefix. */
-  private[ops] def md5Base60Bytes(md: java.security.MessageDigest,
-                                  bytes: Array[Byte]): Long =
-    md5Base60Range(md, bytes, 0, bytes.length)
-
-  /** Range form of [[md5Base60Bytes]] — the winnowing kernel
-    * ([[Kernels.winnowUtf8]]) hashes each gram straight out of the
-    * document's byte array, no per-gram slice allocation. */
+  /** 60-bit md5-prefix base hash of `len` bytes of `bytes` from `off`
+    * — the same `('0x' || substr(md5(g), 1, 15))` parse every other
+    * cross-engine contract in this library uses (corpus digest, split
+    * buckets), so any engine can replay it. First 15 hex chars = bytes
+    * 0..6 plus the high nibble of byte 7. The kernels hash straight out
+    * of a UTF8String's bytes: a whole shingle ([[Kernels.minhashUtf8]])
+    * or one gram of a document ([[Kernels.winnowUtf8]]), no per-gram
+    * slice allocation. */
   private[ops] def md5Base60Range(md: java.security.MessageDigest,
                                   bytes: Array[Byte], off: Int,
                                   len: Int): Long = {
@@ -189,29 +163,6 @@ object Dedup {
   private[ops] def seedHash(base: Long, seed: Int): Long =
     SeedA * (2L * seed + 1L) * base + SeedB * (seed + 1L)
 
-  /** Null elements contribute nothing — the same skip contract as the
-    * codegen kernel ([[Kernels.minhashUtf8]]), so the two paths cannot
-    * fork on a caller-supplied `array<string>` with nulls (the
-    * pipeline's own [[shingles]] output is containsNull=false). */
-  private[ops] def signatureOf(shingles: Array[String], k: Int): Array[Long] = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val sig = Array.fill(k)(-1L) // unsigned max sentinel
-    var i = 0
-    while (i < shingles.length) {
-      if (shingles(i) != null) {
-        val base = md5Base60(md, shingles(i))
-        var s = 0
-        while (s < k) {
-          val h = seedHash(base, s)
-          if (java.lang.Long.compareUnsigned(h, sig(s)) < 0) sig(s) = h
-          s += 1
-        }
-      }
-      i += 1
-    }
-    sig
-  }
-
   /** MinHash signature: per seed i, UNSIGNED min over shingles of a
     * seed-mixed 64-bit hash. One pass per row (the per-shingle md5 base
     * is computed once and remixed per seed) — no shuffle. Components
@@ -221,20 +172,12 @@ object Dedup {
     import org.apache.spark.sql.graft.ColumnBridge
     // codegen-backed ([[graft.plans.MinhashExpression]]): the kernel
     // hashes shingle bytes straight off the UTF8String backing array;
-    // the coalesce preserves the UDF null contract (null array ->
-    // all--1L sentinel signature)
+    // the coalesce preserves the Scala-UDF oracle's null contract (null
+    // array -> all--1L sentinel signature)
     coalesce(ColumnBridge.column(graft.plans.MinhashExpression(
       ColumnBridge.expression(shingleCol), numHashes)),
       lit(Array.fill(numHashes)(-1L)))
   }
-
-  /** The Scala-UDF form (parity oracle for the codegen
-    * [[minhashSignature]] path). */
-  private[graft] def minhashSignatureUdf(shingleCol: Column,
-                                       numHashes: Int): Column =
-    udf((sh: Seq[String]) =>
-      if (sh == null) Array.fill(numHashes)(-1L)
-      else signatureOf(sh.toArray, numHashes)).apply(shingleCol)
 
   /** Banded bucket keys: hash of each r-row slice of the signature. */
   def bandHashes(sig: Column, bands: Int, rowsPerBand: Int): Column =

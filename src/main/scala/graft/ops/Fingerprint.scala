@@ -23,8 +23,9 @@ import org.apache.spark.sql.functions._
  * codegen'd kernel call per row ([[Kernels.winnowUtf8]] via
  * [[graft.plans.WinnowExpression]]: grams hashed straight off the
  * byte array, O(n) monotonic-deque window minima), no explode, no
- * shuffle, no UDF; the original higher-order-function chain survives
- * as the spec's parity oracle. Only the (id, fingerprint) postings —
+ * shuffle, no UDF; the original higher-order-function chain and a
+ * scalar model live in the tests (`KernelOracles`) as the kernel's
+ * parity oracles. Only the (id, fingerprint) postings —
  * O(n_grams / w) per doc, a ~1/w compression of the text — ever reach
  * a shuffle, and only in [[sharedFingerprintPairs]].
  *
@@ -41,38 +42,11 @@ import org.apache.spark.sql.functions._
  */
 object Fingerprint {
 
-  /** 60-bit md5-prefix hash of each character k-gram of `norm`,
-    * 1-based positions; empty array when the text is shorter than k.
-    * PARITY ORACLE for the codegen kernel (GraftExtensionsSpec pins
-    * [[Kernels.winnowUtf8]] identical to this chain composed with
-    * [[winnowArray]]); the hot path goes through the kernel. */
-  private[graft] def gramHashArray(norm: Column, k: Int): Column =
-    when(length(norm) >= k,
-      transform(sequence(lit(1), length(norm) - lit(k - 1)),
-        i => conv(substring(md5(norm.substr(i, lit(k)).cast("binary")), 1, 15),
-          16, 10).cast("long")))
-      .otherwise(array().cast("array<bigint>"))
-
-  /** Distinct window-min fingerprints of a gram-hash array column.
-    * Fewer than `w` hashes form one window over all of them (the
-    * short-document degenerate case keeps every doc fingerprintable).
-    * Parity oracle half — see [[gramHashArray]]. */
-  private[graft] def winnowArray(hashes: Column, w: Int): Column =
-    when(size(hashes) >= 1,
-      array_distinct(transform(
-        sequence(lit(1), greatest(size(hashes) - lit(w - 1), lit(1))),
-        j => array_min(slice(hashes, j, lit(w))))))
-      .otherwise(array().cast("array<bigint>"))
-
-  /** The HOF-expression fingerprint chain, exposed for the parity pin. */
-  private[graft] def winnowHof(norm: Column, k: Int, w: Int): Column =
-    winnowArray(gramHashArray(norm, k), w)
-
   /** Codegen'd fingerprint selection — [[Kernels.winnowUtf8]] as one
     * static call per row via [[graft.plans.WinnowExpression]] (no
     * function-registry dependency: the Column is built directly).
     * NULL text degenerates to the empty array, matching the HOF
-    * form's `when(...).otherwise(empty)` contract. */
+    * oracle's `when(...).otherwise(empty)` contract. */
   private def winnowKernel(norm: Column, k: Int, w: Int): Column = {
     import org.apache.spark.sql.graft.ColumnBridge
     coalesce(ColumnBridge.column(graft.plans.WinnowExpression(
@@ -163,24 +137,5 @@ object Fingerprint {
     val clash = df.columns.toSet.intersect(Set("__norm", "__hs", "__ng", "__fps"))
     require(clash.isEmpty,
       s"input columns ${clash.mkString(", ")} collide with Fingerprint's reserved names")
-  }
-
-  /** Scalar reference model of the winnowing kernel, for tests: same
-    * normalization (ASCII-space inputs; Spark `trim` only strips
-    * 0x20), same 60-bit md5-prefix gram hash ([[Dedup.md5Base60]]),
-    * same window-min-by-value selection as the column expressions.
-    * All hashes are in [0, 2^60), so signed `min` equals unsigned. */
-  private[graft] def winnowScalar(text: String, k: Int, w: Int): Seq[Long] = {
-    require(k > 0 && w > 0, "k and w must be positive")
-    if (text == null) return Seq.empty
-    val norm = text.toLowerCase.replaceAll("\\s+", " ")
-      .replaceAll("^ +| +$", "")
-    if (norm.length < k) return Seq.empty
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val hashes = Array.tabulate(norm.length - k + 1)(i =>
-      Dedup.md5Base60(md, norm.substring(i, i + k)))
-    val nw = math.max(hashes.length - w + 1, 1)
-    (0 until nw).map(j =>
-      hashes.slice(j, math.min(j + w, hashes.length)).min).distinct
   }
 }

@@ -5,24 +5,39 @@ import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.unsafe.types.UTF8String
 
 /**
- * Static Catalyst-typed kernels behind the `graft_shingles` /
- * `graft_minhash` codegen expressions
- * ([[graft.plans.ShinglesExpression]] / [[graft.plans.MinhashExpression]]).
+ * Static Catalyst-typed kernels: the one method each per-row native
+ * expression ([[graft.plans.KernelExpression]]: `graft_stem`,
+ * `graft_clean`, `graft_simhash`, `graft_shingles`, `graft_minhash`,
+ * `graft_winnow`, `graft_quality`) calls, from generated code and from
+ * the interpreted path alike.
  *
  * These operate directly on `UTF8String` / `ArrayData` so the
  * generated code makes ONE static call per row with no Scala-UDF
  * Option-boxing, no Row encoder round-trip, and no String round-trip
- * for the minhash input (shingle bytes hash straight from the UTF8
- * backing array). Semantics are pinned bit-for-bit to the UDF forms
- * (`Dedup.shingleSet` / `Dedup.signatureOf`) by GraftExtensionsSpec —
+ * where the bytes suffice (minhash and winnow hash straight from the
+ * UTF8 backing array). Semantics are pinned bit-for-bit to the
+ * test-side oracles (`graft.ops.KernelOracles`: the Scala-UDF and
+ * higher-order-function forms) by GraftExtensionsSpec and OpsSpec —
  * the md5-base60 + multiply-add family that every DuckDB oracle
  * replays must not fork.
  */
 object Kernels {
 
+  /** Porter stem of one token ([[graft.text.Stemmer.stem]]). */
+  def stemUtf8(token: UTF8String): UTF8String =
+    UTF8String.fromString(graft.text.Stemmer.stem(token.toString))
+
+  /** The tweet cleaning chain ([[graft.text.TextClean.cleanString]]). */
+  def cleanUtf8(text: UTF8String): UTF8String =
+    UTF8String.fromString(graft.text.TextClean.cleanString(text.toString))
+
+  /** 64-bit SimHash of the normalized text ([[SimHash.simhashOfText]]). */
+  def simhashUtf8(text: UTF8String): Long =
+    SimHash.simhashOfText(text.toString)
+
   /** Word n-gram shingle set of a text value — [[Dedup.shingleSet]]
     * lifted to Catalyst types. Null-safe: null text yields the empty
-    * set (the UDF contract). */
+    * set (the Scala-UDF oracle's contract). */
   def shinglesUtf8(text: UTF8String, n: Int): ArrayData = {
     val arr =
       if (text == null) Array.empty[String]
@@ -36,8 +51,9 @@ object Kernels {
     new GenericArrayData(out)
   }
 
-  /** MinHash signature of a shingle array — [[Dedup.signatureOf]]
-    * lifted to Catalyst types. The md5 base hashes the element's UTF-8
+  /** MinHash signature of a shingle array: per seed s, the UNSIGNED
+    * min over shingles of [[Dedup.seedHash]] of the shingle's 60-bit
+    * md5 base. The md5 base hashes the element's UTF-8
     * bytes directly from the UTF8String (identical bytes to
     * `String.getBytes(UTF_8)` for any well-formed string — all Spark
     * string expressions produce well-formed UTF-8; on ill-formed bytes
@@ -57,8 +73,8 @@ object Kernels {
       var i = 0
       while (i < n) {
         if (!shingles.isNullAt(i)) {
-          val base = Dedup.md5Base60Bytes(md,
-            shingles.getUTF8String(i).getBytes)
+          val bytes = shingles.getUTF8String(i).getBytes
+          val base = Dedup.md5Base60Range(md, bytes, 0, bytes.length)
           var s = 0
           while (s < k) {
             val h = Dedup.seedHash(base, s)

@@ -1,7 +1,6 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions._
 
 /**
@@ -9,8 +8,8 @@ import org.apache.spark.sql.functions._
  * whose Hamming distance tracks cosine similarity of the token sets.
  * Extension operator for the LLM-data-pipeline surface.
  *
- * The signature is one pass over the row's tokens (UDF; a custom
- * codegen Expression is the upgrade path if profiling demands), then
+ * The signature is one pass over the row's tokens (the codegen'd
+ * `graft_simhash` kernel, [[graft.plans.SimHashExpression]]), then
  * candidate generation is banded exactly like MinHash: 4 x 16-bit
  * chunks, docs sharing any chunk are candidates (catches all pairs
  * within Hamming distance 3 by pigeonhole), verified with bit_count.
@@ -50,12 +49,9 @@ object SimHash {
     sig
   }
 
-  val simhashUdf: UserDefinedFunction = udf((tokens: Seq[String]) =>
-    if (tokens == null) 0L else simhash64(tokens))
-
   /** Whole-text form (normalize + tokenize + signature in one call) —
-    * the static entry point the `graft_simhash` codegen expression
-    * invokes. Semantics identical to [[simhashCol]]'s
+    * what the `graft_simhash` kernel ([[Kernels.simhashUtf8]])
+    * computes. Semantics identical to [[simhashCol]]'s
     * split(normalized, " ") path, including the empty-text case
     * (one "" token). */
   def simhashOfText(s: String): Long =
@@ -67,7 +63,7 @@ object SimHash {
     * signature scan); `coalesce` preserves the historical UDF null
     * contract (null text → signature 0, so null docs still band
     * together instead of silently dropping from candidates).
-    * GraftExtensionsSpec pins expression/UDF parity. */
+    * GraftExtensionsSpec pins it to the test-side Scala-UDF oracle. */
   def simhashCol(text: Column): Column = {
     import org.apache.spark.sql.graft.ColumnBridge
     coalesce(ColumnBridge.column(graft.plans.SimHashExpression(

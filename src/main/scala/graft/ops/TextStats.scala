@@ -110,11 +110,13 @@ object TextStats {
     *
     * Evaluates through the codegen `graft_quality` kernel
     * ([[Kernels.qualityUtf8]]): ONE pass over the string plus one over
-    * its lowercase form, where the column chain ([[qualityScoreHof]],
-    * kept as the spec's parity oracle) ran three interpreted regex
-    * splits with array HOFs plus a regex replace per row. Bit parity
-    * incl. Spark's exact double-round semantics is pinned by OpsSpec
-    * on the fixture corpus and edge strings.
+    * its lowercase form, where the column chain (the tests'
+    * `KernelOracles` form: [[tokenCount]], [[punctRatio]],
+    * [[stopwordRatio]] and [[meanTokenLength]] blended, the shape every
+    * DuckDB oracle replays) ran three interpreted regex splits with
+    * array HOFs plus a regex replace per row. Bit parity incl. Spark's
+    * exact double-round semantics is pinned by OpsSpec on the fixture
+    * corpus and edge strings.
     *
     * NULL text scores 0.6 — the legacy chain's (accidental but now
     * CONTRACTUAL) value: its null token count vanished inside
@@ -126,25 +128,6 @@ object TextStats {
     import org.apache.spark.sql.graft.ColumnBridge
     coalesce(ColumnBridge.column(graft.plans.QualityExpression(
       ColumnBridge.expression(text))), lit(0.6))
-  }
-
-  /** The original column-expression formulation of [[qualityScore]] —
-    * the parity oracle for the codegen kernel (and the readable
-    * SPECIFICATION of the score: every DuckDB oracle replays THIS
-    * shape). */
-  private[graft] def qualityScoreHof(text: Column): Column = {
-    val n = tokenCount(text).cast("double")
-    val lengthTerm = least(n / lit(20.0), lit(1.0)) // ramps to 1 at 20 tokens
-    val punctTerm = lit(1.0) - least(punctRatio(text) * 4, lit(1.0))
-    val stopTerm = least(stopwordRatio(text) * 4, lit(1.0))
-    val mtl = meanTokenLength(text)
-    val mtlTerm = when(mtl.between(3.0, 9.0), lit(1.0)).otherwise(lit(0.5))
-    // 3 decimals, not 4: the pre-round sum differs between engines in
-    // the last ulp, and at sf0.1 one of 5000 docs landed exactly on a
-    // 4-decimal rounding boundary (0.86875), flipping the cross-engine
-    // compare. Coarser granularity has 10x fewer boundaries; the score
-    // is a heuristic gate, 3 decimals lose nothing.
-    round((lengthTerm * 0.3 + punctTerm * 0.2 + stopTerm * 0.3 + mtlTerm * 0.2), 3)
   }
 
   /** Tiny per-language stop-token profiles for the language-ID

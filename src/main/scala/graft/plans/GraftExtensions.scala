@@ -1,11 +1,14 @@
 package graft.plans
 
+import scala.reflect.{ClassTag, classTag}
+
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, StringType}
-import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType, LongType, StringType}
 
 /**
  * Native Catalyst expressions + session extension registration — the
@@ -14,215 +17,102 @@ import org.apache.spark.unsafe.types.UTF8String
  * (no Option-boxing, no encoder round-trip, stays inside the
  * WholeStageCodegen span, and is usable from SQL text).
  *
+ * Every per-row kernel follows ONE recipe: a [[KernelExpression]]
+ * naming one static [[graft.ops.Kernels]] method, one row of
+ * [[GraftExtensions.functions]], and one [[GraftFunctions]] wrapper.
  * Registered functions (via [[GraftExtensions]] or
  * `SparkSession.builder.withExtensions(new GraftExtensions)`):
  *  - `graft_stem(str)`  — Porter stem of a single token
- *    (reference semantics incl. the step-1b ordering deviation,
- *    `/root/reference/.../utils/Stemmer.scala` pinned by StemmerSpec);
- *  - `graft_clean(str)` — the tweet cleaning chain
- *    (`/root/reference/.../utils/Helper.scala:77-84`);
+ *    (reference semantics incl. the step-1b ordering deviation of
+ *    the reference's `utils/Stemmer.scala`, pinned by StemmerSpec);
+ *  - `graft_clean(str)` — the tweet cleaning chain (the reference's
+ *    `utils/Helper.scala:77-84`);
  *  - `graft_simhash(str)` — 64-bit SimHash of the normalized text
- *    (extension surface; same semantics as [[graft.ops.SimHash.simhashCol]]).
- *
- * The generated code calls the static Scala implementations directly —
- * one virtual-call-free static invoke per row, null handling inlined
- * by the codegen framework.
+ *    (same semantics as [[graft.ops.SimHash.simhashCol]]);
+ *  - `graft_shingles(str, n)`, `graft_minhash(array<string>, k)`,
+ *    `graft_winnow(str, k, w)`, `graft_quality(str)` — documented on
+ *    their expressions below.
  */
-case class StemExpression(child: Expression)
-    extends UnaryExpression {
+abstract class KernelExpression(
+    override val prettyName: String,
+    inputType: DataType,
+    override val dataType: DataType,
+    kernel: String) extends UnaryExpression with Serializable {
+
+  /** Every constructor field after `child` is a plan-time integer
+    * literal (a size that fixes the output's shape), passed to the
+    * kernel after the row value, in declaration order. */
+  private lazy val sizes: Seq[Int] =
+    productIterator.drop(1).map { case i: Int => i }.toSeq
 
   override def nullIntolerant: Boolean = true
-  override def dataType: DataType = StringType
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      prettyName + " requires a string argument")
-  override def prettyName: String = "graft_stem"
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (DataTypeUtils.equalsIgnoreNullability(child.dataType, inputType) &&
+        sizes.forall(_ > 0)) TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(
+      s"$prettyName requires an argument of type ${inputType.simpleString}" +
+        (if (sizes.isEmpty) "" else " and positive literal sizes"))
+
+  /** The interpreted path invokes the same static method the
+    * generated code calls (as Spark's `StaticInvoke` does), so the two
+    * paths cannot fork. */
+  @transient private lazy val method: java.lang.reflect.Method =
+    graft.ops.Kernels.getClass.getMethods.find(_.getName == kernel).get
 
   override protected def nullSafeEval(input: Any): Any =
-    UTF8String.fromString(
-      graft.text.Stemmer.stem(input.asInstanceOf[UTF8String].toString))
+    try method.invoke(graft.ops.Kernels,
+      (input +: sizes).map(_.asInstanceOf[AnyRef]): _*)
+    catch { case e: java.lang.reflect.InvocationTargetException => throw e.getCause }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     defineCodeGen(ctx, ev, c =>
-      s"UTF8String.fromString(graft.text.Stemmer.stem($c.toString()))")
+      s"graft.ops.Kernels.$kernel(${(c +: sizes).mkString(", ")})")
 
-  override protected def withNewChildInternal(newChild: Expression): StemExpression =
-    copy(child = newChild)
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    makeCopy((newChild +: productIterator.drop(1).toSeq).map(_.asInstanceOf[AnyRef]).toArray)
 }
+
+case class StemExpression(child: Expression)
+  extends KernelExpression("graft_stem", StringType, StringType, "stemUtf8")
 
 case class CleanTextExpression(child: Expression)
-    extends UnaryExpression {
-
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = StringType
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      prettyName + " requires a string argument")
-  override def prettyName: String = "graft_clean"
-
-  override protected def nullSafeEval(input: Any): Any =
-    UTF8String.fromString(
-      graft.text.TextClean.cleanString(input.asInstanceOf[UTF8String].toString))
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"UTF8String.fromString(graft.text.TextClean.cleanString($c.toString()))")
-
-  override protected def withNewChildInternal(newChild: Expression): CleanTextExpression =
-    copy(child = newChild)
-}
+  extends KernelExpression("graft_clean", StringType, StringType, "cleanUtf8")
 
 case class SimHashExpression(child: Expression)
-    extends UnaryExpression {
-
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = org.apache.spark.sql.types.LongType
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      prettyName + " requires a string argument")
-  override def prettyName: String = "graft_simhash"
-
-  override protected def nullSafeEval(input: Any): Any =
-    graft.ops.SimHash.simhashOfText(input.asInstanceOf[UTF8String].toString)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.ops.SimHash.simhashOfText($c.toString())")
-
-  override protected def withNewChildInternal(newChild: Expression): SimHashExpression =
-    copy(child = newChild)
-}
+  extends KernelExpression("graft_simhash", StringType, LongType, "simhashUtf8")
 
 /** Word n-gram shingle set (`graft_shingles(text, n)`): the front
   * stage of every MinHash/Jaccard dedup path
-  * ([[graft.ops.Dedup.shingles]] wires through this). `n` is fixed at
-  * plan time (a literal in SQL), so the generated code is a single
-  * static call into [[graft.ops.Kernels.shinglesUtf8]]. */
+  * ([[graft.ops.Dedup.shingles]] wires through this). */
 case class ShinglesExpression(child: Expression, n: Int)
-    extends UnaryExpression {
-
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType =
-    org.apache.spark.sql.types.ArrayType(StringType, containsNull = false)
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == StringType && n > 0)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      prettyName + " requires a string argument and a positive literal n")
-  override def prettyName: String = "graft_shingles"
-
-  override protected def nullSafeEval(input: Any): Any =
-    graft.ops.Kernels.shinglesUtf8(input.asInstanceOf[UTF8String], n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.ops.Kernels.shinglesUtf8($c, $n)")
-
-  override protected def withNewChildInternal(newChild: Expression): ShinglesExpression =
-    copy(child = newChild)
-}
+  extends KernelExpression("graft_shingles", StringType,
+    ArrayType(StringType, containsNull = false), "shinglesUtf8")
 
 /** MinHash signature (`graft_minhash(shingles, k)`): k unsigned-min
-  * multiply-add residues over the 60-bit md5 base of each shingle —
-  * [[graft.ops.Dedup.signatureOf]]'s exact family, hashing element
-  * bytes straight off the UTF8String backing array via
-  * [[graft.ops.Kernels.minhashUtf8]]. */
+  * multiply-add residues over the 60-bit md5 base of each shingle,
+  * hashing element bytes straight off the UTF8String backing array. */
 case class MinhashExpression(child: Expression, k: Int)
-    extends UnaryExpression {
-
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType =
-    org.apache.spark.sql.types.ArrayType(
-      org.apache.spark.sql.types.LongType, containsNull = false)
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case org.apache.spark.sql.types.ArrayType(StringType, _) if k > 0 =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case _ =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          prettyName + " requires an array<string> argument and a positive literal k")
-    }
-  override def prettyName: String = "graft_minhash"
-
-  override protected def nullSafeEval(input: Any): Any =
-    graft.ops.Kernels.minhashUtf8(
-      input.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData], k)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.ops.Kernels.minhashUtf8($c, $k)")
-
-  override protected def withNewChildInternal(newChild: Expression): MinhashExpression =
-    copy(child = newChild)
-}
+  extends KernelExpression("graft_minhash", ArrayType(StringType),
+    ArrayType(LongType, containsNull = false), "minhashUtf8")
 
 /** Winnowing fingerprint selection (`graft_winnow(norm, k, w)`): the
   * distinct window-min 60-bit-md5 gram hashes of an already-normalized
   * text — [[graft.ops.Fingerprint]]'s kernel as ONE static call per
-  * row ([[graft.ops.Kernels.winnowUtf8]]) instead of an interpreted
-  * `transform`/`slice`/`array_min` higher-order chain. `k` (gram
-  * length) and `w` (window width) are plan-time literals, same rule as
-  * `graft_shingles`. */
+  * row instead of an interpreted `transform`/`slice`/`array_min`
+  * higher-order chain. `k` is the gram length, `w` the window width. */
 case class WinnowExpression(child: Expression, k: Int, w: Int)
-    extends UnaryExpression {
-
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType =
-    org.apache.spark.sql.types.ArrayType(
-      org.apache.spark.sql.types.LongType, containsNull = false)
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == StringType && k > 0 && w > 0)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      prettyName + " requires a string argument and positive literal k, w")
-  override def prettyName: String = "graft_winnow"
-
-  override protected def nullSafeEval(input: Any): Any =
-    graft.ops.Kernels.winnowUtf8(input.asInstanceOf[UTF8String], k, w)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.ops.Kernels.winnowUtf8($c, $k, $w)")
-
-  override protected def withNewChildInternal(newChild: Expression): WinnowExpression =
-    copy(child = newChild)
-}
+  extends KernelExpression("graft_winnow", StringType,
+    ArrayType(LongType, containsNull = false), "winnowUtf8")
 
 /** Composite quality score (`graft_quality(text)`): the
-  * [[graft.ops.TextStats.qualityScore]] heuristic as one static kernel
-  * call per row ([[graft.ops.Kernels.qualityUtf8]] — one pass over the
-  * string + one over its lowercase form) instead of four independent
+  * [[graft.ops.TextStats.qualityScore]] heuristic in one pass over the
+  * string + one over its lowercase form, instead of four independent
   * interpreted passes (three regex splits with array HOFs and a regex
   * replace). NULL propagates null here; the Column wrapper restores
   * the legacy chain's NULL value. */
 case class QualityExpression(child: Expression)
-    extends UnaryExpression {
-
-  override def nullIntolerant: Boolean = true
-  override def dataType: DataType = org.apache.spark.sql.types.DoubleType
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      prettyName + " requires a string argument")
-  override def prettyName: String = "graft_quality"
-
-  override protected def nullSafeEval(input: Any): Any =
-    graft.ops.Kernels.qualityUtf8(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.ops.Kernels.qualityUtf8($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): QualityExpression =
-    copy(child = newChild)
-}
+  extends KernelExpression("graft_quality", StringType, DoubleType, "qualityUtf8")
 
 /** Session extension: `.withExtensions(new GraftExtensions)` or config
   * `spark.sql.extensions=graft.plans.GraftExtensions`; for an already-
@@ -236,56 +126,34 @@ object GraftExtensions {
   type FunctionDescription = (FunctionIdentifier, ExpressionInfo,
     Seq[Expression] => Expression)
 
+  /** One row per kernel: SQL name, arity (the row argument plus its
+    * plan-time sizes) and the expression built from the row argument
+    * and the sizes. */
   val functions: Seq[FunctionDescription] = Seq(
-    (new FunctionIdentifier("graft_stem"),
-      new ExpressionInfo(classOf[StemExpression].getName, "graft_stem"),
-      (children: Seq[Expression]) => StemExpression(children.head)),
-    (new FunctionIdentifier("graft_clean"),
-      new ExpressionInfo(classOf[CleanTextExpression].getName, "graft_clean"),
-      (children: Seq[Expression]) => CleanTextExpression(children.head)),
-    (new FunctionIdentifier("graft_simhash"),
-      new ExpressionInfo(classOf[SimHashExpression].getName, "graft_simhash"),
-      (children: Seq[Expression]) => SimHashExpression(children.head)),
-    (new FunctionIdentifier("graft_shingles"),
-      new ExpressionInfo(classOf[ShinglesExpression].getName, "graft_shingles"),
-      (children: Seq[Expression]) => {
-        requireArity(children, 2, "graft_shingles")
-        ShinglesExpression(children.head, intLiteral(children(1), "graft_shingles"))
-      }),
-    (new FunctionIdentifier("graft_minhash"),
-      new ExpressionInfo(classOf[MinhashExpression].getName, "graft_minhash"),
-      (children: Seq[Expression]) => {
-        requireArity(children, 2, "graft_minhash")
-        MinhashExpression(children.head, intLiteral(children(1), "graft_minhash"))
-      }),
-    (new FunctionIdentifier("graft_winnow"),
-      new ExpressionInfo(classOf[WinnowExpression].getName, "graft_winnow"),
-      (children: Seq[Expression]) => {
-        requireArity(children, 3, "graft_winnow")
-        WinnowExpression(children.head,
-          intLiteral(children(1), "graft_winnow"),
-          intLiteral(children(2), "graft_winnow"))
-      }),
-    (new FunctionIdentifier("graft_quality"),
-      new ExpressionInfo(classOf[QualityExpression].getName, "graft_quality"),
-      (children: Seq[Expression]) => {
-        requireArity(children, 1, "graft_quality")
-        QualityExpression(children.head)
-      }))
+    kernel("graft_stem", 1)((c, _) => StemExpression(c)),
+    kernel("graft_clean", 1)((c, _) => CleanTextExpression(c)),
+    kernel("graft_simhash", 1)((c, _) => SimHashExpression(c)),
+    kernel("graft_shingles", 2)((c, s) => ShinglesExpression(c, s(0))),
+    kernel("graft_minhash", 2)((c, s) => MinhashExpression(c, s(0))),
+    kernel("graft_winnow", 3)((c, s) => WinnowExpression(c, s(0), s(1))),
+    kernel("graft_quality", 1)((c, _) => QualityExpression(c)))
 
-  private def requireArity(children: Seq[Expression], n: Int, fn: String): Unit =
-    if (children.length != n) throw new IllegalArgumentException(
-      s"$fn requires exactly $n arguments, got ${children.length}")
-
-  /** The size argument is part of the expression's SHAPE (output
-    * width / gram length), so SQL callers must pass a literal — a
+  /** The size arguments are part of the expression's SHAPE (output
+    * width / gram length), so SQL callers must pass literals — a
     * per-row size would make the plan type data-dependent. */
-  private def intLiteral(e: Expression, fn: String): Int = e match {
-    case org.apache.spark.sql.catalyst.expressions.Literal(v: Int,
-      org.apache.spark.sql.types.IntegerType) => v
-    case other => throw new IllegalArgumentException(
-      s"$fn requires a literal integer size argument, got $other")
-  }
+  private def kernel[E <: KernelExpression: ClassTag](name: String, arity: Int)(
+      build: (Expression, Seq[Int]) => E): FunctionDescription =
+    (new FunctionIdentifier(name),
+      new ExpressionInfo(classTag[E].runtimeClass.getName, name),
+      (children: Seq[Expression]) => {
+        if (children.length != arity) throw new IllegalArgumentException(
+          s"$name requires exactly $arity arguments, got ${children.length}")
+        build(children.head, children.tail.map {
+          case Literal(v: Int, IntegerType) => v
+          case other => throw new IllegalArgumentException(
+            s"$name requires a literal integer size argument, got $other")
+        })
+      })
 
   /** Retrofit the functions into an existing session (e.g. one created
     * without `withExtensions`). */
@@ -301,17 +169,16 @@ object GraftExtensions {
   * session, e.g. `.withExtensions(new GraftExtensions)`). */
 object GraftFunctions {
   import org.apache.spark.sql.Column
-  import org.apache.spark.sql.functions.call_function
+  import org.apache.spark.sql.functions.{call_function, lit}
 
-  def graftStem(c: Column): Column = call_function("graft_stem", c)
-  def graftClean(c: Column): Column = call_function("graft_clean", c)
-  def graftSimhash(c: Column): Column = call_function("graft_simhash", c)
-  def graftShingles(c: Column, n: Int): Column =
-    call_function("graft_shingles", c, org.apache.spark.sql.functions.lit(n))
-  def graftMinhash(c: Column, k: Int): Column =
-    call_function("graft_minhash", c, org.apache.spark.sql.functions.lit(k))
-  def graftWinnow(c: Column, k: Int, w: Int): Column =
-    call_function("graft_winnow", c, org.apache.spark.sql.functions.lit(k),
-      org.apache.spark.sql.functions.lit(w))
-  def graftQuality(c: Column): Column = call_function("graft_quality", c)
+  private def kernel(name: String, c: Column, sizes: Int*): Column =
+    call_function(name, c +: sizes.map(lit(_)): _*)
+
+  def graftStem(c: Column): Column = kernel("graft_stem", c)
+  def graftClean(c: Column): Column = kernel("graft_clean", c)
+  def graftSimhash(c: Column): Column = kernel("graft_simhash", c)
+  def graftShingles(c: Column, n: Int): Column = kernel("graft_shingles", c, n)
+  def graftMinhash(c: Column, k: Int): Column = kernel("graft_minhash", c, k)
+  def graftWinnow(c: Column, k: Int, w: Int): Column = kernel("graft_winnow", c, k, w)
+  def graftQuality(c: Column): Column = kernel("graft_quality", c)
 }

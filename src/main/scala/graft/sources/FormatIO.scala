@@ -22,19 +22,30 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
  *    `save` never matches (MatchError). We use one canonical tag set.
  *
  * Scale notes: sniffing reads exactly two lines via `limit(2)` on a text
- * scan (no full pass); everything else is the built-in readers, which
+ * scan, one job per load (no full pass); everything else is the
+ * built-in readers, which
  * keep pushdown/pruning intact.
  */
 object FormatIO {
 
   val Formats: Set[String] = Set("json", "csv", "txt", "parquet")
 
-  private def firstTwoLines(path: String, spark: SparkSession): Array[String] =
-    spark.read.text(path).limit(2).collect().map(_.getString(0))
+  /** A sniffed CSV dialect: delimiter, header flag and quote char. */
+  case class CsvDialect(delimiter: String, header: Boolean, quote: Option[String])
 
-  /** Pure kernel of [[findDelimiter]] over the first two lines —
-    * exposed for property testing (the sniffers' logic is line-local;
-    * only the two-line read needs Spark). */
+  /** Sniff `path`'s CSV dialect from its first two lines, read once
+    * (one Spark job) and handed to the pure kernels [[delimiterOf]],
+    * [[headerOf]] and [[escapeOf]]. */
+  def sniffCsv(path: String, spark: SparkSession): CsvDialect = {
+    val lines = spark.read.text(path).limit(2).collect().map(_.getString(0))
+    val delim = delimiterOf(lines)
+    CsvDialect(delim, headerOf(lines, delim), escapeOf(lines, delim))
+  }
+
+  /** Intended S5 semantics (the pure kernel of [[sniffCsv]]'s
+    * delimiter, exposed for property testing): pick the first of
+    * `, | : \t` whose count is equal and non-zero across the first two
+    * lines; else ";". */
   private[sources] def delimiterOf(lines: Array[String]): String = {
     if (lines.length < 2) return ","
     val (l1, l2) = (lines(0), lines(1))
@@ -45,12 +56,8 @@ object FormatIO {
       .getOrElse(";")
   }
 
-  /** Intended S5 semantics: pick the first of `, | : \t` whose count is
-    * equal and non-zero across the first two lines; else ";". */
-  def findDelimiter(path: String, spark: SparkSession): String =
-    delimiterOf(firstTwoLines(path, spark))
-
-  /** Pure kernel of [[detectEscape]] (reference algorithm, kept). */
+  /** S6: quote char is `"` or `'` iff the longest multi-word field of
+    * the second line starts with it (reference algorithm, kept). */
   private[sources] def escapeOf(lines: Array[String], delim: String): Option[String] = {
     if (lines.length < 2) return None
     val parts = lines(1).split(java.util.regex.Pattern.quote(delim))
@@ -63,15 +70,11 @@ object FormatIO {
     }
   }
 
-  /** S6: quote char is `"` or `'` iff the longest multi-word field of
-    * the second line starts with it (reference algorithm, kept). */
-  def detectEscape(path: String, delim: String, spark: SparkSession): Option[String] =
-    escapeOf(firstTwoLines(path, spark), delim)
-
   private def looksNumeric(s: String): Boolean =
     s.nonEmpty && scala.util.Try(s.trim.toDouble).isSuccess
 
-  /** Pure kernel of [[hasHeader]]. */
+  /** Intended S7 semantics: the first line is a header iff some field
+    * that is numeric on line 2 is non-numeric on line 1. */
   private[sources] def headerOf(lines: Array[String], delim: String): Boolean = {
     if (lines.length < 2) return false
     val q = java.util.regex.Pattern.quote(delim)
@@ -80,14 +83,9 @@ object FormatIO {
     f1.zip(f2).exists { case (a, b) => looksNumeric(b) && !looksNumeric(a) }
   }
 
-  /** Intended S7 semantics: the first line is a header iff some field
-    * that is numeric on line 2 is non-numeric on line 1. */
-  def hasHeader(path: String, delim: String, spark: SparkSession): Boolean =
-    headerOf(firstTwoLines(path, spark), delim)
-
   /** CSV load with a KNOWN dialect — the entry point for callers that
-    * already ran the sniffers (or know the dialect out of band), so
-    * the two-line probe jobs are not re-run per file. `load("csv")`
+    * already ran [[sniffCsv]] (or know the dialect out of band), so
+    * the two-line probe job is not re-run per file. `load("csv")`
     * is sniff-then-this. */
   def loadCsvWithDialect(path: String, spark: SparkSession, delim: String,
                          header: Boolean, quote: Option[String]): DataFrame = {
@@ -100,11 +98,6 @@ object FormatIO {
       case None    => base.csv(path)
     }
   }
-
-  private def csvLoad(path: String, header: Boolean, delim: String,
-                      spark: SparkSession): DataFrame =
-    loadCsvWithDialect(path, spark, delim, header,
-      detectEscape(path, delim, spark))
 
   /** CSV load with a QUARANTINE channel — the corrupt-row-safe ingest
     * contract for typed feeds: parse against an EXPLICIT schema in
@@ -191,9 +184,8 @@ object FormatIO {
     format.toLowerCase match {
       case "json" => Some((spark.read.json(path), "json"))
       case "csv" =>
-        val delim = findDelimiter(path, spark)
-        val header = hasHeader(path, delim, spark)
-        Some((csvLoad(path, header, delim, spark), "csv"))
+        val d = sniffCsv(path, spark)
+        Some((loadCsvWithDialect(path, spark, d.delimiter, d.header, d.quote), "csv"))
       case "txt" | "text" => Some((spark.read.text(path), "txt"))
       case "parquet" | "par" => Some((spark.read.parquet(path), "parquet"))
       case "orc" => Some((spark.read.orc(path), "orc"))

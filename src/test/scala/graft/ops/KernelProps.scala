@@ -33,8 +33,8 @@ object KernelProps extends Properties("kernels") {
 
   property("signatureOf: length k, superset never raises a component") =
     forAll(Gen.listOf(word), Gen.listOf(word), Gen.choose(1, 16)) { (a, b, k) =>
-      val sa = Dedup.signatureOf(a.toArray, k)
-      val sab = Dedup.signatureOf((a ++ b).toArray, k)
+      val sa = KernelOracles.signatureOf(a.toArray, k)
+      val sab = KernelOracles.signatureOf((a ++ b).toArray, k)
       Prop(sa.length == k) &&
         // components are UNSIGNED minima (sentinel -1L = unsigned max)
         Prop(sa.zip(sab).forall { case (x, y) =>
@@ -54,7 +54,7 @@ object KernelProps extends Properties("kernels") {
       "a" -> Seq(9142521914358854863L, 6295000011630674256L,
         3447478108902493649L))
     Prop.all(expected.toSeq.map { case (g, want) =>
-      Prop(Dedup.signatureOf(Array(g), 3).toSeq == want) :| s"gram '$g'"
+      Prop(KernelOracles.signatureOf(Array(g), 3).toSeq == want) :| s"gram '$g'"
     }: _*)
   }
 
@@ -113,12 +113,12 @@ object KernelProps extends Properties("kernels") {
 
   property("winnow: fingerprints are a subset of all k-gram hashes, never empty for len >= k") =
     forAll(Gen.choose(2, 8), flatText) { (k, t) =>
-      val fp = Fingerprint.winnowScalar(t, k, 4)
+      val fp = KernelOracles.winnowScalar(t, k, 4)
       if (t.length < k) Prop(fp.isEmpty)
       else {
         val md = java.security.MessageDigest.getInstance("MD5")
         val all = (0 to t.length - k)
-          .map(i => Dedup.md5Base60(md, t.substring(i, i + k))).toSet
+          .map(i => KernelOracles.md5Base60(md, t.substring(i, i + k))).toSet
         Prop(fp.nonEmpty) && Prop(fp.toSet.subsetOf(all))
       }
     }
@@ -134,7 +134,7 @@ object KernelProps extends Properties("kernels") {
           org.apache.spark.unsafe.types.UTF8String.fromString(t), k, w)
         (0 until arr.numElements()).map(arr.getLong)
       }
-      Prop(viaKernel == Fingerprint.winnowScalar(t, k, w)) :|
+      Prop(viaKernel == KernelOracles.winnowScalar(t, k, w)) :|
         s"k=$k w=$w t='$t'"
     }
 
@@ -143,8 +143,8 @@ object KernelProps extends Properties("kernels") {
       flatText) { (k, w, prefix, shared0, suffix) =>
       // pad the shared span to the guarantee length w + k - 1
       val shared = (shared0 + ("z" * (w + k - 1))).take(w + k - 1 + shared0.length)
-      val a = Fingerprint.winnowScalar(prefix + shared, k, w).toSet
-      val b = Fingerprint.winnowScalar(shared + suffix, k, w).toSet
+      val a = KernelOracles.winnowScalar(prefix + shared, k, w).toSet
+      val b = KernelOracles.winnowScalar(shared + suffix, k, w).toSet
       Prop(a.intersect(b).nonEmpty) :| s"k=$k w=$w shared='$shared'"
     }
 

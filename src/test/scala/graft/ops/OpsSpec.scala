@@ -160,7 +160,7 @@ class OpsSpec extends AnyFunSuite with SparkTestSession {
     for (n <- Seq(1, 3)) {
       val both = docs.select(
         Dedup.shingles(org.apache.spark.sql.functions.col("text"), n).as("u"),
-        Dedup.shinglesExpr(org.apache.spark.sql.functions.col("text"), n).as("e"))
+        KernelOracles.shinglesExpr(org.apache.spark.sql.functions.col("text"), n).as("e"))
         .collect()
       for (r <- both)
         assert(r.getSeq[String](0).sorted === r.getSeq[String](1).sorted, s"n=$n")
@@ -332,9 +332,9 @@ class OpsSpec extends AnyFunSuite with SparkTestSession {
   }
 
   test("winnowing fingerprints: deterministic, robust to prefix shift") {
-    val a = Fingerprint.winnowScalar("abcdefghijklmnop", 5, 4)
-    assert(a === Fingerprint.winnowScalar("abcdefghijklmnop", 5, 4))
-    val shifted = Fingerprint.winnowScalar("xyabcdefghijklmnop", 5, 4)
+    val a = KernelOracles.winnowScalar("abcdefghijklmnop", 5, 4)
+    assert(a === KernelOracles.winnowScalar("abcdefghijklmnop", 5, 4))
+    val shifted = KernelOracles.winnowScalar("xyabcdefghijklmnop", 5, 4)
     // shared k-gram minima survive the shift (winnowing guarantee)
     assert(a.toSet.intersect(shifted.toSet).nonEmpty)
   }
@@ -352,7 +352,7 @@ class OpsSpec extends AnyFunSuite with SparkTestSession {
         ((r.getLong(1), r.getLong(2), r.getString(3)))).toMap
     for ((id, text) <- Seq(1L -> "the quick brown fox jumps over the lazy dog",
                            3L -> "pack my box with five dozen liquor jugs")) {
-      val fps = Fingerprint.winnowScalar(text, 8, 4)
+      val fps = KernelOracles.winnowScalar(text, 8, 4)
       val (ng, nfp, dig) = out(id)
       assert(ng === text.length - 7)
       assert(nfp === fps.size.toLong)
@@ -3219,7 +3219,7 @@ class OpsSpec extends AnyFunSuite with SparkTestSession {
       TextStats.qualityScore(c("text")).as("q"))
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     val viaHof = fixture.select(c("doc_id"),
-      TextStats.qualityScoreHof(c("text")).as("q"))
+      KernelOracles.qualityScoreHof(c("text")).as("q"))
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(viaKernel === viaHof)
     assert(viaKernel.nonEmpty)
@@ -3234,7 +3234,7 @@ class OpsSpec extends AnyFunSuite with SparkTestSession {
       .toDF("id", "t")
     val k = df.select(c("id"), TextStats.qualityScore(c("t")).as("q"))
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val h = df.select(c("id"), TextStats.qualityScoreHof(c("t")).as("q"))
+    val h = df.select(c("id"), KernelOracles.qualityScoreHof(c("t")).as("q"))
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(k === h, s"kernel=$k hof=$h")
     assert(k(0L) === 0.6) // the pinned NULL contract

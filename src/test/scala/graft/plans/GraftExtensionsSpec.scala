@@ -36,7 +36,7 @@ class GraftExtensionsSpec extends AnyFunSuite with graft.SparkTestSession {
     // the UDF form EXPLICITLY (simhashCol itself is expression-backed
     // since round 9, so comparing against it would be a tautology)
     val viaUdf = docs.select(col("doc_id"),
-      graft.ops.SimHash.simhashUdf(
+      graft.ops.KernelOracles.simhashUdf(
         org.apache.spark.sql.functions.split(
           graft.ops.Dedup.normalized(col("text")), " ")).as("sig"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -84,7 +84,7 @@ class GraftExtensionsSpec extends AnyFunSuite with graft.SparkTestSession {
         graft.ops.Dedup.shingles(col("text"), n).as("sh"))
         .collect().map(r => r.getLong(0) -> r.getSeq[String](1)).toMap
       val viaUdf = docs.select(col("doc_id"),
-        graft.ops.Dedup.shinglesUdf(col("text"), n).as("sh"))
+        graft.ops.KernelOracles.shinglesUdf(col("text"), n).as("sh"))
         .collect().map(r => r.getLong(0) -> r.getSeq[String](1)).toMap
       assert(viaExpr === viaUdf, s"n=$n")
     }
@@ -108,7 +108,7 @@ class GraftExtensionsSpec extends AnyFunSuite with graft.SparkTestSession {
       graft.ops.Dedup.minhashSignature(col("sh"), 12).as("sig"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     val viaUdf = sh.select(col("doc_id"),
-      graft.ops.Dedup.minhashSignatureUdf(col("sh"), 12).as("sig"))
+      graft.ops.KernelOracles.minhashSignatureUdf(col("sh"), 12).as("sig"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     assert(viaExpr === viaUdf)
     assert(viaExpr.size === docs.count())
@@ -133,7 +133,7 @@ class GraftExtensionsSpec extends AnyFunSuite with graft.SparkTestSession {
   }
 
   test("graft_winnow matches the HOF chain and the scalar reference bit-for-bit") {
-    import org.apache.spark.sql.functions.{col, length}
+    import org.apache.spark.sql.functions.col
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .select(col("doc_id"),
         graft.ops.Dedup.normalized(col("text")).as("__norm"))
@@ -141,8 +141,8 @@ class GraftExtensionsSpec extends AnyFunSuite with graft.SparkTestSession {
       val viaKernel = docs.select(col("doc_id"),
         GraftFunctions.graftWinnow(col("__norm"), k, w).as("fps"))
         .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
-      val viaHof = docs.select(col("doc_id"),
-        graft.ops.Fingerprint.winnowHof(col("__norm"), k, w).as("fps"))
+      val viaHof = graft.ops.KernelOracles.winnowHof(docs, "__norm", k, w)
+        .select(col("doc_id"), col("fps"))
         .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
       assert(viaKernel === viaHof, s"k=$k w=$w") // exact order + values
     }
@@ -161,7 +161,7 @@ class GraftExtensionsSpec extends AnyFunSuite with graft.SparkTestSession {
       val viaSql = spark.sql(
         s"SELECT graft_winnow('${norm.replace("'", "''")}', 8, 4)")
         .head().getSeq[Long](0)
-      assert(viaSql === graft.ops.Fingerprint.winnowScalar(norm, 8, 4)
+      assert(viaSql === graft.ops.KernelOracles.winnowScalar(norm, 8, 4)
         .toSeq, s"case: $s")
     }
     // the public summary still reports gram counts through the pure
@@ -172,7 +172,7 @@ class GraftExtensionsSpec extends AnyFunSuite with graft.SparkTestSession {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val viaArr = docs.select(col("doc_id"),
       org.apache.spark.sql.functions.size(
-        graft.ops.Fingerprint.gramHashArray(col("__norm"), 8))
+        graft.ops.KernelOracles.gramHashArray(col("__norm"), 8))
         .cast("long").as("n"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(viaSummary === viaArr)
@@ -219,11 +219,18 @@ class GraftExtensionsSpec extends AnyFunSuite with graft.SparkTestSession {
   }
 
   test("wrong arity or non-literal size fails with a clear message") {
-    val wrongArity = intercept[Exception] {
-      spark.sql("SELECT graft_shingles('a b c') AS s").collect()
+    for ((call, want) <- Seq(
+        "graft_shingles('a b c')" -> "graft_shingles requires exactly 2 arguments",
+        "graft_stem('running', 'x')" -> "graft_stem requires exactly 1 arguments",
+        "graft_stem()" -> "graft_stem requires exactly 1 arguments",
+        "graft_clean('a', 'b')" -> "graft_clean requires exactly 1 arguments",
+        "graft_simhash('a', 'b')" -> "graft_simhash requires exactly 1 arguments")) {
+      val wrongArity = intercept[Exception] {
+        spark.sql(s"SELECT $call AS s").collect()
+      }
+      assert(wrongArity.getMessage.contains(want),
+        s"$call: ${wrongArity.getMessage.take(300)}")
     }
-    assert(wrongArity.getMessage.contains("exactly 2 arguments"),
-      wrongArity.getMessage.take(300))
     val nonLiteral = intercept[Exception] {
       spark.sql("SELECT graft_minhash(array('a'), length('xx')) AS s").collect()
     }
@@ -241,5 +248,63 @@ class GraftExtensionsSpec extends AnyFunSuite with graft.SparkTestSession {
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("*("), plan.take(1000)) // codegen stage marker
     assert(plan.contains("graft_clean"), plan.take(1000))
+  }
+
+  test("every registered kernel: SQL == Column API, interpreted == codegen, " +
+      "null -> null, inside whole-stage codegen") {
+    import org.apache.spark.sql.{Column, DataFrame}
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.functions.{col, split}
+    // per registry entry: the row argument over column `text`, the
+    // plan-time sizes, and the Column-API call; an entry without a row
+    // here fails the key-set check
+    val calls: Map[String, (String, Seq[Int], Column => Column)] = Map(
+      "graft_stem" -> (("text", Nil, GraftFunctions.graftStem)),
+      "graft_clean" -> (("text", Nil, GraftFunctions.graftClean)),
+      "graft_simhash" -> (("text", Nil, GraftFunctions.graftSimhash)),
+      "graft_shingles" -> (("text", Seq(3), GraftFunctions.graftShingles(_, 3))),
+      "graft_minhash" -> (("split(text, ' ')", Seq(8),
+        c => GraftFunctions.graftMinhash(split(c, " "), 8))),
+      "graft_winnow" -> (("text", Seq(8, 4), GraftFunctions.graftWinnow(_, 8, 4))),
+      "graft_quality" -> (("text", Nil, GraftFunctions.graftQuality)))
+    assert(GraftExtensions.functions.map(_._1.funcName).toSet === calls.keySet)
+    // the fixture corpus with every 7th text nulled
+    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+      .selectExpr("doc_id",
+        "CASE WHEN doc_id % 7 = 0 THEN NULL ELSE text END AS text")
+    docs.createOrReplaceTempView("graft_kernel_docs")
+    val nullIds = docs.where(col("text").isNull).collect().map(_.getLong(0)).toSet
+    assert(nullIds.nonEmpty)
+    def rows(df: DataFrame): Map[Long, Any] =
+      df.collect().map(r => r.getLong(0) -> r.get(1)).toMap
+    try for ((ident, info, builder) <- GraftExtensions.functions) {
+      val name = ident.funcName
+      val (arg, sizes, columnCall) = calls(name)
+      // the row builds the class it advertises, under its own name
+      val built = builder(Literal("x") +: sizes.map(Literal(_)))
+      assert(built.getClass.getName === info.getClassName, name)
+      assert(built.prettyName === name)
+      val query = s"SELECT doc_id, $name(${(arg +: sizes).mkString(", ")}) " +
+        "FROM graft_kernel_docs"
+      val viaSql = spark.sql(query)
+      val codegen = rows(viaSql)
+      val plan = viaSql.queryExecution.executedPlan.toString
+      assert(plan.linesIterator.exists(l => l.contains("*(") && l.contains(s"$name(")),
+        s"$name left the codegen span:\n$plan")
+      assert(rows(docs.select(col("doc_id"), columnCall(col("text")))) === codegen,
+        s"$name: SQL != Column API")
+      assert(codegen.collect { case (id, null) => id }.toSet === nullIds,
+        s"$name: null in != null out")
+      spark.conf.set("spark.sql.codegen.wholeStage", "false")
+      spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
+      try {
+        val interpreted = spark.sql(query)
+        assert(!interpreted.queryExecution.executedPlan.toString.contains("*("))
+        assert(rows(interpreted) === codegen, s"$name: interpreted != codegen")
+      } finally {
+        spark.conf.unset("spark.sql.codegen.wholeStage")
+        spark.conf.unset("spark.sql.codegen.factoryMode")
+      }
+    } finally spark.catalog.dropTempView("graft_kernel_docs")
   }
 }

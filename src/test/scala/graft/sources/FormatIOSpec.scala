@@ -18,35 +18,44 @@ class FormatIOSpec extends AnyFunSuite with SparkTestSession {
   }
 
   test("delimiter sniffing: comma / pipe / colon / tab / fallback semicolon") {
-    assert(FormatIO.findDelimiter(
-      tmpFile("a.csv", "a,b,c\n1,2,3\n"), spark) === ",")
-    assert(FormatIO.findDelimiter(
-      tmpFile("b.csv", "a|b|c\n1|2|3\n"), spark) === "|")
-    assert(FormatIO.findDelimiter(
-      tmpFile("c.csv", "a:b:c\n1:2:3\n"), spark) === ":")
-    assert(FormatIO.findDelimiter(
-      tmpFile("d.csv", "a\tb\tc\n1\t2\t3\n"), spark) === "\t")
-    assert(FormatIO.findDelimiter(
-      tmpFile("e.csv", "a;b;c\n1;2;3\n"), spark) === ";")
+    assert(FormatIO.sniffCsv(
+      tmpFile("a.csv", "a,b,c\n1,2,3\n"), spark).delimiter === ",")
+    assert(FormatIO.sniffCsv(
+      tmpFile("b.csv", "a|b|c\n1|2|3\n"), spark).delimiter === "|")
+    assert(FormatIO.sniffCsv(
+      tmpFile("c.csv", "a:b:c\n1:2:3\n"), spark).delimiter === ":")
+    assert(FormatIO.sniffCsv(
+      tmpFile("d.csv", "a\tb\tc\n1\t2\t3\n"), spark).delimiter === "\t")
+    assert(FormatIO.sniffCsv(
+      tmpFile("e.csv", "a;b;c\n1;2;3\n"), spark).delimiter === ";")
   }
 
   test("delimiter sniffing: inconsistent counts fall through (Q1 fixed)") {
     // commas differ between lines (1 vs 2) but pipes agree
-    assert(FormatIO.findDelimiter(
-      tmpFile("f.csv", "a,x|b|c\n1|2|3,4,5\n"), spark) === "|")
+    assert(FormatIO.sniffCsv(
+      tmpFile("f.csv", "a,x|b|c\n1|2|3,4,5\n"), spark).delimiter === "|")
   }
 
   test("header sniffing: header iff first row breaks numeric pattern (Q3 fixed)") {
-    assert(FormatIO.hasHeader(
-      tmpFile("g.csv", "id,score\n1,2.5\n"), ",", spark) === true)
-    assert(FormatIO.hasHeader(
-      tmpFile("h.csv", "1,2.5\n2,3.5\n"), ",", spark) === false)
+    assert(FormatIO.sniffCsv(
+      tmpFile("g.csv", "id,score\n1,2.5\n"), spark).header === true)
+    assert(FormatIO.sniffCsv(
+      tmpFile("h.csv", "1,2.5\n2,3.5\n"), spark).header === false)
   }
 
   test("escape sniffing: quoted long field detected") {
     val p = tmpFile("i.csv",
       "h1,h2\n\"a long quoted text field here\",2\n")
-    assert(FormatIO.detectEscape(p, ",", spark) === Some("\""))
+    assert(FormatIO.sniffCsv(p, spark).quote === Some("\""))
+  }
+
+  test("csv sniff reads a multi-part directory's first two lines in one job") {
+    val dir = Files.createTempDirectory("graft-io-sniff")
+    for (i <- 0 until 4)
+      Files.writeString(dir.resolve(s"part-$i.csv"), s"id|txt\n$i|x\n")
+    var d: FormatIO.CsvDialect = null
+    assert(jobsDuring { d = FormatIO.sniffCsv(dir.toString, spark) } === 1)
+    assert(d === FormatIO.CsvDialect("|", header = true, quote = None))
   }
 
   test("csv sniffed load infers schema") {
