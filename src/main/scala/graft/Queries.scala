@@ -175,12 +175,16 @@ object Queries {
       .filter(col("n") >= 5)
       .orderBy(desc("n"), asc("word"))
 
-  /** The cleaning regex chain as pure Catalyst expressions (codegen). */
-  def q5CleanText(spark: SparkSession, dir: String): DataFrame =
+  /** The reference cleaning chain as the native `graft_clean` kernel
+    * (codegen; the oracle replays the regex chain). */
+  def q5CleanText(spark: SparkSession, dir: String): DataFrame = {
+    import org.apache.spark.sql.graft.ColumnBridge
     t(spark, dir, "documents")
       .select(col("doc_id"),
-        TextClean.cleanStringCol(col("text")).as("cleaned"))
+        ColumnBridge.column(graft.plans.CleanTextExpression(
+          ColumnBridge.expression(col("text")))).as("cleaned"))
       .orderBy("doc_id")
+  }
 
   /** Distinct values of a low-cardinality column. */
   def q6Distinct(spark: SparkSession, dir: String): DataFrame =

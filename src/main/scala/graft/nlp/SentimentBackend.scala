@@ -1,6 +1,6 @@
 package graft.nlp
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions._
 
@@ -106,10 +106,4 @@ object SentimentFunctions {
 
   /** databricks-corenlp-style `sentiment(col)` alias (U9). */
   def sentiment(text: Column): Column = sentimentUdf()(text)
-
-  /** Score a frame, reference §3.1 output shape. */
-  def scoreSentences(df: DataFrame, textCol: String,
-                     outputCol: String = "computed",
-                     backend: SentimentBackend = WordScoreBackend): DataFrame =
-    df.withColumn(outputCol, sentimentUdf(backend)(col(textCol)))
 }

@@ -8,7 +8,7 @@ import org.apache.spark.unsafe.types.UTF8String
  * Static Catalyst-typed kernels: the one method each per-row native
  * expression ([[graft.plans.KernelExpression]]: `graft_stem`,
  * `graft_clean`, `graft_simhash`, `graft_shingles`, `graft_minhash`,
- * `graft_winnow`, `graft_quality`) calls, from generated code and from
+ * `graft_winnow`, `graft_quality`, `graft_normalize`) calls, from generated code and from
  * the interpreted path alike.
  *
  * These operate directly on `UTF8String` / `ArrayData` so the
@@ -30,6 +30,10 @@ object Kernels {
   /** The tweet cleaning chain ([[graft.text.TextClean.cleanString]]). */
   def cleanUtf8(text: UTF8String): UTF8String =
     UTF8String.fromString(graft.text.TextClean.cleanString(text.toString))
+
+  /** The tweet normalisation chain ([[graft.text.TextClean.normalize]]). */
+  def normalizeUtf8(text: UTF8String, stem: Boolean, fullEmoji: Boolean): UTF8String =
+    UTF8String.fromString(graft.text.TextClean.normalize(text.toString, stem, fullEmoji))
 
   /** 64-bit SimHash of the normalized text ([[SimHash.simhashOfText]]). */
   def simhashUtf8(text: UTF8String): Long =

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
 /**
@@ -34,12 +34,6 @@ object Layout {
       .format("parquet")
     (if (path.nonEmpty) w.option("path", path) else w).saveAsTable(table)
   }
-
-  /** Join two bucketed tables on their bucket key. With matching
-    * bucket counts neither side shuffles (asserted in LayoutSpec). */
-  def cogroupJoin(spark: SparkSession, leftTable: String,
-                  rightTable: String, key: String): DataFrame =
-    spark.table(leftTable).join(spark.table(rightTable), key)
 
   /**
    * Skew-safe equi-join: explode the SMALL side `saltFactor` times and

@@ -203,11 +203,4 @@ object Novelty {
       .withColumn(flagCol, size(col("__sh")) === 0 || !anyHit(col("__bhs")))
       .drop("__sh", "__sig", "__bhs")
   }
-
-  /** File-source stream wired through [[nearNovel]]. */
-  def streamNearNovel(spark: SparkSession, dir: String, index: BandIndex,
-                      textCol: String): DataFrame = {
-    val schema = spark.read.parquet(dir).schema
-    nearNovel(spark.readStream.schema(schema).parquet(dir), index, textCol)
-  }
 }

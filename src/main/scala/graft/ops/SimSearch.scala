@@ -26,7 +26,9 @@ import graft.sources.ParquetMeta
  */
 object SimSearch {
 
-  /** Dot product of two double-array columns (codegen, per row). */
+  /** Dot product of two double-array columns, per row. `zip_with` and
+    * `aggregate` are higher-order functions, evaluated interpreted
+    * (`CodegenFallback`) inside the generated stage. */
   def dot(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, v) => acc + v)
 

@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType, LongType, StringType}
+import org.apache.spark.sql.types.{ArrayType, BooleanType, DataType, DoubleType, IntegerType, LongType, StringType}
 
 /**
  * Native Catalyst expressions + session extension registration — the
@@ -30,8 +30,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType,
  *  - `graft_simhash(str)` — 64-bit SimHash of the normalized text
  *    (same semantics as [[graft.ops.SimHash.simhashCol]]);
  *  - `graft_shingles(str, n)`, `graft_minhash(array<string>, k)`,
- *    `graft_winnow(str, k, w)`, `graft_quality(str)` — documented on
- *    their expressions below.
+ *    `graft_winnow(str, k, w)`, `graft_quality(str)`,
+ *    `graft_normalize(str, stem, full_emoji)` — documented on their
+ *    expressions below.
  */
 abstract class KernelExpression(
     override val prettyName: String,
@@ -39,20 +40,19 @@ abstract class KernelExpression(
     override val dataType: DataType,
     kernel: String) extends UnaryExpression with Serializable {
 
-  /** Every constructor field after `child` is a plan-time integer
-    * literal (a size that fixes the output's shape), passed to the
-    * kernel after the row value, in declaration order. */
-  private lazy val sizes: Seq[Int] =
-    productIterator.drop(1).map { case i: Int => i }.toSeq
+  /** Every constructor field after `child` is a plan-time literal — an
+    * integer size that fixes the output's shape, or a boolean switch —
+    * passed to the kernel after the row value, in declaration order. */
+  private lazy val sizes: Seq[Any] = productIterator.drop(1).toSeq
 
   override def nullIntolerant: Boolean = true
 
   override def checkInputDataTypes(): TypeCheckResult =
     if (DataTypeUtils.equalsIgnoreNullability(child.dataType, inputType) &&
-        sizes.forall(_ > 0)) TypeCheckResult.TypeCheckSuccess
+        sizes.forall { case i: Int => i > 0; case _ => true }) TypeCheckResult.TypeCheckSuccess
     else TypeCheckResult.TypeCheckFailure(
       s"$prettyName requires an argument of type ${inputType.simpleString}" +
-        (if (sizes.isEmpty) "" else " and positive literal sizes"))
+        (if (sizes.exists(_.isInstanceOf[Int])) " and positive literal sizes" else ""))
 
   /** The interpreted path invokes the same static method the
     * generated code calls (as Spark's `StaticInvoke` does), so the two
@@ -114,6 +114,15 @@ case class WinnowExpression(child: Expression, k: Int, w: Int)
 case class QualityExpression(child: Expression)
   extends KernelExpression("graft_quality", StringType, DoubleType, "qualityUtf8")
 
+/** The tweet normalisation chain of [[graft.text.TextClean.cleanSource]]
+  * (`graft_normalize(text, stem, full_emoji)`): optional Porter stem,
+  * tweet tokenizer, emoji substitution (the built-in emoticon map, or
+  * the full 914-entry table), the cleaning rules, whitespace split and
+  * English stop-word removal, joined — one static call per row in
+  * place of a Scala UDF and two MLlib projections. */
+case class NormalizeExpression(child: Expression, stem: Boolean, fullEmoji: Boolean)
+  extends KernelExpression("graft_normalize", StringType, StringType, "normalizeUtf8")
+
 /** Session extension: `.withExtensions(new GraftExtensions)` or config
   * `spark.sql.extensions=graft.plans.GraftExtensions`; for an already-
   * running session use [[GraftExtensions.register]]. */
@@ -126,32 +135,37 @@ object GraftExtensions {
   type FunctionDescription = (FunctionIdentifier, ExpressionInfo,
     Seq[Expression] => Expression)
 
-  /** One row per kernel: SQL name, arity (the row argument plus its
-    * plan-time sizes) and the expression built from the row argument
-    * and the sizes. */
+  /** One row per kernel: SQL name, the types of its plan-time literal
+    * arguments after the row argument, and the expression built from
+    * the row argument and the literals. */
   val functions: Seq[FunctionDescription] = Seq(
-    kernel("graft_stem", 1)((c, _) => StemExpression(c)),
-    kernel("graft_clean", 1)((c, _) => CleanTextExpression(c)),
-    kernel("graft_simhash", 1)((c, _) => SimHashExpression(c)),
-    kernel("graft_shingles", 2)((c, s) => ShinglesExpression(c, s(0))),
-    kernel("graft_minhash", 2)((c, s) => MinhashExpression(c, s(0))),
-    kernel("graft_winnow", 3)((c, s) => WinnowExpression(c, s(0), s(1))),
-    kernel("graft_quality", 1)((c, _) => QualityExpression(c)))
+    kernel("graft_stem")((c, _) => StemExpression(c)),
+    kernel("graft_clean")((c, _) => CleanTextExpression(c)),
+    kernel("graft_simhash")((c, _) => SimHashExpression(c)),
+    kernel("graft_shingles", IntegerType)((c, s) => ShinglesExpression(c, s(0).asInstanceOf[Int])),
+    kernel("graft_minhash", IntegerType)((c, s) => MinhashExpression(c, s(0).asInstanceOf[Int])),
+    kernel("graft_winnow", IntegerType, IntegerType)((c, s) =>
+      WinnowExpression(c, s(0).asInstanceOf[Int], s(1).asInstanceOf[Int])),
+    kernel("graft_quality")((c, _) => QualityExpression(c)),
+    kernel("graft_normalize", BooleanType, BooleanType)((c, s) =>
+      NormalizeExpression(c, s(0).asInstanceOf[Boolean], s(1).asInstanceOf[Boolean])))
 
-  /** The size arguments are part of the expression's SHAPE (output
-    * width / gram length), so SQL callers must pass literals — a
-    * per-row size would make the plan type data-dependent. */
-  private def kernel[E <: KernelExpression: ClassTag](name: String, arity: Int)(
-      build: (Expression, Seq[Int]) => E): FunctionDescription =
+  /** The literal arguments are part of the expression's SHAPE (output
+    * width / gram length, or a plan-time switch), so SQL callers must
+    * pass literals — a per-row value would make the plan data-dependent. */
+  private def kernel[E <: KernelExpression: ClassTag](name: String, literals: DataType*)(
+      build: (Expression, Seq[Any]) => E): FunctionDescription =
     (new FunctionIdentifier(name),
       new ExpressionInfo(classTag[E].runtimeClass.getName, name),
       (children: Seq[Expression]) => {
+        val arity = 1 + literals.length
         if (children.length != arity) throw new IllegalArgumentException(
           s"$name requires exactly $arity arguments, got ${children.length}")
-        build(children.head, children.tail.map {
-          case Literal(v: Int, IntegerType) => v
-          case other => throw new IllegalArgumentException(
-            s"$name requires a literal integer size argument, got $other")
+        build(children.head, children.tail.zip(literals).map {
+          case (Literal(v, t), want) if t == want && v != null => v
+          case (other, want) => throw new IllegalArgumentException(
+            s"$name requires a literal ${if (want == IntegerType) "integer size" else want.simpleString} " +
+              s"argument, got $other")
         })
       })
 
@@ -171,8 +185,8 @@ object GraftFunctions {
   import org.apache.spark.sql.Column
   import org.apache.spark.sql.functions.{call_function, lit}
 
-  private def kernel(name: String, c: Column, sizes: Int*): Column =
-    call_function(name, c +: sizes.map(lit(_)): _*)
+  private def kernel(name: String, c: Column, literals: Any*): Column =
+    call_function(name, c +: literals.map(lit(_)): _*)
 
   def graftStem(c: Column): Column = kernel("graft_stem", c)
   def graftClean(c: Column): Column = kernel("graft_clean", c)
@@ -181,4 +195,6 @@ object GraftFunctions {
   def graftMinhash(c: Column, k: Int): Column = kernel("graft_minhash", c, k)
   def graftWinnow(c: Column, k: Int, w: Int): Column = kernel("graft_winnow", c, k, w)
   def graftQuality(c: Column): Column = kernel("graft_quality", c)
+  def graftNormalize(c: Column, stem: Boolean, fullEmoji: Boolean): Column =
+    kernel("graft_normalize", c, stem, fullEmoji)
 }

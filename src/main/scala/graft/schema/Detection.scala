@@ -1,6 +1,6 @@
 package graft.schema
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -17,9 +17,9 @@ import org.apache.spark.sql.types._
  *    actually created;
  *  - the reference re-runs `take(limit)` up to 3x per column per
  *    predicate and one aggregate job per string column; we compute every
- *    signal in ONE multi-aggregate job over one `limit(n)` sample —
- *    at 100 TB the detection pass costs one bounded scan, not
- *    O(columns x predicates) scans.
+ *    signal from ONE `take(n)` sample folded on the driver — at 100 TB
+ *    the detection pass costs one bounded scan, not O(columns x
+ *    predicates) scans, and no shuffle.
  *
  * Threshold constants and tie-break order match the reference exactly
  * (`categoricalSizeLimit=5`, `minimumTextSize=5`, default sample 100;
@@ -58,33 +58,37 @@ object Detection {
       distinctCount: Map[String, Long],
       firstValue: Map[String, String])
 
-  /** One multi-aggregate job over a `limit(n)` sample: per string column
-    * avg word count + first value, per integer column distinct count. */
+  /** One `take(n)` job, folded on the driver: per string column the
+    * average of `size(split(c, " "))` and the first value, per integer
+    * column the distinct non-null count. The sample is the first `n`
+    * rows in partition order. The fold keeps the aggregate's
+    * semantics: a null cell's size is -1 under Spark's legacy
+    * `sizeOfNull` (ANSI off), else null and left out of the average;
+    * an average over no sizes is 0.0. */
   def measure(df: DataFrame, limit: Int = defaultSampleSize): Signals = {
     val sCols = stringColumns(df)
     val iCols = integerColumns(df)
-    val sample = df.limit(limit)
-    val aggs: Seq[Column] =
-      Seq(count(lit(1)).as("__n")) ++
-        // string columns need only avg word count + first value; no
-        // consumer reads string distinct counts, so don't pay for them
-        sCols.flatMap { c =>
-          Seq(
-            avg(size(split(col(c), " "))).as(s"__wc__$c"),
-            first(col(c), ignoreNulls = false).as(s"__fv__$c"))
-        } ++
-        iCols.map(c => countDistinct(col(c)).as(s"__nd__$c"))
-    val row: Row = sample.agg(aggs.head, aggs.tail: _*).first()
-    def get[T](name: String): T = row.getAs[T](name)
+    val rows = df.select((sCols ++ iCols).map(col): _*).take(limit)
+    val nullSize = df.sparkSession.sessionState.conf.legacySizeOfNull
+    val ns = sCols.length
     Signals(
-      sampleRows = get[Long]("__n"),
-      avgWordCount = sCols.map { c =>
-        val v = row.getAs[Any](s"__wc__$c")
-        c -> (if (v == null) 0.0 else v.asInstanceOf[Double])
+      sampleRows = rows.length.toLong,
+      avgWordCount = sCols.zipWithIndex.map { case (c, i) =>
+        var sum = 0L
+        var n = 0L
+        rows.foreach { r =>
+          if (!r.isNullAt(i)) {
+            sum += r.getString(i).count(_ == ' ') + 1 // split(" ", -1).length
+            n += 1
+          } else if (nullSize) { sum -= 1; n += 1 }
+        }
+        c -> (if (n == 0) 0.0 else sum.toDouble / n)
       }.toMap,
-      distinctCount = iCols.map(c => c -> get[Long](s"__nd__$c")).toMap,
-      firstValue = sCols.map { c =>
-        c -> String.valueOf(row.getAs[Any](s"__fv__$c"))
+      distinctCount = iCols.zipWithIndex.map { case (c, i) =>
+        c -> rows.iterator.filterNot(_.isNullAt(ns + i)).map(_.get(ns + i)).toSet.size.toLong
+      }.toMap,
+      firstValue = sCols.zipWithIndex.map { case (c, i) =>
+        c -> String.valueOf(if (rows.isEmpty) null else rows(0).get(i))
       }.toMap)
   }
 
@@ -188,7 +192,7 @@ object Detection {
     }
   }
 
-  /** All roles of a schema, resolved from ONE sampled aggregate job. */
+  /** All roles of a schema, resolved from ONE sampled job. */
   case class ColumnRoles(
       text: Option[String],
       index: Option[String],

@@ -21,10 +21,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
  *  - Q12: the reference's loader tags parquet as "par" which its own
  *    `save` never matches (MatchError). We use one canonical tag set.
  *
- * Scale notes: sniffing reads exactly two lines via `limit(2)` on a text
- * scan, one job per load (no full pass); everything else is the
- * built-in readers, which
- * keep pushdown/pruning intact.
+ * Scale notes: sniffing reads exactly two lines on the driver, with no
+ * Spark job (no full pass); everything else is the built-in readers,
+ * which keep pushdown/pruning intact.
  */
 object FormatIO {
 
@@ -33,13 +32,48 @@ object FormatIO {
   /** A sniffed CSV dialect: delimiter, header flag and quote char. */
   case class CsvDialect(delimiter: String, header: Boolean, quote: Option[String])
 
-  /** Sniff `path`'s CSV dialect from its first two lines, read once
-    * (one Spark job) and handed to the pure kernels [[delimiterOf]],
-    * [[headerOf]] and [[escapeOf]]. */
+  /** Sniff `path`'s CSV dialect from its first two lines, handed to the
+    * pure kernels [[delimiterOf]], [[headerOf]] and [[escapeOf]].
+    *
+    * The lines are read on the driver, with no Spark job, and they are
+    * the two lines `spark.read.text(path).limit(2)` returns. The scan
+    * over `path` (a file, a directory or a glob) orders its file splits
+    * by size, largest first, not by name, and packs them into
+    * partitions in that order; `limit(2)` reads the partitions in
+    * order. So the lines come from the largest file, then, if it has
+    * fewer than two lines, from the next in that order. The splits are
+    * taken from the planned scan itself and read with the scan's own
+    * line reader (Hadoop `LineRecordReader`, which decompresses `.gz`
+    * through the codec factory). */
   def sniffCsv(path: String, spark: SparkSession): CsvDialect = {
-    val lines = spark.read.text(path).limit(2).collect().map(_.getString(0))
+    val lines = firstLines(spark.read.text(path), 2)
     val delim = delimiterOf(lines)
     CsvDialect(delim, headerOf(lines, delim), escapeOf(lines, delim))
+  }
+
+  /** The first `n` lines of a `text` scan, in its partition order. */
+  private def firstLines(text: DataFrame, n: Int): Array[String] = {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.datasources.{FilePartition, HadoopFileLinesReader}
+    val scan = text.queryExecution.executedPlan.collectFirst {
+      case s: FileSourceScanExec => s
+    }.getOrElse(sys.error("not a file scan: " + text.queryExecution.executedPlan))
+    val conf = text.sparkSession.sessionState.newHadoopConf()
+    val files = scan.inputRDD.partitions.iterator.flatMap {
+      case p: FilePartition => p.files.iterator
+      case other => sys.error("unexpected scan partition " + other)
+    }
+    val out = Array.newBuilder[String]
+    var got = 0
+    while (got < n && files.hasNext) {
+      val reader = new HadoopFileLinesReader(files.next(), conf)
+      try while (got < n && reader.hasNext) {
+        val t = reader.next()
+        out += new String(t.getBytes, 0, t.getLength, java.nio.charset.StandardCharsets.UTF_8)
+        got += 1
+      } finally reader.close()
+    }
+    out.result()
   }
 
   /** Intended S5 semantics (the pure kernel of [[sniffCsv]]'s
@@ -85,7 +119,7 @@ object FormatIO {
 
   /** CSV load with a KNOWN dialect — the entry point for callers that
     * already ran [[sniffCsv]] (or know the dialect out of band), so
-    * the two-line probe job is not re-run per file. `load("csv")`
+    * the two-line probe is not re-run per file. `load("csv")`
     * is sniff-then-this. */
   def loadCsvWithDialect(path: String, spark: SparkSession, delim: String,
                          header: Boolean, quote: Option[String]): DataFrame = {

@@ -152,8 +152,10 @@ object WordList {
     }
 
   /** Score of a single token in [-1, 1] (reference `value`). */
-  def value(word: String): Double = {
-    val stem = Stemmer.stem(word)
+  def value(word: String): Double = value(word, Stemmer.stem(word))
+
+  /** [[value]] of `word` given its Porter stem `stem`. */
+  private[wordscore] def value(word: String, stem: String): Double = {
     if (stem == word) evaluate(word)
     else {
       val we = evaluate(word)

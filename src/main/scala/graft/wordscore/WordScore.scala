@@ -18,8 +18,8 @@ import graft.text.Stemmer
  * else 0.0.
  *
  * Unlike the reference (which calls `wl.value(w)` three times per token
- * per pass), each token is scored once per pass here; `WordList.value`
- * is pure so the results are identical.
+ * per pass), each token is scored once per pass and stemmed once;
+ * `WordList.value` is pure so the results are identical.
  *
  * Scale: one narrow map stage, no shuffle; the dictionary lives in each
  * executor JVM as a classpath-loaded singleton ([[WordList]]), so the
@@ -44,8 +44,11 @@ object WordScore {
   def computeSentiment(text: String): Double = {
     if (text == null) return 0.0
     val words = text.split(" ")
-    val raw = tokensValue(words.map(WordList.value))
-    val stem = tokensValue(words.map(w => WordList.value(Stemmer.stem(w))))
+    // each token is stemmed once: its stem serves the raw pass and is
+    // the stemmed pass's token
+    val stems = words.map(Stemmer.stem)
+    val raw = tokensValue(Array.tabulate(words.length)(i => WordList.value(words(i), stems(i))))
+    val stem = tokensValue(stems.map(WordList.value))
     (raw, stem) match {
       case (Some(r), Some(s)) => (r + s) / 2
       case (Some(r), None)    => r

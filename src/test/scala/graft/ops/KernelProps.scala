@@ -399,4 +399,54 @@ object KernelProps extends Properties("kernels") {
         }
         Prop(ortho) :| "R Rᵀ != I" && Prop(normKept) :| "||Rv|| != ||v||"
     }
+
+  // --- graft_normalize: the hand-written chain == the regex/MLlib oracle
+
+  private val tweetParts: Seq[String] =
+    graft.text.Emoji.base.keys.toSeq.sorted ++
+      graft.text.EmojiOracle.emoValues.linesIterator
+        .map(l => l.substring(2, l.indexOf("', '")).replace("''", "'")).toSeq ++
+      Seq("http://t.co/x1", "https://a.b/c?d=1&amp;e", "www.foo.com/x", "google.com",
+        "x.co.uk/", "a.b.org.", "bit.ly", "x.com", ".com", "&amp;", "&lt;", "&gt;",
+        "&quot;", "&lt;3", "<3", "</3", "->", "<-", "&lt;--", "-->", "--", "―", "♫",
+        "foo@bar.com", "a.b@c.de", "x@y", "u.s.", "U.S.A.", "e.g.", "Mr.", "mrs.",
+        "Dr.", "St.", "Sen.", "Rep.", "10:30", "3.14", "1,000", "1,000,000", "12,34",
+        "'", "“", "”", "‘", "’", "\"", "«", "»", "(", ")", "[", "]", "{", "}", "*",
+        "...", "!!", "?!", ",", ":", ";", "don't", "'quoted'", "(paren)",
+        "rt", "RT", "@user", "@", "#tag", "#", "the", "a", "I", "not", "running",
+        "café", "naïve", "İstanbul", "ΟΔΟΣ", "Straße", "日本", "😀", "ё", "́")
+  private val gap: Gen[String] =
+    Gen.frequency(8 -> Gen.const(" "), 1 -> Gen.const(""), 1 -> Gen.const("  "),
+      1 -> Gen.const("\t"), 1 -> Gen.const(" \n "), 1 -> Gen.const("\u2028"))
+  private val tweetLike: Gen[String] = Gen.frequency(
+    1 -> Gen.const(""),
+    1 -> Gen.listOf(Gen.oneOf("the", "a", "is", "not", "and", "I")).map(_.mkString(" ")),
+    12 -> Gen.listOf(Gen.zip(gap, Gen.frequency(3 -> Gen.oneOf(tweetParts), 2 -> word,
+      1 -> Gen.asciiPrintableChar.map(_.toString)))).map(_.map { case (g, w) => g + w }.mkString))
+
+  property("graft_normalize == the regex/UDF/MLlib oracle chain on tweet-like text") =
+    forAll(tweetLike, Gen.oneOf(false, true), Gen.oneOf(false, true)) { (t, stem, full) =>
+      val table = if (full) graft.text.Emoji.fromResourceTable else graft.text.Emoji.base
+      val want = TextCleanOracle.normalize(t, stem, table)
+      val got = Kernels.normalizeUtf8(
+        org.apache.spark.unsafe.types.UTF8String.fromString(t), stem, full).toString
+      (Prop(got == want) :| s"normalize('$t', stem=$stem, full=$full): '$got' != '$want'") &&
+        Prop(graft.text.TweetTokenizer.tokenizeToString(t) ==
+          TextCleanOracle.TweetTokenizer.tokenizeToString(t)) :| "tokenizer" &&
+        Prop(graft.text.TextClean.cleanString(t) == TextCleanOracle.cleanString(t)) :| "cleanString"
+    }
+
+  property("graft_normalize == the oracle chain under locale-sensitive lowercasing") =
+    forAll(tweetLike, Gen.oneOf("tr", "tr-TR", "az", "lt", "el", "en-US", "xx-YY"), Gen.oneOf(false, true)) {
+      (t0, tag, stem) =>
+        // capitals whose lowercase depends on the locale (I, İ, Ì, Σ)
+        val t = t0 + " I İ Ì ΟΔΟΣ IS İS THE IT"
+        val saved = java.util.Locale.getDefault
+        java.util.Locale.setDefault(java.util.Locale.forLanguageTag(tag))
+        try {
+          val want = TextCleanOracle.normalize(t, stem, graft.text.Emoji.base)
+          val got = graft.text.TextClean.normalize(t, stem, fullEmoji = false)
+          Prop(got == want) :| s"[$tag] '$got' != '$want'"
+        } finally java.util.Locale.setDefault(saved)
+    }
 }

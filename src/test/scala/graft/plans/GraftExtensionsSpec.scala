@@ -224,7 +224,9 @@ class GraftExtensionsSpec extends AnyFunSuite with graft.SparkTestSession {
         "graft_stem('running', 'x')" -> "graft_stem requires exactly 1 arguments",
         "graft_stem()" -> "graft_stem requires exactly 1 arguments",
         "graft_clean('a', 'b')" -> "graft_clean requires exactly 1 arguments",
-        "graft_simhash('a', 'b')" -> "graft_simhash requires exactly 1 arguments")) {
+        "graft_simhash('a', 'b')" -> "graft_simhash requires exactly 1 arguments",
+        "graft_normalize('a', true)" -> "graft_normalize requires exactly 3 arguments",
+        "graft_normalize('a', length('x') > 0, true)" -> "requires a literal boolean")) {
       val wrongArity = intercept[Exception] {
         spark.sql(s"SELECT $call AS s").collect()
       }
@@ -258,7 +260,7 @@ class GraftExtensionsSpec extends AnyFunSuite with graft.SparkTestSession {
     // per registry entry: the row argument over column `text`, the
     // plan-time sizes, and the Column-API call; an entry without a row
     // here fails the key-set check
-    val calls: Map[String, (String, Seq[Int], Column => Column)] = Map(
+    val calls: Map[String, (String, Seq[Any], Column => Column)] = Map(
       "graft_stem" -> (("text", Nil, GraftFunctions.graftStem)),
       "graft_clean" -> (("text", Nil, GraftFunctions.graftClean)),
       "graft_simhash" -> (("text", Nil, GraftFunctions.graftSimhash)),
@@ -266,7 +268,8 @@ class GraftExtensionsSpec extends AnyFunSuite with graft.SparkTestSession {
       "graft_minhash" -> (("split(text, ' ')", Seq(8),
         c => GraftFunctions.graftMinhash(split(c, " "), 8))),
       "graft_winnow" -> (("text", Seq(8, 4), GraftFunctions.graftWinnow(_, 8, 4))),
-      "graft_quality" -> (("text", Nil, GraftFunctions.graftQuality)))
+      "graft_quality" -> (("text", Nil, GraftFunctions.graftQuality)),
+      "graft_normalize" -> (("text", Seq(true, false), GraftFunctions.graftNormalize(_, true, false))))
     assert(GraftExtensions.functions.map(_._1.funcName).toSet === calls.keySet)
     // the fixture corpus with every 7th text nulled
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
@@ -306,5 +309,63 @@ class GraftExtensionsSpec extends AnyFunSuite with graft.SparkTestSession {
         spark.conf.unset("spark.sql.codegen.factoryMode")
       }
     } finally spark.catalog.dropTempView("graft_kernel_docs")
+  }
+
+  test("graft_normalize: interpreted == codegen == the regex/UDF/MLlib oracle chain, " +
+      "stem x emoji table, null -> null, SQL == Column API") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions.col
+    import spark.implicits._
+    import graft.ops.TextCleanOracle
+    import graft.text.{Emoji, TextClean}
+    val tweets = Seq(
+      "RT @user: I'm sooo happy :-) today!!! #blessed http://t.co/abc",
+      "Mr. Smith & Dr. Who met at 10:30 for 1,000 <3 &lt;3 -- www.foo.com/x?y=1",
+      "e-mail me: a.b@c.de, (or call) “now” ♫♫ ΟΔΟΣ İstanbul café 😀",
+      "the and a is not", "", "   ", "x.co.uk/ u.s.a. e.g. it's :P ;) =D ☺ ❤")
+    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+      .selectExpr("doc_id", "CASE WHEN doc_id % 7 = 0 THEN NULL ELSE text END AS text")
+      .unionByName(tweets.zipWithIndex.map { case (t, i) => (-1L - i, t) }.toDF("doc_id", "text"))
+    docs.createOrReplaceTempView("graft_normalize_docs")
+    val nullIds = docs.where(col("text").isNull).collect().map(_.getLong(0)).toSet
+    def rows(df: DataFrame): Map[Long, String] =
+      df.collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+    try for (stem <- Seq(false, true); full <- Seq(false, true)) {
+      val label = s"stem=$stem full=$full"
+      val oracle = rows(TextCleanOracle.cleanSource(docs, "text", "out", stem,
+        if (full) Emoji.fromResourceTable else Emoji.base).select("doc_id", "out"))
+      val query = s"SELECT doc_id, graft_normalize(text, $stem, $full) FROM graft_normalize_docs"
+      val codegen = rows(spark.sql(query))
+      assert(codegen.collect { case (id, null) => id }.toSet === nullIds, label)
+      assert(codegen.filter(_._2 != null) === oracle, s"$label: kernel != oracle chain")
+      assert(rows(docs.select(col("doc_id"),
+        GraftFunctions.graftNormalize(col("text"), stem, full))) === codegen, s"$label: SQL != Column API")
+      assert(rows(TextClean.cleanSource(docs, "text", "out", stem, full)
+        .select("doc_id", "out")) === oracle, s"$label: cleanSource != oracle chain")
+      spark.conf.set("spark.sql.codegen.wholeStage", "false")
+      spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
+      try assert(rows(spark.sql(query)) === codegen, s"$label: interpreted != codegen")
+      finally {
+        spark.conf.unset("spark.sql.codegen.wholeStage")
+        spark.conf.unset("spark.sql.codegen.factoryMode")
+      }
+    } finally spark.catalog.dropTempView("graft_normalize_docs")
+    // graft_clean (the kernel's cleaning step) == the Catalyst regex chain
+    assert(rows(docs.select(col("doc_id"), GraftFunctions.graftClean(col("text")))) ===
+      rows(docs.select(col("doc_id"), TextCleanOracle.cleanStringCol(col("text")))))
+  }
+
+  test("cleanSource plans one graft_normalize call: no Scala UDF, no MLlib projection") {
+    import org.apache.spark.sql.catalyst.expressions.ScalaUDF
+    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    for (stem <- Seq(false, true)) {
+      val plan = graft.text.TextClean.cleanSource(docs, "text", "filtered", stem)
+        .queryExecution.optimizedPlan
+      val exprs = plan.flatMap(_.expressions.flatMap(_.collect { case e => e }))
+      assert(exprs.count(_.isInstanceOf[NormalizeExpression]) === 1, plan.toString)
+      assert(!exprs.exists(_.isInstanceOf[ScalaUDF]), plan.toString)
+      assert(!plan.toString.contains("Tokenizer") && !plan.toString.contains("StopWords"),
+        plan.toString)
+    }
   }
 }

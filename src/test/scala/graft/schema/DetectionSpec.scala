@@ -53,6 +53,26 @@ class DetectionSpec extends AnyFunSuite with SparkTestSession {
     assert(roles.categorical === Some("_c0"), s"roles=$roles")
   }
 
+  test("measure: the one-job driver fold == the aggregate form on the fixtures, " +
+      "under ANSI on and off") {
+    val csv = graft.sources.FormatIO.loadFile(Some("csv"),
+      resourcePath("/graft/sentiment140.csv"), spark).get._1
+    val ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
+    val withNulls = docs.selectExpr("doc_id",
+      "CASE WHEN doc_id % 3 = 0 THEN NULL ELSE text END AS text", "lang",
+      "CASE WHEN doc_id % 5 = 0 THEN NULL ELSE CAST(doc_id % 4 AS INT) END AS k")
+    val saved = spark.conf.get("spark.sql.ansi.enabled")
+    try for (ansi <- Seq("true", "false")) {
+      spark.conf.set("spark.sql.ansi.enabled", ansi)
+      for ((name, df) <- Seq("documents" -> docs, "events" -> ev, "csv" -> csv,
+                             "nulls" -> withNulls); limit <- Seq(1, 20, 100)) {
+        var sig: Detection.Signals = null
+        assert(jobsDuring { sig = Detection.measure(df, limit) } === 1, name)
+        assert(sig === DetectionOracle.measureAgg(df, limit), s"$name limit=$limit ansi=$ansi")
+      }
+    } finally spark.conf.set("spark.sql.ansi.enabled", saved)
+  }
+
   test("extractIntegerCategories on the sentiment label") {
     val path = resourcePath("/graft/sentiment140.csv")
     val (df, _) = graft.sources.FormatIO.loadFile(Some("csv"), path, spark).get
@@ -79,5 +99,38 @@ class DetectionSpec extends AnyFunSuite with SparkTestSession {
     val (out, name) = Detection.convertCategoricalColumn(df, "label")
     assert(name === "label")
     assert(out eq df)
+  }
+}
+
+/** The aggregate form of [[Detection.measure]] — `count`,
+  * `avg(size(split(c, " ")))`, `first` and `countDistinct` in one
+  * Spark aggregate — run over the exact rows the fold samples (a local
+  * one-partition frame, so `first` is the first sampled row): the
+  * parity oracle of the driver-side fold. */
+object DetectionOracle {
+  import org.apache.spark.sql.{Column, DataFrame}
+  import org.apache.spark.sql.functions._
+
+  def measureAgg(df: DataFrame, limit: Int): Detection.Signals = {
+    val sCols = Detection.stringColumns(df)
+    val iCols = Detection.integerColumns(df)
+    val picked = df.select((sCols ++ iCols).map(col): _*)
+    val sample = df.sparkSession.createDataFrame(
+      java.util.Arrays.asList(picked.take(limit): _*), picked.schema).coalesce(1)
+    def agg(aggs: Seq[Column]) = sample.agg(aggs.head, aggs.tail: _*).first()
+    // a distinct aggregate regroups the rows by its column, so `first`
+    // is taken in an aggregate of its own, over the one sample partition
+    val row = agg(Seq(count(lit(1)).as("__n")) ++
+      sCols.flatMap(c => Seq(avg(size(split(col(c), " "))).as(s"__wc__$c"),
+        first(col(c), ignoreNulls = false).as(s"__fv__$c"))))
+    val distinct = agg(count(lit(1)) +: iCols.map(c => countDistinct(col(c)).as(s"__nd__$c")))
+    Detection.Signals(
+      sampleRows = row.getAs[Long]("__n"),
+      avgWordCount = sCols.map { c =>
+        val v = row.getAs[Any](s"__wc__$c")
+        c -> (if (v == null) 0.0 else v.asInstanceOf[Double])
+      }.toMap,
+      distinctCount = iCols.map(c => c -> distinct.getAs[Long](s"__nd__$c")).toMap,
+      firstValue = sCols.map(c => c -> String.valueOf(row.getAs[Any](s"__fv__$c"))).toMap)
   }
 }

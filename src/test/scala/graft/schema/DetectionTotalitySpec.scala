@@ -54,6 +54,17 @@ class DetectionTotalitySpec extends AnyFunSuite with SparkTestSession {
     }
   }
 
+  test("measure: the driver fold == the aggregate form on seeded random frames " +
+      "with null cells, under ANSI on and off") {
+    val frames = (1 to 12).map(_ => randomFrame(cols = 1 + rnd.nextInt(6), rows = rnd.nextInt(40)))
+    val saved = spark.conf.get("spark.sql.ansi.enabled")
+    try for (ansi <- Seq("true", "false"); (df, i) <- frames.zipWithIndex) {
+      spark.conf.set("spark.sql.ansi.enabled", ansi)
+      assert(Detection.measure(df, 20) === DetectionOracle.measureAgg(df, 20),
+        s"frame $i ansi=$ansi")
+    } finally spark.conf.set("spark.sql.ansi.enabled", saved)
+  }
+
   test("resolve on an empty frame returns no roles") {
     val df = spark.createDataFrame(
       spark.sparkContext.emptyRDD[Row],

@@ -49,13 +49,46 @@ class FormatIOSpec extends AnyFunSuite with SparkTestSession {
     assert(FormatIO.sniffCsv(p, spark).quote === Some("\""))
   }
 
-  test("csv sniff reads a multi-part directory's first two lines in one job") {
+  test("csv sniff reads a multi-part directory's first two lines in zero jobs") {
     val dir = Files.createTempDirectory("graft-io-sniff")
     for (i <- 0 until 4)
       Files.writeString(dir.resolve(s"part-$i.csv"), s"id|txt\n$i|x\n")
     var d: FormatIO.CsvDialect = null
-    assert(jobsDuring { d = FormatIO.sniffCsv(dir.toString, spark) } === 1)
+    assert(jobsDuring { d = FormatIO.sniffCsv(dir.toString, spark) } === 0)
     assert(d === FormatIO.CsvDialect("|", header = true, quote = None))
+  }
+
+  test("csv sniff reads what text(path).limit(2) reads: largest split first, " +
+      "across one-line files, globs and gzip") {
+    import java.util.zip.GZIPOutputStream
+    def gz(p: java.nio.file.Path, content: String): Unit = {
+      val out = new GZIPOutputStream(Files.newOutputStream(p))
+      try out.write(content.getBytes("UTF-8")) finally out.close()
+    }
+    def viaLimit(path: String) = spark.read.text(path).limit(2).collect().map(_.getString(0))
+    def dialectOf(lines: Array[String]) = {
+      val delim = FormatIO.delimiterOf(lines)
+      FormatIO.CsvDialect(delim, FormatIO.headerOf(lines, delim), FormatIO.escapeOf(lines, delim))
+    }
+    // the scan orders splits by size, not by name: "z.csv" is the
+    // largest file, so its lines come first although "a.csv" sorts first
+    val sized = Files.createTempDirectory("graft-io-sniff-size")
+    Files.writeString(sized.resolve("a.csv"), "a,b\n1,2\n")
+    Files.writeString(sized.resolve("z.csv"), "name|score|note\nsomeone|12|a longer row\n")
+    // one-line files: the second line comes from the next split in order
+    val oneLine = Files.createTempDirectory("graft-io-sniff-one")
+    Files.writeString(oneLine.resolve("p0.csv"), "id;txt;extra field\n")
+    Files.writeString(oneLine.resolve("p1.csv"), "7;x\n")
+    val gzDir = Files.createTempDirectory("graft-io-sniff-gz")
+    gz(gzDir.resolve("t.csv.gz"), "h1\th2\n1\t\"a long quoted text field\"\n")
+    Files.writeString(gzDir.resolve("u.csv"), "q,r\n")
+    val single = tmpFile("one.csv", "only|one|line\n")
+    for (path <- Seq(sized.toString, sized.toString + "/*.csv", oneLine.toString,
+                     gzDir.toString, gzDir.toString + "/t.csv.gz", single)) {
+      val d = FormatIO.sniffCsv(path, spark)
+      assert(d === dialectOf(viaLimit(path)), path)
+    }
+    assert(FormatIO.sniffCsv(sized.toString, spark).delimiter === "|")
   }
 
   test("csv sniffed load infers schema") {
