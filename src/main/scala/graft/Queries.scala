@@ -1285,9 +1285,9 @@ object Queries {
     * not SQL-expressible → pinned-VALUES oracle; per-row pure
     * function, parallelism-independent by construction. Map-only. */
   def q87CleanStem(spark: SparkSession, dir: String): DataFrame = {
-    val table = graft.text.Emoji.fromResourceTable
-    val chain = udf((s: String) =>
-      if (s == null) null else TextClean.cleanTextAndStem(table)(s))
+    // the emoji lookup is built once here and rides the closure
+    val stemClean = TextClean.cleanTextAndStem(graft.text.Emoji.fromResourceTable)
+    val chain = udf((s: String) => if (s == null) null else stemClean(s))
     t(spark, dir, "documents")
       .select(col("doc_id"),
         md5(chain(col("text")).cast("binary")).as("stemmed_digest"))

@@ -32,8 +32,8 @@ object Kernels {
     UTF8String.fromString(graft.text.TextClean.cleanString(text.toString))
 
   /** The tweet normalisation chain ([[graft.text.TextClean.normalize]]). */
-  def normalizeUtf8(text: UTF8String, stem: Boolean, fullEmoji: Boolean): UTF8String =
-    UTF8String.fromString(graft.text.TextClean.normalize(text.toString, stem, fullEmoji))
+  def normalizeUtf8(text: UTF8String, stem: Boolean): UTF8String =
+    UTF8String.fromString(graft.text.TextClean.normalize(text.toString, stem))
 
   /** 64-bit SimHash of the normalized text ([[SimHash.simhashOfText]]). */
   def simhashUtf8(text: UTF8String): Long =

@@ -31,7 +31,7 @@ import org.apache.spark.sql.types.{ArrayType, BooleanType, DataType, DoubleType,
  *    (same semantics as [[graft.ops.SimHash.simhashCol]]);
  *  - `graft_shingles(str, n)`, `graft_minhash(array<string>, k)`,
  *    `graft_winnow(str, k, w)`, `graft_quality(str)`,
- *    `graft_normalize(str, stem, full_emoji)` — documented on their
+ *    `graft_normalize(str, stem)` — documented on their
  *    expressions below.
  */
 abstract class KernelExpression(
@@ -115,12 +115,12 @@ case class QualityExpression(child: Expression)
   extends KernelExpression("graft_quality", StringType, DoubleType, "qualityUtf8")
 
 /** The tweet normalisation chain of [[graft.text.TextClean.cleanSource]]
-  * (`graft_normalize(text, stem, full_emoji)`): optional Porter stem,
-  * tweet tokenizer, emoji substitution (the built-in emoticon map, or
-  * the full 914-entry table), the cleaning rules, whitespace split and
+  * (`graft_normalize(text, stem)`): optional Porter stem, tweet
+  * tokenizer, emoji substitution (the built-in emoticon map), the
+  * cleaning rules, whitespace split and
   * English stop-word removal, joined — one static call per row in
   * place of a Scala UDF and two MLlib projections. */
-case class NormalizeExpression(child: Expression, stem: Boolean, fullEmoji: Boolean)
+case class NormalizeExpression(child: Expression, stem: Boolean)
   extends KernelExpression("graft_normalize", StringType, StringType, "normalizeUtf8")
 
 /** Session extension: `.withExtensions(new GraftExtensions)` or config
@@ -147,8 +147,8 @@ object GraftExtensions {
     kernel("graft_winnow", IntegerType, IntegerType)((c, s) =>
       WinnowExpression(c, s(0).asInstanceOf[Int], s(1).asInstanceOf[Int])),
     kernel("graft_quality")((c, _) => QualityExpression(c)),
-    kernel("graft_normalize", BooleanType, BooleanType)((c, s) =>
-      NormalizeExpression(c, s(0).asInstanceOf[Boolean], s(1).asInstanceOf[Boolean])))
+    kernel("graft_normalize", BooleanType)((c, s) =>
+      NormalizeExpression(c, s(0).asInstanceOf[Boolean])))
 
   /** The literal arguments are part of the expression's SHAPE (output
     * width / gram length, or a plan-time switch), so SQL callers must
@@ -195,6 +195,6 @@ object GraftFunctions {
   def graftMinhash(c: Column, k: Int): Column = kernel("graft_minhash", c, k)
   def graftWinnow(c: Column, k: Int, w: Int): Column = kernel("graft_winnow", c, k, w)
   def graftQuality(c: Column): Column = kernel("graft_quality", c)
-  def graftNormalize(c: Column, stem: Boolean, fullEmoji: Boolean): Column =
-    kernel("graft_normalize", c, stem, fullEmoji)
+  def graftNormalize(c: Column, stem: Boolean): Column =
+    kernel("graft_normalize", c, stem)
 }

@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions.col
  *   -> StopWordsRemover -> concat_ws(" ")
  *
  * The whole per-row chain is one native expression,
- * `graft_normalize(text, stem, full_emoji)`
+ * `graft_normalize(text, stem)`
  * ([[graft.plans.NormalizeExpression]] calling [[normalize]] through
  * [[graft.ops.Kernels.normalizeUtf8]]): no Scala UDF, no MLlib
  * projections, no intermediate arrays. Every step is hand-written over
@@ -113,15 +113,22 @@ object TextClean {
     }
   }
 
-  /** Full per-row clean: tweet tokenize -> emoji substitution -> clean. */
-  def cleanText(emoji: Map[String, String])(text: String): String =
-    cleanChain(text, stem = false, EmojiLookup.of(emoji))
+  /** Full per-row clean: tweet tokenize -> emoji substitution -> clean.
+    * The table's lookup is built once, here: apply the returned function
+    * to every row (it is serializable, so a UDF closure can carry it). */
+  def cleanText(emoji: Map[String, String]): String => String =
+    new Chain(stem = false, new EmojiLookup(emoji))
 
   /** Stemming variant. NB reference order: the Porter stemmer runs on the
     * RAW text (including URLs/@mentions) BEFORE cleaning
     * (`utils/Helper.scala:34,100-102`). */
-  def cleanTextAndStem(emoji: Map[String, String])(text: String): String =
-    cleanChain(text, stem = true, EmojiLookup.of(emoji))
+  def cleanTextAndStem(emoji: Map[String, String]): String => String =
+    new Chain(stem = true, new EmojiLookup(emoji))
+
+  private final class Chain(stem: Boolean, emoji: EmojiLookup)
+      extends (String => String) with Serializable {
+    def apply(text: String): String = cleanChain(text, stem, emoji)
+  }
 
   private def cleanChain(text: String, stem: Boolean, emoji: EmojiLookup): String = {
     val raw = if (stem) stemString(text) else text
@@ -134,11 +141,9 @@ object TextClean {
     * text, lowercased and split on single `\s` chars (MLlib `Tokenizer`:
     * empty pieces kept, trailing ones dropped), English stop words
     * removed case-insensitively (`StopWordsRemover`'s default locale),
-    * joined by single spaces. `fullEmoji` picks
-    * [[Emoji.fromResourceTable]] over [[Emoji.base]]. */
-  def normalize(text: String, stem: Boolean, fullEmoji: Boolean): String = {
-    val cleaned = cleanChain(text, stem,
-      if (fullEmoji) EmojiLookup.Full else EmojiLookup.Base).toLowerCase
+    * joined by single spaces. Emoticons map through [[Emoji.base]]. */
+  def normalize(text: String, stem: Boolean): String = {
+    val cleaned = cleanChain(text, stem, EmojiLookup.Base).toLowerCase
     val out = new java.lang.StringBuilder(cleaned.length)
     var any = false
     var p = 0
@@ -194,7 +199,8 @@ object TextClean {
 
   /** An emoji table with a first-char/length pre-filter, so that only
     * pieces that could be a key pay for a substring and a lookup. */
-  private final class EmojiLookup(table: Map[String, String]) {
+  private[text] final class EmojiLookup(table: Map[String, String]) extends Serializable {
+    EmojiLookup.builds.incrementAndGet()
     private val firsts: java.util.BitSet = {
       val b = new java.util.BitSet()
       table.keys.foreach(k => if (k.nonEmpty) b.set(k.charAt(0)))
@@ -221,27 +227,24 @@ object TextClean {
     }
   }
 
-  private object EmojiLookup {
+  private[text] object EmojiLookup {
+    /** Lookups built in this JVM: a per-row rebuild shows up here. */
+    val builds = new java.util.concurrent.atomic.AtomicLong
     lazy val Base = new EmojiLookup(Emoji.base)
-    lazy val Full = new EmojiLookup(Emoji.fromResourceTable)
-    def of(table: Map[String, String]): EmojiLookup =
-      if (table eq Emoji.base) Base
-      else if (table eq Emoji.fromResourceTable) Full
-      else new EmojiLookup(table)
   }
 
   /**
    * Reference `Helper.cleanSource`: adds `outputCol` with the normalized,
    * stop-word-free text of the non-null rows of `inputCol`, in one
-   * `graft_normalize` projection. `fullEmoji` substitutes with the full
-   * 914-entry emoji table instead of the built-in emoticon map; both
-   * are per-JVM constants, so nothing ships with the plan.
+   * `graft_normalize` projection. Emoticons map through the built-in
+   * [[Emoji.base]] table, a per-JVM constant, so nothing ships with the
+   * plan.
    */
   def cleanSource(df: DataFrame, inputCol: String, outputCol: String,
-                  stem: Boolean, fullEmoji: Boolean = false): DataFrame = {
+                  stem: Boolean): DataFrame = {
     import org.apache.spark.sql.graft.ColumnBridge
     df.where(col(inputCol).isNotNull)
       .withColumn(outputCol, ColumnBridge.column(graft.plans.NormalizeExpression(
-        ColumnBridge.expression(col(inputCol).cast("string")), stem, fullEmoji)))
+        ColumnBridge.expression(col(inputCol).cast("string")), stem)))
   }
 }

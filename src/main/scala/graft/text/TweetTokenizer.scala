@@ -317,8 +317,12 @@ object TweetTokenizer {
     e
   }
 
-  /** Java's `\b`: word chars are `_` and Unicode letters/digits; a
-    * non-spacing mark counts as its base character's class. */
+  /** Java's `\b` as JDK 17 defines it: word chars are `_` and Unicode
+    * letters/digits; a non-spacing mark counts as its base character's
+    * class. JDK 19 and later (JDK-8264160) make the regex `\b` ASCII
+    * like `\w`, which would part this scanner from the regex oracle on
+    * non-ASCII text (`éwww.foo.com`); TweetTokenizerSpec pins both the
+    * rule and the test JDK's agreement with it. */
   private def boundary(s: Array[Char], n: Int, i: Int): Boolean = {
     def wordy(cp: Int, at: Int): Boolean =
       cp == '_' || Character.isLetterOrDigit(cp) ||

@@ -18,8 +18,10 @@ import graft.text.Stemmer
  * else 0.0.
  *
  * Unlike the reference (which calls `wl.value(w)` three times per token
- * per pass), each token is scored once per pass and stemmed once;
- * `WordList.value` is pure so the results are identical.
+ * per pass), each token is scored once per pass. Its stem is computed
+ * once and serves the raw pass; the stemmed pass's `value(stem)` stems
+ * that stem again, so a token is stemmed twice (the reference: three
+ * times). `WordList.value` is pure so the results are identical.
  *
  * Scale: one narrow map stage, no shuffle; the dictionary lives in each
  * executor JVM as a classpath-loaded singleton ([[WordList]]), so the
@@ -44,8 +46,8 @@ object WordScore {
   def computeSentiment(text: String): Double = {
     if (text == null) return 0.0
     val words = text.split(" ")
-    // each token is stemmed once: its stem serves the raw pass and is
-    // the stemmed pass's token
+    // each token's stem serves the raw pass and is the stemmed pass's
+    // token
     val stems = words.map(Stemmer.stem)
     val raw = tokensValue(Array.tabulate(words.length)(i => WordList.value(words(i), stems(i))))
     val stem = tokensValue(stems.map(WordList.value))

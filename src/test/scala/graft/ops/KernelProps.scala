@@ -425,12 +425,14 @@ object KernelProps extends Properties("kernels") {
       1 -> Gen.asciiPrintableChar.map(_.toString)))).map(_.map { case (g, w) => g + w }.mkString))
 
   property("graft_normalize == the regex/UDF/MLlib oracle chain on tweet-like text") =
-    forAll(tweetLike, Gen.oneOf(false, true), Gen.oneOf(false, true)) { (t, stem, full) =>
-      val table = if (full) graft.text.Emoji.fromResourceTable else graft.text.Emoji.base
-      val want = TextCleanOracle.normalize(t, stem, table)
+    forAll(tweetLike, Gen.oneOf(false, true)) { (t, stem) =>
+      val want = TextCleanOracle.normalize(t, stem)
       val got = Kernels.normalizeUtf8(
-        org.apache.spark.unsafe.types.UTF8String.fromString(t), stem, full).toString
-      (Prop(got == want) :| s"normalize('$t', stem=$stem, full=$full): '$got' != '$want'") &&
+        org.apache.spark.unsafe.types.UTF8String.fromString(t), stem).toString
+      (Prop(got == want) :| s"normalize('$t', stem=$stem): '$got' != '$want'") &&
+        Prop(graft.text.TextClean.cleanTextAndStem(graft.text.Emoji.fromResourceTable)(t) ==
+          TextCleanOracle.cleanTextAndStem(graft.text.Emoji.fromResourceTable)(t)) :|
+          "cleanTextAndStem, full emoji table" &&
         Prop(graft.text.TweetTokenizer.tokenizeToString(t) ==
           TextCleanOracle.TweetTokenizer.tokenizeToString(t)) :| "tokenizer" &&
         Prop(graft.text.TextClean.cleanString(t) == TextCleanOracle.cleanString(t)) :| "cleanString"
@@ -444,8 +446,8 @@ object KernelProps extends Properties("kernels") {
         val saved = java.util.Locale.getDefault
         java.util.Locale.setDefault(java.util.Locale.forLanguageTag(tag))
         try {
-          val want = TextCleanOracle.normalize(t, stem, graft.text.Emoji.base)
-          val got = graft.text.TextClean.normalize(t, stem, fullEmoji = false)
+          val want = TextCleanOracle.normalize(t, stem)
+          val got = graft.text.TextClean.normalize(t, stem)
           Prop(got == want) :| s"[$tag] '$got' != '$want'"
         } finally java.util.Locale.setDefault(saved)
     }

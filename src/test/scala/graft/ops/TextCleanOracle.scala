@@ -171,11 +171,10 @@ object TextCleanOracle {
     * MLlib's `Tokenizer` and English `StopWordsRemover`, then
     * `concat_ws(" ")`. */
   def cleanSource(df: DataFrame, inputCol: String, outputCol: String,
-                  stem: Boolean,
-                  emoji: Map[String, String] = Emoji.base): DataFrame = {
+                  stem: Boolean): DataFrame = {
     val cleanUdf =
-      if (stem) udf((s: String) => cleanTextAndStem(emoji)(s))
-      else udf((s: String) => cleanText(emoji)(s))
+      if (stem) udf((s: String) => cleanTextAndStem(Emoji.base)(s))
+      else udf((s: String) => cleanText(Emoji.base)(s))
     val sfx = java.lang.Integer.toHexString(
       java.util.Arrays.hashCode(df.columns.asInstanceOf[Array[AnyRef]]))
     val cConv = s"__graft_conv_$sfx"
@@ -196,8 +195,8 @@ object TextCleanOracle {
   /** [[cleanSource]]'s per-row chain on one string, the MLlib stages
     * replayed as Spark 4 states them: `toLowerCase.split("\\s")`, then
     * the case-insensitive filter in `new Locale(default or en_US)`. */
-  def normalize(text: String, stem: Boolean, emoji: Map[String, String]): String = {
-    val conv = if (stem) cleanTextAndStem(emoji)(text) else cleanText(emoji)(text)
+  def normalize(text: String, stem: Boolean): String = {
+    val conv = if (stem) cleanTextAndStem(Emoji.base)(text) else cleanText(Emoji.base)(text)
     val d = java.util.Locale.getDefault
     val lc = new java.util.Locale(
       (if (java.util.Locale.getAvailableLocales.contains(d)) d else java.util.Locale.US).toString)

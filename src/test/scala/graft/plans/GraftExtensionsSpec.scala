@@ -225,8 +225,9 @@ class GraftExtensionsSpec extends AnyFunSuite with graft.SparkTestSession {
         "graft_stem()" -> "graft_stem requires exactly 1 arguments",
         "graft_clean('a', 'b')" -> "graft_clean requires exactly 1 arguments",
         "graft_simhash('a', 'b')" -> "graft_simhash requires exactly 1 arguments",
-        "graft_normalize('a', true)" -> "graft_normalize requires exactly 3 arguments",
-        "graft_normalize('a', length('x') > 0, true)" -> "requires a literal boolean")) {
+        "graft_normalize('a')" -> "graft_normalize requires exactly 2 arguments",
+        "graft_normalize('a', true, false)" -> "graft_normalize requires exactly 2 arguments",
+        "graft_normalize('a', length('x') > 0)" -> "requires a literal boolean")) {
       val wrongArity = intercept[Exception] {
         spark.sql(s"SELECT $call AS s").collect()
       }
@@ -269,7 +270,7 @@ class GraftExtensionsSpec extends AnyFunSuite with graft.SparkTestSession {
         c => GraftFunctions.graftMinhash(split(c, " "), 8))),
       "graft_winnow" -> (("text", Seq(8, 4), GraftFunctions.graftWinnow(_, 8, 4))),
       "graft_quality" -> (("text", Nil, GraftFunctions.graftQuality)),
-      "graft_normalize" -> (("text", Seq(true, false), GraftFunctions.graftNormalize(_, true, false))))
+      "graft_normalize" -> (("text", Seq(true), GraftFunctions.graftNormalize(_, true))))
     assert(GraftExtensions.functions.map(_._1.funcName).toSet === calls.keySet)
     // the fixture corpus with every 7th text nulled
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
@@ -312,12 +313,12 @@ class GraftExtensionsSpec extends AnyFunSuite with graft.SparkTestSession {
   }
 
   test("graft_normalize: interpreted == codegen == the regex/UDF/MLlib oracle chain, " +
-      "stem x emoji table, null -> null, SQL == Column API") {
+      "stem on and off, null -> null, SQL == Column API") {
     import org.apache.spark.sql.DataFrame
     import org.apache.spark.sql.functions.col
     import spark.implicits._
     import graft.ops.TextCleanOracle
-    import graft.text.{Emoji, TextClean}
+    import graft.text.TextClean
     val tweets = Seq(
       "RT @user: I'm sooo happy :-) today!!! #blessed http://t.co/abc",
       "Mr. Smith & Dr. Who met at 10:30 for 1,000 <3 &lt;3 -- www.foo.com/x?y=1",
@@ -330,17 +331,17 @@ class GraftExtensionsSpec extends AnyFunSuite with graft.SparkTestSession {
     val nullIds = docs.where(col("text").isNull).collect().map(_.getLong(0)).toSet
     def rows(df: DataFrame): Map[Long, String] =
       df.collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    try for (stem <- Seq(false, true); full <- Seq(false, true)) {
-      val label = s"stem=$stem full=$full"
-      val oracle = rows(TextCleanOracle.cleanSource(docs, "text", "out", stem,
-        if (full) Emoji.fromResourceTable else Emoji.base).select("doc_id", "out"))
-      val query = s"SELECT doc_id, graft_normalize(text, $stem, $full) FROM graft_normalize_docs"
+    try for (stem <- Seq(false, true)) {
+      val label = s"stem=$stem"
+      val oracle = rows(TextCleanOracle.cleanSource(docs, "text", "out", stem)
+        .select("doc_id", "out"))
+      val query = s"SELECT doc_id, graft_normalize(text, $stem) FROM graft_normalize_docs"
       val codegen = rows(spark.sql(query))
       assert(codegen.collect { case (id, null) => id }.toSet === nullIds, label)
       assert(codegen.filter(_._2 != null) === oracle, s"$label: kernel != oracle chain")
       assert(rows(docs.select(col("doc_id"),
-        GraftFunctions.graftNormalize(col("text"), stem, full))) === codegen, s"$label: SQL != Column API")
-      assert(rows(TextClean.cleanSource(docs, "text", "out", stem, full)
+        GraftFunctions.graftNormalize(col("text"), stem))) === codegen, s"$label: SQL != Column API")
+      assert(rows(TextClean.cleanSource(docs, "text", "out", stem)
         .select("doc_id", "out")) === oracle, s"$label: cleanSource != oracle chain")
       spark.conf.set("spark.sql.codegen.wholeStage", "false")
       spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")

@@ -41,4 +41,29 @@ class TextCleanSpec extends AnyFunSuite {
   test("stemString maps each space-separated token") {
     assert(TextClean.stemString("dogs caresses") === "dog caress")
   }
+
+  test("cleanText builds its emoji lookup once, also from a deserialized table or chain") {
+    def roundTrip[T](x: T): T = {
+      val bytes = new java.io.ByteArrayOutputStream
+      val out = new java.io.ObjectOutputStream(bytes)
+      out.writeObject(x)
+      out.close()
+      new java.io.ObjectInputStream(new java.io.ByteArrayInputStream(bytes.toByteArray))
+        .readObject().asInstanceOf[T]
+    }
+    val builds = TextClean.EmojiLookup.builds
+    // a task's copy of the table is not the driver's instance
+    val table = roundTrip(Emoji.fromResourceTable)
+    assert(!(table eq Emoji.fromResourceTable))
+    val before = builds.get
+    val chain = TextClean.cleanTextAndStem(table)
+    assert(builds.get === before + 1)
+    val shipped = roundTrip(chain)
+    val rows = (1 to 50).map(i => s"row $$i :) running \u2764 http://t.co/$$i")
+    val want = rows.map(TextClean.cleanTextAndStem(Emoji.fromResourceTable))
+    val afterBuild = builds.get
+    assert(rows.map(chain) === want)
+    assert(rows.map(shipped) === want)
+    assert(builds.get === afterBuild, "a row rebuilt the emoji lookup")
+  }
 }
