@@ -904,8 +904,9 @@ object Curate {
     //    callers of the checkpointing operators die and retry from
     //    source the same way. Revisit if the engine ever runs on
     //    preemptible executors.
-    val exact = Dedup.exact(novelOf(pGated), idCol, textCol)
-      .localCheckpoint(true)
+    val exact = labeled("exact") {
+      Dedup.exact(novelOf(pGated), idCol, textCol).localCheckpoint(true)
+    }
     locally {
       // 4. near: one incremental pair pass (new x corpus + new x new,
       //    exact-Jaccard verified), split by which side each end is on

@@ -34,15 +34,19 @@ import graft.text.Stemmer
  * cheaper than the reference's broadcast-a-WordList-instance at 1000
  * executors). The fuzzy scan visits only the length buckets within 3 of
  * the query, stopping at the first longer bucket whose length gap
- * exceeds the best distance so far. In each bucket it skips every entry
+ * exceeds the best distance so far. The best distance starts at the
+ * radius, 3, not above it. In each bucket the scan skips every entry
  * whose character-class lower bound ([[Distance.maskLowerBound]], one
  * precomputed 64-bit mask per entry) already exceeds the best distance
  * so far: such an entry could neither lower it nor tie it, so the result
  * is bit-identical to scanning all of them while most entries never
  * reach the DP. The survivors run the banded early-exit Levenshtein
- * bounded by the best distance so far. Results are memoized per JVM
- * because token frequency follows Zipf's law — the same OOV tokens recur
- * millions of times at 100 TB.
+ * bounded by the best distance so far.
+ *
+ * Nothing here is memoised: the one per-JVM memo is
+ * [[WordScore]]'s token memo, which holds each token's raw-pass and
+ * stemmed-pass values, because token frequency follows Zipf's law — the
+ * same tokens recur millions of times at 100 TB.
  */
 object WordList {
 
@@ -90,29 +94,27 @@ object WordList {
     }
   }
 
+  /** The fuzzy radius: entries farther than this never contribute. */
   private val MaxFuzzyDistance = 3
 
-  /** Memo of fuzzy results (per JVM). Zipf-distributed tokens make the
-    * hit rate high; bounded LRU so the hot set survives overflow (a
-    * full clear-on-cap caused periodic refill latency spikes). */
-  private val fuzzyCache =
-    new BoundedLruCache[String, java.lang.Double](1 << 17)
-
   /** Mean score of dictionary entries at the minimal edit distance from
-    * `word` when that distance <= 3; 0.0 otherwise. */
+    * `word` when that distance <= 3; 0.0 otherwise. The search bound
+    * starts AT the radius, so neither the mask prune nor the DP admits
+    * an entry that could not contribute. */
   def fuzzy(word: String): Double = {
-    val hit = fuzzyCache.get(word)
-    if (hit != null) return hit.doubleValue()
-    var bestDist = MaxFuzzyDistance + 1
+    var bestDist = MaxFuzzyDistance
     var sum = 0.0
     var n = 0
     val len = word.length
-    val mask = Distance.charMask(word)
     val lo = math.max(0, len - MaxFuzzyDistance)
     val hi = math.min(byLength.length - 1, len + MaxFuzzyDistance)
+    if (lo > hi) return 0.0
+    val mask = Distance.charMask(word)
+    // fetched at the first DP: most scans prune every entry
+    var rows: Distance.Rows = null
     var l = lo
     // buckets longer than the query by more than bestDist can neither
-    // lower nor tie it (bestDist starts above 3, so the shorter ones all run)
+    // lower nor tie it
     while (l <= hi && l - len <= bestDist) {
       val bucket = byLength(l)
       val keys = bucket.keys
@@ -122,45 +124,80 @@ object WordList {
         // entries skipped here are farther than bestDist: they would
         // neither lower it nor tie it
         if (Distance.maskLowerBound(masks(i), mask) <= bestDist) {
-          val d = Distance.bounded(keys(i), word, bestDist)
-          val v = bucket.scores(i)
-          if (d < bestDist) { bestDist = d; sum = v; n = 1 }
-          else if (d == bestDist && d <= MaxFuzzyDistance) { sum += v; n += 1 }
+          if (rows eq null) rows = Distance.threadRows
+          val d = Distance.bounded(keys(i), word, bestDist, rows)
+          if (d <= bestDist) {
+            val v = bucket.scores(i)
+            if (d < bestDist || n == 0) { bestDist = d; sum = v; n = 1 }
+            else { sum += v; n += 1 }
+          }
         }
         i += 1
       }
       l += 1
     }
-    val result = if (bestDist > MaxFuzzyDistance || n == 0) 0.0 else sum / n
-    fuzzyCache.put(word, result)
-    result
+    if (n == 0) 0.0 else sum / n
   }
 
+  /** `word` without the repeats of any char after its first occurrence
+    * (Scala's `word.distinct`: "noooo" -> "no", "hello" -> "helo");
+    * `word` itself when no char repeats. ASCII chars are tracked in two
+    * 64-bit sets; a non-ASCII char looks back through the prefix, so
+    * tokens longer than 64 chars take the hash-set `distinct`. */
+  private def distinctChars(word: String): String = {
+    val n = word.length
+    if (n > 64) {
+      val d = word.distinct
+      return if (d.length == n) word else d
+    }
+    var lo = 0L
+    var hi = 0L
+    var out: Array[Char] = null
+    var k = 0
+    var i = 0
+    while (i < n) {
+      val c = word.charAt(i)
+      val seen =
+        if (c < 64) (lo & (1L << c)) != 0
+        else if (c < 128) (hi & (1L << (c - 64))) != 0
+        else word.lastIndexOf(c, i - 1) >= 0
+      if (seen) {
+        if (out == null) {
+          out = new Array[Char](n)
+          word.getChars(0, i, out, 0)
+          k = i
+        }
+      } else {
+        if (c < 64) lo |= 1L << c else if (c < 128) hi |= 1L << (c - 64)
+        if (out != null) { out(k) = c; k += 1 }
+      }
+      i += 1
+    }
+    if (out == null) word else new String(out, 0, k)
+  }
+
+  /** `a` if its magnitude is strictly larger, else `b` (the reference's
+    * tie-break toward the second operand). */
+  private[wordscore] def maxAbs(a: Double, b: Double): Double =
+    if (math.abs(a) > math.abs(b)) a else b
+
   /** Exact -> char-dedup -> fuzzy lookup (reference `evaluate`). */
-  private def evaluate(word: String): Double =
+  private[wordscore] def evaluate(word: String): Double =
     scores.get(word) match {
       case Some(v) => v
       case None =>
-        val dedup = word.distinct
-        scores.get(dedup) match {
+        val dedup = distinctChars(word)
+        if (dedup eq word) fuzzy(word)
+        else scores.get(dedup) match {
           case Some(v) => v
-          case None =>
-            val fw = fuzzy(word)
-            val fd = if (dedup == word) fw else fuzzy(dedup)
-            if (math.abs(fw) > math.abs(fd)) fw else fd
+          case None => maxAbs(fuzzy(word), fuzzy(dedup))
         }
     }
 
-  /** Score of a single token in [-1, 1] (reference `value`). */
-  def value(word: String): Double = value(word, Stemmer.stem(word))
-
-  /** [[value]] of `word` given its Porter stem `stem`. */
-  private[wordscore] def value(word: String, stem: String): Double = {
-    if (stem == word) evaluate(word)
-    else {
-      val we = evaluate(word)
-      val se = evaluate(stem)
-      if (math.abs(we) > math.abs(se)) we else se
-    }
+  /** Score of a single token in [-1, 1] (reference `value`): the word
+    * and, when its stem differs, the stem, whichever scores larger. */
+  def value(word: String): Double = {
+    val stem = Stemmer.stem(word)
+    if (stem == word) evaluate(word) else maxAbs(evaluate(word), evaluate(stem))
   }
 }

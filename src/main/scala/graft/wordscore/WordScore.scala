@@ -18,10 +18,14 @@ import graft.text.Stemmer
  * else 0.0.
  *
  * Unlike the reference (which calls `wl.value(w)` three times per token
- * per pass), each token is scored once per pass. Its stem is computed
- * once and serves the raw pass; the stemmed pass's `value(stem)` stems
- * that stem again, so a token is stemmed twice (the reference: three
- * times). `WordList.value` is pure so the results are identical.
+ * per pass), a token's raw-pass and stemmed-pass values come from one
+ * per-JVM token memo, a [[BoundedLruCache]] of 2^17 entries, so a
+ * recurring token costs one lookup. On a miss the token is stemmed once,
+ * and a second time (its stem's stem) only when its stem differs: when
+ * the stem is the token itself both values are one
+ * `WordList.evaluate(token)`, and otherwise `evaluate(stem)` serves both
+ * passes. The lookups are pure, so the scores are bit-identical to the
+ * per-call chain.
  *
  * Scale: one narrow map stage, no shuffle; the dictionary lives in each
  * executor JVM as a classpath-loaded singleton ([[WordList]]), so the
@@ -29,34 +33,56 @@ import graft.text.Stemmer
  */
 object WordScore {
 
-  private def tokensValue(values: Array[Double]): Option[Double] = {
-    var sum = 0.0
-    var nonZero = 0
-    var i = 0
-    while (i < values.length) {
-      val v = values(i)
-      sum += v
-      if (v != 0.0) nonZero += 1
-      i += 1
-    }
-    if (nonZero != 0) Some(sum / nonZero) else None
+  /** A token's value in the raw pass and in the stemmed pass. */
+  private[wordscore] final class TokenValues(val raw: Double, val stemmed: Double)
+
+  /** The token memo (per JVM): Zipf-distributed tokens make the hit rate
+    * high; bounded LRU so the hot set survives overflow. Every hit
+    * reorders its stripe, so 128 stripes keep executor threads apart. */
+  private[wordscore] val tokenMemo =
+    new BoundedLruCache[String, TokenValues](1 << 17, stripes = 128)
+
+  /** `token`'s raw value `value(token)` and stemmed value
+    * `value(stem(token))`, through the memo. */
+  private def tokenValues(token: String): TokenValues = {
+    val hit = tokenMemo.get(token)
+    if (hit != null) return hit
+    val stem = Stemmer.stem(token)
+    val tv =
+      if (stem == token) {
+        val e = WordList.evaluate(token)
+        new TokenValues(e, e)
+      } else {
+        val es = WordList.evaluate(stem)
+        val stem2 = Stemmer.stem(stem)
+        new TokenValues(WordList.maxAbs(WordList.evaluate(token), es),
+          if (stem2 == stem) es else WordList.maxAbs(es, WordList.evaluate(stem2)))
+      }
+    tokenMemo.put(token, tv)
+    tv
   }
 
   /** Reference `computeSentiment`: mean of raw and stemmed evaluations. */
   def computeSentiment(text: String): Double = {
     if (text == null) return 0.0
     val words = text.split(" ")
-    // each token's stem serves the raw pass and is the stemmed pass's
-    // token
-    val stems = words.map(Stemmer.stem)
-    val raw = tokensValue(Array.tabulate(words.length)(i => WordList.value(words(i), stems(i))))
-    val stem = tokensValue(stems.map(WordList.value))
-    (raw, stem) match {
-      case (Some(r), Some(s)) => (r + s) / 2
-      case (Some(r), None)    => r
-      case (None, Some(s))    => s
-      case (None, None)       => 0.0
+    var rawSum = 0.0
+    var rawN = 0
+    var stemSum = 0.0
+    var stemN = 0
+    var i = 0
+    while (i < words.length) {
+      val tv = tokenValues(words(i))
+      rawSum += tv.raw
+      if (tv.raw != 0.0) rawN += 1
+      stemSum += tv.stemmed
+      if (tv.stemmed != 0.0) stemN += 1
+      i += 1
     }
+    if (rawN != 0 && stemN != 0) (rawSum / rawN + stemSum / stemN) / 2
+    else if (rawN != 0) rawSum / rawN
+    else if (stemN != 0) stemSum / stemN
+    else 0.0
   }
 
   /** The scoring UDF (reference `computeSentimentUDF`). */

@@ -93,17 +93,24 @@ object KernelProps extends Properties("kernels") {
       else Prop(got > max)
     }
 
-  // chars that share a mask bit ('a'/'!' and 'b'/'"' are 64 apart),
-  // plus non-ASCII: the bound must hold through class collisions
+  // letters and digits with their own mask bits ('p'-'y' and '0'-'9'
+  // shared bits under the old `c % 64` map), chars that share a folded
+  // bit ('!'/'=', '-'/'I' and 'A'/']' are 28 apart), plus
+  // non-ASCII: the bound must hold through class collisions
   private val maskWord: Gen[String] =
-    Gen.listOf(Gen.oneOf('a', 'b', 'c', 'd', 'e', '!', '"', '#', '\u00e9', '\ud83d'))
+    Gen.listOf(Gen.oneOf('a', 'b', 'c', 'p', 'y', 'z', '0', '1', '9', '!', '=',
+      '-', 'I', 'A', ']', '\u00e9', '\ud83d'))
       .map(_.mkString)
 
   property("maskLowerBound: the char-class bound never exceeds levenshtein") =
     forAll(maskWord, maskWord) { (a, b) =>
       import graft.wordscore.Distance.{charMask, levenshtein, maskLowerBound}
       val lb = maskLowerBound(charMask(a), charMask(b))
-      Prop(lb <= levenshtein(a, b)) :| s"lb $lb > lev('$a', '$b')"
+      // the map is collision-free on a-z and 0-9
+      val alnum = (('a' to 'z') ++ ('0' to '9')).map(c => charMask(c.toString))
+      Prop(lb <= levenshtein(a, b)) :| s"lb $lb > lev('$a', '$b')" &&
+        Prop(alnum.distinct.size == 36 && alnum.forall(m => java.lang.Long.bitCount(m) == 1)) :|
+          "a-z and 0-9 share a mask bit"
     }
 
   // space-free lowercase strings: normalization is the identity, so

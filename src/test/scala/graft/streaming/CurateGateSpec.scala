@@ -180,6 +180,64 @@ class CurateGateSpec extends AnyFunSuite with SparkTestSession {
       .collect().map(_.getLong(0)).toSet === Set(1L, 2L, 12L))
   }
 
+  test("streaming tail: every job a batch runs carries its streamingTail[b=N] phase") {
+    import spark.implicits._
+    val proseA = "the quick brown fox jumps over the lazy dog and then " +
+      "discusses the merits of deterministic testing with a friend"
+    val proseB = "seventeen sailors navigate uncharted waters while " +
+      "charting constellations nobody has catalogued before tonight"
+    val proseC = "a completely different essay concerning the economics " +
+      "of medieval grain markets and their seasonal price cycles"
+    def vec(k: Int) = Array.tabulate(8)(i => if (i == k) 1.0f else 0.0f)
+    // b1: 11 exact dup of 1, 13 near dup of 1, 14 a semantic dup of 2;
+    // b2: 21 exact dup of 12, 22 near dup of 2
+    val batches = Seq(
+      Seq((1L, proseA, vec(0)), (2L, proseB, vec(1))),
+      Seq((11L, proseA, vec(2)), (13L, proseA + " indeed quite thoroughly", vec(3)),
+        (12L, proseC, vec(4)), (14L, "an unrelated short note on tea", vec(1))),
+      Seq((21L, proseC, vec(5)), (22L, proseB + " again", vec(6))))
+      .map(_.map { case (id, t, v) => (id, "s", t, v) }
+        .toDF("doc_id", "source", "text", "vec"))
+    val dir = java.nio.file.Files.createTempDirectory("graft-phases").toString
+    val t = Curate.streamingTail(spark, dir, minQuality = 0.0,
+      maxDup2gramFrac = 1.0, vecCol = Some("vec"))
+    val label = """streamingTail\[b=(\d+)\] (\S+)""".r
+    val phases = Set("perceptual", "exact", "near-pairs", "near-closure",
+      "semantic", "land-output", "state-write")
+    val sc = spark.sparkContext
+    batches.zipWithIndex.foreach { case (b, i) =>
+      val descs = new java.util.concurrent.ConcurrentLinkedQueue[String]
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(
+            e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+          descs.add(Option(e.properties)
+            .flatMap(p => Option(p.getProperty("spark.job.description")))
+            .getOrElse("<none>"))
+          ()
+        }
+      }
+      org.apache.spark.ListenerBusDrain(sc)
+      sc.addSparkListener(listener)
+      try {
+        t(b, i.toLong)
+        org.apache.spark.ListenerBusDrain(sc)
+      } finally sc.removeSparkListener(listener)
+      import scala.jdk.CollectionConverters._
+      val all = descs.asScala.toSeq
+      val stray = all.filterNot {
+        case label(n, phase) => n == i.toString && phases(phase)
+        case _ => false
+      }
+      assert(stray.isEmpty, s"batch $i: jobs without a phase: $stray")
+      assert(all.exists(_ == s"streamingTail[b=$i] exact"),
+        s"batch $i ran no exact-phase job: $all")
+    }
+    // the caller's own description survives the tail
+    assert(sc.getLocalProperty("spark.job.description") == null)
+    assert(spark.read.parquet(dir).select("doc_id").collect()
+      .map(_.getLong(0)).toSet === Set(1L, 2L, 12L))
+  }
+
   test("streaming tail: a batch admitting nothing writes no state and breaks nothing") {
     import spark.implicits._
     val proseA = "the quick brown fox jumps over the lazy dog and then " +

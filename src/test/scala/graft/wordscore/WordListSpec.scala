@@ -100,9 +100,9 @@ class WordListSpec extends AnyFunSuite {
     assert(WordList.fuzzy("qqqqqqqqqqqqqqqqqqqqqq") === 0.0)
   }
 
-  test("fuzzy memo LRU: bounded at cap without full eviction") {
-    // the memo behind WordList.fuzzy; small instance so overflowing it
-    // doesn't need 2^17 Levenshtein scans
+  test("token memo LRU: bounded at cap without full eviction") {
+    // the cache class behind WordScore's token memo; small instance so
+    // overflowing it doesn't need 2^17 token scorings
     val c = new BoundedLruCache[String, java.lang.Integer](64, stripes = 4)
     for (i <- 0 until 256) c.put(s"k$i", i)
     assert(c.size <= 64)          // bounded
