@@ -15,7 +15,7 @@ package graft.wordscore
 object Distance {
 
   /** One thread's DP rows; never shared across threads. */
-  private[wordscore] final class Rows {
+  private final class Rows {
     var prev = new Array[Int](32)
     var curr = new Array[Int](32)
     def ensure(n: Int): Unit = if (prev.length < n) {
@@ -27,12 +27,6 @@ object Distance {
 
   private val rows = ThreadLocal.withInitial[Rows](() => new Rows)
 
-  /** The calling thread's DP rows, for a caller that runs many
-    * [[bounded]] calls in a row and fetches them once (a thread-local
-    * lookup per call is a tenth of the fuzzy scan's time on four
-    * executor threads). */
-  private[wordscore] def threadRows: Rows = rows.get()
-
   /** Exact Levenshtein distance (insert/delete/substitute all cost 1). */
   def levenshtein(s1: String, s2: String): Int =
     bounded(s1, s2, Int.MaxValue - 1)
@@ -42,11 +36,7 @@ object Distance {
    * The band bound makes the fuzzy dictionary scan viable at scale: for
    * the d<=3 lookup we stop a row as soon as its minimum exceeds 3.
    */
-  def bounded(s1: String, s2: String, max: Int): Int =
-    bounded(s1, s2, max, rows.get())
-
-  /** [[bounded]] in the given thread's rows. */
-  private[wordscore] def bounded(s1: String, s2: String, max: Int, r: Rows): Int = {
+  def bounded(s1: String, s2: String, max: Int): Int = {
     if (s1 == s2) return 0
     val swap = s1.length > s2.length
     val a = if (swap) s2 else s1
@@ -55,6 +45,7 @@ object Distance {
     val lb = b.length
     if (lb - la > max) return max + 1
     if (la == 0) return lb
+    val r = rows.get()
     r.ensure(la + 1)
     var prev = r.prev
     var curr = r.curr

@@ -110,8 +110,6 @@ object WordList {
     val hi = math.min(byLength.length - 1, len + MaxFuzzyDistance)
     if (lo > hi) return 0.0
     val mask = Distance.charMask(word)
-    // fetched at the first DP: most scans prune every entry
-    var rows: Distance.Rows = null
     var l = lo
     // buckets longer than the query by more than bestDist can neither
     // lower nor tie it
@@ -124,8 +122,7 @@ object WordList {
         // entries skipped here are farther than bestDist: they would
         // neither lower it nor tie it
         if (Distance.maskLowerBound(masks(i), mask) <= bestDist) {
-          if (rows eq null) rows = Distance.threadRows
-          val d = Distance.bounded(keys(i), word, bestDist, rows)
+          val d = Distance.bounded(keys(i), word, bestDist)
           if (d <= bestDist) {
             val v = bucket.scores(i)
             if (d < bestDist || n == 0) { bestDist = d; sum = v; n = 1 }
@@ -142,14 +139,9 @@ object WordList {
   /** `word` without the repeats of any char after its first occurrence
     * (Scala's `word.distinct`: "noooo" -> "no", "hello" -> "helo");
     * `word` itself when no char repeats. ASCII chars are tracked in two
-    * 64-bit sets; a non-ASCII char looks back through the prefix, so
-    * tokens longer than 64 chars take the hash-set `distinct`. */
+    * 64-bit sets; a non-ASCII char looks back through the prefix. */
   private def distinctChars(word: String): String = {
     val n = word.length
-    if (n > 64) {
-      val d = word.distinct
-      return if (d.length == n) word else d
-    }
     var lo = 0L
     var hi = 0L
     var out: Array[Char] = null

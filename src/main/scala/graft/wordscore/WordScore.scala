@@ -37,10 +37,8 @@ object WordScore {
   private[wordscore] final class TokenValues(val raw: Double, val stemmed: Double)
 
   /** The token memo (per JVM): Zipf-distributed tokens make the hit rate
-    * high; bounded LRU so the hot set survives overflow. Every hit
-    * reorders its stripe, so 128 stripes keep executor threads apart. */
-  private[wordscore] val tokenMemo =
-    new BoundedLruCache[String, TokenValues](1 << 17, stripes = 128)
+    * high; bounded LRU so the hot set survives overflow. */
+  private[wordscore] val tokenMemo = new BoundedLruCache[String, TokenValues](1 << 17)
 
   /** `token`'s raw value `value(token)` and stemmed value
     * `value(stem(token))`, through the memo. */

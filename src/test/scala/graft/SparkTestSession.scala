@@ -17,16 +17,20 @@ trait SparkTestSession {
   def resourcePath(name: String): String =
     getClass.getResource(name).getPath
 
-  /** The number of Spark jobs started while `body` runs: a listener
-    * counting job starts, registered after the bus has drained (so no
-    * earlier job is counted) and removed in a `finally`. */
-  def jobsDuring(body: => Unit): Int = {
+  /** The description (`spark.job.description`, `<none>` when unset) of
+    * each Spark job started while `body` runs, in start order: a
+    * job-start listener registered after the bus has drained (so no
+    * earlier job is seen) and removed in a `finally`. */
+  def jobDescriptionsDuring(body: => Unit): Seq[String] = {
     val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val descs = new java.util.concurrent.ConcurrentLinkedQueue[String]
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(
           e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
+        descs.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse("<none>"))
+        ()
       }
     }
     org.apache.spark.ListenerBusDrain(sc)
@@ -34,7 +38,11 @@ trait SparkTestSession {
     try {
       body
       org.apache.spark.ListenerBusDrain(sc)
-      jobs.get
+      import scala.jdk.CollectionConverters._
+      descs.asScala.toSeq
     } finally sc.removeSparkListener(listener)
   }
+
+  /** The number of Spark jobs started while `body` runs. */
+  def jobsDuring(body: => Unit): Int = jobDescriptionsDuring(body).size
 }

@@ -204,26 +204,8 @@ class CurateGateSpec extends AnyFunSuite with SparkTestSession {
     val label = """streamingTail\[b=(\d+)\] (\S+)""".r
     val phases = Set("perceptual", "exact", "near-pairs", "near-closure",
       "semantic", "land-output", "state-write")
-    val sc = spark.sparkContext
     batches.zipWithIndex.foreach { case (b, i) =>
-      val descs = new java.util.concurrent.ConcurrentLinkedQueue[String]
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          descs.add(Option(e.properties)
-            .flatMap(p => Option(p.getProperty("spark.job.description")))
-            .getOrElse("<none>"))
-          ()
-        }
-      }
-      org.apache.spark.ListenerBusDrain(sc)
-      sc.addSparkListener(listener)
-      try {
-        t(b, i.toLong)
-        org.apache.spark.ListenerBusDrain(sc)
-      } finally sc.removeSparkListener(listener)
-      import scala.jdk.CollectionConverters._
-      val all = descs.asScala.toSeq
+      val all = jobDescriptionsDuring { t(b, i.toLong) }
       val stray = all.filterNot {
         case label(n, phase) => n == i.toString && phases(phase)
         case _ => false
@@ -233,7 +215,7 @@ class CurateGateSpec extends AnyFunSuite with SparkTestSession {
         s"batch $i ran no exact-phase job: $all")
     }
     // the caller's own description survives the tail
-    assert(sc.getLocalProperty("spark.job.description") == null)
+    assert(spark.sparkContext.getLocalProperty("spark.job.description") == null)
     assert(spark.read.parquet(dir).select("doc_id").collect()
       .map(_.getLong(0)).toSet === Set(1L, 2L, 12L))
   }
