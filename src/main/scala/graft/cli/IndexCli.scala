@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.ops.SimSearch
 import graft.sources.FormatIO
+import graft.state.State
 
 /**
  * ANN index lifecycle CLI — the [[CurateCli]] shape for the SimSearch
@@ -194,7 +195,7 @@ object IndexCli {
     * `_kind` marker, plain ivfSave does not — absent marker = ivf.
     * Read on the driver, no Spark job. */
   private def indexKind(spark: SparkSession, dir: String): String =
-    SimSearch.kindOf(spark, dir).getOrElse("ivf")
+    State.kindOf(spark, dir).getOrElse("ivf")
 
   def main(args: Array[String]): Unit = {
     parse(args.toSeq) match {

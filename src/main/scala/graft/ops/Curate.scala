@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
-import graft.sources.ParquetMeta
+import graft.state.State
 
 /**
  * End-to-end corpus curation — the standard LLM training-data pipeline
@@ -419,16 +419,19 @@ object Curate {
    * the candidate join is narrow precomputed rows, and corpus shingle
    * arrays load only for ids that appear in a candidate pair.
    *
-   * STATE LIFECYCLE: each batch appends one `__batch_id=` partition
-   * per frame, so after many batches a state read is many small
-   * files. [[compactState]] folds all committed partitions into ONE
+   * STATE LIFECYCLE: the output and every state frame are
+   * batch-partitioned tables of [[graft.state.State]], with its
+   * layout, control files and replay contract (each batch writes its
+   * own partition by dynamic overwrite and reads exclude it, so a
+   * foreachBatch retry is a from-scratch recompute of exactly this
+   * batch). After many batches a state read is many small files.
+   * [[compactState]] folds all committed partitions into ONE
    * bucketed+sorted base per frame (keys by `__nk`, shingles by
-   * `__id`, postings by `(__band, __bh)`), committed through an
-   * atomically-renamed manifest that records the fold boundary
+   * `__id`, postings by `(__band, __bh)`), committed through the
+   * `_compaction.meta` control file, which records the fold boundary
    * (`upTo`) — reads take base + only partitions ABOVE the boundary,
    * so a crash anywhere during compaction never double-counts or
-   * loses state, and a retry of a live batch still excludes exactly
-   * its own partition. The bucketed base makes the state side of the
+   * loses state. The bucketed base makes the state side of the
    * exact-novelty anti-join Exchange-free (the batch side alone
    * shuffles, O(batch) rows); pass `compactEvery = Some(n)` to run
    * the fold automatically whenever n uncompacted batch partitions
@@ -443,15 +446,6 @@ object Curate {
    * 3-shingle, 12-hash, 4-band MinHash banding and the 8-bit SRP
    * width; a state computed under other values (another build) fails
    * loudly instead of silently probing stale postings.
-   *
-   * Replay safety: the admitted batch lands in a `__batch_id=<id>`
-   * partition of `outDir` via DYNAMIC partition overwrite — a
-   * foreachBatch retry overwrites its own partition instead of
-   * double-appending (the standard exactly-once recipe for idempotent
-   * sinks) — and every state frame follows the SAME recipe: written
-   * under its own `__batch_id` partition, and reads always EXCLUDE
-   * the in-flight batch's partition, so a retry is a clean
-   * from-scratch recompute of exactly this batch everywhere.
    *
    * BOOTSTRAP / MIGRATION: every frame that lacks coverage — all the
    * text frames when `outDir` holds admitted batches but the key
@@ -504,7 +498,6 @@ object Curate {
     compactOutputEvery.foreach(n =>
       require(n >= 1, "compactOutputEvery must be >= 1"))
     val sd = outDir.stripSuffix("/") + "__state"
-    val hadoopConf = spark.sparkContext.hadoopConfiguration
     // the modality frames in effect: (frame, the option that fills it,
     // its column)
     val modal = blobCol.map(("percsigs", "blobCol", _)).toSeq ++
@@ -522,36 +515,9 @@ object Curate {
     // existed. The marker also pins which modality frames the state
     // TRACKS (see checkStateParams).
     val stored = checkStateParams(spark, sd, tracks)
-    def exists(dir: String): Boolean = {
-      val p = new org.apache.hadoop.fs.Path(dir)
-      p.getFileSystem(hadoopConf).exists(p)
-    }
-    def mkdirs(dir: String): Unit = {
-      val p = new org.apache.hadoop.fs.Path(dir)
-      p.getFileSystem(hadoopConf).mkdirs(p)
-    }
-    // a `__batch_id`-partitioned frame under `dir`, EXCLUDING the
-    // current batch's partition: on a foreachBatch retry after a
-    // partial write, including it would dedup the batch against its
-    // own partial output and the dynamic overwrite below would then
-    // drop the previously-landed rows — excluding it makes the retry
-    // a clean from-scratch recompute of exactly this batch. The
-    // empty case is decided by an EXPLICIT existence check, not a
-    // catch: a swallow-all AnalysisException catch would also
-    // "recover" from schema drift or foreign files by silently
-    // disabling cross-batch dedup — those must throw.
-    def hasParts(dir: String): Boolean =
-      statePartIds(hadoopConf, dir).nonEmpty
-    def readParts(dir: String): DataFrame =
-      ParquetMeta.readParquet(spark, dir)
-        .where(col("__batch_id") =!= lit(batchId))
-        .drop("__batch_id")
-    def overwriteParts(df: DataFrame, dir: String): Unit =
-      df.write.partitionBy("__batch_id")
-        .option("partitionOverwriteMode", "dynamic")
-        .mode("overwrite").parquet(dir)
-    def writeParts(df: DataFrame, dir: String): Unit =
-      overwriteParts(df.withColumn("__batch_id", lit(batchId)), dir)
+    // the compaction manifest: read once per batch, and again only
+    // after a fold replaced it
+    var comp = loadCompaction(spark, sd)
     // the batch's perceptual signatures and SRP state (blobCol/vecCol
     // set), computed ONCE by the modality steps and reused by the
     // state write
@@ -579,7 +545,7 @@ object Curate {
           "left_semi")).withColumnRenamed(idCol, "__id")
       try which.foreach { frame =>
         if (frame == "keys") {
-          frames.init.foreach(f => mkdirs(s"$sd/$f"))
+          frames.init.foreach(f => State.mkdirs(spark, s"$sd/$f"))
           writeStateParamsIfAbsent(spark, sd, tracks)
         }
         write(frame, frame match {
@@ -600,12 +566,12 @@ object Curate {
       historicalCorpus, unigramRef = unigramRef, benchGrams = benchGrams)
     // 2. resolve the dedup state: the durable incremental frames,
     //    rebuilt once from outDir where coverage is missing
-    val outHasBatches = hasParts(outDir)
+    val outHasBatches = State.batchIds(spark, outDir).nonEmpty
     // "state committed" has two witnesses: batch partitions under
     // keys (the pre-compaction shape) OR a compaction manifest (all
     // partitions may have been folded into the bucketed base)
     def stateCommitted: Boolean =
-      loadCompaction(spark, sd).isDefined || hasParts(s"$sd/keys")
+      comp.isDefined || State.batchIds(spark, s"$sd/keys").nonEmpty
     // REBUILD — every frame is a PURE FUNCTION of the admitted corpus,
     // so any coverage gap rebuilds it from outDir in one pass, each
     // row in its original __batch_id partition (replay exclusion keeps
@@ -621,7 +587,7 @@ object Curate {
     val gaps =
       if (!committed && !outHasBatches) Seq.empty
       else modal.filterNot { case (f, _, _) =>
-        stored(f) && exists(s"$sd/$f") }
+        stored(f) && State.exists(spark, s"$sd/$f") }
     val rebuild = gaps.map(_._1) ++
       (if (outHasBatches && !committed) StateFrames else Seq.empty)
     if (rebuild.nonEmpty) {
@@ -633,8 +599,8 @@ object Curate {
             "to rebuild it from — the admitted corpus is gone. Restore " +
             "outDir, or delete the WHOLE state dir to start fresh.")
       }
-      val corpus = spark.read.parquet(outDir)
-        .where(col("__batch_id") =!= lit(batchId))
+      val corpus =
+        State.readExcluding(spark, outDir, batchId, tagged = true).get
       gaps.foreach { case (_, what, c) =>
         require(corpus.columns.contains(c),
           s"streamingTail: $what=$c but the admitted corpus under " +
@@ -643,64 +609,57 @@ object Curate {
       }
       // the frames drop non-selected columns, so re-join the partition
       // id through the corpus' (id -> batch) map
-      val idToBatch = corpus.select(col(idCol).as("__id"), col("__batch_id"))
-      writeFrames(corpus.drop("__batch_id"), frames.filter(rebuild.contains)) {
-        (f, df) =>
-          overwriteParts(df.join(idToBatch, "__id"), s"$sd/$f")
-          mkdirs(s"$sd/$f") // a zero-row rebuild still marks coverage
+      val idToBatch =
+        corpus.select(col(idCol).as("__id"), col(State.BatchCol))
+      writeFrames(corpus.drop(State.BatchCol),
+          frames.filter(rebuild.contains)) { (f, df) =>
+        State.writeTagged(df.join(idToBatch, "__id"), s"$sd/$f")
+        // a zero-row rebuild still marks coverage
+        State.mkdirs(spark, s"$sd/$f")
       }
     }
     // the marker now reflects exactly what this invocation tracks
     // (checkStateParams already threw on any illegal transition, and
     // the rebuild above closed any coverage gap)
     if (stateCommitted)
-      writeControlFile(spark, sd, ParamsFile, stateParamsContent(tracks))
-    // auto-compaction: once `compactEvery` uncompacted batch
-    // partitions have accumulated, fold them into the bucketed base.
-    // Running HERE — inside foreachBatch, before this batch's state
-    // read — is what makes the fold safe without coordination: every
-    // partition except this batch's own is committed (foreachBatch for
-    // batch N only runs after N-1's commit), this batch's partition is
-    // excluded explicitly, and there is no concurrent reader to race.
+      State.writeControl(spark, sd, ParamsFile, stateParamsContent(tracks))
+    // auto-compaction: once n batch partitions of a table above its
+    // fold boundary, other than this batch's own, are pending, fold
+    // them. Running HERE — inside foreachBatch, before this batch's
+    // state read — is what makes the fold safe without coordination:
+    // every partition except this batch's own is committed
+    // (foreachBatch for batch N only runs after N-1's commit), this
+    // batch's partition is excluded explicitly, and there is no
+    // concurrent reader to race.
+    def foldWhen(n: Int, dir: String, above: Long)(fold: => Unit): Unit =
+      if (State.batchIds(spark, dir)
+          .count(id => id > above && id != batchId) >= n) fold
+    // the output-fold recipe (negative-id base partition,
+    // marker-healed); the heal runs every batch so a crash inside a
+    // previous fold's dup window is closed at the next batch, not at
+    // the next threshold crossing
+    def foldOutput(n: Int, dir: String): Unit = {
+      healOutputFold(spark, dir)
+      foldWhen(n, dir, -1L)(compactOutput(spark, dir, compactAll = true,
+        excludeBatchIds = Set(batchId)))
+    }
     compactEvery.foreach { n =>
-      val folded = loadCompaction(spark, sd).map(_.upTo)
-        .getOrElse(Long.MinValue)
-      val pending = statePartIds(hadoopConf, s"$sd/keys")
-        .count(id => id > folded && id != batchId)
-      if (pending >= n)
+      foldWhen(n, s"$sd/keys", comp.fold(Long.MinValue)(_.upTo)) {
         compactState(spark, sd, compactAll = true,
           excludeBatchIds = Set(batchId), maxBases = compactMaxBases)
-      // the modality frames self-fold through the OUTPUT-fold recipe
-      // (negative-id base partition, marker-healed) instead of the
-      // tiered manifest: their rows are narrow signatures/vectors — the
-      // per-batch small-file problem is real, a bucketed tier is not
-      // (the banded candidate join keys on derived chunk values, so no
-      // bucket layout can make it Exchange-free; the probe side
-      // broadcasts instead)
-      tracks.map(f => s"$sd/$f").foreach { dir =>
-        healOutputFold(spark, dir)
-        val pendingP = statePartIds(hadoopConf, dir)
-          .count(id => id >= 0 && id != batchId)
-        if (pendingP >= n)
-          compactOutput(spark, dir, compactAll = true,
-            excludeBatchIds = Set(batchId))
+        comp = loadCompaction(spark, sd)
       }
+      // the modality frames self-fold through the OUTPUT-fold recipe
+      // instead of the tiered manifest: their rows are narrow
+      // signatures/vectors — the per-batch small-file problem is real,
+      // a bucketed tier is not (the banded candidate join keys on
+      // derived chunk values, so no bucket layout can make it
+      // Exchange-free; the probe side broadcasts instead)
+      tracks.foreach(f => foldOutput(n, s"$sd/$f"))
     }
-    // output folding rides the same safety argument (every partition
-    // except this batch's own is committed); the heal runs every
-    // batch so a crash inside a previous fold's dup window is closed
-    // at the next batch, not at the next threshold crossing
-    compactOutputEvery.foreach { n =>
-      healOutputFold(spark, outDir)
-      val pendingOut = statePartIds(hadoopConf, outDir)
-        .count(id => id >= 0 && id != batchId)
-      if (pendingOut >= n)
-        compactOutput(spark, outDir, compactAll = true,
-          excludeBatchIds = Set(batchId))
-    }
-    val comp = loadCompaction(spark, sd)
+    compactOutputEvery.foreach(foldOutput(_, outDir))
     val (novelOf, pairsOf, oldIds) =
-      if (comp.isEmpty && !hasParts(s"$sd/keys")) {
+      if (!stateCommitted) {
         // fresh stream: no admitted corpus yet, nothing to dedup
         // against cross-batch: the batch pair pass (the incremental
         // core with no corpus index)
@@ -729,18 +688,15 @@ object Curate {
         val folded = comp.map(_.upTo).getOrElse(Long.MinValue)
         def tailState(sub: String, empty: => DataFrame): DataFrame = {
           val dir = s"$sd/$sub"
-          if (!exists(dir))
+          if (!State.exists(spark, dir))
             throw new IllegalStateException(
               s"streamingTail state is corrupt: $dir is missing while " +
                 "the state is committed — the near-dedup state was " +
                 "destroyed out-of-band. Delete the WHOLE state dir to " +
                 "trigger a bootstrap rebuild from outDir, or restore " +
                 "the frame.")
-          else if (!hasParts(dir)) empty
-          else ParquetMeta.readParquet(spark, dir)
-            .where(col("__batch_id") =!= lit(batchId) &&
-              col("__batch_id") > lit(folded))
-            .drop("__batch_id")
+          else State.readExcluding(spark, dir, batchId, folded)
+            .getOrElse(empty)
         }
         def baseState(sub: String): Seq[DataFrame] =
           comp.toSeq.flatMap(m => m.bases.map(tier =>
@@ -830,10 +786,8 @@ object Curate {
     // first-arrival drop against the state's ids
     def modalityStep(frame: String, rows: DataFrame, batchState: DataFrame)
                     (pair: DataFrame => DataFrame): DataFrame = {
-      val dir = s"$sd/$frame"
-      val old =
-        if (!hasParts(dir)) batchState.limit(0)
-        else readParts(dir).withColumnRenamed("__id", idCol)
+      val old = State.readExcluding(spark, s"$sd/$frame", batchId)
+        .fold(batchState.limit(0))(_.withColumnRenamed("__id", idCol))
       firstArrival(rows, pair(old),
         old.select(col(idCol).as("__old_id")).distinct())
     }
@@ -945,7 +899,7 @@ object Curate {
       }
       // 5. land the batch in its own partition; a foreachBatch retry
       //    overwrites it (idempotent replay) instead of duplicating
-      labeled("land-output") { writeParts(admitted, outDir) }
+      labeled("land-output") { State.writeBatch(admitted, outDir, batchId) }
       // 6. maintain the durable state from the rows JUST LANDED (read
       //    back the one pruned partition — cheap, and it makes the
       //    state a pure function of the durable output), every frame
@@ -957,10 +911,10 @@ object Curate {
       //    rows: the recompute is deterministic against the same
       //    excluded-batch state, so a batch that once admitted rows
       //    admits the same rows again.
-      if (exists(s"$outDir/__batch_id=$batchId")) labeled("state-write") {
-        val landed = ParquetMeta.readParquet(spark, outDir)
-          .where(col("__batch_id") === lit(batchId)).drop("__batch_id")
-        writeFrames(landed, frames)((f, df) => writeParts(df, s"$sd/$f"))
+      if (State.hasBatch(spark, outDir, batchId)) labeled("state-write") {
+        val landed = State.readBatches(spark, outDir, Seq(batchId))
+        writeFrames(landed, frames)((f, df) =>
+          State.writeBatch(df, s"$sd/$f", batchId))
       }
     } // `exact` (and a non-empty `pairs`) is a localCheckpoint: released
       // by the ContextCleaner (see the step-3 comment), not by a
@@ -1014,69 +968,16 @@ object Curate {
       "blob column"),
     ("semvecs", "vecCol", "semantic vectors", "semantic", "vector column"))
 
-  /** The `key=value` lines of a control file. */
-  private def keyValues(text: String): Map[String, String] =
-    text.linesIterator.filter(_.contains("="))
-      .map { l => val Array(k, v) = l.split("=", 2); (k, v) }.toMap
-
   private def stateBucketKeys(frame: String): Seq[String] = frame match {
     case "keys"     => Seq("__nk")
     case "shingles" => Seq("__id")
     case _          => Seq("__band", "__bh")
   }
 
-  /** Write a small control file ATOMICALLY (temp + rename-overwrite —
-    * atomic on POSIX and HDFS): readers see the old content or the new
-    * content, never a partial file and never an absent one. */
-  private def writeControlFile(spark: org.apache.spark.sql.SparkSession,
-                               dir: String, name: String,
-                               content: String): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val dirPath = new org.apache.hadoop.fs.Path(dir)
-    val fs = dirPath.getFileSystem(conf)
-    fs.mkdirs(dirPath)
-    val tmp = new org.apache.hadoop.fs.Path(dir, s".$name.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(content.getBytes("UTF-8")) finally out.close()
-    org.apache.hadoop.fs.FileContext.getFileContext(dirPath.toUri, conf)
-      .rename(tmp, new org.apache.hadoop.fs.Path(dir, name),
-        org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-  }
-
-  private def readControlFile(spark: org.apache.spark.sql.SparkSession,
-                              dir: String, name: String): Option[String] = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val p = new org.apache.hadoop.fs.Path(dir, name)
-    val fs = p.getFileSystem(conf)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try {
-        val bytes = new java.io.ByteArrayOutputStream()
-        val buf = new Array[Byte](8192)
-        var n = in.read(buf)
-        while (n >= 0) { bytes.write(buf, 0, n); n = in.read(buf) }
-        Some(new String(bytes.toByteArray, "UTF-8"))
-      } finally in.close()
-    }
-  }
-
-  /** The `__batch_id=` partition ids present under `dir` (empty when
-    * the dir is absent). */
-  private[ops] def statePartIds(conf: org.apache.hadoop.conf.Configuration,
-                                dir: String): Seq[Long] = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(conf)
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).toSeq.map(_.getPath.getName)
-      .filter(_.startsWith("__batch_id="))
-      .map(_.stripPrefix("__batch_id=").toLong)
-  }
-
   private[ops] def loadCompaction(spark: org.apache.spark.sql.SparkSession,
                                   stateDir: String): Option[StateCompaction] =
-    readControlFile(spark, stateDir, CompactionFile).map { text =>
-      val kv = keyValues(text)
+    State.readControl(spark, stateDir, CompactionFile).map { text =>
+      val kv = State.keyValues(text)
       def frameAt(prefix: String): Map[String, StateFrameMeta] =
         StateFrames.flatMap { f =>
           kv.get(s"$prefix$f.table").map { t =>
@@ -1106,7 +1007,7 @@ object Curate {
             s"base.$i.$f.bucketKeys=${fm.bucketKeys.mkString(",")}")
         }
       }
-    writeControlFile(spark, stateDir, CompactionFile, lines.mkString("\n"))
+    State.writeControl(spark, stateDir, CompactionFile, lines.mkString("\n"))
   }
 
   private def stateParamsContent(tracks: Seq[String]): String =
@@ -1137,9 +1038,9 @@ object Curate {
   private def checkStateParams(spark: org.apache.spark.sql.SparkSession,
                                stateDir: String,
                                tracks: Seq[String]): Set[String] =
-    readControlFile(spark, stateDir, ParamsFile).fold(Set.empty[String]) {
+    State.readControl(spark, stateDir, ParamsFile).fold(Set.empty[String]) {
       stored =>
-        val kv = keyValues(stored)
+        val kv = State.keyValues(stored)
         val bandingOk = Seq("shingleSize" -> ShingleSize,
           "numHashes" -> NumHashes, "bands" -> Bands).forall {
           case (k, v) => kv.get(k).contains(v.toString) }
@@ -1179,8 +1080,8 @@ object Curate {
   private def writeStateParamsIfAbsent(
       spark: org.apache.spark.sql.SparkSession, stateDir: String,
       tracks: Seq[String]): Unit =
-    if (readControlFile(spark, stateDir, ParamsFile).isEmpty)
-      writeControlFile(spark, stateDir, ParamsFile,
+    if (State.readControl(spark, stateDir, ParamsFile).isEmpty)
+      State.writeControl(spark, stateDir, ParamsFile,
         stateParamsContent(tracks))
 
   /** Open a compacted base as its bucketed catalog table, re-creating
@@ -1276,8 +1177,8 @@ object Curate {
     //    and base dirs the manifest doesn't list never committed
     //    (delete + deregister)
     StateFrames.foreach { f =>
-      statePartIds(conf, s"$sd/$f").filter(_ <= oldUpTo).foreach { id =>
-        fsOf(sd).delete(pathOf(s"$sd/$f/__batch_id=$id"), true) }
+      State.dropBatches(spark, s"$sd/$f",
+        State.batchIds(spark, s"$sd/$f").filter(_ <= oldUpTo))
       val sdFs = fsOf(sd)
       if (sdFs.exists(pathOf(sd)))
         sdFs.listStatus(pathOf(sd)).toSeq.map(_.getPath.getName)
@@ -1292,7 +1193,7 @@ object Curate {
     //    not blocked by an exclusion (the in-flight batch) or by the
     //    keep-the-highest replay rule — a gap would break the
     //    "tiers cover everything <= upTo" reading invariant
-    val live = statePartIds(conf, s"$sd/keys").filter(_ > oldUpTo).sorted
+    val live = State.batchIds(spark, s"$sd/keys").filter(_ > oldUpTo).sorted
     if (live.isEmpty && old.isEmpty) return None
     val blocked = excludeBatchIds ++
       (if (compactAll) Set.empty[Long] else live.lastOption.toSet)
@@ -1317,14 +1218,11 @@ object Curate {
         if (major) oldTiers.map(t => openStateBase(spark, sd,
           old.get.buckets, t, f))
         else Seq.empty
-      val hasTail = statePartIds(conf, s"$sd/$f")
-        .exists(id => id > oldUpTo && id <= upTo)
+      val tailIds = State.batchIds(spark, s"$sd/$f")
+        .filter(id => id > oldUpTo && id <= upTo)
       val tail =
-        if (!hasTail) None
-        else Some(ParquetMeta.readParquet(spark, s"$sd/$f")
-          .where(col("__batch_id") > lit(oldUpTo) &&
-            col("__batch_id") <= lit(upTo))
-          .drop("__batch_id"))
+        if (tailIds.isEmpty) None
+        else Some(State.readBatches(spark, s"$sd/$f", tailIds))
       val merged = (tierBases ++ tail.toSeq) match {
         case Seq() =>
           // only reachable for shingles/postings (eligible ids come
@@ -1345,8 +1243,7 @@ object Curate {
       val newPath = s"$sd/${f}_base_v$upTo"
       val newTable = tableName(f, upTo)
       spark.sql(s"DROP TABLE IF EXISTS $newTable")
-      if (fsOf(newPath).exists(pathOf(newPath)))
-        fsOf(newPath).delete(pathOf(newPath), true)
+      State.delete(spark, newPath)
       // repartition on the bucket keys with numPartitions == buckets:
       // repartition's hash and the bucket-id hash agree, so each task
       // holds exactly one bucket → ONE file per bucket. The downstream
@@ -1371,18 +1268,18 @@ object Curate {
     // 4. post-commit cleanup (safe to crash anywhere in here: reads
     //    already exclude everything being deleted)
     StateFrames.foreach { f =>
-      statePartIds(conf, s"$sd/$f").filter(_ <= upTo).foreach { id =>
-        fsOf(sd).delete(pathOf(s"$sd/$f/__batch_id=$id"), true) }
+      State.dropBatches(spark, s"$sd/$f",
+        State.batchIds(spark, s"$sd/$f").filter(_ <= upTo))
     }
     if (major) oldTiers.foreach(_.foreach { case (_, fm) =>
       spark.sql(s"DROP TABLE IF EXISTS ${fm.table}")
-      if (fsOf(fm.path).exists(pathOf(fm.path)))
-        fsOf(fm.path).delete(pathOf(fm.path), true)
+      State.delete(spark, fm.path)
     })
     Some(upTo)
   }
 
   private val OutFoldFile = "_outfold.meta"
+  private val OutFoldTmp = ".outfold_tmp"
 
   /** Delete any half-finished output fold's artifacts and finish a
     * committed one: the hidden staging dir always goes; with a marker
@@ -1393,19 +1290,14 @@ object Curate {
     * auto path each batch. */
   private def healOutputFold(spark: org.apache.spark.sql.SparkSession,
                              outDir: String): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
     val dir = outDir.stripSuffix("/")
-    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(conf)
-    fs.delete(new org.apache.hadoop.fs.Path(dir, ".outfold_tmp"), true)
-    readControlFile(spark, dir, OutFoldFile).foreach { text =>
-      val kv = keyValues(text)
-      val baseId = kv("base").toLong
-      val sources = kv("sources").split(",").filter(_.nonEmpty).map(_.toLong)
-      if (fs.exists(new org.apache.hadoop.fs.Path(
-          s"$dir/__batch_id=$baseId")))
-        sources.foreach(id => fs.delete(
-          new org.apache.hadoop.fs.Path(s"$dir/__batch_id=$id"), true))
-      fs.delete(new org.apache.hadoop.fs.Path(dir, OutFoldFile), false)
+    State.delete(spark, s"$dir/$OutFoldTmp")
+    State.readControl(spark, dir, OutFoldFile).foreach { text =>
+      val kv = State.keyValues(text)
+      if (State.hasBatch(spark, dir, kv("base").toLong))
+        State.dropBatches(spark, dir,
+          kv("sources").split(",").toSeq.filter(_.nonEmpty).map(_.toLong))
+      State.delete(spark, s"$dir/$OutFoldFile")
     }
   }
 
@@ -1452,10 +1344,8 @@ object Curate {
                     excludeBatchIds: Set[Long] = Set.empty): Option[Long] = {
     require(numFiles >= 1, "numFiles must be >= 1")
     val dir = outDir.stripSuffix("/")
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(conf)
     healOutputFold(spark, dir)
-    val ids = statePartIds(conf, dir)
+    val ids = State.batchIds(spark, dir)
     val positives = ids.filter(_ >= 0)
     val bases = ids.filter(_ < 0)
     val blocked = excludeBatchIds ++
@@ -1464,25 +1354,17 @@ object Curate {
     val sources = bases ++ fold
     if (fold.isEmpty || sources.size <= 1) return None
     val baseId = -fold.max - 1
-    val tmp = new org.apache.hadoop.fs.Path(dir, ".outfold_tmp")
-    fs.delete(tmp, true)
+    val tmp = s"$dir/$OutFoldTmp"
     // stage OUTSIDE the read path (a dynamic overwrite into the dir
     // being read would be rejected as a read-write conflict), then
     // commit by an atomic directory rename into the partition slot
-    ParquetMeta.readParquet(spark, dir)
-      .where(col("__batch_id").isin(sources: _*))
-      .drop("__batch_id")
-      .repartition(numFiles)
-      .write.mode("overwrite").parquet(tmp.toString)
-    writeControlFile(spark, dir, OutFoldFile,
+    State.readBatches(spark, dir, sources).repartition(numFiles)
+      .write.mode("overwrite").parquet(tmp)
+    State.writeControl(spark, dir, OutFoldFile,
       s"base=$baseId\nsources=${sources.mkString(",")}")
-    if (!fs.rename(tmp,
-        new org.apache.hadoop.fs.Path(s"$dir/__batch_id=$baseId")))
-      throw new java.io.IOException(
-        s"compactOutput: staging rename into __batch_id=$baseId failed")
-    sources.foreach(id => fs.delete(
-      new org.apache.hadoop.fs.Path(s"$dir/__batch_id=$id"), true))
-    fs.delete(new org.apache.hadoop.fs.Path(dir, OutFoldFile), false)
+    State.commitBatch(spark, tmp, dir, baseId)
+    State.dropBatches(spark, dir, sources)
+    State.delete(spark, s"$dir/$OutFoldFile")
     Some(baseId)
   }
 }

@@ -2,11 +2,12 @@ package graft.ops
 
 import scala.reflect.runtime.universe.TypeTag
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode}
 import org.apache.spark.sql.expressions.{UserDefinedFunction, Window}
 import org.apache.spark.sql.functions._
 
 import graft.sources.ParquetMeta
+import graft.state.State
 
 /**
  * Similarity search over an embedding column (`Array[Float]`) —
@@ -460,31 +461,6 @@ object SimSearch {
     * collide with it. */
   private val FitBatchId = -1L
 
-  /** Has `batchId` already been applied to the index under `dir`?
-    * One directory-existence probe of the applied-batch ledger — the
-    * no-op fast path a foreachBatch replay takes. */
-  private def batchApplied(spark: org.apache.spark.sql.SparkSession,
-                           dir: String, batchId: Long): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(
-      s"$dir/applied/__batch_id=$batchId")
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-  }
-
-  /** Record `batchId` in the applied-batch ledger — written LAST
-    * (after the batch's data partitions), so a crash between data and
-    * ledger replays as a clean dynamic-overwrite recompute of exactly
-    * that batch; the ledger write itself is a dynamic overwrite of its
-    * own partition, so it is replay-idempotent too (the
-    * [[graft.ops.Curate.streamingTail]] recipe). */
-  private def recordApplied(spark: org.apache.spark.sql.SparkSession,
-                            dir: String, batchId: Long): Unit = {
-    import spark.implicits._
-    Seq(1).toDF("ok").withColumn("__batch_id", lit(batchId))
-      .coalesce(1).write.partitionBy("__batch_id")
-      .option("partitionOverwriteMode", "dynamic")
-      .mode("overwrite").parquet(s"$dir/applied")
-  }
-
   /** MIGRATE a pre-ledger index layout in place: indexes persisted
     * before the exactly-once ledger existed are partitioned by
     * `__cell` ONLY (data files sit directly in each cell directory).
@@ -512,8 +488,8 @@ object SimSearch {
           s.isFile && !n.startsWith("_") && !n.startsWith(".")
         }
         if (legacy.nonEmpty) {
-          val dest = new org.apache.hadoop.fs.Path(cell.getPath,
-            s"__batch_id=$FitBatchId")
+          val dest = new org.apache.hadoop.fs.Path(
+            State.batchPath(cell.getPath.toString, FitBatchId))
           fs.mkdirs(dest)
           legacy.foreach { f =>
             // Hadoop FileSystem.rename reports failure by RETURNING
@@ -537,12 +513,8 @@ object SimSearch {
     * corpus version — a new version must accept them afresh). */
   private def clearVersionState(spark: org.apache.spark.sql.SparkSession,
                                 dir: String): Unit = {
-    val hc = spark.sparkContext.hadoopConfiguration
-    Seq("baseline_cells", "baseline_meta", "applied").foreach { s =>
-      val p = new org.apache.hadoop.fs.Path(s"$dir/$s")
-      val fs = p.getFileSystem(hc)
-      if (fs.exists(p)) fs.delete(p, true)
-    }
+    State.delete(spark, s"$dir/baseline_cells", s"$dir/baseline_meta")
+    State.clearLedger(spark, dir)
   }
 
   /** Persist a fitted [[IvfIndex]]: the assigned corpus goes to
@@ -570,9 +542,7 @@ object SimSearch {
                         dir: String, table: String): Unit = {
     val spark = rows.sparkSession
     import spark.implicits._
-    rows.withColumn("__batch_id", lit(FitBatchId))
-      .write.mode("overwrite")
-      .partitionBy("__cell", "__batch_id").parquet(s"$dir/$table")
+    State.replaceWithBatch(rows, s"$dir/$table", FitBatchId, Seq("__cell"))
     centers.zipWithIndex.flatMap { case (c, i) =>
       c.zipWithIndex.map { case (w, p) => (i, p, w) }
     }.toSeq.toDF("cell", "pos", "w")
@@ -638,8 +608,11 @@ object SimSearch {
     * lands via DYNAMIC partition overwrite of its own
     * (`__cell`, `__batch_id`) partitions — partial files from the
     * failed attempt are overwritten, never doubled (duplicate ids
-    * would silently corrupt rankings at scale) — and the ledger row
-    * commits LAST. Without `batchId` the write is a plain append
+    * would silently corrupt rankings at scale) — and the ledger entry
+    * commits LAST, after the data: one directory created on the
+    * driver ([[graft.state.State.recordApplied]], no Spark job), so a
+    * crash between data and ledger replays as a clean recompute of
+    * exactly that batch. Without `batchId` the write is a plain append
     * into the fit partition (legacy behavior — the caller owns replay
     * safety). Returns whether the batch was applied (false = replay
     * no-op).
@@ -667,12 +640,12 @@ object SimSearch {
       rows: Array[Array[Double]] => DataFrame): Boolean = {
     require(!newDf.columns.contains("__cell"),
       "input column __cell collides with the index's cell column")
-    require(!newDf.columns.contains("__batch_id"),
-      "input column __batch_id collides with the index's ledger column")
+    require(!newDf.columns.contains(State.BatchCol),
+      s"input column ${State.BatchCol} collides with the index's ledger column")
     batchId.foreach(id => require(id >= 0,
       s"batchId must be >= 0 (got $id; negative ids are reserved for " +
         "the fit-time partition)"))
-    if (batchId.exists(batchApplied(spark, dir, _))) false
+    if (batchId.exists(State.applied(spark, dir, _))) false
     else {
       // a pre-ledger index (partitioned by __cell only) must migrate
       // BEFORE this append writes a deeper partition beside it — see
@@ -680,17 +653,10 @@ object SimSearch {
       migrateLegacyCellLayout(spark, s"$dir/$table")
       val centers = loadCenters(spark, dir)
       require(centers.nonEmpty, s"no centers found under $dir/centers")
-      val write = rows(centers)
-        .withColumn("__batch_id", lit(batchId.getOrElse(FitBatchId)))
-        .write.partitionBy("__cell", "__batch_id")
-      batchId match {
-        case Some(id) =>
-          write.option("partitionOverwriteMode", "dynamic")
-            .mode("overwrite").parquet(s"$dir/$table")
-          recordApplied(spark, dir, id)
-        case None =>
-          write.mode("append").parquet(s"$dir/$table")
-      }
+      State.writeBatch(rows(centers), s"$dir/$table",
+        batchId.getOrElse(FitBatchId), Seq("__cell"),
+        if (batchId.isDefined) SaveMode.Overwrite else SaveMode.Append)
+      batchId.foreach(State.recordApplied(spark, dir, _))
       true
     }
   }
@@ -1669,8 +1635,7 @@ object SimSearch {
     } yield (j, c, p, model.codebooks(j)(c)(p))
     rows.toDF("j", "c", "p", "w")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/codebooks")
-    Seq("pq").toDF("kind")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/_kind")
+    State.writeKind(spark, dir, "pq")
     Seq((model.m, model.k, model.dsub)).toDF("m", "k", "dsub")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/meta")
   }
@@ -1682,7 +1647,7 @@ object SimSearch {
     * encode silently wrong). All three tables are read on the driver
     * ([[graft.sources.ParquetMeta.driverRows]]), no Spark job. */
   def pqLoad(spark: org.apache.spark.sql.SparkSession, dir: String): PqModel = {
-    val kind = kindOf(spark, dir).getOrElse("none")
+    val kind = State.kindOf(spark, dir).getOrElse("none")
     require(kind == "pq",
       s"model at $dir is '$kind', not 'pq' — refusing a cross-family " +
         "load (it would encode silently wrong)")
@@ -2114,8 +2079,7 @@ object SimSearch {
       case (false, true)  => "ivfpq_res"
       case (false, false) => "ivfpq"
     }
-    Seq(kind).toDF("kind")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/_kind")
+    State.writeKind(spark, dir, kind)
   }
 
   /** Load an [[IvfPqIndex]] persisted by [[ivfPqSave]] (`_kind`
@@ -2127,7 +2091,7 @@ object SimSearch {
     * encoded under. */
   def ivfPqLoad(spark: org.apache.spark.sql.SparkSession, dir: String,
                 idCol: String): IvfPqIndex = {
-    val kind = kindOf(spark, dir).getOrElse("none")
+    val kind = State.kindOf(spark, dir).getOrElse("none")
     require(Set("ivfpq", "ivfpq_res", "ivfpq_opq", "ivfpq_opq_res")(kind),
       s"index at $dir is '$kind', not an ivfpq family — refusing a " +
         "cross-family load")
@@ -2156,21 +2120,9 @@ object SimSearch {
     * applies. */
   def ivfPqRotationOf(spark: org.apache.spark.sql.SparkSession,
                       dir: String): Option[Array[Array[Double]]] =
-    if (kindOf(spark, dir).exists(_.startsWith("ivfpq_opq")))
+    if (State.kindOf(spark, dir).exists(_.startsWith("ivfpq_opq")))
       Some(loadRotation(spark, dir))
     else None
-
-  /** The `_kind` marker of a persisted index or model dir, read on
-    * the driver; None when the dir has none (a plain [[ivfSave]]
-    * layout). */
-  private[graft] def kindOf(spark: org.apache.spark.sql.SparkSession,
-                            dir: String): Option[String] = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/_kind")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else Some(ParquetMeta.driverRows(spark, p.toString).head
-      .getString("kind", 0))
-  }
 
   /** Load the persisted OPQ rotation, verifying every (i, j) cell is
     * present (a torn rotation would rotate queries silently wrong). */
@@ -2205,7 +2157,7 @@ object SimSearch {
       // must encode v - center(cell), and an OPQ index must rotate
       // first (its centers/codebooks live in the rotated space) —
       // exactly as fit time did
-      val kind = kindOf(spark, dir).getOrElse("none")
+      val kind = State.kindOf(spark, dir).getOrElse("none")
       val input =
         if (kind.startsWith("ivfpq_opq"))
           rotateEmbeddings(newDf, vecCol, loadRotation(spark, dir))

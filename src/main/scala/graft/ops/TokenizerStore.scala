@@ -2,6 +2,8 @@ package graft.ops
 
 import org.apache.spark.sql.SparkSession
 
+import graft.state.State
+
 /**
  * Tokenizer model persistence — the [[SimSearch.ivfSave]] discipline
  * for the tokenizer trio: a vocabulary is fitted ONCE per corpus
@@ -19,14 +21,10 @@ import org.apache.spark.sql.SparkSession
  */
 object TokenizerStore {
 
-  private def writeKind(spark: SparkSession, dir: String, kind: String): Unit = {
-    import spark.implicits._
-    Seq(kind).toDF("kind").coalesce(1)
-      .write.mode("overwrite").parquet(s"$dir/_kind")
-  }
-
+  /** The cross-family guard: the `_kind` marker is read on the driver,
+    * so a refused load runs no Spark job. */
   private def requireKind(spark: SparkSession, dir: String, kind: String): Unit = {
-    val found = spark.read.parquet(s"$dir/_kind").collect()(0).getString(0)
+    val found = State.kindOf(spark, dir).getOrElse("none")
     require(found == kind,
       s"tokenizer model at $dir is '$found', not '$kind' — refusing a " +
         "cross-family load (it would segment silently wrong)")
@@ -37,7 +35,7 @@ object TokenizerStore {
   def saveBpe(spark: SparkSession, merges: Seq[Bpe.Merge], dir: String): Unit = {
     import spark.implicits._
     merges.toDF().coalesce(1).write.mode("overwrite").parquet(s"$dir/model")
-    writeKind(spark, dir, "bpe")
+    State.writeKind(spark, dir, "bpe")
   }
 
   def loadBpe(spark: SparkSession, dir: String): Seq[Bpe.Merge] = {
@@ -56,7 +54,7 @@ object TokenizerStore {
     pieces.zipWithIndex.map { case (p, i) => (i, p.piece, p.count, p.logprob) }
       .toDF("ord", "piece", "count", "logprob")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/model")
-    writeKind(spark, dir, "unigram")
+    State.writeKind(spark, dir, "unigram")
   }
 
   def loadUnigram(spark: SparkSession, dir: String): Seq[Unigram.Piece] = {
@@ -77,7 +75,7 @@ object TokenizerStore {
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/alphabet")
     vocab.merges.toDF().coalesce(1)
       .write.mode("overwrite").parquet(s"$dir/model")
-    writeKind(spark, dir, "wordpiece")
+    State.writeKind(spark, dir, "wordpiece")
   }
 
   def loadWordPiece(spark: SparkSession, dir: String): WordPiece.Vocab = {

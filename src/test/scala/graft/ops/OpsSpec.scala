@@ -5,6 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions.{col, desc, length, lit, size}
 
 import graft.SparkTestSession
+import graft.state.State
 
 /** LLM-pipeline operator semantics + plan-shape assertions (the scale
   * contract: LSH paths must never contain a cartesian product). */
@@ -1038,7 +1039,7 @@ class OpsSpec extends AnyFunSuite with SparkTestSession {
       val loaded = SimSearch.ivfLoad(spark, dir, "vec_id", "embedding")
       assert(loaded.centers.map(v => bits(v.toSeq)).toSeq ===
         sparkCenters(dir).map(bits))
-      assert(SimSearch.kindOf(spark, dir) === None)
+      assert(State.kindOf(spark, dir) === None)
       // fit + batch-id appends
       Seq(0L, 1L).foreach { b =>
         SimSearch.ivfAppend(spark, dir,
@@ -1087,8 +1088,8 @@ class OpsSpec extends AnyFunSuite with SparkTestSession {
       SimSearch.ivfPqAppend(spark, pq, emb.where(c("vec_id") % 5 === 0),
         "vec_id", "embedding", batchId = Some(0L))
       sameRead(s"$pq/codes")
-      assert(SimSearch.kindOf(spark, pq) === Some(sparkKind(pq)))
-      assert(SimSearch.kindOf(spark, s"$pq/pq") === Some(sparkKind(s"$pq/pq")))
+      assert(State.kindOf(spark, pq) === Some(sparkKind(pq)))
+      assert(State.kindOf(spark, s"$pq/pq") === Some(sparkKind(s"$pq/pq")))
       val loaded = SimSearch.ivfPqLoad(spark, pq, "vec_id")
       assert(loaded.centers.map(v => bits(v.toSeq)).toSeq ===
         sparkCenters(pq).map(bits))
@@ -1128,7 +1129,7 @@ class OpsSpec extends AnyFunSuite with SparkTestSession {
         idx = SimSearch.ivfLoad(spark, dir, "vec_id", "embedding")
       } === 0)
       assert(jobsDuring { SimSearch.ivfBaselineLoad(spark, dir); () } === 0)
-      assert(jobsDuring { SimSearch.kindOf(spark, dir); () } === 0)
+      assert(jobsDuring { State.kindOf(spark, dir); () } === 0)
       // a query from the appended batch and one from the fit corpus:
       // lookup + write, whichever partition holds the row
       Seq(5L, 7L).foreach { q =>
@@ -1206,6 +1207,92 @@ class OpsSpec extends AnyFunSuite with SparkTestSession {
       }
       rmr(new java.io.File(dir))
     }
+  }
+
+  test("an exactly-once append runs one job: its ledger entry is a driver-side commit") {
+    import org.apache.spark.sql.functions.{col => c}
+    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    val base = emb.where(c("vec_id") % 5 =!= 0)
+    def batch(b: Long) = emb.where(c("vec_id") % 5 === 0 && c("vec_id") % 2 === b)
+    val dir = java.nio.file.Files.createTempDirectory("graft-ledger-jobs")
+      .toString
+    def rmr(f: java.io.File): Unit = {
+      Option(f.listFiles).foreach(_.foreach(rmr)); f.delete(); ()
+    }
+    val (ivf, pq) = (s"$dir/ivf", s"$dir/pq")
+    try {
+      SimSearch.ivfSave(SimSearch.ivfFit(base, "vec_id", "embedding",
+        nlist = 4, seed = 42L), ivf)
+      SimSearch.ivfPqSave(SimSearch.ivfPqFit(base, "vec_id", "embedding",
+        nlist = 4, m = 16, k = 8), pq)
+      // the batch's write is the append's only job: recording the
+      // ledger entry runs none (a parquet ledger row would be a second)
+      assert(jobsDuring { assert(SimSearch.ivfAppend(spark, ivf, batch(0),
+        "vec_id", "embedding", batchId = Some(0L))) } === 1)
+      assertBatchLayout(ivf, "assigned", 0L)
+      assert(jobsDuring { assert(SimSearch.ivfPqAppend(spark, pq, batch(0),
+        "vec_id", "embedding", batchId = Some(0L))) } === 1)
+      assertBatchLayout(pq, "codes", 0L)
+      // the same as a plain append, which keeps no ledger
+      assert(jobsDuring { assert(SimSearch.ivfAppend(spark, ivf,
+        batch(1).select((c("vec_id") + 500000L).as("vec_id"), c("embedding")),
+        "vec_id", "embedding")) } === 1)
+      // and a replay is a no-op that runs no job at all
+      assert(jobsDuring { assert(!SimSearch.ivfAppend(spark, ivf, batch(0),
+        "vec_id", "embedding", batchId = Some(0L))) } === 0)
+      assert(jobsDuring { assert(!SimSearch.ivfPqAppend(spark, pq, batch(0),
+        "vec_id", "embedding", batchId = Some(0L))) } === 0)
+    } finally rmr(new java.io.File(dir))
+  }
+
+  test("a parquet ledger entry of an earlier build still marks its batch applied") {
+    import org.apache.spark.sql.functions.{col => c}
+    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    val base = emb.where(c("vec_id") % 5 =!= 0)
+    val batch = emb.where(c("vec_id") % 5 === 0)
+    val dir = java.nio.file.Files.createTempDirectory("graft-ledger-parquet")
+      .toString
+    def rmr(f: java.io.File): Unit = {
+      Option(f.listFiles).foreach(_.foreach(rmr)); f.delete(); ()
+    }
+    def files(): Seq[String] = {
+      val root = java.nio.file.Paths.get(s"$dir/assigned")
+      val walk = java.nio.file.Files.walk(root)
+      try {
+        import scala.jdk.CollectionConverters._
+        walk.iterator.asScala.map(root.relativize(_).toString).toSeq.sorted
+      } finally walk.close()
+    }
+    try {
+      val fit = SimSearch.ivfFit(base, "vec_id", "embedding", nlist = 4,
+        seed = 42L)
+      SimSearch.ivfSave(fit, dir)
+      // batch 4's ledger entry as earlier builds wrote it: a one-row
+      // parquet partition at applied/__batch_id=4
+      Seq(1).toDF("ok").withColumn("__batch_id", lit(4L))
+        .coalesce(1).write.partitionBy("__batch_id")
+        .option("partitionOverwriteMode", "dynamic")
+        .mode("overwrite").parquet(s"$dir/applied")
+      val (before, n0) = (files(), spark.read.parquet(s"$dir/assigned").count())
+      // its replay is a no-op: `assigned` keeps every file and row
+      assert(!SimSearch.ivfAppend(spark, dir, batch, "vec_id", "embedding",
+        batchId = Some(4L)))
+      assert(files() === before)
+      assert(spark.read.parquet(s"$dir/assigned").count() === n0)
+      // a new id lands beside the old entry, and its own replay is a no-op
+      assert(SimSearch.ivfAppend(spark, dir, batch, "vec_id", "embedding",
+        batchId = Some(5L)))
+      assertBatchLayout(dir, "assigned", 5L)
+      val n1 = spark.read.parquet(s"$dir/assigned").count()
+      assert(n1 === n0 + batch.count())
+      assert(!SimSearch.ivfAppend(spark, dir, batch, "vec_id", "embedding",
+        batchId = Some(5L)))
+      assert(spark.read.parquet(s"$dir/assigned").count() === n1)
+      // a refit is a new version: it clears the ledger, old format included
+      SimSearch.ivfSave(fit, dir)
+      assert(SimSearch.ivfAppend(spark, dir, batch, "vec_id", "embedding",
+        batchId = Some(4L)))
+    } finally rmr(new java.io.File(dir))
   }
 
   test("IVF nearest-cell kernel: ties go to the lower cell on every path, one UDF per row") {

@@ -65,4 +65,19 @@ class TokenizerStoreSpec extends AnyFunSuite with SparkTestSession {
       TokenizerStore.loadWordPiece(spark, dir)
     }
   }
+
+  test("a refused cross-family load runs no Spark job") {
+    val dir = tmp()
+    TokenizerStore.saveBpe(spark, Bpe.learnMerges(docs, "text", 2), dir)
+    var e: IllegalArgumentException = null
+    assert(jobsDuring {
+      e = intercept[IllegalArgumentException] {
+        TokenizerStore.loadUnigram(spark, dir)
+      }
+    } === 0)
+    assert(e.getMessage === "requirement failed: " +
+      s"tokenizer model at $dir is 'bpe', not " +
+      "'unigram' — refusing a cross-family load (it would segment " +
+      "silently wrong)")
+  }
 }
